@@ -1939,7 +1939,7 @@ object SparkEntry {
       Similarity.pqIvfProbeIndex(e.filter("vec_id < 10"),
         graft.sources.Bucketing.readBucketed(s, idxTable),
         s.read.parquet(centPath),
-        "vec_id", "embedding", books, 5, nProbe = 16, nCentroids = 16)
+        "vec_id", "embedding", books, 5, nProbe = 16)
         .select("query_id", "neighbor_id", "rank")
     }),
 
@@ -2031,7 +2031,7 @@ object SparkEntry {
       // in sim15, is materialized by definition)
       Similarity.pqIvfProbeIndex(e.filter("vec_id < 10"),
         index0.unionByName(appended).localCheckpoint(eager = false), cents,
-        "vec_id", "embedding", books, 5, nProbe = 16, nCentroids = 16)
+        "vec_id", "embedding", books, 5, nProbe = 16)
         .select("query_id", "neighbor_id", "rank")
     }),
 
@@ -2156,7 +2156,7 @@ object SparkEntry {
         // is an action and the probe a second consumer (sim16's note)
         .localCheckpoint(eager = false)
       Similarity.pqIvfProbeIndex(e.filter("vec_id < 10"), purged, cents,
-        "vec_id", "embedding", books, 5, nProbe = 16, nCentroids = 16)
+        "vec_id", "embedding", books, 5, nProbe = 16)
         .select("query_id", "neighbor_id", "rank")
     }),
 

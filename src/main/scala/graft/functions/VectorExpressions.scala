@@ -105,8 +105,11 @@ object VectorExpressions {
       copy(left = newLeft, right = newRight)
   }
 
-  /** argmin_j (|c_j|² − 2·sv·c_j) over a fixed codebook — the PQ
-    * encode kernel, one small-int code per subvector.
+  /** argmin_j (|c_j|² − 2·sv·c_j) over a fixed codebook — the
+    * engine's one nearest-centroid kernel: PQ encode (one small-int
+    * code per subvector) and every Lloyd's k-means assignment
+    * ([[graft.operators.Similarity.pqTrain]] and the
+    * [[graft.operators.Clustering]] operators built on it).
     *
     * The previous form spliced every centroid as an unrolled
     * `array(lit,…)` CreateArray tree: m×k structs of dsub literal
@@ -121,10 +124,24 @@ object VectorExpressions {
     * `<` keeps the lowest j on ties (array_min's (cost, cid)
     * struct order did the same).
     *
+    * Null and non-finite rule: only a FINITE cost competes, and the
+    * result is null when no centroid has one. A null vector, or one
+    * with a NaN or ±Inf element, makes every dot NaN or ±Inf, so it
+    * gets a null id — never a silent cluster 0, and never an id that
+    * would pull a NaN into a centroid update. (−Inf is excluded too:
+    * an +Inf element against a positive centroid component gives
+    * cost −Inf, which would otherwise capture the vector.) Null
+    * ELEMENTS contribute 0 to the dot, like [[DotProduct]].
+    *
+    * `runnerUp = true` returns the SECOND-nearest id under the same
+    * (cost, id) order — the silhouette's "nearest other centroid";
+    * null when fewer than two centroids have a finite cost.
+    *
     * `cents` is a constructor param (not a child expression): the
     * codebook is always a driver-side trained artifact, never data.
     */
-  case class PqArgmin(child: Expression, cents: Seq[Seq[Double]])
+  case class PqArgmin(child: Expression, cents: Seq[Seq[Double]],
+      runnerUp: Boolean = false)
       extends UnaryExpression {
     private val k = cents.length
     private val dsub = cents.headOption.map(_.length).getOrElse(0)
@@ -146,6 +163,7 @@ object VectorExpressions {
       cents.map(c => c.map(x => x * x).sum).toArray
 
     override def dataType: DataType = IntegerType
+    override def nullable: Boolean = true
     override def nullIntolerant: Boolean = true
     override def prettyName: String = "pq_argmin"
     override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
@@ -162,6 +180,8 @@ object VectorExpressions {
       val n = math.min(sv.numElements(), dsub)
       var best = Double.PositiveInfinity
       var bestId = -1
+      var second = Double.PositiveInfinity
+      var secondId = -1
       var j = 0
       while (j < k) {
         var dot = 0.0
@@ -171,10 +191,16 @@ object VectorExpressions {
           i += 1
         }
         val cost = normSqs(j) - dot * 2.0
-        if (cost < best) { best = cost; bestId = j }
+        // NaN fails every comparison; ±Inf fails one of the bounds
+        if (cost > Double.NegativeInfinity) {
+          if (cost < best) {
+            second = best; secondId = bestId; best = cost; bestId = j
+          } else if (cost < second) { second = cost; secondId = j }
+        }
         j += 1
       }
-      bestId
+      val id = if (runnerUp) secondId else bestId
+      if (id < 0) null else id
     }
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -188,10 +214,22 @@ object VectorExpressions {
         val cost = ctx.freshName("cost")
         val best = ctx.freshName("best")
         val bestId = ctx.freshName("bestId")
+        val second = ctx.freshName("second")
+        val secondId = ctx.freshName("secondId")
+        // the runner-up bookkeeping is only generated when asked for
+        val (decl, update, result) =
+          if (runnerUp) (
+            s"double $second = Double.POSITIVE_INFINITY; int $secondId = -1;",
+            s"""if ($cost < $best) {
+               |      $second = $best; $secondId = $bestId; $best = $cost; $bestId = $j;
+               |    } else if ($cost < $second) { $second = $cost; $secondId = $j; }""".stripMargin,
+            secondId)
+          else ("", s"if ($cost < $best) { $best = $cost; $bestId = $j; }", bestId)
         s"""
            |int $n = java.lang.Math.min($sv.numElements(), $dsub);
            |double $best = Double.POSITIVE_INFINITY;
            |int $bestId = -1;
+           |$decl
            |for (int $j = 0; $j < $k; $j++) {
            |  double $dot = 0.0;
            |  for (int $i = 0; $i < $n; $i++) {
@@ -200,9 +238,12 @@ object VectorExpressions {
            |    }
            |  }
            |  double $cost = $normRef[$j] - $dot * 2.0;
-           |  if ($cost < $best) { $best = $cost; $bestId = $j; }
+           |  if ($cost > Double.NEGATIVE_INFINITY) {
+           |    $update
+           |  }
            |}
-           |${ev.value} = $bestId;
+           |${ev.isNull} = $result < 0;
+           |${ev.value} = $result;
          """.stripMargin
       })
 
@@ -231,9 +272,10 @@ object VectorExpressions {
     ExpressionUtils.column(DotProduct(
       ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
 
-  def pq_argmin(sv: Column, cents: Array[Array[Double]]): Column =
+  def pq_argmin(sv: Column, cents: Array[Array[Double]],
+      runnerUp: Boolean = false): Column =
     ExpressionUtils.column(PqArgmin(
-      ExpressionUtils.expression(sv), cents.map(_.toSeq).toSeq))
+      ExpressionUtils.expression(sv), cents.map(_.toSeq).toSeq, runnerUp))
 
   /** Register the SQL form in a session's function registry. */
   def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {

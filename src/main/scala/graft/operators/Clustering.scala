@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.VectorExpressions.pq_argmin
 
 /** Deterministic Lloyd's k-means over an embedding column, and the
   * curation operators built on it (cluster-stratified diversity
@@ -10,13 +11,19 @@ import org.apache.spark.sql.functions._
   * clustering is how a training pipeline balances topical coverage
   * and prices semantic dedup.
   *
+  * One kernel: training is [[Similarity.pqTrain]] with a single
+  * subspace, and every cluster id comes from the
+  * [[graft.functions.VectorExpressions.PqArgmin]] kernel.
+  *
   * Scale shape (the whole point of this form):
-  *  - Assignment is a PROJECTION: the k centroids ride into the plan
-  *    as literal arrays (k·dim doubles — broadcast by construction),
-  *    each row computes its argmin cost inside whole-stage codegen
-  *    via the native [[graft.functions.VectorExpressions.DotProduct]]
-  *    kernel. No join, no shuffle, no per-row allocation beyond the
-  *    candidate struct array.
+  *  - Assignment is a PROJECTION: the k centroids go into the
+  *    `pq_argmin` kernel as one reference object (k·dim doubles —
+  *    broadcast by construction), and each row finds its argmin cost
+  *    inside whole-stage codegen. Distances to a chosen centroid are
+  *    one dot product against `element_at` of a single literal
+  *    centroid array. Nothing in the generated code grows with k, so
+  *    large k never trips janino's 64 KB method limit. No join, no
+  *    shuffle.
   *  - The update step is ONE aggregation to k rows (map-side combined
   *    per-dimension sums), collected to the driver: bounded at
   *    k·dim doubles per iteration regardless of corpus size.
@@ -30,69 +37,42 @@ import org.apache.spark.sql.functions._
   * centroid. Every output column is integral, so the result is
   * oracle-comparable even though centroid doubles carry
   * engine-specific summation order in their last ulps.
+  *
+  * Null and non-finite vectors: a null vector, or one with a NaN or
+  * ±Inf element, has no finite cost to any centroid and gets a null
+  * cluster. [[assign]] and [[kmeans]] emit it with `cluster = null`;
+  * training neither initializes from it nor averages it into a
+  * centroid; [[silhouette]], [[diversitySample]] and
+  * [[semanticNearDupPairs]] leave it out.
   */
 object Clustering {
 
-  /** Literal column for one centroid vector. */
-  private def centLit(c: Array[Double]): Column = array(c.map(lit): _*)
+  /** Cluster id of `vecCol` against `cents` (cost_j = |c_j|² −
+    * 2·v·c_j, lowest id on ties, null for null/non-finite vectors);
+    * `runnerUp` gives the second-nearest id instead. */
+  private def clusterId(vecCol: String, cents: Array[Array[Double]],
+      runnerUp: Boolean = false): Column =
+    pq_argmin(col(vecCol).cast("array<double>"), cents, runnerUp)
 
-  /** argmin-cost cluster id for `vecCol` against literal centroids.
-    * cost_j = |c_j|^2 - 2·v·c_j is distance-squared minus the shared
-    * |v|^2 term — same argmin, one dot product per centroid. The
-    * struct array_min orders by (cost, cid): deterministic tie-break.
-    */
-  private def clusterOf(vecCol: String, cents: Array[Array[Double]]): Column = {
-    val entries = cents.zipWithIndex.map { case (c, j) =>
-      val normSq = c.map(x => x * x).sum
-      struct(
-        (lit(normSq) - Similarity.dot(col(vecCol), centLit(c)) * 2.0).as("cost"),
-        lit(j).as("cid"))
-    }
-    array_min(array(entries.toIndexedSeq: _*)).getField("cid")
+  /** cost_j = |c_j|² − 2·v·c_j for the centroid whose id is the
+    * column `cid`: squared distance minus the shared |v|² term, the
+    * same arithmetic the kernel ranks by. One `element_at` into one
+    * literal array per operand, so its generated size does not
+    * depend on k. */
+  private def costTo(vecCol: String, cents: Array[Array[Double]],
+      cid: Column): Column = {
+    val normSqs = cents.map(c => c.map(x => x * x).sum)
+    element_at(typedLit(normSqs), cid + 1) -
+      Similarity.dot(col(vecCol), element_at(typedLit(cents), cid + 1)) * 2.0
   }
 
-  /** Squared distance from `vecCol` to its assigned (literal)
-    * centroid: |v|^2 + min_j cost_j. */
-  private def distSqToAssigned(vecCol: String, cents: Array[Array[Double]]): Column = {
-    val entries = cents.zipWithIndex.map { case (c, j) =>
-      val normSq = c.map(x => x * x).sum
-      struct(
-        (lit(normSq) - Similarity.dot(col(vecCol), centLit(c)) * 2.0).as("cost"),
-        lit(j).as("cid"))
-    }
-    Similarity.dot(col(vecCol), col(vecCol)) +
-      array_min(array(entries.toIndexedSeq: _*)).getField("cost")
-  }
-
-  /** Run `maxIter` Lloyd iterations and return the final centroids.
-    * Init: the `k` smallest-`idCol` vectors (deterministic, no RNG —
-    * the verification configuration; production would sample). */
+  /** Run `maxIter` Lloyd iterations and return the final centroids:
+    * [[Similarity.pqTrain]] with one subspace. Init: the `k`
+    * smallest-`idCol` finite vectors (deterministic, no RNG — the
+    * verification configuration; production would sample). */
   def kmeansCentroids(df: DataFrame, idCol: String, vecCol: String,
-      k: Int, maxIter: Int): Array[Array[Double]] = {
-    require(k > 0 && maxIter >= 0, s"k=$k maxIter=$maxIter")
-    var cents: Array[Array[Double]] = df.orderBy(col(idCol)).limit(k)
-      .select(col(vecCol).cast("array<double>"))
-      .collect().map(_.getSeq[Double](0).toArray)
-    require(cents.length == k, s"need >= $k vectors, got ${cents.length}")
-    val dim = cents(0).length
-    var it = 0
-    while (it < maxIter) {
-      val assigned = df.withColumn("__cluster", clusterOf(vecCol, cents))
-      val aggs = (0 until dim).map(i =>
-        avg(col(vecCol).getItem(i)).as(s"__m$i"))
-      // one shuffle to k rows (partial aggregation map-side); the
-      // collect is bounded at k rows x dim doubles
-      val rows = assigned.groupBy(col("__cluster"))
-        .agg(aggs.head, aggs.tail: _*).collect()
-      val next = cents.map(_.clone()) // empty clusters keep previous
-      rows.foreach { r =>
-        next(r.getInt(0)) = Array.tabulate(dim)(i => r.getDouble(i + 1))
-      }
-      cents = next
-      it += 1
-    }
-    cents
-  }
+      k: Int, maxIter: Int): Array[Array[Double]] =
+    Similarity.pqTrain(df, idCol, vecCol, m = 1, k = k, maxIter = maxIter)(0)
 
   /** Projection-only (id, cluster) assignment against precomputed
     * centroids. Stateless, so it runs identically on batch and
@@ -103,7 +83,7 @@ object Clustering {
   def assign(df: DataFrame, idCol: String, vecCol: String,
       cents: Array[Array[Double]]): DataFrame = {
     require(cents.nonEmpty, "assign requires at least one centroid")
-    df.select(col(idCol), clusterOf(vecCol, cents).as("cluster"))
+    df.select(col(idCol), clusterId(vecCol, cents).as("cluster"))
   }
 
   /** (id, cluster) assignment after `maxIter` Lloyd iterations —
@@ -118,13 +98,12 @@ object Clustering {
     * real" readout: s = (d_next − d_own) / max(d_own, d_next) per
     * point, where d_own is the distance to the assigned centroid and
     * d_next to the nearest OTHER centroid; ~1 = compact and
-    * separated, ~0 = boundary mush, negative = misassigned. Same
-    * one-dot-per-centroid projection as [[kmeans]] (sorting the
-    * (cost, cid) struct array yields own and runner-up in one pass),
-    * then one aggregate to k rows — the evaluation costs what an
-    * assignment pass costs. distSq clamps at 0: the |v|²−2v·c+|c|²
-    * form can go epsilon-negative under cancellation and sqrt(NaN)
-    * would poison the mean.
+    * separated, ~0 = boundary mush, negative = misassigned. The
+    * kernel gives both ids (nearest and runner-up) in the same
+    * projection as [[kmeans]], then one aggregate to k rows — the
+    * evaluation costs what an assignment pass costs. distSq clamps
+    * at 0: the |v|²−2v·c+|c|² form can go epsilon-negative under
+    * cancellation and sqrt(NaN) would poison the mean.
     *
     * Determinism note (the one float caveat this file carries):
     * avg(s) sums per-row doubles, so partition/merge order can move
@@ -140,22 +119,16 @@ object Clustering {
       k: Int, maxIter: Int): DataFrame = {
     require(k >= 2, s"silhouette needs k >= 2: $k")
     val cents = kmeansCentroids(df, idCol, vecCol, k, maxIter)
-    val entries = cents.zipWithIndex.map { case (c, j) =>
-      val normSq = c.map(x => x * x).sum
-      struct(
-        (lit(normSq) - Similarity.dot(col(vecCol), centLit(c)) * 2.0).as("cost"),
-        lit(j).as("cid"))
-    }
-    val sorted = array_sort(array(entries.toIndexedSeq: _*))
+    val own = clusterId(vecCol, cents)
     val vv = Similarity.dot(col(vecCol), col(vecCol))
-    val dOwn = sqrt(greatest(vv + element_at(sorted, 1).getField("cost"),
-      lit(0.0)))
-    val dNext = sqrt(greatest(vv + element_at(sorted, 2).getField("cost"),
-      lit(0.0)))
+    def dist(cid: Column): Column =
+      sqrt(greatest(vv + costTo(vecCol, cents, cid), lit(0.0)))
+    val dOwn = dist(own)
+    val dNext = dist(clusterId(vecCol, cents, runnerUp = true))
     val sil = when(greatest(dOwn, dNext) > 0.0,
       (dNext - dOwn) / greatest(dOwn, dNext)).otherwise(lit(0.0))
-    df.select(element_at(sorted, 1).getField("cid").as("cluster"),
-      sil.as("__s"))
+    df.select(own.as("cluster"), sil.as("__s"))
+      .filter(col("cluster").isNotNull)
       .groupBy("cluster")
       .agg(count(lit(1)).as("n_points"),
         round(avg(col("__s")), 6).as("mean_silhouette"))
@@ -181,7 +154,7 @@ object Clustering {
     // checkpoint: the k-dot-product assignment feeds BOTH sides of
     // the self-join and would otherwise run twice per row
     val base = df.select(col(idCol).as("id"), col(vecCol).as("v"),
-      clusterOf(vecCol, cents).as("cluster"),
+      clusterId(vecCol, cents).as("cluster"),
       Similarity.l2norm(col(vecCol)).as("n"))
       .localCheckpoint()
     val a = base.select(col("cluster"), col("id").as("id_a"),
@@ -203,9 +176,12 @@ object Clustering {
       k: Int, maxIter: Int, perCluster: Int): DataFrame = {
     require(perCluster > 0, s"perCluster=$perCluster")
     val cents = kmeansCentroids(df, idCol, vecCol, k, maxIter)
-    val assigned = df.select(col(idCol),
-      clusterOf(vecCol, cents).as("cluster"),
-      distSqToAssigned(vecCol, cents).as("__d2"))
+    val own = clusterId(vecCol, cents)
+    // squared distance to the assigned centroid: |v|² + cost_own
+    val assigned = df.select(col(idCol), own.as("cluster"),
+      (Similarity.dot(col(vecCol), col(vecCol)) + costTo(vecCol, cents, own))
+        .as("__d2"))
+      .filter(col("cluster").isNotNull)
     val w = Window.partitionBy(col("cluster"))
       .orderBy(col("__d2").asc, col(idCol).asc)
     assigned.withColumn("rank", row_number().over(w))

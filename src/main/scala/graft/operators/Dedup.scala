@@ -308,15 +308,16 @@ object Dedup {
     * and ship one row — no distinct shuffle, no full-store
     * materialization (the r7 ADVICE item); with parquet aggregate
     * pushdown enabled they come straight from footer stats. An
-    * EMPTY store passes: no rows, no stale signatures. */
+    * EMPTY store passes: no rows, no stale signatures. Returns the
+    * store's row count, which the same aggregate already computed. */
   private[operators] def requireSigAlgo(store: DataFrame, expected: String,
-      what: String, rebuildHint: String): Unit = {
+      what: String, rebuildHint: String): Long = {
     require(store.columns.contains("sig_algo"),
       s"$what store has no sig_algo column — it predates '$expected' and " +
         s"its signatures are unrelated to current ones; $rebuildHint")
     val r = store.agg(min(col("sig_algo")), max(col("sig_algo")),
       count(lit(1)), count(col("sig_algo"))).collect()(0)
-    if (r.getLong(2) == 0L) return
+    if (r.getLong(2) == 0L) return 0L
     require(r.getLong(3) > 0L,
       s"$what store is entirely untagged (every sig_algo is null) — " +
         s"written before the generation guard or by an external tool; " +
@@ -329,6 +330,7 @@ object Dedup {
     require(lo == expected && hi == expected,
       s"$what store carries generation(s) [$lo${if (lo == hi) "" else s" .. $hi"}] " +
         s"but this build expects '$expected'; $rebuildHint")
+    r.getLong(2)
   }
 
   /** New-vs-corpus near-duplicates WITHOUT rescanning the corpus: the

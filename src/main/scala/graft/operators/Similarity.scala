@@ -206,12 +206,10 @@ object Similarity {
     * join, then the same map-combined per-doc partial agg. */
   def maxSimTopKIvf(queries: DataFrame, chunks: DataFrame, idCol: String,
       vecCol: String, docIdCol: String, k: Int,
-      nCentroids: Int = AutoCentroids, nProbe: Int = 4,
-      kmeansCentroids: Boolean = false, seed: Long = 42L): DataFrame = {
+      nCentroids: Int = AutoCentroids, nProbe: Int = 4): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     val cand = ivfCandidatePairs(queries, chunks, idCol, vecCol,
-        nCentroids, nProbe, corpusCols = Seq(docIdCol -> "doc_id"),
-        kmeansCentroids = kmeansCentroids, seed = seed)
+        nCentroids, nProbe, corpusCols = Seq(docIdCol -> "doc_id"))
       .withColumnRenamed("neighbor_id", "chunk_id")
     maxSimRank(cand, k)
   }
@@ -363,27 +361,38 @@ object Similarity {
     * bytes (32×), and query-time distances come from per-subspace
     * table lookups instead of full dot products.
     *
-    * Training is deterministic Lloyd's per subspace with the same
-    * contract as [[Clustering.kmeansCentroids]] (init = the k
-    * smallest-id vectors' subvectors, argmin tie-break by centroid
-    * id, empty clusters keep their previous centroid) — but FUSED:
+    * This is the engine's ONE Lloyd's k-means: plain k-means
+    * ([[Clustering.kmeansCentroids]]) is the m = 1 case. Training is
+    * deterministic Lloyd's per subspace (init = the k smallest-id
+    * vectors' subvectors, argmin tie-break by centroid id, empty
+    * clusters keep their previous centroid), FUSED across subspaces:
     * each iteration computes all m subspace assignments in one
     * projection, explodes to (subspace, centroid, subvector), and
     * aggregates every codebook in ONE map-combined shuffle to m·k
     * rows. Driver state: m·k·(dim/m) = k·dim doubles. At 100 TB:
     * train on a sample, encode the corpus in one projection pass.
     *
+    * Null and non-finite vectors follow the kernel's rule
+    * ([[graft.functions.VectorExpressions.PqArgmin]]): they get a
+    * null centroid id, which the update step skips, and they are
+    * never picked for init (a vector qualifies when its squared norm
+    * is finite).
+    *
     * Returns codebooks(sub)(centroid)(dim/m). */
   def pqTrain(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int, k: Int, maxIter: Int): Array[Array[Array[Double]]] = {
     require(m >= 1 && k >= 1 && maxIter >= 0, s"m=$m k=$k maxIter=$maxIter")
-    val dim = firstVectorDim(corpus, vecCol)
-    require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
-    val dsub = dim / m
-    val initRows = corpus.orderBy(col(idCol)).limit(k)
+    // Spark orders NaN above +Inf and a null comparison filters out,
+    // so `< +Inf` keeps exactly the finite vectors
+    val initRows = corpus
+      .filter(dot(col(vecCol), col(vecCol)) < Double.PositiveInfinity)
+      .orderBy(col(idCol)).limit(k)
       .select(col(vecCol).cast("array<double>")).collect()
       .map(_.getSeq[Double](0).toArray)
     require(initRows.length == k, s"need >= $k vectors, got ${initRows.length}")
+    val dim = initRows(0).length
+    require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
+    val dsub = dim / m
     var books: Array[Array[Array[Double]]] =
       Array.tabulate(m)(s => initRows.map(_.slice(s * dsub, (s + 1) * dsub)))
     var it = 0
@@ -394,6 +403,7 @@ object Similarity {
       }
       val exploded = corpus.select(explode(array(subEntries: _*)).as("e"))
         .select(col("e.sub").as("sub"), col("e.cid").as("cid"), col("e.sv").as("sv"))
+        .filter(col("cid").isNotNull)
       val aggs = (0 until dsub).map(i => avg(col("sv").getItem(i)).as(s"m$i"))
       val rows = exploded.groupBy("sub", "cid")
         .agg(aggs.head, aggs.tail: _*).collect()
@@ -875,19 +885,19 @@ object Similarity {
   def pqIvfProbeIndex(queries: DataFrame, index: DataFrame,
       centroids: DataFrame, idCol: String, vecCol: String,
       books: Array[Array[Array[Double]]], k: Int,
-      nProbe: Int = 4, nCentroids: Int = -1): DataFrame = {
+      nProbe: Int = 4): DataFrame = {
     val tag = pqIndexAlgo(books)
     Dedup.requireSigAlgo(index, tag, "IVF-PQ index",
       "re-encode with pqIndexStore under the current codebooks")
-    Dedup.requireSigAlgo(centroids, tag, "IVF-PQ centroid",
-      "re-encode with pqIndexStore under the current codebooks")
-    // callers that know the store's centroid count pass it so the
-    // full-probe configuration (nProbe >= nCentroids) plans as the
+    // the guard's row count IS the store's centroid count, so the
+    // full-probe configuration (nProbe >= that count) plans as the
     // zero-exchange broadcast fan-out pqIvfTopK gets, instead of the
-    // window shuffle (r15, advisor note); -1 = unknown, window path
+    // window shuffle
+    val nCent = Dedup.requireSigAlgo(centroids, tag, "IVF-PQ centroid",
+      "re-encode with pqIndexStore under the current codebooks")
     pqProbeRank(queries, index,
       centroids.select("cent_id", "cent_v", "cent_n"),
-      idCol, vecCol, books, k, nProbe, nCentroids)
+      idCol, vecCol, books, k, nProbe, nCent.toInt)
   }
 
   /** IVF over int8-quantized vectors — [[ivfTopK]]'s centroid probe
@@ -906,24 +916,13 @@ object Similarity {
     */
   def ivfTopKQuantized(queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int,
-      nCentroids: Int = AutoCentroids, nProbe: Int = 4,
-      kmeansCentroids: Boolean = false, seed: Long = 42L): DataFrame = {
+      nCentroids: Int = AutoCentroids, nProbe: Int = 4): DataFrame = {
     val (qv, _) = quantize(col(vecCol))
     val q = queries.select(col(idCol), qv.as("__qvec"))
     val c = corpus.select(col(idCol), qv.as("__qvec"))
-    ivfTopK(q, c, idCol, "__qvec", k, nCentroids, nProbe,
-      kmeansCentroids, seed)
+    ivfTopK(q, c, idCol, "__qvec", k, nCentroids, nProbe)
   }
 
-  /** IVF approximate top-k. Centroids either from MLlib k-means||
-    * (`kmeansCentroids = true`, seeded — the quality path) or the
-    * `nCentroids` smallest-id corpus vectors (deterministic trivial
-    * fallback, also the full-probe verification mode). Each corpus
-    * vector is assigned to its nearest centroid (broadcast join:
-    * centroids are tiny). Queries probe the `nProbe` nearest centroid
-    * lists. This is the 100 TB layout: train centroids on a sample,
-    * one broadcast-join assignment pass, shuffle-on-centroid probes.
-    */
   /** Recommended coarse-centroid count for an IVF stage over `n`
     * vectors: ~sqrt(n), floored at 16 (the fixture default). The cost
     * model that makes this load-bearing: a probe stage evaluates
@@ -959,12 +958,19 @@ object Similarity {
     if (nCentroids == AutoCentroids) ivfCentroidsFor(corpus.count())
     else nCentroids
 
+  /** IVF approximate top-k. Centroids are the `nCentroids`
+    * smallest-id corpus vectors (deterministic; at full probe the
+    * verification mode). Each corpus vector is assigned to its
+    * nearest centroid (broadcast join: centroids are tiny). Queries
+    * probe the `nProbe` nearest centroid lists. This is the 100 TB
+    * layout: one broadcast-join assignment pass, shuffle-on-centroid
+    * probes.
+    */
   def ivfTopK(queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int,
-      nCentroids: Int = AutoCentroids, nProbe: Int = 4,
-      kmeansCentroids: Boolean = false, seed: Long = 42L): DataFrame = {
+      nCentroids: Int = AutoCentroids, nProbe: Int = 4): DataFrame = {
     val scored = ivfCandidatePairs(queries, corpus, idCol, vecCol,
-        nCentroids, nProbe, kmeansCentroids = kmeansCentroids, seed = seed)
+        nCentroids, nProbe)
       .filter(col("query_id") =!= col("neighbor_id"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
@@ -999,16 +1005,18 @@ object Similarity {
       cent: DataFrame, topN: Int, nCent: Int,
       extra: Seq[(String, String)]): DataFrame = {
     val keep = Seq(col(idCol), col(vecCol)) ++ extra.map(e => col(e._1))
-    // NaN norms would pass a bare `> 0` gate (NaN orders greatest) and
-    // then rank FIRST in the window branch (sim DESC) but LAST in the
-    // top-1 argmax (min of -sim) — the branches must see the same
-    // candidate set, so NaN norms are dropped like zero norms (a NaN
-    // element makes the whole l2norm NaN, so this gates NaN sims too)
+    // only finite nonzero norms take part: a NaN or ±Inf element
+    // makes l2norm NaN or +Inf and every sim NaN, which would rank
+    // FIRST in the window branch (sim DESC, NaN greatest) but LAST in
+    // the top-1 argmax (min of -sim) — the branches must see the same
+    // candidate set. Spark orders NaN above +Inf, so `< +Inf` drops
+    // both.
+    def finiteNonZero(n: Column): Column = n > 0 && n < Double.PositiveInfinity
     val scored = df.select(keep: _*)
       .withColumn("n", l2norm(col(vecCol)))
-      .filter(col("n") > 0 && !isnan(col("n")))
+      .filter(finiteNonZero(col("n")))
       .crossJoin(broadcast(cent))
-      .filter(col("cent_n") > 0 && !isnan(col("cent_n")))
+      .filter(finiteNonZero(col("cent_n")))
       .withColumn("sim",
         dot(col(vecCol), col("cent_v")) / (col("n") * col("cent_n")))
     val out = Seq(col(idCol), col(vecCol), col("n"), col("cent_id")) ++
@@ -1031,39 +1039,6 @@ object Similarity {
         .orderBy(col("sim").desc, col("cent_id").asc)
       scored.withColumn("r", row_number().over(w)).filter(col("r") <= topN)
         .select(out: _*)
-    }
-  }
-
-  /** The IVF coarse index: `nCentroids` rows (cent_id, cent_v,
-    * cent_n), either the deterministic smallest-id corpus sample or
-    * k-means centers — tiny by construction, always broadcast. */
-  private def ivfCentroidFrame(corpus: DataFrame, idCol: String,
-      vecCol: String, nCentroids: Int, kmeansCentroids: Boolean,
-      seed: Long): DataFrame = {
-    val spark = corpus.sparkSession
-    if (kmeansCentroids) {
-      import org.apache.spark.ml.clustering.KMeans
-      import org.apache.spark.ml.functions.array_to_vector
-      val train = corpus.select(array_to_vector(
-        col(vecCol).cast("array<double>")).as("features"))
-      val model = new KMeans().setK(nCentroids).setSeed(seed).setMaxIter(10)
-        .fit(train)
-      import scala.jdk.CollectionConverters._
-      val rows = model.clusterCenters.zipWithIndex.map { case (v, i) =>
-        org.apache.spark.sql.Row(i.toLong, v.toArray.toSeq)
-      }.toSeq
-      spark.createDataFrame(rows.asJava, org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cent_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("cent_v",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType)))))
-        .withColumn("cent_n", l2norm(col("cent_v")))
-    } else {
-      // the PQ family's coarse frame is the same construction — one
-      // definition keeps the "same coarse quantizer" equivalence
-      // arguments between the IVF and PQ operators honest
-      pqCoarseCentroids(corpus, idCol, vecCol, nCentroids)
     }
   }
 
@@ -1096,13 +1071,13 @@ object Similarity {
       idCol: String, vecCol: String,
       nCentroids: Int = AutoCentroids, nProbe: Int = 4,
       queryCols: Seq[(String, String)] = Nil,
-      corpusCols: Seq[(String, String)] = Nil,
-      kmeansCentroids: Boolean = false, seed: Long = 42L): DataFrame = {
+      corpusCols: Seq[(String, String)] = Nil): DataFrame = {
     val nCent = resolveCentroids(nCentroids, corpus)
     require(nCent >= 1 && nProbe >= 1 && nProbe <= nCent,
       s"need 1 <= nProbe <= nCentroids: nProbe=$nProbe nCentroids=$nCent")
-    val cent = ivfCentroidFrame(corpus, idCol, vecCol, nCent,
-      kmeansCentroids, seed)
+    // the PQ family's coarse frame: one definition keeps the "same
+    // coarse quantizer" equivalence between IVF and PQ operators
+    val cent = pqCoarseCentroids(corpus, idCol, vecCol, nCent)
 
     def assign(df: DataFrame, topN: Int,
         extra: Seq[(String, String)]): DataFrame =
@@ -1216,15 +1191,12 @@ object Similarity {
     * path. */
   def bitextMarginPairsIvf(src: DataFrame, tgt: DataFrame, idCol: String,
       vecCol: String, k: Int = 4, marginThreshold: Double = 1.0,
-      nCentroids: Int = AutoCentroids, nProbe: Int = 4,
-      kmeansCentroids: Boolean = false, seed: Long = 42L): DataFrame = {
+      nCentroids: Int = AutoCentroids, nProbe: Int = 4): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    val fwd = ivfCandidatePairs(src, tgt, idCol, vecCol, nCentroids, nProbe,
-        kmeansCentroids = kmeansCentroids, seed = seed)
+    val fwd = ivfCandidatePairs(src, tgt, idCol, vecCol, nCentroids, nProbe)
       .select(col("query_id").as("src_id"), col("neighbor_id").as("tgt_id"),
         col("cosine").as("cos"))
-    val bwd = ivfCandidatePairs(tgt, src, idCol, vecCol, nCentroids, nProbe,
-        kmeansCentroids = kmeansCentroids, seed = seed)
+    val bwd = ivfCandidatePairs(tgt, src, idCol, vecCol, nCentroids, nProbe)
       .select(col("neighbor_id").as("src_id"), col("query_id").as("tgt_id"),
         col("cosine").as("cos"))
     val cand = fwd.unionByName(bwd)
@@ -1280,13 +1252,11 @@ object Similarity {
     * cent_id-shuffled join, no cross product. */
   def hardNegativesIvf(queries: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, labelCol: String, k: Int,
-      nCentroids: Int = AutoCentroids, nProbe: Int = 4,
-      kmeansCentroids: Boolean = false, seed: Long = 42L): DataFrame = {
+      nCentroids: Int = AutoCentroids, nProbe: Int = 4): DataFrame = {
     val cand = ivfCandidatePairs(queries, corpus, idCol, vecCol,
       nCentroids, nProbe,
       queryCols = Seq(labelCol -> "q_label"),
-      corpusCols = Seq(labelCol -> "n_label"),
-      kmeansCentroids = kmeansCentroids, seed = seed)
+      corpusCols = Seq(labelCol -> "n_label"))
     hardNegativeRank(cand.filter(col("q_label") =!= col("n_label")), k)
   }
 

@@ -435,11 +435,13 @@ class PlanSpec extends SparkTestBase {
   test("kmeans assignment is a projection: no join, no exchange, codegen dot kernel") {
     val df = SparkEntry.queries("kmeans1_embedding_clusters")(spark, sf())
     val p = df.queryExecution.executedPlan.toString
-    // the centroids ride in as literals: the final assignment pass
-    // must be scan -> project, with every dot product in codegen
+    // the centroids ride into the pq_argmin kernel: the final
+    // assignment pass must be scan -> project, with the dot products
+    // inside that codegen kernel, not an unrolled per-centroid tree
     assert(!p.contains("Exchange"), s"assignment pass shuffles:\n$p")
     assert(!p.contains("Join"), s"assignment pass joins:\n$p")
-    assert(p.contains("dot_product"))
+    assert(p.contains("pq_argmin"))
+    assert(!p.contains("array_min"))
     assert(!p.contains("CodegenFallback"))
     // the shuffle budget of the sampler: one exchange for the rank
     // window keyed by cluster, still no join against the corpus

@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.SparkTestBase
-import graft.operators.Similarity
+import graft.operators.{Clustering, Similarity}
 import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
 import org.apache.logging.log4j.core.appender.AbstractAppender
@@ -83,6 +83,24 @@ class CodegenGuardSpec extends SparkTestBase {
     assert(errs.isEmpty, s"CodeGenerator logged ERRORs:\n${errs.mkString("\n")}")
   }
 
+  test("k-means operators at k=256 compile under strict codegen (size independent of k)") {
+    // Clustering used to unroll one literal centroid struct per
+    // cluster into the assignment projection; at k=256 over dim 64
+    // that method passed janino's 64 KB limit and (with default
+    // confs) silently ran interpreted. Ids now come from the
+    // pq_argmin kernel and distances from one element_at lookup, so
+    // nothing generated grows with k.
+    val e = spark.read.parquet(sf("sf0.01") + "/embeddings.parquet")
+    val ((kmN, silN, divN), errs) = withStrictCodegen {
+      (Clustering.kmeans(e, "vec_id", "embedding", k = 256, maxIter = 1).count(),
+        Clustering.silhouette(e, "vec_id", "embedding", k = 256, maxIter = 1).count(),
+        Clustering.diversitySample(e, "vec_id", "embedding", k = 256,
+          maxIter = 1, perCluster = 1).count())
+    }
+    assert(kmN == e.count() && silN > 0 && divN > 0)
+    assert(errs.isEmpty, s"CodeGenerator logged ERRORs:\n${errs.mkString("\n")}")
+  }
+
   test("flagship entry executes under strict codegen (ContractSpec's r10 failure path)") {
     val (n, errs) = withStrictCodegen {
       graft.SparkEntry.entry(spark).count()
@@ -126,6 +144,12 @@ class CodegenGuardSpec extends SparkTestBase {
       .as[(Long, Int)].collect().toMap
     // id=4: costs are |c|^2 - 2 sv.c = 1-1.0=0.0 (c0), 1-1.0=0.0 (c1), 0.5-1.0=-0.5 (c2)
     assert(got === Map(1L -> 0, 2L -> 1, 3L -> 2, 4L -> 2))
+    // runner-up: the second entry of the (cost, cid) order
+    val second = rows.select(col("id"),
+      graft.functions.VectorExpressions.pq_argmin(
+        col("v").cast("array<double>"), cents, runnerUp = true).as("code"))
+      .as[(Long, Int)].collect().toMap
+    assert(second === Map(1L -> 2, 2L -> 2, 3L -> 0, 4L -> 0))
     // interpreted path (no codegen): evaluate the expression directly
     val expr = graft.functions.VectorExpressions.PqArgmin(
       org.apache.spark.sql.catalyst.expressions.Literal.create(
@@ -133,5 +157,12 @@ class CodegenGuardSpec extends SparkTestBase {
         org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType)),
       cents.map(_.toSeq).toSeq)
     assert(expr.eval(null) === 0)
+    assert(expr.copy(runnerUp = true).eval(null) === 2)
+    // no finite cost (NaN or Inf element) -> null, not -1
+    for (bad <- Seq(Double.NaN, Double.PositiveInfinity))
+      assert(expr.copy(child = org.apache.spark.sql.catalyst.expressions.Literal.create(
+        Seq(bad, 0.1),
+        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType)))
+        .eval(null) == null)
   }
 }

@@ -46,6 +46,47 @@ class ClusteringSpec extends SparkTestBase {
     assert(cents.forall(_.forall(v => !v.isNaN)))
   }
 
+  test("null, NaN and Inf vectors get a null cluster and never move a centroid") {
+    // one rule in the shared kernel: no finite cost -> null id. Row 0
+    // (null) also has the smallest id, so init must skip it too.
+    val bad = Seq[(Long, Array[Float])]((0L, null),
+      (21L, Array(Float.NaN, 0f, 0f, 0f)),
+      (22L, Array(Float.PositiveInfinity, 10f, 10f, 10f)))
+      .toDF("vec_id", "embedding")
+    val dirty = blobs.unionByName(bad)
+    val badIds = Set(0L, 21L, 22L)
+    def close(a: Array[Array[Double]], b: Array[Array[Double]]) =
+      a.length == b.length && a.zip(b).forall { case (x, y) =>
+        x.zip(y).forall { case (u, v) => math.abs(u - v) < 1e-9 } }
+
+    val cents = Clustering.kmeansCentroids(dirty, "vec_id", "embedding", 2, 2)
+    assert(close(cents, Clustering.kmeansCentroids(blobs, "vec_id", "embedding", 2, 2)))
+    val books = Similarity.pqTrain(dirty, "vec_id", "embedding", m = 2, k = 2, maxIter = 2)
+    val clean = Similarity.pqTrain(blobs, "vec_id", "embedding", m = 2, k = 2, maxIter = 2)
+    assert(books.indices.forall(s => close(books(s), clean(s))))
+
+    def clusters(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getInt(1)))).toMap
+    for (out <- Seq(
+        clusters(Clustering.assign(dirty, "vec_id", "embedding", cents)),
+        clusters(Clustering.kmeans(dirty, "vec_id", "embedding", 2, 2)))) {
+      assert(badIds.forall(out(_).isEmpty))
+      assert(out.filter(kv => !badIds(kv._1)) ==
+        clusters(Clustering.assign(blobs, "vec_id", "embedding", cents)))
+    }
+    // subspace 0 of every bad row is null/NaN/Inf -> null code there
+    val codes = Similarity.pqEncode(dirty, "vec_id", "embedding", books)
+      .collect().map(r => r.getLong(0) -> r.getSeq[Any](1)).toMap
+    assert(badIds.forall(id => codes(id).head == null))
+    assert(codes.filter(kv => !badIds(kv._1)).values.forall(_.forall(_ != null)))
+    // the consumers leave unassigned rows out
+    val sil = Clustering.silhouette(dirty, "vec_id", "embedding", 2, 2).collect()
+    assert(sil.map(_.getAs[Long]("n_points")).sum == 20 && !sil.exists(_.isNullAt(0)))
+    val div = Clustering.diversitySample(dirty, "vec_id", "embedding", 2, 2, 20)
+      .collect().map(_.getLong(1)).toSet
+    assert(div == (1L to 20L).toSet)
+  }
+
   test("diversitySample returns the most central members per cluster") {
     val out = Clustering.diversitySample(blobs, "vec_id", "embedding",
       k = 2, maxIter = 2, perCluster = 3).collect()

@@ -765,33 +765,36 @@ class SimilaritySpec extends SparkTestBase {
     // branches could disagree on which centroid a NaN row gets. The
     // fix drops NaN norms like zero norms in BOTH branches: the NaN
     // row must appear in neither the top-1 index nor any probe path.
+    // An Inf element gives an Inf norm and NaN sims — same hazard,
+    // same rule (row 4).
     val withNaN = Seq(
       (0L, Seq(1f, 0f, 0f)),
       (1L, Seq(0f, 1f, 0f)),
       (2L, Seq(0.9f, 0.1f, 0f)),
-      (3L, Seq(Float.NaN, 1f, 0f))).toDF("id", "v")
+      (3L, Seq(Float.NaN, 1f, 0f)),
+      (4L, Seq(Float.PositiveInfinity, 0f, 1f))).toDF("id", "v")
     val books = Similarity.pqTrain(
       withNaN.filter("id < 3"), "id", "v", m = 1, k = 2, maxIter = 0)
     // top-1 argmax branch (corpus-side assignment)
     val (index, _) =
       Similarity.pqIndexStore(withNaN, "id", "v", books, nCentroids = 2)
-    assert(!index.select("neighbor_id").collect().map(_.getLong(0))
-      .contains(3L))
+    val indexed = index.select("neighbor_id").collect().map(_.getLong(0))
+    assert(!indexed.contains(3L) && !indexed.contains(4L))
     // window branch (reduced multi-probe): the NaN row is neither a
     // query nor a neighbor
     val probed = Similarity.ivfTopK(withNaN, withNaN, "id", "v", 3,
         nCentroids = 3, nProbe = 2)
       .select("query_id", "neighbor_id").collect()
       .flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet
-    assert(!probed.contains(3L) && probed.nonEmpty)
+    assert(!probed.contains(3L) && !probed.contains(4L) && probed.nonEmpty)
   }
 
   test("probe-store full probe with a known centroid count drops the rank window") {
-    // r15 (advisor note): pqIvfProbeIndex forwards the store's
-    // centroid count, so the oracle-verified full-probe configuration
-    // (nProbe >= nCentroids) plans as the broadcast fan-out — no
-    // Window in the probe plan — and returns exactly the rows the
-    // window path returned
+    // pqIvfProbeIndex takes the centroid count from the store itself
+    // (the generation guard's row count), so a hint-less full probe
+    // (nProbe >= that count) plans as the broadcast fan-out — the
+    // same single top-k Window as the inline pqIvfTopK — and returns
+    // exactly pqIvfTopK's rows
     val e = spark.read.parquet(s"${sf()}/embeddings.parquet")
     val books = Similarity.pqTrain(e, "vec_id", "embedding",
       m = 4, k = 4, maxIter = 1)
@@ -802,18 +805,17 @@ class SimilaritySpec extends SparkTestBase {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "neighbor_id", "rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val withCount = Similarity.pqIvfProbeIndex(q, index, cents,
-      "vec_id", "embedding", books, 5, nProbe = 8, nCentroids = 8)
-    val without = Similarity.pqIvfProbeIndex(q, index, cents,
+    val stored = Similarity.pqIvfProbeIndex(q, index, cents,
       "vec_id", "embedding", books, 5, nProbe = 8)
-    assert(rows(withCount) == rows(without) && rows(withCount).nonEmpty)
+    val inline = Similarity.pqIvfTopK(q, e, "vec_id", "embedding", books, 5,
+      nCentroids = 8, nProbe = 8)
+    assert(rows(stored) == rows(inline) && rows(stored).nonEmpty)
     // the final top-k rank window remains; the PROBE-side rank window
-    // (nProbe candidate ranking over n*c rows) must be gone — exactly
-    // one Window stage in the fan-out plan, two in the window-path plan
+    // (nProbe candidate ranking over n*c rows) must be gone
     def windows(df: org.apache.spark.sql.DataFrame) =
       df.queryExecution.executedPlan.toString.linesIterator
         .count(_.contains("Window ["))
-    assert(windows(withCount) < windows(without))
+    assert(windows(stored) == 1 && windows(inline) == 1)
   }
 
   test("IVF defaults auto-size centroids from the corpus (sqrt-n rule)") {
@@ -1308,16 +1310,6 @@ class SimilaritySpec extends SparkTestBase {
     // OR-construction must recover >= 80% of the true top-5
     info(f"sim3 banded LSH recall: single-probe $single%.3f multi-probe $multi%.3f")
     assert(multi >= 0.8, s"banded multi-probe recall too low: $multi")
-  }
-
-  test("kmeans-centroid IVF returns k ranked neighbors per query") {
-    val e = spark.read.parquet(s"${sf()}/embeddings.parquet")
-      .withColumnRenamed("vec_id", "id").withColumnRenamed("embedding", "v")
-    val out = Similarity.ivfTopK(e.filter("id < 5"), e, "id", "v", 3,
-      nCentroids = 8, nProbe = 3, kmeansCentroids = true)
-    val byQuery = out.collect().groupBy(_.getLong(0))
-    assert(byQuery.size == 5)
-    assert(byQuery.values.forall(_.map(_.getInt(2)).sorted.sameElements(Array(1, 2, 3))))
   }
 
   test("int8 quantization round-trips within tolerance and preserves top-k") {
