@@ -49,6 +49,17 @@ object DialectMerge {
     * is a key (degenerate case, reference
     * `SQLServerManager.java:327-332`) the update clause is dropped and
     * only not-matched rows insert.
+    *
+    * Postgres updates a matched row only when its non-key columns
+    * differ from the staged ones as binary row images
+    * (`ROW(t.…) *<> ROW(excluded.…)`), so an unchanged row gets no new
+    * row version. Consequences for a caller: row-level UPDATE
+    * triggers do not fire for unchanged rows, and the statement's row
+    * count is changed plus inserted rows, not every staged row. The
+    * comparison is byte-level, so a real difference is never skipped
+    * (−0.0 vs 0.0, numeric 1.0 vs 1.00, NULL vs value, json); NULL
+    * equals NULL. A conflicting row is still locked when the guard
+    * skips it. The other dialects update every matched row.
     */
   def mergeSql(sink: String, staging: String, allColumns: Seq[String],
       keys: Seq[String], dialect: Dialect,
@@ -79,10 +90,19 @@ object DialectMerge {
         // clause (the documented ON CONFLICT/join ambiguity; the
         // reference emits the same guard, SqliteManager.java:252-254).
         // Verified against a real sqlite3 in SqliteWireSpec; Postgres
-        // parses the bare form (PgWireSpec) so it stays unchanged.
+        // parses the bare form (PgWireSpec).
         val guard = if (dialect == Sqlite) " WHERE true" else ""
-        s"INSERT INTO $sink ($colList) SELECT $colList FROM $staging$guard " +
-          s"ON CONFLICT ($conflict) DO $action"
+        // Postgres skips the rewrite when the non-key columns are
+        // byte-identical (record_image_ne): IS DISTINCT FROM would call
+        // -0.0 = 0.0 and numeric 1.0 = 1.00 equal, and has no json operator
+        def row(alias: String) =
+          nonKeys.map(c => s"$alias.${q(c)}").mkString("ROW(", ", ", ")::record")
+        val (alias, skipSame) =
+          if (dialect == Postgres && nonKeys.nonEmpty)
+            (" AS t", s" WHERE ${row("t")} OPERATOR(pg_catalog.*<>) ${row("excluded")}")
+          else ("", "")
+        s"INSERT INTO $sink$alias ($colList) SELECT $colList FROM $staging$guard " +
+          s"ON CONFLICT ($conflict) DO $action$skipSame"
 
       case MySql =>
         val updates =

@@ -164,12 +164,14 @@ object PgWireSource {
               lo <- conf.options.get("partition.lower").map(_.toLong)
               hi <- conf.options.get("partition.upper").map(_.toLong)
             } yield (lo, hi)
+            // no non-NULL key (empty source, all-NULL key): an empty
+            // range, i.e. one slice; MOD would drop every NULL-key row
             val bounds = explicit.orElse(attempt {
               val row = planner.exec(
                 s"SELECT MIN($k), MAX($k) FROM ($baseSelect) graft_s").rows.head
-              if (row(0) == null || row(1) == null) None
-              else Some((row(0).toLong, row(1).toLong))
-            }.flatten)
+              if (row(0) == null || row(1) == null) (0L, 0L)
+              else (row(0).toLong, row(1).toLong)
+            })
             JdbcPartitioning.forUrl(conf.connect, conf.partitions, key, bounds)
               .map(p => s"SELECT * FROM ($baseSelect) graft_s WHERE $p")
           case None if conf.query.isEmpty =>

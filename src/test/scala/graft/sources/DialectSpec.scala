@@ -39,6 +39,42 @@ class DialectMergeSpec extends AnyFunSuite {
     assert(pg.contains("DO NOTHING"))
   }
 
+  test("postgres merge guards the update with a binary image compare of the non-key columns") {
+    assert(mergeSql("sink", "stg", cols, keys, Postgres) ==
+      "INSERT INTO sink AS t (\"id\", \"name\", \"price\") " +
+      "SELECT \"id\", \"name\", \"price\" FROM stg ON CONFLICT (\"id\") " +
+      "DO UPDATE SET \"name\" = excluded.\"name\", \"price\" = excluded.\"price\" " +
+      "WHERE ROW(t.\"name\", t.\"price\")::record OPERATOR(pg_catalog.*<>) " +
+      "ROW(excluded.\"name\", excluded.\"price\")::record")
+    // unquoted: the key matches case-insensitively and stays out of the guard
+    assert(mergeSql("sch.sink", "sch.stg", Seq("ID", "NAME"), Seq("id"), Postgres,
+      quoteIds = false) ==
+      "INSERT INTO sch.sink AS t (ID, NAME) SELECT ID, NAME FROM sch.stg " +
+      "ON CONFLICT (id) DO UPDATE SET NAME = excluded.NAME " +
+      "WHERE ROW(t.NAME)::record OPERATOR(pg_catalog.*<>) ROW(excluded.NAME)::record")
+  }
+
+  test("sqlite, all-key postgres and the MERGE/ON DUPLICATE dialects emit unguarded statements") {
+    val list = "\"id\", \"name\", \"price\""
+    assert(mergeSql("sink", "stg", cols, keys, Sqlite) ==
+      s"INSERT INTO sink ($list) SELECT $list FROM stg WHERE true ON CONFLICT (\"id\") " +
+      "DO UPDATE SET \"name\" = excluded.\"name\", \"price\" = excluded.\"price\"")
+    assert(mergeSql("sink", "stg", Seq("id"), Seq("id"), Postgres) ==
+      "INSERT INTO sink (\"id\") SELECT \"id\" FROM stg ON CONFLICT (\"id\") DO NOTHING")
+    assert(mergeSql("sink", "stg", cols, keys, MySql) ==
+      "INSERT INTO sink (`id`, `name`, `price`) SELECT `id`, `name`, `price` FROM stg " +
+      "ON DUPLICATE KEY UPDATE `name` = VALUES(`name`), `price` = VALUES(`price`)")
+    val ansi = "INTO sink t USING stg s ON (t.\"id\" = s.\"id\") WHEN MATCHED THEN UPDATE SET " +
+      "t.\"name\" = s.\"name\", t.\"price\" = s.\"price\" WHEN NOT MATCHED THEN INSERT " +
+      s"($list) VALUES (s.\"id\", s.\"name\", s.\"price\")"
+    assert(mergeSql("sink", "stg", cols, keys, Oracle) == s"MERGE /*+ PARALLEL */ $ansi")
+    assert(mergeSql("sink", "stg", cols, keys, DerbyAnsi) == s"MERGE $ansi")
+    assert(mergeSql("sink", "stg", cols, keys, SqlServer) ==
+      "MERGE INTO sink t USING stg s ON (t.[id] = s.[id]) WHEN MATCHED THEN UPDATE SET " +
+      "t.[name] = s.[name], t.[price] = s.[price] WHEN NOT MATCHED THEN INSERT " +
+      "([id], [name], [price]) VALUES (s.[id], s.[name], s.[price]);")
+  }
+
   test("truncate degrades to DELETE where TRUNCATE is unsupported") {
     assert(truncateSql("t", Sqlite) == "DELETE FROM t")
     assert(truncateSql("t", Postgres) == "TRUNCATE TABLE t")
