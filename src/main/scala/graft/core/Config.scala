@@ -63,10 +63,6 @@ final case class SinkConf(
     mode: ReplicationMode = ReplicationMode.Complete,
     stagingTable: Option[String] = None,
     disableTruncate: Boolean = false,
-    /** Opt out of the vendor bulk-load fast path (PG COPY / MySQL
-      * LOAD DATA / SQLServer BulkCopy) even when the driver is on the
-      * classpath — falls back to the generic batched-insert writer. */
-    disableBulk: Boolean = false,
     /** Merge keys; discovered from JDBC metadata when empty
       * (reference `SqlManager.java:283-318`). */
     keyColumns: Seq[String] = Nil,
@@ -185,7 +181,6 @@ object Config {
       mode = get("mode").map(ReplicationMode.parse).getOrElse(ReplicationMode.Complete),
       stagingTable = get("sink.staging.table"),
       disableTruncate = get("sink.disable.truncate").exists(_.toBoolean),
-      disableBulk = get("sink.disable.bulk").exists(_.toBoolean),
       keyColumns = get("sink.key.columns").map(_.split(",").map(_.trim).toSeq).getOrElse(Nil),
       user = get("sink.user"),
       password = get("sink.password"),

@@ -168,7 +168,7 @@ object BulkLoad {
     p
   }
 
-  private def openConnection(url: String,
+  private[sources] def openConnection(url: String,
       options: Map[String, String]): java.sql.Connection = {
     options.get("driver").foreach(Class.forName)
     java.sql.DriverManager.getConnection(url, connProps(options))

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.sql.{Connection, DriverManager}
+import java.sql.Connection
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
@@ -10,29 +10,50 @@ import graft.core.{ReplicationMode, SinkConf, SourceConf}
   * of Spark's JDBC data source (SURVEY.md §2.1 S1-S8, §2.2 W2-W6,
   * §2.6).
   *
-  * Reads: partition predicates from JdbcPartitioning so N Spark tasks
-  * each pull one source-side slice over its own connection — the exact
-  * shape of the reference's N `ReplicaTask` threads
-  * (`ReplicaDB.java:239-254`), but distributed.
+  * Reads: partition predicates from [[JdbcPartitioning.plan]] so N
+  * Spark tasks each pull one source-side slice over its own
+  * connection — the exact shape of the reference's N `ReplicaTask`
+  * threads (`ReplicaDB.java:239-254`), but distributed. The `pgwire`
+  * opt-in reads through [[PgWireSource]] with the same planner.
   *
-  * Writes: three modes.
-  *  - complete: truncate-and-append through Spark's JDBC writer
-  *    (partition-parallel batched inserts, `batchsize` = fetch size).
-  *  - complete-atomic: load a staging table partition-parallel, then
-  *    swap into the sink inside ONE transaction on ONE driver-side
-  *    connection (delete + insert-select + drop staging, single
+  * Writes: the one mode dispatch for every database sink, run over a
+  * [[SinkSession]] — the JDBC driver's (below) or, on the `pgwire`
+  * opt-in, [[PgWireTransport]]'s. One control session is held for
+  * the whole write and idles in autocommit while the rows load
+  * partition-parallel on their own connections.
+  *  - complete: truncate (unless `--sink-disable-truncate`), then
+  *    append; the sink's table definition is never replaced.
+  *  - complete-atomic: load a staging table, then swap it into the
+  *    sink inside ONE transaction (delete + insert-select, single
   *    commit) — readers never observe a partial sink, the reference's
   *    `SqlManager.java:386-434` contract without the async
   *    uncommitted-delete trick (which Spark's driver/executor split
   *    makes unnecessary: the swap is cheap source-side SQL).
-  *  - incremental: load staging partition-parallel, then emit the
-  *    dialect MERGE/upsert (DialectMerge) on a single connection;
-  *    a failed load leaves the sink untouched.
+  *  - incremental: load staging, then emit the dialect MERGE/upsert
+  *    (DialectMerge) in one transaction; a failed load leaves the
+  *    sink untouched.
+  * Both staged modes drop the staging table whether or not the load
+  * and the commit succeed.
   */
 object JdbcConnector {
 
   GraftDerbyDialect.ensureRegistered
   GraftOracleDialect.ensureRegistered
+
+  /** What [[write]] needs from a sink transport: one control session
+    * (truncate, staging DDL, swap and merge SQL, key lookup) plus the
+    * partition-parallel loader, which dials the sink on its own
+    * connections. */
+  private[sources] trait SinkSession extends AutoCloseable {
+    def exec(sql: String): Unit
+    /** `body` as one transaction, rolled back when it throws. */
+    def transaction(body: => Unit): Unit
+    /** Primary-key columns of the table named exactly `table`. */
+    def primaryKeys(table: String): Seq[String]
+    def append(df: DataFrame, table: String): Unit
+    final def execIgnore(sql: String): Unit =
+      try exec(sql) catch { case _: java.sql.SQLException => () }
+  }
 
   def read(spark: SparkSession, conf: SourceConf): DataFrame = {
     val url = conf.connect
@@ -53,17 +74,12 @@ object JdbcConnector {
     val df =
       if (conf.partitions <= 1) spark.read.jdbc(url, table, props)
       else {
-        val key = conf.options.get("partition.key")
-        val explicitBounds = for {
-          lo <- conf.options.get("partition.lower").map(_.toLong)
-          hi <- conf.options.get("partition.upper").map(_.toLong)
-        } yield (lo, hi)
-        // range predicates beat MOD on an indexed key (each slice is
-        // one index range scan, not a full scan per slice); discover
-        // min/max with one cheap aggregate when not supplied
-        val bounds = explicitBounds.orElse(key.flatMap(k =>
-          discoverKeyBounds(url, conf.connOptions, table, k)))
-        val preds = JdbcPartitioning.forUrl(url, conf.partitions, key, bounds)
+        val preds = JdbcPartitioning.plan(url, conf.partitions, conf.options, table,
+          sql => withConnection(url, conf.connOptions) { c =>
+            val rs = c.createStatement().executeQuery(sql)
+            rs.next()
+            Seq(rs.getString(1), rs.getString(2))
+          })
         spark.read.jdbc(url, table, preds.toArray, props)
       }
     val projected = conf.columns.map(cs => df.select(cs.map(df.col): _*)).getOrElse(df)
@@ -78,15 +94,9 @@ object JdbcConnector {
     if (url.startsWith("jdbc:denodo") || url.startsWith("jdbc:vdb"))
       throw new UnsupportedOperationException(
         "Denodo is not supported for data insertion")
-    // explicit `pgwire` opt-in routes the whole sink flow (control SQL
-    // + parallel COPY) through the engine's own v3 wire transport —
-    // no PG JDBC jar required (PgWireTransport mirrors the modes below)
-    if (PgWireTransport.enabled(url, conf.connOptions))
-      return PgWireTransport.write(df, conf)
     val rawTable = conf.table.getOrElse(
       throw new IllegalArgumentException("JDBC sink needs a table"))
     val dialect = DialectMerge.fromUrl(url)
-    val opts = conf.connOptions
     // --quoted-identifiers: quote each dot-segment of every emitted
     // table identifier (reference `ConnManager.java:200-206`)
     def qt(t: String): String =
@@ -95,84 +105,88 @@ object JdbcConnector {
       else t
     val table = qt(rawTable)
     val aligned = conf.columns.map(cs => df.select(cs.map(df.col): _*)).getOrElse(df)
+    // explicit `pgwire` opt-in: control SQL and parallel COPY over the
+    // engine's own v3 wire client — no PG JDBC jar required
+    val s =
+      if (PgWireTransport.enabled(url, conf.connOptions)) PgWireTransport.session(conf)
+      else jdbcSession(conf)
 
-    conf.mode match {
+    def staged(commit: String => Unit): Unit = {
+      val staging = qt(stagingTableName(conf, rawTable))
+      s.execIgnore(s"DROP TABLE $staging")
+      s.exec(DialectMerge.createStagingSql(staging, table, dialect))
+      try {
+        s.append(aligned, staging)
+        s.transaction(commit(staging))
+      } finally s.execIgnore(s"DROP TABLE $staging")
+    }
+
+    try conf.mode match {
       case ReplicationMode.Complete =>
-        if (!conf.disableBulk && BulkLoad.available(url)) {
-          // vendor bulk path: truncate on one connection, then stream
-          // every partition through COPY / LOAD DATA in parallel
-          if (!conf.disableTruncate) withConnection(url, opts) { c =>
-            exec(c, DialectMerge.truncateSql(table, dialect))
-          }
-          BulkLoad.bulkAppend(aligned, url, table, conf.batchSize,
-            disableEscape = conf.disableEscape, options = opts)
-        } else {
-          val writer = aligned.write.mode(SaveMode.Overwrite)
-            .option("truncate", (!conf.disableTruncate).toString)
-            .option("batchsize", conf.batchSize.toString)
-          opts.foldLeft(writer) { case (w, (k, v)) => w.option(k, v) }
-            .jdbc(url, table, new java.util.Properties())
-        }
+        if (!conf.disableTruncate) s.exec(DialectMerge.truncateSql(table, dialect))
+        s.append(aligned, table)
 
       case ReplicationMode.CompleteAtomic =>
-        val staging = qt(stagingTableName(conf, rawTable))
-        withConnection(url, opts) { c =>
-          execIgnore(c, s"DROP TABLE $staging")
-          exec(c, DialectMerge.createStagingSql(staging, table, dialect))
-        }
-        appendTo(aligned, url, staging, conf)
-        withConnection(url, opts) { c =>
-          c.setAutoCommit(false)
-          try {
-            exec(c, s"DELETE FROM $table")
-            exec(c, s"INSERT INTO $table SELECT * FROM $staging")
-            c.commit()
-          } catch {
-            case e: Throwable => c.rollback(); throw e
-          } finally {
-            c.setAutoCommit(true)
-            execIgnore(c, s"DROP TABLE $staging")
-          }
+        staged { staging =>
+          s.exec(s"DELETE FROM $table")
+          s.exec(s"INSERT INTO $table SELECT * FROM $staging")
         }
 
       case ReplicationMode.Incremental =>
-        val staging = qt(stagingTableName(conf, rawTable))
+        // PK discovery with the reference's upper/lower-case retry
+        // (`SqlManager.java:283-318`)
         val keys =
           if (conf.keyColumns.nonEmpty) conf.keyColumns
-          else discoverPrimaryKeys(url, opts, rawTable)
+          else Iterator(rawTable, rawTable.toUpperCase, rawTable.toLowerCase)
+            .map(s.primaryKeys).find(_.nonEmpty).getOrElse(Nil)
         require(keys.nonEmpty, s"incremental mode needs key columns for $rawTable")
-        withConnection(url, opts) { c =>
-          execIgnore(c, s"DROP TABLE $staging")
-          exec(c, DialectMerge.createStagingSql(staging, table, dialect))
-        }
-        appendTo(aligned, url, staging, conf)
-        withConnection(url, opts) { c =>
-          c.setAutoCommit(false)
-          try {
-            exec(c, DialectMerge.mergeSql(table, staging,
-              aligned.columns.toSeq, keys, dialect,
-              quoteIds = conf.quotedIdentifiers))
-            c.commit()
-          } catch {
-            case e: Throwable => c.rollback(); throw e
-          } finally {
-            c.setAutoCommit(true)
-            execIgnore(c, s"DROP TABLE $staging")
-          }
-        }
-    }
+        staged(staging => s.exec(DialectMerge.mergeSql(table, staging,
+          aligned.columns.toSeq, keys, dialect, quoteIds = conf.quotedIdentifiers)))
+    } finally s.close()
   }
 
-  private def appendTo(df: DataFrame, url: String, table: String, conf: SinkConf): Unit =
-    if (!conf.disableBulk && BulkLoad.available(url)) {
-      BulkLoad.bulkAppend(df, url, table, conf.batchSize,
-        disableEscape = conf.disableEscape, options = conf.connOptions)
-    } else {
-      val writer = df.write.mode(SaveMode.Append)
-        .option("batchsize", conf.batchSize.toString)
-      conf.connOptions.foldLeft(writer) { case (w, (k, v)) => w.option(k, v) }
-        .jdbc(url, table, new java.util.Properties())
+  /** The JDBC-driver [[SinkSession]]: control SQL on one
+    * `java.sql.Connection`; rows load through the vendor bulk path
+    * when its driver is loadable ([[BulkLoad]]), else through Spark's
+    * batched-insert writer (`batchsize` = fetch size). */
+  private def jdbcSession(conf: SinkConf): SinkSession = new SinkSession {
+    private val url = conf.connect
+    private val opts = conf.connOptions
+    private val c = BulkLoad.openConnection(url, opts)
+
+    def exec(sql: String): Unit = {
+      val st = c.createStatement()
+      try st.execute(sql) finally st.close()
     }
+
+    def transaction(body: => Unit): Unit = {
+      c.setAutoCommit(false)
+      try { body; c.commit() }
+      catch { case e: Throwable => c.rollback(); throw e }
+      finally c.setAutoCommit(true)
+    }
+
+    def primaryKeys(table: String): Seq[String] = {
+      val rs = c.getMetaData.getPrimaryKeys(null, null, table)
+      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
+      while (rs.next()) buf += rs.getString("COLUMN_NAME")
+      rs.close()
+      buf.toSeq
+    }
+
+    def append(df: DataFrame, table: String): Unit =
+      if (BulkLoad.available(url))
+        BulkLoad.bulkAppend(df, url, table, conf.batchSize,
+          disableEscape = conf.disableEscape, options = opts)
+      else {
+        val writer = df.write.mode(SaveMode.Append)
+          .option("batchsize", conf.batchSize.toString)
+        opts.foldLeft(writer) { case (w, (k, v)) => w.option(k, v) }
+          .jdbc(url, table, new java.util.Properties())
+      }
+
+    def close(): Unit = c.close()
+  }
 
   /** Staging table name resolution, reference
     * `ConnManager.java:145-178`: an explicit `--sink-staging-table`
@@ -187,56 +201,8 @@ object JdbcConnector {
       conf.stagingSchema.map(s => s"$s.$name").getOrElse(name)
     }
 
-  /** Min/max of a numeric partition key — the split-planning
-    * aggregate (the Spark-native replacement for the reference's
-    * count(*)-based chunk sizing, `PostgresqlManager.java:310-354`).
-    * Returns None on any failure (non-numeric key, empty table) so
-    * the caller falls back to MOD predicates. */
-  def discoverKeyBounds(url: String, options: Map[String, String],
-      table: String, key: String): Option[(Long, Long)] =
-    try withConnection(url, options) { c =>
-      val st = c.createStatement()
-      try {
-        val rs = st.executeQuery(s"SELECT MIN($key), MAX($key) FROM $table")
-        if (rs.next()) {
-          val lo = rs.getLong(1); val loNull = rs.wasNull()
-          val hi = rs.getLong(2); val hiNull = rs.wasNull()
-          if (loNull || hiNull) None else Some((lo, hi))
-        } else None
-      } finally st.close()
-    } catch { case _: java.sql.SQLException => None }
-
-  /** PK discovery with the reference's upper/lower-case retry
-    * (`SqlManager.java:283-318`). */
-  def discoverPrimaryKeys(url: String, options: Map[String, String],
-      table: String): Seq[String] =
-    withConnection(url, options) { c =>
-      def pks(t: String): Seq[String] = {
-        val rs = c.getMetaData.getPrimaryKeys(null, null, t)
-        val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-        while (rs.next()) buf += rs.getString("COLUMN_NAME")
-        rs.close()
-        buf.toSeq
-      }
-      val exact = pks(table)
-      if (exact.nonEmpty) exact
-      else {
-        val upper = pks(table.toUpperCase)
-        if (upper.nonEmpty) upper else pks(table.toLowerCase)
-      }
-    }
-
   def withConnection[T](url: String, options: Map[String, String])(f: Connection => T): T = {
-    options.get("driver").foreach(Class.forName)
-    val c = DriverManager.getConnection(url, BulkLoad.connProps(options))
+    val c = BulkLoad.openConnection(url, options)
     try f(c) finally c.close()
   }
-
-  private def exec(c: Connection, sql: String): Unit = {
-    val st = c.createStatement()
-    try st.execute(sql) finally st.close()
-  }
-
-  private def execIgnore(c: Connection, sql: String): Unit =
-    try exec(c, sql) catch { case _: java.sql.SQLException => () }
 }

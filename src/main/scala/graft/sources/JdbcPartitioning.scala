@@ -15,7 +15,10 @@ package graft.sources
   *    anti-pattern Spark replaces with key-range predicates.
   *  - PK-range and mod-hash predicates: the preferred portable forms.
   *
-  * All pure string builders — unit-testable without a database.
+  * Pure string builders — unit-testable without a database — plus
+  * [[plan]], the split decision both read paths (Spark's JDBC reader
+  * and [[PgWireSource]]) make, which probes key bounds through a
+  * caller-supplied query function.
   */
 object JdbcPartitioning {
 
@@ -34,7 +37,8 @@ object JdbcPartitioning {
   }
 
   /** Portable: modulo of an integer key. Uniform iff key is dense or
-    * hashed; safe everywhere. */
+    * hashed; a NULL or non-integral key matches no slice, so it is
+    * never picked for an unknown key. */
   def modKey(keyCol: String, n: Int): Seq[String] = {
     require(n > 0)
     if (n == 1) Seq("1 = 1")
@@ -100,16 +104,41 @@ object JdbcPartitioning {
     }
   }
 
-  /** Pick a strategy by JDBC url scheme + available key metadata. */
+  /** Pick a strategy by JDBC url scheme + available key metadata.
+    * `keyBounds` is evaluated only when the key strategy is picked;
+    * unknown bounds mean one slice (MOD on an unknown key would drop
+    * every NULL or non-integral key). */
   def forUrl(url: String, n: Int, intKey: Option[String],
-      keyBounds: Option[(Long, Long)] = None): Seq[String] = {
+      keyBounds: => Option[(Long, Long)] = None): Seq[String] = {
     val u = url.toLowerCase
     if (u.startsWith("jdbc:oracle")) oraHash(n)
     else if (u.startsWith("jdbc:sqlserver")) physloc(n)
-    else (intKey, keyBounds) match {
-      case (Some(k), Some((lo, hi))) => keyRange(k, lo, hi, n)
-      case (Some(k), None) => modKey(k, n)
-      case _ => Seq("1 = 1") // single partition; no safe split key
-    }
+    else intKey.flatMap(k => keyBounds.map { case (lo, hi) => keyRange(k, lo, hi, n) })
+      .getOrElse(Seq("1 = 1")) // single partition; no safe split key
+  }
+
+  /** The split decision of every JDBC read (driver or pgwire): the
+    * `partition.key` / `partition.lower` / `partition.upper` options
+    * of `relation`, cut `n` ways. Explicit bounds win; otherwise one
+    * MIN/MAX aggregate (the Spark-native replacement for the
+    * reference's count(*)-based chunk sizing,
+    * `PostgresqlManager.java:310-354`) runs through `firstRow` on the
+    * caller's own connection. A failed probe, a NULL bound (empty
+    * relation, all-NULL key) or a non-numeric key reads one slice; a
+    * fractional key is cut on whole-number boundaries, which the
+    * open-ended first and last key ranges keep complete. */
+  def plan(url: String, n: Int, options: Map[String, String], relation: String,
+      firstRow: String => Seq[String]): Seq[String] = {
+    val key = options.get("partition.key")
+    val explicit = for {
+      lo <- options.get("partition.lower").map(_.toLong)
+      hi <- options.get("partition.upper").map(_.toLong)
+    } yield (lo, hi)
+    def whole(v: String): Long =
+      new java.math.BigDecimal(v).setScale(0, java.math.RoundingMode.FLOOR).longValueExact
+    forUrl(url, n, key, explicit.orElse(key.flatMap(k => scala.util.Try {
+      val row = firstRow(s"SELECT MIN($k), MAX($k) FROM $relation")
+      (whole(row(0)), whole(row(1)))
+    }.toOption)))
   }
 }

@@ -16,9 +16,10 @@ import graft.core.SourceConf
   * (`ReplicaDB.java:239-254`) on Spark's executor model:
   *  - the driver infers the Spark schema from one `LIMIT 0`
   *    RowDescription (pg_type OIDs -> Spark types);
-  *  - [[JdbcPartitioning]] emits the same disjoint predicates the
-  *    JDBC path uses (key ranges when bounds are discoverable, MOD
-  *    otherwise — bounds discovered with one MIN/MAX over the wire);
+  *  - [[JdbcPartitioning.plan]] makes the same split decision as the
+  *    JDBC path (key ranges from explicit bounds or one MIN/MAX probe
+  *    sent over the wire, else one slice); only the keyless plain
+  *    table is PostgreSQL-specific: disjoint ctid page ranges;
   *  - each Spark task opens ONE wire connection and streams its slice
   *    through a server-side cursor (`DECLARE … FETCH <fetchSize>`),
   *    so task memory is bounded by the fetch batch, exactly the
@@ -139,6 +140,7 @@ object PgWireSource {
       val where = conf.where.map(w => s" WHERE $w").getOrElse("")
       s"SELECT $cols FROM $table$where"
     }
+    val from = s"($baseSelect) graft_s"
 
     // ALL driver-side planning (schema probe + slice bounds) shares
     // ONE connection — against a remote server every extra connect is
@@ -146,56 +148,36 @@ object PgWireSource {
     val planner = PgWireClient.connect(
       endpoint.target, endpoint.user, endpoint.db, endpoint.password)
     val (schema, sliceSqls) = try {
-      val r = planner.exec(s"SELECT * FROM ($baseSelect) graft_s LIMIT 0")
+      val r = planner.exec(s"SELECT * FROM $from LIMIT 0")
       val schema = StructType(r.columns.zip(r.typeOids).map { case (n, o) =>
         StructField(n, sparkType(o))
       })
-      def attempt[T](f: => T): Option[T] =
-        try Some(f) catch { case _: Exception => None }
-      val key = conf.options.get("partition.key")
       val slices: Seq[String] =
         if (conf.partitions <= 1) Seq(baseSelect)
-        else key match {
-          case Some(k) =>
-            // explicit bounds first — the JDBC path's contract
-            // (JdbcConnector.read): a caller who supplies
-            // partition.lower/upper pays NO MIN/MAX scan
-            val explicit = for {
-              lo <- conf.options.get("partition.lower").map(_.toLong)
-              hi <- conf.options.get("partition.upper").map(_.toLong)
-            } yield (lo, hi)
-            // no non-NULL key (empty source, all-NULL key): an empty
-            // range, i.e. one slice; MOD would drop every NULL-key row
-            val bounds = explicit.orElse(attempt {
-              val row = planner.exec(
-                s"SELECT MIN($k), MAX($k) FROM ($baseSelect) graft_s").rows.head
-              if (row(0) == null || row(1) == null) (0L, 0L)
-              else (row(0).toLong, row(1).toLong)
-            })
-            JdbcPartitioning.forUrl(conf.connect, conf.partitions, key, bounds)
-              .map(p => s"SELECT * FROM ($baseSelect) graft_s WHERE $p")
-          case None if conf.query.isEmpty =>
-            // keyless plain table: disjoint ctid page ranges (TID
-            // range scans — each task touches only its pages; the
-            // predicate must sit on the base table, ctid dies in a
-            // subselect). ctid exists only on real storage: gate on
-            // relkind (table/matview/toast) — a VIEW has a pg_class
-            // row too, so "the probe fails" is NOT the guard
-            attempt {
-              val row = planner.exec(
-                "SELECT c.relkind, greatest(c.relpages, 1) FROM pg_class c " +
-                  s"WHERE c.oid = '$table'::regclass").rows.head
-              (row(0), row(1).toLong)
-            } match {
-              case Some((kind, pages)) if Seq("r", "m", "t").contains(kind) =>
-                val cols = conf.columns.map(_.mkString(", ")).getOrElse("*")
-                val extra = conf.where.map(w => s" AND ($w)").getOrElse("")
-                JdbcPartitioning.ctidRanges(pages, conf.partitions)
-                  .map(p => s"SELECT $cols FROM $table WHERE $p$extra")
-              case _ => Seq(baseSelect) // view/foreign table: one slice
-            }
-          case None => Seq(baseSelect) // keyless subselect: one slice
-        }
+        else if (conf.options.contains("partition.key") || conf.query.nonEmpty)
+          JdbcPartitioning.plan(conf.connect, conf.partitions, conf.options, from,
+            planner.exec(_).rows.head)
+            .map(p => s"SELECT * FROM $from WHERE $p")
+        else
+          // keyless plain table: disjoint ctid page ranges (TID
+          // range scans — each task touches only its pages; the
+          // predicate must sit on the base table, ctid dies in a
+          // subselect). ctid exists only on real storage: gate on
+          // relkind (table/matview/toast) — a VIEW has a pg_class
+          // row too, so "the probe fails" is NOT the guard
+          scala.util.Try {
+            val row = planner.exec(
+              "SELECT c.relkind, greatest(c.relpages, 1) FROM pg_class c " +
+                s"WHERE c.oid = '$table'::regclass").rows.head
+            (row(0), row(1).toLong)
+          }.toOption match {
+            case Some((kind, pages)) if Seq("r", "m", "t").contains(kind) =>
+              val cols = conf.columns.map(_.mkString(", ")).getOrElse("*")
+              val extra = conf.where.map(w => s" AND ($w)").getOrElse("")
+              JdbcPartitioning.ctidRanges(pages, conf.partitions)
+                .map(p => s"SELECT $cols FROM $table WHERE $p$extra")
+            case _ => Seq(baseSelect) // view/foreign table: one slice
+          }
       (schema, slices)
     } finally planner.close()
 

@@ -4,29 +4,24 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.DataFrame
 
-import graft.core.{ReplicationMode, SinkConf}
+import graft.core.SinkConf
 
-/** W1's COPY fast path over the engine's OWN transport
+/** The PostgreSQL wire transport under [[JdbcConnector.write]]'s
+  * mode dispatch: W1's COPY fast path over the engine's OWN client
   * ([[PgWireClient]]) — activates when the sink options carry
   * `pgwire.socket` (unix-socket directory, psql `-h` style) or
   * `pgwire=true` (TCP to the JDBC URL's host:port). No PG JDBC jar
   * needed anywhere on the classpath.
   *
-  * Same dataflow as the JDBC-driver flow in [[JdbcConnector.write]],
-  * statement for statement (`PostgresqlManager.java:49-172` semantics):
-  *
-  *  - complete: TRUNCATE on one control connection, then every Spark
-  *    partition streams its rows as one `COPY … FROM STDIN` on its
-  *    own connection — N partitions load in parallel, no driver-side
-  *    funnel (the 1000-executor shape; each executor dials the sink
-  *    directly, exactly like the reference's N ReplicaTask threads).
-  *  - complete-atomic: UNLOGGED staging + parallel COPY, then
-  *    DELETE + INSERT-SELECT + DROP inside one BEGIN/COMMIT.
-  *  - incremental: UNLOGGED staging + parallel COPY, then the
-  *    [[DialectMerge]] ON CONFLICT merge in one transaction; key
-  *    columns discovered from pg_index when not supplied (the JDBC
-  *    getPrimaryKeys metadata call IS this catalog query inside the
-  *    PG driver).
+  * It supplies the [[JdbcConnector.SinkSession]] the modes run over
+  * (`PostgresqlManager.java:49-172` semantics): control SQL on one
+  * client with its session timezone pinned, merge keys from pg_index
+  * (the JDBC getPrimaryKeys metadata call IS this catalog query
+  * inside the PG driver), and rows through [[copyAppend]] — every
+  * Spark partition streams its rows as one `COPY … FROM STDIN` on its
+  * own connection, N partitions in parallel, no driver-side funnel
+  * (each executor dials the sink directly, exactly like the
+  * reference's N ReplicaTask threads).
   */
 object PgWireTransport {
 
@@ -62,21 +57,6 @@ object PgWireTransport {
     try { cl.exec(s"SET TIME ZONE '${java.util.TimeZone.getDefault.getID}'"); () }
     catch { case _: java.sql.SQLException => () }
 
-  private def withClient[T](c: Endpoint)(f: PgWireClient => T): T = {
-    val cl = PgWireClient.connect(c.target, c.user, c.db, c.password)
-    pinSessionTz(cl)
-    try f(cl) finally cl.close()
-  }
-
-  private def execIgnore(cl: PgWireClient, sql: String): Unit =
-    try { cl.exec(sql); () } catch { case _: java.sql.SQLException => () }
-
-  private def inTransaction(cl: PgWireClient)(body: => Unit): Unit = {
-    cl.exec("BEGIN")
-    try { body; cl.exec("COMMIT") }
-    catch { case e: Throwable => execIgnore(cl, "ROLLBACK"); throw e }
-  }
-
   /** Parallel COPY: one wire connection per non-empty Spark
     * partition, rows encoded to the exact [[BulkLoad.encodeRow]]
     * wire text the JDBC path streams. */
@@ -99,9 +79,8 @@ object PgWireTransport {
   }
 
   /** Merge-key discovery from the catalog — what the PG JDBC driver's
-    * `getPrimaryKeys` runs under the hood. Matches `relname` exactly,
-    * then retries upper/lower case — the reference's getPrimaryKeys
-    * retry (`SqlManager.java:283-318`); a bare `::regclass` cast
+    * `getPrimaryKeys` runs under the hood — for exactly this name
+    * (the caller retries upper/lower case); a bare `::regclass` cast
     * would case-fold a mixed-case table name and miss it. */
   def discoverPrimaryKeys(cl: PgWireClient, table: String): Seq[String] = {
     val parts = table.split('.')
@@ -111,75 +90,34 @@ object PgWireTransport {
     // pg_namespace whenever the caller qualified the name
     val nsp = if (parts.length > 1)
       Some(parts(parts.length - 2).replace("'", "''")) else None
-    def pks(name: String, ns: Option[String]): Seq[String] = cl.exec(
+    cl.exec(
       s"""SELECT a.attname FROM pg_index i
          |JOIN pg_class c ON c.oid = i.indrelid
          |JOIN pg_namespace n ON n.oid = c.relnamespace
          |JOIN pg_attribute a ON a.attrelid = i.indrelid AND a.attnum = ANY(i.indkey)
-         |WHERE c.relname = '$name' AND i.indisprimary${
-           ns.map(x => s" AND n.nspname = '$x'").getOrElse("")}
+         |WHERE c.relname = '$bare' AND i.indisprimary${
+           nsp.map(x => s" AND n.nspname = '$x'").getOrElse("")}
          |ORDER BY array_position(i.indkey, a.attnum)""".stripMargin)
       .rows.map(_.head)
-    val exact = pks(bare, nsp)
-    if (exact.nonEmpty) exact
-    else {
-      val upper = pks(bare.toUpperCase, nsp.map(_.toUpperCase))
-      if (upper.nonEmpty) upper
-      else pks(bare.toLowerCase, nsp.map(_.toLowerCase))
-    }
   }
 
-  def write(df: DataFrame, conf: SinkConf): Unit = {
-    val url = conf.connect
-    val opts = conf.connOptions
-    val c = connFor(url, opts)
-    val dialect = DialectMerge.Postgres
-    val rawTable = conf.table.getOrElse(
-      throw new IllegalArgumentException("JDBC sink needs a table"))
-    def qt(t: String): String =
-      if (conf.quotedIdentifiers)
-        t.split('.').map(DialectMerge.quote(_, dialect)).mkString(".")
-      else t
-    val table = qt(rawTable)
-    val aligned = conf.columns.map(cs => df.select(cs.map(df.col): _*)).getOrElse(df)
-
-    conf.mode match {
-      case ReplicationMode.Complete =>
-        if (!conf.disableTruncate) withClient(c) { cl =>
-          cl.exec(DialectMerge.truncateSql(table, dialect)); ()
-        }
-        copyAppend(aligned, c, table, conf.disableEscape)
-
-      case ReplicationMode.CompleteAtomic =>
-        val staging = qt(JdbcConnector.stagingTableName(conf, rawTable))
-        withClient(c) { cl =>
-          execIgnore(cl, s"DROP TABLE $staging")
-          cl.exec(DialectMerge.createStagingSql(staging, table, dialect))
-        }
-        copyAppend(aligned, c, staging, conf.disableEscape)
-        withClient(c) { cl =>
-          try inTransaction(cl) {
-            cl.exec(s"DELETE FROM $table")
-            cl.exec(s"INSERT INTO $table SELECT * FROM $staging")
-          } finally execIgnore(cl, s"DROP TABLE $staging")
-        }
-
-      case ReplicationMode.Incremental =>
-        val staging = qt(JdbcConnector.stagingTableName(conf, rawTable))
-        withClient(c) { cl =>
-          val keys =
-            if (conf.keyColumns.nonEmpty) conf.keyColumns
-            else discoverPrimaryKeys(cl, rawTable)
-          require(keys.nonEmpty, s"incremental mode needs key columns for $rawTable")
-          execIgnore(cl, s"DROP TABLE $staging")
-          cl.exec(DialectMerge.createStagingSql(staging, table, dialect))
-          copyAppend(aligned, c, staging, conf.disableEscape)
-          try inTransaction(cl) {
-            cl.exec(DialectMerge.mergeSql(table, staging,
-              aligned.columns.toSeq, keys, dialect,
-              quoteIds = conf.quotedIdentifiers))
-          } finally execIgnore(cl, s"DROP TABLE $staging")
-        }
+  /** The control session of one sink write: a client with its
+    * session timezone pinned, loading through [[copyAppend]]. */
+  private[sources] def session(conf: SinkConf): JdbcConnector.SinkSession = {
+    val endpoint = connFor(conf.connect, conf.connOptions)
+    val cl = PgWireClient.connect(endpoint.target, endpoint.user, endpoint.db, endpoint.password)
+    pinSessionTz(cl)
+    new JdbcConnector.SinkSession {
+      def exec(sql: String): Unit = { cl.exec(sql); () }
+      def transaction(body: => Unit): Unit = {
+        cl.exec("BEGIN")
+        try { body; cl.exec("COMMIT"); () }
+        catch { case e: Throwable => execIgnore("ROLLBACK"); throw e }
+      }
+      def primaryKeys(table: String): Seq[String] = discoverPrimaryKeys(cl, table)
+      def append(df: DataFrame, table: String): Unit =
+        copyAppend(df, endpoint, table, conf.disableEscape)
+      def close(): Unit = cl.close()
     }
   }
 }

@@ -221,6 +221,15 @@ class JdbcConnectorSpec extends SparkTestBase {
     JdbcConnector.write(Seq((2L, "b", 2.0), (3L, "c", 3.0)).toDF("K", "V", "X"), sink)
     val rows = readBack(url).collect()
     assert(rows.map(_.getLong(0)).toSet == Set(2L, 3L))
+    // --sink-disable-truncate appends onto the existing table: its
+    // rows and its definition (primary key) survive
+    JdbcConnector.write(Seq((4L, "d", 4.0)).toDF("K", "V", "X"),
+      sink.copy(disableTruncate = true))
+    assert(readBack(url).collect().map(_.getLong(0)).toSet == Set(2L, 3L, 4L))
+    JdbcConnector.withConnection(url, Map.empty) { c =>
+      val rs = c.getMetaData.getPrimaryKeys(null, null, "T")
+      assert(rs.next() && rs.getString("COLUMN_NAME") == "K")
+    }
   }
 
   test("incremental mode merges on the discovered primary key") {
@@ -272,6 +281,13 @@ class JdbcConnectorSpec extends SparkTestBase {
     assert(back.rdd.getNumPartitions == 4)
     assert(back.count() == 100)
     assert(back.agg(sum("K")).first().getLong(0) == 5050)
+    // a key with no non-NULL value has no bounds: one slice, every row
+    JdbcConnector.withConnection(url, Map.empty) { c =>
+      c.createStatement().execute("ALTER TABLE T ADD COLUMN N BIGINT")
+    }
+    val nullKey = JdbcConnector.read(spark, SourceConf(connect = url,
+      table = Some("T"), partitions = 4, options = Map("partition.key" -> "N")))
+    assert(nullKey.count() == 100)
   }
 }
 

@@ -590,5 +590,12 @@ class PgWireSpec extends SparkTestBase with BeforeAndAfterAll {
     assert(nullKeys.rdd.getNumPartitions == 1 && nullKeys.count() == 30)
     val empty = ReplicaEngine.read(spark, source.copy(where = Some("false")))
     assert(empty.rdd.getNumPartitions == 1 && empty.count() == 0)
+    // a fractional numeric key is cut on whole-number bounds and every
+    // fractional key lands in exactly one slice
+    exec("CREATE TABLE ntab (k numeric, v int)")
+    exec("INSERT INTO ntab SELECT g + 0.5, g FROM generate_series(0, 999) g")
+    val fractional = ReplicaEngine.read(spark, source.copy(table = Some("ntab")))
+    assert(fractional.rdd.getNumPartitions == 4 && fractional.count() == 1000 &&
+      fractional.select("v").distinct().count() == 1000)
   }
 }
