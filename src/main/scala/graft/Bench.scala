@@ -19,18 +19,15 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // iteration aid: SPARK_GRAFT_BENCH_ONLY=dd2_x,dd4_y limits the run
+    // (an unknown name fails the run before the session starts)
+    val selected = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .fold(SparkEntry.queries)(SparkEntry.named)
     val spark = GraftSession.getOrCreate("graft-bench")
     spark.sparkContext.setLogLevel("ERROR")
     // warm the JVM/codegen once on the smallest table so per-query
     // numbers measure the plan, not first-call classloading
     spark.read.parquet(s"$sfDir/region.parquet").count()
-    // iteration aid: SPARK_GRAFT_BENCH_ONLY=dd2_x,dd4_y limits the run
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(q => names(q._1))
-      case None => SparkEntry.queries
-    }
     def jstr(s: String): String = "\"" + s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"
@@ -96,14 +93,15 @@ object Bench {
     // membership = st-family queries with min >= 5s on the r14 idle
     // 2-pass record (PERF.md); together ~71s of the family's ~121s
     // min-sum, saved per extra pass
-    val defaultSinglePass = Set(
-      "st19_stream_stream_join", "st20_stream_outer_join",
-      "st12_stream_countmin", "st14_stream_neardup", "st11_trending",
-      "st8_stream_dedup", "st23_stream_ivf_occupancy")
-    val singlePass: Set[String] = sys.env.get("SPARK_GRAFT_BENCH_SINGLE_PASS")
-      .map(v => if (v.trim == "none") Set.empty[String]
-        else v.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(defaultSinglePass)
+    val defaultSinglePass =
+      "st19_stream_stream_join,st20_stream_outer_join," +
+      "st12_stream_countmin,st14_stream_neardup,st11_trending," +
+      "st8_stream_dedup,st23_stream_ivf_occupancy"
+    val singlePass: Set[String] =
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_SINGLE_PASS", defaultSinglePass) match {
+        case v if v.trim == "none" => Set.empty
+        case v => SparkEntry.named(v).keySet
+      }
 
     // samples seen so far, per query, in pass order (head = pass 1)
     val acc = scala.collection.mutable.Map.empty[String, Vector[Either[String, Double]]]

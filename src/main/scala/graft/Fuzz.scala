@@ -61,7 +61,7 @@ object Fuzz {
       val raw = spark.read.parquet(s"$sfDir/${t.name}.parquet")
       // events.parquet can carry TIMESTAMP(NANOS), which the session
       // reads as a raw nano long (nanosAsLong=true); convert to micros
-      // exactly like SparkEntry.events so both engines see timestamps
+      // exactly like queries.Fixtures.events so both engines see timestamps
       val df =
         if (t.name == "events" &&
             raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)

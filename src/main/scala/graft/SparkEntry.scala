@@ -1,12173 +1,48 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core._
-import graft.functions.{Conversions, TextExpressions}
-import graft.operators._
-import graft.sources.{FileConnector, JdbcConnector, MongoShim, ObjectPerRowSink}
+import graft.queries._
 
-/** Driver contract — one `queries` entry per implemented operator from
-  * SURVEY.md §2 (+ the beyond-parity training-data operators), with a
-  * DuckDB-equivalent `oracleSql` wherever the semantics are ANSI-SQL
-  * expressible. Naming: s*=scan/source, f*=filter, q*=query pushdown,
+/** Driver contract — one query per implemented operator from
+  * SURVEY.md §2 (+ the beyond-parity training-data operators), each
+  * with a DuckDB-equivalent oracle. Every query is declared once, as a
+  * `Q(name, build, oracle)` in its family file under `graft/queries/`;
+  * this object only derives the driver's maps from those declarations.
+  * Naming: s*=scan/source, f*=filter, q*=query pushdown,
   * j*=join, agg*=aggregation, w*=window, m*=replication mode,
   * t*=conversion, k*=kafka, c*=csv, dd*=dedup, sim*=similarity,
   * ta*=text analysis, mm*=multimodal, st*=stream-shaped.
   */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  /** Every declared query, family by family, in declaration order. */
+  private[graft] val declared: Seq[Q] = Seq(SourcesQ, ReplModesQ,
+    RelationalQ, ConversionsQ, DedupQ, SimilarityQ, TextQ, QualityQ,
+    MultimodalQ, StreamingQ, ExperimentsQ).flatMap(_.declared)
 
-  /** Deterministic partsupp fixture: the testdata has no partsupp
-    * table, so synthesize the TPC-H relationship — 4 suppliers per
-    * part by modular arithmetic (collision-free for i in 0..3 at any
-    * supplier count >= 53), availqty/supplycost derived from the keys
-    * so both engines rebuild identical rows. The supplier count rides
-    * in as a broadcast 1-row frame, never a driver action. Unlocks
-    * the Q2/Q9/Q11/Q16/Q20 shapes. */
-  private def partsuppFixture(s: SparkSession, dir: String): DataFrame = {
-    val ns = broadcast(t(s, dir, "supplier").agg(count(lit(1)).as("__ns")))
-    t(s, dir, "part").select(col("p_partkey"))
-      .crossJoin(ns)
-      .select(col("p_partkey"), col("__ns"),
-        explode(sequence(lit(0L), lit(3L))).as("i"))
-      .select(
-        col("p_partkey").as("ps_partkey"),
-        ((col("p_partkey") * 7 + col("i") * 13) % col("__ns")).as("ps_suppkey"),
-        ((col("p_partkey") * 13 + col("i") * 17) % 9999 + 1).cast("int")
-          .as("ps_availqty"),
-        round(((col("p_partkey") * 31 + col("i") * 7) % 90000) / lit(100.0)
-          + 100.0, 2).as("ps_supplycost"))
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    declared.map(q => q.name -> q.build).toMap
+
+  /** The driver's oracle map, built on first use. Some queries share
+    * another query's oracle: a composed IVF plan at full probe
+    * re-verifies its exhaustive yardstick, and a stream run of a batch
+    * operator must equal the batch result. */
+  lazy val oracleSql: Map[String, String] =
+    declared.map(q => q.name -> q.oracle).toMap
+
+  /** The queries named in a comma list (blank entries ignored) — the
+    * drivers' one name selector. Fails naming every unknown entry, so
+    * a misspelt name cannot silently run nothing. */
+  def named(list: String): Map[String, (SparkSession, String) => DataFrame] = {
+    val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = names -- queries.keySet
+    require(unknown.isEmpty,
+      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
+    queries.filter { case (name, _) => names(name) }
   }
-
-  /** The partsupp fixture as oracle SQL (kept textually in one place:
-    * every qN oracle that needs it prepends this CTE). */
-  private val psFixtureSql: String =
-    """ps AS (
-      |  SELECT p.p_partkey AS ps_partkey,
-      |         (p.p_partkey * 7 + t.i * 13) %
-      |           (SELECT count(*) FROM supplier) AS ps_suppkey,
-      |         CAST((p.p_partkey * 13 + t.i * 17) % 9999 + 1 AS INT) AS ps_availqty,
-      |         round((p.p_partkey * 31 + t.i * 7) % 90000 / 100.0 + 100.0, 2)
-      |           AS ps_supplycost
-      |  FROM part p, unnest([0, 1, 2, 3]) AS t(i))""".stripMargin
-
-  /** Unrolled-CTE replay of [[graft.operators.LinkGraph.pageRank]]'s
-    * integer recurrence for the pr1 fixture graph: one (dang, inb,
-    * r) CTE triple per iteration, every operation BIGINT floor
-    * division/multiply/add — exact agreement with the Spark result
-    * is the point (fixed-point PageRank is engine-independent). */
-  private def pr1OracleSql(iters: Int): String = {
-    val scale = 1000000000000L
-    val head =
-      """WITH n AS (SELECT count(*) AS n_docs FROM documents),
-        |v AS (SELECT doc_id AS node FROM documents),
-        |e AS (SELECT doc_id AS src,
-        |        (doc_id * 13 + t.i * 17 + 1) % (SELECT n_docs FROM n) AS dst
-        |      FROM documents, unnest([0, 1, 2, 3]) AS t(i)
-        |      WHERE t.i < doc_id % 4),
-        |deg AS (SELECT src AS node, count(*) AS deg FROM e GROUP BY 1),
-        |r0 AS (SELECT node, (SELECT SCALE // n_docs FROM n) AS rank_fp FROM v)"""
-        .stripMargin.replace("SCALE", scale.toString)
-    val iterCtes = (1 to iters).map { k =>
-      s"""dang$k AS (
-         |  SELECT CAST(coalesce(sum(rank_fp), 0) AS BIGINT) AS dang
-         |  FROM r${k - 1} LEFT JOIN deg USING (node) WHERE deg IS NULL),
-         |inb$k AS (
-         |  SELECT e.dst AS node,
-         |         CAST(sum(r.rank_fp // d.deg) AS BIGINT) AS inbound
-         |  FROM e JOIN r${k - 1} r ON r.node = e.src
-         |         JOIN deg d ON d.node = e.src
-         |  GROUP BY 1),
-         |r$k AS (
-         |  SELECT v.node,
-         |         (((100 - 85) * $scale) // (100 * n.n_docs))
-         |         + ((85 * (coalesce(i.inbound, 0) + (dg.dang // n.n_docs))) // 100)
-         |           AS rank_fp
-         |  FROM v LEFT JOIN inb$k i ON v.node = i.node
-         |  CROSS JOIN dang$k dg CROSS JOIN n)""".stripMargin
-    }
-    (head +: iterCtes).mkString(",\n") +
-      s"\nSELECT node, rank_fp FROM r$iters"
-  }
-
-  /** Unrolled-CTE replay of [[graft.operators.LinkGraph.labelPropagation]]
-    * for pr3's decade-star fixture: one (votes, labels) CTE pair per
-    * sweep, integer-only — neighbor votes UNION ALL the self vote,
-    * plurality by (count DESC, label ASC). */
-  private def pr3OracleSql(iters: Int): String = {
-    val head =
-      """WITH e0 AS (
-        |  SELECT doc_id AS s, doc_id - doc_id % 10 AS t
-        |  FROM documents WHERE doc_id % 10 <> 0
-        |  UNION ALL
-        |  SELECT doc_id, doc_id + 1 FROM documents
-        |  WHERE doc_id % 10 < 9
-        |    AND doc_id + 1 <= (SELECT max(doc_id) FROM documents)
-        |  UNION ALL
-        |  SELECT doc_id, doc_id + 10 FROM documents
-        |  WHERE doc_id % 100 = 0
-        |    AND doc_id + 10 <= (SELECT max(doc_id) FROM documents)),
-        |e AS (
-        |  SELECT DISTINCT s, t FROM (
-        |    SELECT s, t FROM e0 WHERE s <> t
-        |    UNION ALL
-        |    SELECT t, s FROM e0 WHERE s <> t)),
-        |l0 AS (SELECT DISTINCT s AS node, s AS lbl FROM e)""".stripMargin
-    val sweeps = (1 to iters).map { k =>
-      s"""v$k AS (
-         |  SELECT node, lbl, count(*) AS c FROM (
-         |    SELECT e.t AS node, l.lbl FROM e JOIN l${k - 1} l ON l.node = e.s
-         |    UNION ALL
-         |    SELECT node, lbl FROM l${k - 1})
-         |  GROUP BY 1, 2),
-         |l$k AS (
-         |  SELECT node, lbl FROM (
-         |    SELECT node, lbl,
-         |           row_number() OVER (PARTITION BY node
-         |                              ORDER BY c DESC, lbl ASC) AS rn
-         |    FROM v$k)
-         |  WHERE rn = 1)""".stripMargin
-    }
-    (head +: sweeps).mkString(",\n") +
-      s"\nSELECT node, lbl FROM l$iters"
-  }
-
-  /** Unrolled-CTE replay of [[graft.operators.LinkGraph.kCore]] on the
-    * pr2/pr4 chain+chord fixture: one (deg, alive) CTE pair per
-    * sweep — degree counted over edges with BOTH endpoints alive,
-    * shell below k dropped. */
-  private def pr4OracleSql(k: Int, sweeps: Int): String = {
-    val head =
-      """WITH mx AS (SELECT max(doc_id) AS m FROM documents),
-        |e0 AS (
-        |  SELECT doc_id AS s, doc_id + 1 AS t FROM documents, mx
-        |  WHERE doc_id + 1 <= m
-        |  UNION ALL
-        |  SELECT doc_id, doc_id + 2 FROM documents, mx
-        |  WHERE doc_id + 2 <= m),
-        |e AS (SELECT DISTINCT s, t FROM (
-        |  SELECT s, t FROM e0 WHERE s <> t
-        |  UNION ALL SELECT t, s FROM e0 WHERE s <> t)),
-        |a0 AS (SELECT DISTINCT s AS node FROM e)""".stripMargin
-    val iter = (1 to sweeps).map { i =>
-      s"""d$i AS (
-         |  SELECT e.s AS node, CAST(count(*) AS BIGINT) AS deg
-         |  FROM e JOIN a${i - 1} x ON e.s = x.node
-         |         JOIN a${i - 1} y ON e.t = y.node
-         |  GROUP BY 1 HAVING count(*) >= $k),
-         |a$i AS (SELECT node FROM d$i)""".stripMargin
-    }
-    (head +: iter).mkString(",\n") + s"\nSELECT node, deg FROM d$sweeps"
-  }
-
-  /** SQL replay of a count-min sketch over `itemsSql` (a SELECT
-    * yielding one `item` column): exact per-item counts, salted
-    * limb-hash buckets ([[graft.operators.Sampling.idHash]] algebra),
-    * counter sums, min over `depth` — shared by the batch (hh2) and
-    * streaming (st12) folds, whose counters are identical by
-    * construction. */
-  private def cmsOracleSql(itemsSql: String, depth: Int, width: Int): String =
-    s"""WITH it AS ($itemsSql),
-       |ex AS (SELECT item, CAST(count(*) AS BIGINT) AS n_true
-       |       FROM it GROUP BY 1),
-       |expl AS (SELECT item, n_true, unnest(range(0, $depth)) AS d FROM ex),
-       |hx AS (SELECT item, n_true, d,
-       |              (item + d * 1000003) % 4294967296 AS lo FROM expl),
-       |hh AS (SELECT item, n_true, d,
-       |        (lo // 65536 * 2654435761 % 4294967296 * 65536
-       |         + lo % 65536 * 2654435761) % 4294967296 % $width AS bucket
-       |       FROM hx),
-       |ctr AS (SELECT d, bucket, CAST(sum(n_true) AS BIGINT) AS c
-       |        FROM hh GROUP BY 1, 2),
-       |est AS (SELECT h.item, h.n_true, min(c) AS cms_est
-       |        FROM hh h JOIN ctr USING (d, bucket)
-       |        GROUP BY h.item, h.n_true)
-       |SELECT item, n_true, cms_est, cms_est - n_true AS overcount
-       |FROM est""".stripMargin
-
-  /** Bit-for-bit SQL replay of [[graft.sources.Layout.interleaveBits]]
-    * for z1: one fully-parenthesized (mask, shift, or) term per bit
-    * position, BIGINT throughout. */
-  private def z1OracleSql(bits: Int): String = {
-    val mask = (1L << bits) - 1
-    val terms = (0 until bits).flatMap { i =>
-      Seq(s"(((a >> $i) & 1) << ${2 * i})",
-        s"(((b >> $i) & 1) << ${2 * i + 1})")
-    }
-    s"""WITH m AS (
-       |  SELECT l_orderkey, l_linenumber,
-       |         CAST(l_partkey AS BIGINT) & $mask AS a,
-       |         CAST(l_suppkey AS BIGINT) & $mask AS b
-       |  FROM lineitem)
-       |SELECT l_orderkey, l_linenumber,
-       |       ${terms.mkString(" | ")} AS zkey
-       |FROM m""".stripMargin
-  }
-
-  /** Deterministic person-name fixture for link1/link2: 8 first
-    * names cycled per 3-record family group, with per-record typo
-    * variants (truncated / extra letter) so fuzzy matching has real
-    * work and the family suffix blocks candidates. */
-  private def namedFixture(docs: DataFrame): DataFrame =
-    docs.selectExpr("doc_id",
-      """CASE (doc_id DIV 3) % 8
-           WHEN 0 THEN 'john' WHEN 1 THEN 'jane' WHEN 2 THEN 'alice'
-           WHEN 3 THEN 'robert' WHEN 4 THEN 'maria' WHEN 5 THEN 'david'
-           WHEN 6 THEN 'susan' ELSE 'peter' END AS fn""",
-      "doc_id % 3 AS r", "doc_id DIV 3 AS g")
-      .selectExpr("doc_id",
-        """concat(CASE r WHEN 1 THEN substring(fn, 1, length(fn) - 1)
-                         WHEN 2 THEN concat(fn, 'e') ELSE fn END,
-                  ' fam', CAST(g AS STRING)) AS name""")
-
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily set
-    * to `n`: a stream-stream join materializes one state-store
-    * instance per shuffle partition per micro-batch, so a
-    * fixture-sized stream pays a 32-instance setup floor unless the
-    * state partitioning is sized to the load — exactly what a
-    * production job does through its own conf. Join/aggregation
-    * results are partitioning-invariant; the previous value is
-    * restored in finally (the frames a builder RETURNS are planned
-    * after restoration and keep the session default). */
-  private def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
-  /** Deterministic 4-line fixture for rep3/st21: the third line
-    * duplicates the first on every doc_id % 3 == 0. */
-  private def linedFixture(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), split(col("text"), " ").as("w"))
-      .select(col("doc_id"), concat_ws("\n",
-        array_join(slice(col("w"), 1, 3), " "),
-        array_join(slice(col("w"), 4, 3), " "),
-        when(col("doc_id") % 3 === 0, array_join(slice(col("w"), 1, 3), " "))
-          .otherwise(array_join(slice(col("w"), 7, 3), " ")),
-        array_join(slice(col("w"), 10, 3), " ")).as("text"))
-
-  /** Deterministic URL fixture for url1/qf3: the corpus has no URLs,
-    * so append two per document — a mixed-case host (normalization
-    * must lowercase it) and a host with port + query (the domain
-    * parse must stop at ':'). */
-  private def urlFixture(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      concat(col("text"),
-        lit(" http://d"), (col("doc_id") % 7).cast("string"),
-        lit(".example/p/"), col("doc_id").cast("string"),
-        lit(" https://CDN-d"), (col("doc_id") % 4).cast("string"),
-        lit(".Example:8443/x?q="), col("doc_id").cast("string")).as("text"))
-
-  /** events.ts is TIMESTAMP(NANOS) parquet — Spark reads it as a nano
-    * long (nanosAsLong); normalize to TIMESTAMP_NTZ (micros, matching
-    * DuckDB's naive CAST(ts AS TIMESTAMP) truncation). NTZ, not the
-    * session-tz TimestampType: the source data is wall-clock naive and
-    * the oracle compares naive values — LTZ here made every ts-bearing
-    * output fail the schema gate (round-1 c1/j2/m3/st1 root cause). */
-  private def events(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "events")
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")).cast("timestamp_ntz"))
-      case _ => raw
-    }
-  }
-
-  /** Cast every session-tz timestamp column to TIMESTAMP_NTZ (UTC
-    * session ⇒ instant-preserving). Applied at boundaries that
-    * re-introduce LTZ, e.g. JDBC readback. */
-  private def ntz(df: DataFrame): DataFrame = {
-    val cols = df.schema.fields.map { f =>
-      if (f.dataType == org.apache.spark.sql.types.TimestampType)
-        col(f.name).cast("timestamp_ntz").as(f.name)
-      else col(f.name)
-    }
-    df.select(cols.toIndexedSeq: _*)
-  }
-
-  private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
-  /** Data files of a parquet output dir (skips _SUCCESS / hidden) —
-    * shared with the probes (one definition of "data file" for the
-    * mtime-pinning sites). Fails with a clear message (not an NPE)
-    * when the path is missing or not a directory. */
-  private[graft] def listDataFiles(dir: String): Array[java.io.File] = {
-    val files = Option(new java.io.File(dir).listFiles())
-    require(files.isDefined, s"not a listable directory: $dir")
-    files.get
-      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-  }
-
-  /** Stage each frame in `batches` as ONE parquet file under `path`
-    * with strictly ascending mtimes — FileStreamSource discovers by
-    * modification time, so with maxFilesPerTrigger=1 each element
-    * becomes exactly one micro-batch, in sequence order (st14's
-    * pinning, factored for the multi-batch stream-stream queries).
-    * Returns the directory opened as that stream. */
-  private def stagedMicroBatches(s: SparkSession, path: String,
-      batches: Seq[DataFrame]): DataFrame = {
-    val t0 = System.currentTimeMillis() - 600000L
-    batches.zipWithIndex.foreach { case (b, i) =>
-      val before =
-        if (i == 0) Set.empty[String]
-        else listDataFiles(path).map(_.getName).toSet
-      b.coalesce(1).write.mode("append").parquet(path)
-      listDataFiles(path).filterNot(f => before(f.getName))
-        .foreach(_.setLastModified(t0 + i * 5000L))
-    }
-    s.readStream.schema(s.read.parquet(path).schema)
-      .option("maxFilesPerTrigger", 1).parquet(path)
-  }
-
-  /** Corpus-trained subword vocabulary for the tok1/pack3/ch2 family,
-    * memoized per sf dir (training is two aggregations + two bounded
-    * collects; the tokenizer queries share one table). vocabSize 64
-    * on the synthetic corpus (31 distinct words) keeps most FULL
-    * words out of the vocab, so the greedy matcher genuinely splits
-    * into subwords rather than degenerating to whole-word tokens. */
-  private val vocabCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[String]]()
-  private def trainedVocab(s: SparkSession, dir: String): Array[String] =
-    vocabCache.computeIfAbsent(dir, _ =>
-      Tokenizer.trainVocab(t(s, dir, "documents"), "text",
-        vocabSize = 64, maxTokenLen = 8))
-
-  /** TRUE BPE merges for the tok3/tok4/pack3/ch2 family, memoized per
-    * sf dir (training is one corpus pass + `bpeMergeCount` bounded
-    * iterations on the checkpointed distinct-word table, one-row
-    * collect each). 24 merges on the synthetic corpus leaves frequent
-    * words as whole tokens and genuinely splits the rest — the
-    * regime where merge-order application and greedy longest-match
-    * demonstrably differ. */
-  private[graft] val bpeMergeCount = 24
-  private val bpeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(String, String)]]()
-  private def trainedBpe(s: SparkSession, dir: String): Array[(String, String)] =
-    bpeCache.computeIfAbsent(dir, _ =>
-      Tokenizer.trainBpeMerges(t(s, dir, "documents"), "text",
-        numMerges = bpeMergeCount))
-
-  /** WordPiece merges for tok13/tok14, memoized per sf dir. 16
-    * merges: enough to diverge visibly from the BPE trajectory (the
-    * likelihood score promotes strongly-bound rare pairs over merely
-    * frequent ones) while keeping the per-merge unrolled oracle CTE
-    * chain tractable. */
-  private[graft] val wpMergeCount = 16
-  private val wpCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(String, String)]]()
-  private def trainedWordPiece(s: SparkSession, dir: String): Array[(String, String)] =
-    wpCache.computeIfAbsent(dir, _ =>
-      Tokenizer.trainWordPieceMerges(t(s, dir, "documents"), "text",
-        numMerges = wpMergeCount))
-
-  /** Unigram-LM tokenizer (piece, count, qscore) rows, memoized per
-    * sf dir — training is one distributed word-count aggregation
-    * plus bounded driver EM (see Tokenizer.trainUnigramLm). */
-  private val unigramCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(String, Long, Long)]]()
-  private def trainedUnigram(s: SparkSession, dir: String): Array[(String, Long, Long)] =
-    unigramCache.computeIfAbsent(dir, _ =>
-      Tokenizer.trainUnigramLm(t(s, dir, "documents"), "text",
-        vocabSize = 48, seedSize = 96, maxPieceLen = 6))
-
-  private val byteBpeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(String, String)]]()
-  private def trainedByteBpe(s: SparkSession, dir: String): Array[(String, String)] =
-    byteBpeCache.computeIfAbsent(dir, _ =>
-      Tokenizer.trainBpeBytes(t(s, dir, "documents"), "text",
-        numMerges = bpeMergeCount))
-
-  private val bpeVocabCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long)]]()
-  private def trainedBpeVocab(s: SparkSession, dir: String): Seq[(String, Long)] =
-    bpeVocabCache.computeIfAbsent(dir, _ =>
-      Tokenizer.bpeVocabTable(t(s, dir, "documents"), "text",
-        trainedBpe(s, dir).toSeq))
-
-  /** PQ codebooks for the sim9/sim10/sim11 family, memoized per sf
-    * dir (training = one bounded init collect + 2 fused aggregation
-    * jobs; the dominant cost is actually codegen-compiling the
-    * m×k literal-centroid argmin tree, paid once here instead of
-    * once per query). */
-  private val pqCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[Array[Array[Double]]]]()
-  private def trainedPq(s: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    pqCache.computeIfAbsent(dir, _ =>
-      Similarity.pqTrain(t(s, dir, "embeddings"), "vec_id", "embedding",
-        m = 8, k = 16, maxIter = 2))
-
-  /** qf9 training fixture: every 5th doc gets deterministic junk
-    * appended (digit/punct spam — shifts the density features) and
-    * label 1; the classifier must learn to separate them. The junk
-    * string is shared verbatim with the oracle SQL. */
-  private val qf9Junk =
-    " 0123456789 0123456789 !!!??!! 0123456789 ,,;;::!! 0123456789"
-  private def qf9Frame(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      when(col("doc_id") % 5 === 0, concat(col("text"), lit(qf9Junk)))
-        .otherwise(col("text")).as("text"),
-      when(col("doc_id") % 5 === 0, lit(1.0)).otherwise(lit(0.0)).as("y"))
-
-  /** qf9 features: dyadic scalings of EXACT integer counts (token /
-    * digit / punct / char counts over the proven TextAnalysis
-    * regex classes) — identical doubles in any engine. */
-  private def qf9Features(text: Column): Seq[Column] = Seq(
-    lit(1.0),
-    TextAnalysis.tokenCount(text) / lit(64.0),
-    TextAnalysis.digitCount(text) / lit(256.0),
-    TextAnalysis.punctCount(text) / lit(256.0),
-    TextAnalysis.charCount(text) / lit(1024.0))
-
-  /** qf9 converged training config (r7 hyperparameter grid: every
-    * config with iters >= 48, lr 2.0, junk-class weight 4.0 reaches
-    * accuracy 1.0 on the planted-junk fixture; the r7 default
-    * 16/0.5/unweighted under-trained at 0.8). The 4x minority
-    * upweight folds into the per-row error BEFORE quantization, so
-    * the trajectory stays bit-reproducible and oracle-replayable. */
-  private[graft] val qf9Iters = 64
-  private[graft] val qf9Lr = 2.0
-  private def qf9Weight: Column =
-    when(col("y") === 1.0, lit(4.0)).otherwise(lit(1.0))
-
-  /** qf9's feature-extractor identity — part of the persisted model's
-    * generation guard. BUMP when [[qf9Features]]/[[qf9Frame]] change:
-    * weights trained under other features must be rejected on load. */
-  private[graft] val qf9FeatureSpec =
-    "bias,tokens/64,digits/256,punct/256,chars/1024|junk%5,w4x|v1"
-
-  /** Training-data fingerprint: order-free XOR of per-row hashes over
-    * the raw corpus (the augmented frame/labels are deterministic
-    * functions of it, captured by [[qf9FeatureSpec]]). One
-    * map-combined aggregate — the cheap pass that lets a persisted
-    * model refuse to score data it was not trained on. */
-  private def qf9DataHash(s: SparkSession, dir: String): Long =
-    t(s, dir, "documents")
-      .agg(expr("bit_xor(xxhash64(doc_id, text))")).collect()(0).getLong(0)
-
-  /** Stable per-corpus store path for the persisted qf9 model — the
-    * artifact a production gate ships: train once ([[trainedQf9]]),
-    * score/calibrate in any later process. */
-  private[graft] def qf9ModelPath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_qf9_model_${java.lang.Integer.toHexString(dir.hashCode)}"
-
-  /** Trained qf9 weights — store-backed (r10): load the persisted
-    * model when its generation guard passes (algo + feature spec +
-    * config + data fingerprint), else train once and persist. qf9
-    * (the gate), eval9 (its calibration report) and qf11 (the
-    * lifecycle query) all score ONE model, exactly as a production
-    * pipeline does; the in-process memo just skips re-reading the
-    * store within a session. */
-  private val qf9WCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Double]]()
-
-  /** Probe-only: drop the in-process weight memo so the next
-    * [[trainedQf9]] exercises the cross-process store-load path. */
-  private[graft] def resetQf9MemoForProbe(): Unit = qf9WCache.clear()
-
-  /** mem2/mem3 planted-generation fixture over the corpus docs
-    * 100-199: gens 0-49 are near-verbatim copies with every 20th word
-    * edited (1-edit-per-20-words paraphrase), gens 50-99 are novel
-    * text over the same vocabulary (token order reversed). Shared
-    * verbatim with both oracles' `gensrc` CTE. */
-  private def mem2GenFixture(docs: DataFrame): DataFrame = {
-    val toks = split(trim(col("text")), "\\s+")
-    docs.filter(col("doc_id") >= 100 && col("doc_id") < 200)
-      .select((col("doc_id") - 100).as("gen_id"),
-        when(col("doc_id") < 150,
-          array_join(transform(toks,
-            (w, i) => when((i + 1) % 20 === 0, lit("zqz")).otherwise(w)),
-            " "))
-          .otherwise(array_join(reverse(toks), " "))
-          .as("text"))
-  }
-  private def trainedQf9(s: SparkSession, dir: String): Array[Double] =
-    qf9WCache.computeIfAbsent(dir, _ => {
-      val path = qf9ModelPath(dir)
-      val dh = qf9DataHash(s, dir)
-      ModelStore.loadIfValid(s, path, qf9FeatureSpec, qf9Iters, qf9Lr, dh)
-        .getOrElse {
-          val w = QualityFilters.trainQualityClassifier(
-            qf9Frame(t(s, dir, "documents")), qf9Features(col("text")),
-            col("y"), iters = qf9Iters, lr = qf9Lr, sampleWeight = qf9Weight)
-          ModelStore.save(s, path, w, qf9FeatureSpec, qf9Iters, qf9Lr, dh)
-          w
-        }
-    })
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("j1_join_agg")(spark, "/root/testdata/sf0.001")
-
-  /** KLL contract arm (qsk1/qsk2/st26): the returned element occupies
-    * ranks [lo+1, hi]; the estimate is in bound iff the target rank
-    * ceil(q*n) sits within eps*n of that interval. eps = 0.05 is 5x
-    * the k=200 sketch's expected rank error. */
-  private def kllRankBound(lo: Column, hi: Column, q: Double,
-      n: Column): Column = {
-    val target = ceil(lit(q) * n)
-    target >= lo + 1 - lit(0.05) * n && target <= hi + lit(0.05) * n
-  }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- §2.1 scans / sources -------------------------------------
-    "s1_scan_project" -> ((s, dir) => {
-      // column projection pushed into the scan (SURVEY §2.3)
-      val conf = SourceConf(connect = s"$dir/lineitem.parquet",
-        columns = Some(Seq("l_orderkey", "l_extendedprice", "l_shipdate")))
-      ReplicaEngine.transform(s, ReplicaEngine.read(s, conf), conf)
-    }),
-
-    "s2_partitioned_scan" -> ((s, dir) => {
-      // the dialect partition-predicate strategy (ora_hash/physloc
-      // analogue): N disjoint slices, union == full table
-      val orders = t(s, dir, "orders")
-      graft.sources.JdbcPartitioning.modKey("o_orderkey", 4)
-        .map(pred => orders.filter(expr(pred)))
-        .reduce(_.unionAll(_))
-    }),
-
-    "f1_filter_where" -> ((s, dir) => {
-      // source-where predicate passthrough (SURVEY §2.3)
-      val conf = SourceConf(connect = s"$dir/orders.parquet",
-        where = Some("o_totalprice > 100000 AND o_orderstatus = 'F'"))
-      ReplicaEngine.transform(s, ReplicaEngine.read(s, conf), conf)
-    }),
-
-    "q1_source_query" -> ((s, dir) => {
-      // source-query passthrough: arbitrary SQL over the source
-      val conf = SourceConf(connect = s"$dir/orders.parquet",
-        query = Some("SELECT o_orderpriority, count(*) AS n, " +
-          "round(sum(o_totalprice), 2) AS total FROM t1 GROUP BY o_orderpriority"))
-      ReplicaEngine.transform(s, ReplicaEngine.read(s, conf), conf)
-    }),
-
-    "c1_csv_declared_schema" -> ((s, dir) => {
-      // CSV source with declared JDBC-style column types (S11)
-      val out = tmpDir("graft_csv") + "/orders_csv"
-      val src = t(s, dir, "orders")
-        .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate")
-      FileConnector.write(src, out, "csv", Map("header" -> "true"), overwrite = true)
-      val conf = SourceConf(connect = out,
-        columnNames = Some(Seq("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate")),
-        columnTypes = Some(Seq("BIGINT", "VARCHAR", "DOUBLE", "TIMESTAMP")),
-        options = Map("format" -> "csv", "header" -> "true"))
-      ReplicaEngine.read(s, conf)
-    }),
-
-    "c2_orc_json_roundtrip" -> ((s, dir) => {
-      // ORC + JSON sources (S12/S13): write both, read both back,
-      // verify the union against 2x the table
-      val base = tmpDir("graft_fmt")
-      val src = t(s, dir, "supplier")
-      FileConnector.write(src, s"$base/sup.orc", "orc", Map.empty, overwrite = true)
-      FileConnector.write(src, s"$base/sup.json", "json", Map.empty, overwrite = true)
-      val orc = FileConnector.read(s, SourceConf(connect = s"$base/sup.orc"))
-      val json = FileConnector.read(s, SourceConf(connect = s"$base/sup.json",
-        options = Map("format" -> "json")))
-      // JSON is schemaless on read (ints widen to bigint) — restore
-      // the declared schema before the union
-      orc.unionByName(json.select(orc.schema.fields.toIndexedSeq.map(f =>
-        json.col(f.name).cast(f.dataType).as(f.name)): _*))
-    }),
-
-    // avro roundtrip (S13's last unproven format): Spark 4 ships the
-    // avro source inside spark-sql itself, so the same engine write/
-    // read path ORC uses covers the reference's avro declaration
-    // (manager/file/FileFormats.java:3-15) with zero extra jars —
-    // write through the engine, read back through the registry route
-    "c4_avro_roundtrip" -> ((s, dir) => {
-      val base = tmpDir("graft_avro")
-      val src = t(s, dir, "supplier")
-      FileConnector.write(src, s"$base/sup.avro", "avro", Map.empty,
-        overwrite = true)
-      val back = FileConnector.read(s, SourceConf(connect = s"$base/sup.avro"))
-      back.select(src.columns.map(back.col).toIndexedSeq: _*)
-    }),
-
-    "s9_mongo_filter" -> ((s, dir) => {
-      // Mongo BSON filter + projection semantics (S9) over documents
-      val filtered = t(s, dir, "documents").filter(MongoShim.filterToColumn(
-        """{"lang": {"$in": ["en", "de"]}, "n_chars": {"$gt": 200}}"""))
-      MongoShim.project(filtered, """{"doc_id": 1, "lang": 1, "n_chars": 1}""")
-    }),
-
-    "s10_mongo_pipeline" -> ((s, dir) =>
-      // Mongo aggregation pipeline semantics (S10)
-      MongoShim.pipeline(t(s, dir, "documents"),
-        """[
-          {"$match": {"n_chars": {"$gte": 100}}},
-          {"$group": {"_id": "$source", "n_docs": {"$sum": 1},
-                      "total_chars": {"$sum": "$n_chars"}}},
-          {"$sort": {"_id": 1}}
-        ]""")),
-
-    "w11_object_per_row" -> ((s, dir) => {
-      // object-per-row sink (W11): one object per document, read back
-      val base = tmpDir("graft_objects")
-      val docs = t(s, dir, "documents").filter("doc_id < 100")
-        .selectExpr("concat('doc_', doc_id, '.txt') AS key", "text AS body")
-      ObjectPerRowSink.write(docs, base, "key", "body")
-      // deterministic re-read: list the directory just written (a bare
-      // "*.txt" glob threw on empty match during the r1 bench run)
-      s.read.format("binaryFile").option("pathGlobFilter", "*.txt").load(base)
-        .select(
-          regexp_extract(col("path"), "doc_(\\d+)\\.txt", 1).cast("long").as("doc_id"),
-          col("length").as("n_bytes"))
-    }),
-
-    // ---- §2.6 replication modes -----------------------------------
-    "m1_mode_complete" -> ((s, dir) => {
-      // complete: truncate-and-load through the engine (file->file)
-      val sink = tmpDir("graft_complete") + "/lineitem_sink"
-      ReplicaEngine.replicate(s, ReplConf(
-        SourceConf(connect = s"$dir/lineitem.parquet"),
-        SinkConf(connect = sink, mode = ReplicationMode.Complete)))
-      s.read.parquet(sink)
-    }),
-
-    "m2_mode_complete_atomic" -> ((s, dir) => {
-      // complete-atomic: staging write + atomic swap (file sink)
-      val sink = tmpDir("graft_atomic") + "/orders_sink"
-      ReplicaEngine.replicate(s, ReplConf(
-        SourceConf(connect = s"$dir/orders.parquet"),
-        SinkConf(connect = sink, mode = ReplicationMode.CompleteAtomic)))
-      s.read.parquet(sink)
-    }),
-
-    // small-file compaction: fragment customer into 64 tiny files,
-    // bin-pack back to a handful, read the compacted table — row
-    // parity against the source proves the rewrite lost nothing
-    "m6_compaction" -> ((s, dir) => {
-      val sink = tmpDir("graft_compact") + "/customer_sink"
-      t(s, dir, "customer").repartition(64).write
-        .mode("overwrite").parquet(sink)
-      graft.sources.Compaction.compactParquet(s, sink, 64L << 20)
-      s.read.parquet(sink)
-    }),
-
-    // schema evolution across file epochs: epoch1 carries
-    // c_mktsegment, epoch2 drops it and adds c_tier — the unified
-    // read must null-fill both directions (mergeSchema on footers,
-    // no rewrite of either epoch)
-    "sc1_schema_evolution" -> ((s, dir) => {
-      val base = tmpDir("graft_drift")
-      val c = t(s, dir, "customer")
-      c.filter(col("c_custkey") % 2 === 0)
-        .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
-        .write.mode("overwrite").parquet(base + "/epoch1")
-      c.filter(col("c_custkey") % 2 === 1)
-        .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-        .withColumn("c_tier", lit("basic"))
-        .write.mode("overwrite").parquet(base + "/epoch2")
-      graft.sources.FileConnector.readUnified(s,
-          Seq(base + "/epoch1", base + "/epoch2"))
-        .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment", "c_tier")
-    }),
-
-    // schema-drift REPORT (the alerting companion to sc1's read-side
-    // merge): added/removed/type-changed columns from parquet footer
-    // metadata only — no data scanned at any scale
-    "sc2_schema_drift" -> ((s, dir) => {
-      val base = tmpDir("graft_drift2")
-      val c = t(s, dir, "customer")
-      c.select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
-        .write.mode("overwrite").parquet(base + "/v1")
-      c.select(col("c_custkey"), col("c_name"),
-          col("c_acctbal").cast("string").as("c_acctbal"))
-        .withColumn("c_tier", lit("basic"))
-        .write.mode("overwrite").parquet(base + "/v2")
-      graft.sources.FileConnector.schemaDriftReport(s,
-        base + "/v1", base + "/v2")
-    }),
-
-    // CDC change-feed apply: a deterministic feed with superseded
-    // changes per key (stale update under a delete, stale delete under
-    // an update) — latest-wins per key, deletes remove, inserts add
-    "m7_cdc_apply" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val k = col("c_custkey")
-      def chg(df: DataFrame, op: String, seq: Long): DataFrame =
-        df.withColumn("op", lit(op)).withColumn("seq", lit(seq))
-      val changes =
-        chg(c.filter(k % 10 === 0), "D", 1L)
-          .unionByName(chg(c.filter(k % 10 === 0)
-            .withColumn("c_acctbal", col("c_acctbal") + 55), "U", 0L))
-          .unionByName(chg(c.filter(k % 10 === 1 || k % 10 === 2)
-            .withColumn("c_acctbal", round(col("c_acctbal") + 1000, 2)), "U", 1L))
-          .unionByName(chg(c.filter(k % 10 === 1), "D", 0L))
-          .unionByName(chg(c.filter(k % 10 === 3)
-            .withColumn("c_custkey", k + 1000000), "I", 1L))
-      Modes.applyChanges(c, changes, Seq("c_custkey"), "op", "seq")
-    }),
-
-    // agg-to-array shape: per-customer sorted distinct priority list,
-    // serialized for engine-portable comparison
-    "agg5_priority_sets" -> ((s, dir) =>
-      t(s, dir, "orders").groupBy("o_custkey")
-        .agg(array_join(array_sort(collect_set(col("o_orderpriority"))), ",")
-          .as("priorities"),
-          countDistinct(col("o_orderpriority")).as("n_priorities"))),
-
-    "m3_mode_incremental_jdbc" -> ((s, dir) => {
-      // incremental staged merge against a real JDBC database
-      // (embedded Derby): complete-load the base, upsert the delta,
-      // read the sink back. Exercises partition predicates, staging
-      // table DDL, PK discovery, and the ANSI MERGE emitter.
-      val db = s"memory:graft${System.nanoTime()};create=true"
-      val url = s"jdbc:derby:$db"
-      JdbcConnector.withConnection(url, Map.empty) { c =>
-        val st = c.createStatement()
-        st.execute("CREATE TABLE orders_sink (o_orderkey BIGINT PRIMARY KEY, " +
-          "o_custkey BIGINT, o_orderstatus VARCHAR(10), o_totalprice DOUBLE, " +
-          "o_orderdate TIMESTAMP, o_orderpriority VARCHAR(20))")
-        st.close()
-      }
-      val orders = t(s, dir, "orders")
-      def up(df: DataFrame) = df.toDF(df.columns.map(_.toUpperCase).toIndexedSeq: _*)
-      val base = up(orders.filter("o_orderkey % 3 != 0"))
-      val delta = up(orders.filter("o_orderkey % 2 = 0")
-        .withColumn("o_totalprice", col("o_totalprice") + lit(1000.0)))
-      JdbcConnector.write(base, SinkConf(connect = url, table = Some("orders_sink"),
-        mode = ReplicationMode.Complete))
-      JdbcConnector.write(delta, SinkConf(connect = url, table = Some("orders_sink"),
-        mode = ReplicationMode.Incremental))
-      val back = JdbcConnector.read(s, SourceConf(connect = url,
-        table = Some("orders_sink"), partitions = 4,
-        options = Map("partition.key" -> "O_ORDERKEY")))
-      // Derby TIMESTAMP reads back as session-tz TimestampType; the
-      // stored values are naive — normalize for the naive oracle
-      ntz(back.toDF(back.columns.map(_.toLowerCase).toIndexedSeq: _*))
-    }),
-
-    // the same staged incremental replication, but driven end-to-end
-    // through the CLI argument surface (graft.cli.Main.run — flag
-    // parsing, ${ENV}-free property mapping, credentials via
-    // --source/sink-user/-password, --source-query through the
-    // collision-safe t1 CTE bridge, --sink-staging-table-alias) —
-    // proves a reference CLI invocation maps 1:1 onto the engine
-    "m11_cli_incremental" -> ((s, dir) => {
-      val db = s"memory:graftcli${System.nanoTime()};create=true"
-      val url = s"jdbc:derby:$db"
-      JdbcConnector.withConnection(url, Map.empty) { c =>
-        val st = c.createStatement()
-        st.execute("CREATE TABLE orders_sink (o_orderkey BIGINT PRIMARY KEY, " +
-          "o_custkey BIGINT, o_orderstatus VARCHAR(10), o_totalprice DOUBLE, " +
-          "o_orderdate TIMESTAMP, o_orderpriority VARCHAR(20))")
-        st.close()
-      }
-      val cols = "o_orderkey AS O_ORDERKEY, o_custkey AS O_CUSTKEY, " +
-        "o_orderstatus AS O_ORDERSTATUS, %s AS O_TOTALPRICE, " +
-        "o_orderdate AS O_ORDERDATE, o_orderpriority AS O_ORDERPRIORITY"
-      def cli(mode: String, select: String, extra: String*): Unit =
-        graft.cli.Main.run(Array(
-          s"--source-connect=$dir/orders.parquet",
-          s"--source-query=$select",
-          "--source-user=app", "--source-password=secret",
-          s"--mode=$mode",
-          s"--sink-connect=$url",
-          "--sink-table=orders_sink",
-          "--sink-user=app", "--sink-password=secret") ++ extra)
-      cli("complete",
-        s"SELECT ${cols.format("o_totalprice")} FROM t1 WHERE o_orderkey % 3 != 0")
-      cli("incremental",
-        s"SELECT ${cols.format("o_totalprice + 1000.0")} FROM t1 WHERE o_orderkey % 2 = 0",
-        "--sink-key-columns=O_ORDERKEY", "--sink-staging-table-alias=ost")
-      val back = JdbcConnector.read(s, SourceConf(connect = url,
-        table = Some("orders_sink"), partitions = 4,
-        options = Map("partition.key" -> "O_ORDERKEY")))
-      ntz(back.toDF(back.columns.map(_.toLowerCase).toIndexedSeq: _*))
-    }),
-
-    "m4_upsert_dataframe" -> ((s, dir) => {
-      // the same upsert as pure DataFrame algebra (Modes.upsert)
-      val orders = t(s, dir, "orders")
-      val target = orders.filter("o_orderkey % 3 != 0")
-      val staging = orders.filter("o_orderkey % 2 = 0")
-        .withColumn("o_totalprice", col("o_totalprice") + lit(1000.0))
-      Modes.upsert(target, staging, Seq("o_orderkey"))
-    }),
-
-    // file-sink incremental: complete-load the base, then staged
-    // upsert re-written through the ATOMIC swap (readers always see
-    // old-or-new, never nothing) — the file analogue of m3. The merge
-    // plan reads the CURRENT version while the swap stages the next
-    // one; the versioned-dir layout is what makes that self-merge
-    // safe.
-    "m5_mode_incremental_file" -> ((s, dir) => {
-      val orders = t(s, dir, "orders")
-      val target = tmpDir("graft_m5") + "/orders_sink"
-      FileConnector.writeAtomic(
-        orders.filter("o_orderkey % 3 != 0"), target, "parquet", Map.empty)
-      val delta = orders.filter("o_orderkey % 2 = 0")
-        .withColumn("o_totalprice", col("o_totalprice") + lit(1000.0))
-      val merged = Modes.upsert(s.read.parquet(target), delta, Seq("o_orderkey"))
-      FileConnector.writeAtomic(merged, target, "parquet", Map.empty)
-      s.read.parquet(target)
-    }),
-
-    // ---- joins / aggregations / windows / sorts / set ops ---------
-    "j1_join_agg" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer")
-      val n = t(s, dir, "nation")
-      li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .join(c, o("o_custkey") === c("c_custkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .groupBy(n("n_name"))
-        .agg(round(sum(li("l_extendedprice") * (lit(1.0) - li("l_discount"))), 2).as("revenue"),
-          countDistinct(o("o_orderkey")).as("n_orders"))
-    }),
-
-    // TPC-H Q3 shape: selective filters on all three tables, 3-way
-    // join, grouped revenue, top-10 — the full declare-and-let-
-    // Catalyst-plan pipeline (pushdown + join order + partial agg +
-    // WindowGroupLimit-free top-k via sort/limit)
-    "q3_shipping_priority" -> ((s, dir) => {
-      val c = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-      val o = t(s, dir, "orders")
-        .filter(col("o_orderdate") < lit("1996-01-01").cast("timestamp_ntz"))
-      val li = t(s, dir, "lineitem")
-        .filter(col("l_shipdate") > lit("1996-01-01").cast("timestamp_ntz"))
-      li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .join(c, o("o_custkey") === c("c_custkey"))
-        .groupBy(li("l_orderkey"), o("o_orderdate"), o("o_orderpriority"))
-        .agg(round(sum(li("l_extendedprice") * (lit(1.0) - li("l_discount"))), 2)
-          .as("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey").asc)
-        .limit(10)
-    }),
-
-    // TPC-H Q5 shape: six-way join through region->nation->customer->
-    // orders->lineitem->supplier with the local-supplier predicate
-    // (c_nationkey == s_nationkey); small dims broadcast, the fact
-    // join shuffles once on orderkey
-    "q5_local_supplier_volume" -> ((s, dir) => {
-      val r = t(s, dir, "region").filter(col("r_name") === "ASIA")
-      val n = t(s, dir, "nation")
-      val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders")
-        .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp_ntz"))
-        .filter(col("o_orderdate") < lit("1997-01-01").cast("timestamp_ntz"))
-      val li = t(s, dir, "lineitem")
-      val sup = t(s, dir, "supplier")
-      li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .join(sup, li("l_suppkey") === sup("s_suppkey"))
-        .join(c, o("o_custkey") === c("c_custkey") &&
-          c("c_nationkey") === sup("s_nationkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-        .groupBy(n("n_name"))
-        .agg(round(sum(li("l_extendedprice") * (lit(1.0) - li("l_discount"))), 2)
-          .as("revenue"))
-    }),
-
-    // TPC-H Q4 shape: EXISTS correlated subquery planned as a
-    // left-semi join (never a count-materializing inner join)
-    "q4_order_priority" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-        .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp_ntz"))
-        .filter(col("o_orderdate") < lit("1996-07-01").cast("timestamp_ntz"))
-      val li = t(s, dir, "lineitem")
-      o.join(li, o("o_orderkey") === li("l_orderkey") &&
-          li("l_shipdate") > o("o_orderdate"), "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("order_count"))
-    }),
-
-    // NOT EXISTS as a left-anti join: segments' customers with no
-    // order in the window
-    "anti1_inactive_customers" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders")
-        .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp_ntz"))
-      c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_inactive"))
-    }),
-
-    // TPC-H Q13 shape: left outer join preserving order-less customers,
-    // then the distribution of per-customer order counts (double agg)
-    "q13_customer_distribution" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders")
-      c.join(o, c("c_custkey") === o("o_custkey"), "left_outer")
-        .groupBy(c("c_custkey"))
-        .agg(count(o("o_orderkey")).as("c_count"))
-        .groupBy("c_count")
-        .agg(count(lit(1)).as("custdist"))
-    }),
-
-    // rank-family window breadth: ntile/percent_rank/cume_dist over
-    // one ordered partition spec
-    "w4_window_ranks" -> ((s, dir) => {
-      val w = Window.partitionBy("o_orderpriority")
-        .orderBy(col("o_totalprice").asc, col("o_orderkey").asc)
-      t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_orderpriority"),
-          ntile(10).over(w).cast("long").as("decile"),
-          round(percent_rank().over(w), 6).as("pct_rank"),
-          round(cume_dist().over(w), 6).as("cume"))
-    }),
-
-    // lag/lead navigation: per-customer order timeline with gap days
-    // to the previous order and the next order's value
-    "w5_lag_lead" -> ((s, dir) => {
-      val w = Window.partitionBy("o_custkey")
-        .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
-      t(s, dir, "orders")
-        .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
-          datediff(col("o_orderdate"), lag(col("o_orderdate"), 1).over(w))
-            .cast("long").as("days_since_prev"),
-          round(lead(col("o_totalprice"), 1).over(w), 2).as("next_price"),
-          round(first(col("o_totalprice")).over(w), 2).as("first_price"))
-    }),
-
-    // TPC-H Q6 shape (forecasting revenue change): tight range
-    // predicates only — every filter must reach the parquet scan
-    "q6_forecast_revenue" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp_ntz"))
-        .filter(col("l_shipdate") < lit("1998-01-01").cast("timestamp_ntz"))
-        .filter(col("l_discount").between(0.02, 0.06))
-        .filter(col("l_quantity") < 10)
-        .agg(round(sum(col("l_extendedprice") * col("l_discount")), 2)
-          .as("revenue"))),
-
-    // TPC-H Q12 shape (priority by line status): two-level CASE
-    // aggregation — counts of urgent vs non-urgent orders per
-    // lineitem group after a join
-    "q12_priority_count" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp_ntz"))
-        .filter(col("l_shipdate") < lit("1998-01-01").cast("timestamp_ntz"))
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
-            .otherwise(0L)).as("high_line_count"),
-          sum(when(!col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
-            .otherwise(0L)).as("low_line_count"))),
-
-    // GROUPING SETS through the SQL surface (DataFrame API exposes
-    // only rollup/cube); grouping_id() disambiguates the null rows
-    "gs1_grouping_sets" -> ((s, dir) => {
-      t(s, dir, "lineitem").createOrReplaceTempView("gs1_lineitem")
-      s.sql("""
-        SELECT l_returnflag, l_linestatus,
-               CAST(grouping_id(l_returnflag, l_linestatus) AS BIGINT) AS gid,
-               round(sum(l_quantity), 2) AS sum_qty, count(*) AS n
-        FROM gs1_lineitem
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), (l_returnflag, l_linestatus))""")
-    }),
-
-    "agg1_pricing_summary" -> ((s, dir) => {
-      // TPC-H Q1 shape: filter pushdown + grouped aggregates
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") <= lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          round(sum("l_quantity"), 2).as("sum_qty"),
-          round(sum("l_extendedprice"), 2).as("sum_base_price"),
-          round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2).as("sum_disc_price"),
-          round(avg("l_quantity"), 4).as("avg_qty"),
-          round(avg("l_discount"), 4).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-    }),
-
-    "agg2_distinct" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .groupBy("o_orderpriority")
-        .agg(countDistinct("o_custkey").as("n_customers"),
-          count(lit(1)).as("n_orders"))),
-
-    "w1_window_topn" -> ((s, dir) => {
-      val w = Window.partitionBy("o_custkey")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      t(s, dir, "orders")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select("o_custkey", "o_orderkey", "o_totalprice")
-    }),
-
-    "w2_window_running" -> ((s, dir) => {
-      val w = Window.partitionBy("l_suppkey")
-        .orderBy(col("l_shipdate").asc, col("l_orderkey").asc, col("l_linenumber").asc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, dir, "lineitem")
-        .withColumn("running_qty", round(sum("l_quantity").over(w), 2))
-        .select("l_suppkey", "l_orderkey", "l_linenumber", "running_qty")
-    }),
-
-    "sort1_topk" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-        .limit(100)
-        .select("o_orderkey", "o_custkey", "o_totalprice")),
-
-    "set1_symmetric_difference" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val y94 = o.filter(year(col("o_orderdate")) === 1994).select("o_custkey").distinct()
-      val y95 = o.filter(year(col("o_orderdate")) === 1995).select("o_custkey").distinct()
-      y94.except(y95).unionAll(y95.except(y94))
-    }),
-
-    // ---- §2.7 conversions + Kafka payload -------------------------
-    "t1_conversions" -> ((s, dir) =>
-      t(s, dir, "lineitem").select(
-        col("l_orderkey"), col("l_linenumber"),
-        // parquet NTZ timestamps cast to TIMESTAMP under the UTC
-        // session zone — same wall-clock instant
-        Conversions.timestampToEpochMillis(col("l_shipdate").cast("timestamp")).as("ship_epoch_ms"),
-        date_format(col("l_shipdate"), "yyyy-MM-dd'T'HH:mm:ss").as("ship_iso"),
-        col("l_shipdate").cast("date").as("ship_date"),
-        Conversions.dateToEpochDay(col("l_shipdate").cast("date")).as("ship_epoch_day"))),
-
-    "k1_kafka_payload" -> ((s, dir) =>
-      // Kafka sink payload: ISO-8601 dates + JSON body (W8). r7:
-      // full MATCH — to_json's field-ordered whitespace-free output
-      // with shortest-round-trip doubles is byte-replayable by a
-      // DuckDB string concat on this schema (see the oracle note).
-      // r8: the k1b typed-column sibling is folded away — it existed
-      // as the hash-checkable proxy while k1 was rows-only; now that
-      // the full serialization MATCHes, the typed projection is
-      // strictly weaker coverage (KafkaSink.typedPayload keeps its
-      // unit spec in ConnectorsSpec)
-      graft.sources.KafkaSink.payload(
-        t(s, dir, "orders"), keyColumn = Some("o_orderkey"))),
-
-    // the CONSUMER direction: k1's serialized payloads parsed back
-    // against the source schema — payload -> parse is lossless, so
-    // the roundtrip hash-equals the source table itself
-    "k2_kafka_parse" -> ((s, dir) => {
-      val src = t(s, dir, "orders")
-      graft.sources.KafkaSink.parse(
-        graft.sources.KafkaSink.payload(src, keyColumn = Some("o_orderkey")),
-        src.schema)
-    }),
-
-    // ---- beyond-parity: dedup -------------------------------------
-    "dd1_dedup_exact" -> ((s, dir) =>
-      Dedup.exact(t(s, dir, "documents"), "doc_id", Seq("text"))),
-
-    // bag-of-words dedup: word-order shuffles collapse (the word-salad
-    // corpus makes this bite hard — far fewer bags than texts)
-    "dd20_token_sort_dedup" -> ((s, dir) =>
-      Dedup.tokenSortDedup(t(s, dir, "documents"), "doc_id", "text")),
-
-    // directed containment (|A∩B|/|A|): the small-doc-inside-big-doc
-    // case symmetric Jaccard misses; df-capped 2-gram join, both
-    // directions when both qualify
-    "dd21_containment_pairs" -> ((s, dir) =>
-      Dedup.containmentPairs(t(s, dir, "documents"), "doc_id", "text",
-        shingleSize = 2, threshold = 0.8, maxGramDf = 100)),
-
-    "dd2_dedup_minhash_lsh" -> ((s, dir) =>
-      // r6: moved from rows-only to MATCH. LSH candidate generation
-      // is DETERMINISTIC given the fixed hash family; on this fixture
-      // every qualifying pair (exact 3-gram Jaccard >= 0.7) collides
-      // in at least one of the 16 bands — verified pair-for-pair
-      // against the brute-force sweep — so the ground-truth oracle is
-      // the batch output (the dd14/st14 recall-1 adjudication)
-      Dedup.minhashLshPairs(t(s, dir, "documents"), "doc_id", "text",
-        shingleSize = 3, numHashes = 64, numBands = 16, threshold = 0.7)),
-
-    "dd3_dedup_simhash" -> ((s, dir) =>
-      Dedup.simhashPairs(t(s, dir, "documents"), "doc_id", "text", maxHamming = 3)),
-
-    "dd4_ngram_jaccard" -> ((s, dir) =>
-      Dedup.ngramJaccardPairs(t(s, dir, "documents"), "doc_id", "text",
-        blockCols = Seq("lang"), shingleSize = 1, threshold = 0.5)),
-
-    // r7: banded OR-amplified hyperplane LSH + exact cosine verify
-    // (precision exact by construction, recall probabilistic). The
-    // fixture's threshold (0.35) is far below a production near-dup
-    // bar, so the query pins an explicit wide banding (20 bands x 2
-    // planes; per-pair miss <= 0.62^20 ~ 8e-5 at the threshold) under
-    // which EVERY qualifying pair collides in at least one band —
-    // verified pair-for-pair against exactCosinePairs at sf0.01 AND
-    // sf0.1 (the dd2/dd14 recall-1 adjudication) — so the sim5
-    // brute-force SQL is the ground-truth oracle. Production calls at
-    // cosine ~0.95 use the auto-tuning (16 planes/band: selective
-    // buckets, see Similarity.lshParams).
-    "dd5_embedding_neardup" -> ((s, dir) =>
-      Dedup.embeddingNearDupPairs(t(s, dir, "embeddings"), "vec_id", "embedding",
-          threshold = 0.35, bands = Some(20), planesPerBand = Some(2))
-        .select(col("id_a"), col("id_b"),
-          round(col("cosine"), 6).as("cos_sim"))),
-
-    // contamination detection: eval-split docs leaking into the
-    // train-split, exact bipartite Jaccard (candidates only across
-    // sides via the shared-prefix inverted index)
-    "dd7_contamination" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.crossJaccardPairs(
-        docs.filter(col("doc_id") <= 250), docs.filter(col("doc_id") > 250),
-        "doc_id", "text", blockCols = Seq("lang"), shingleSize = 1, threshold = 0.5)
-    }),
-
-    // benchmark decontamination at scale: Bloom prefilter (built from
-    // the small eval side, probed codegen-native on the big train
-    // side BEFORE any shuffle) + exact verify join -> output is
-    // exactly the exact-overlap result the oracle computes
-    "dd8_decontaminate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Decontaminate.bloomContaminatedDocs(
-        docs.filter(col("doc_id") > 250), docs.filter(col("doc_id") <= 250),
-        "doc_id", "text", gramSize = 3, expectedEvalGrams = 1 << 16)
-    }),
-
-    // dd10's spans as sliceable character offsets on the normalized
-    // text — the actual excision coordinates
-    "dd11_span_char_offsets" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val spans = Decontaminate.contaminatedSpans(
-        docs.filter(col("doc_id") > 250), docs.filter(col("doc_id") <= 250),
-        "doc_id", "text", gramSize = 3, expectedEvalGrams = 1 << 16)
-      Decontaminate.spanCharOffsets(spans,
-        docs.filter(col("doc_id") > 250), "doc_id", "text")
-    }),
-
-    // the step dd10/dd11 set up: the CLEANED corpus — contaminated
-    // spans merged and cut out of the normalized text, with
-    // removed-chars / merged-region audit columns (same train/eval
-    // split as dd8/dd10/dd11)
-    "dd13_excised_corpus" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val train = docs.filter(col("doc_id") > 250)
-      val spans = Decontaminate.contaminatedSpans(
-        train, docs.filter(col("doc_id") <= 250),
-        "doc_id", "text", gramSize = 3, expectedEvalGrams = 1 << 16)
-      Decontaminate.excise(train, spans, "doc_id", "text")
-    }),
-
-    // exact duplicate-substring dedup (suffix-array semantics via
-    // consecutive gram anchors): every maximal >= 8-word verbatim
-    // cross-doc run of >= 60 normalized chars excised everywhere but
-    // the min-id owner. The fixture plants a 19-word boilerplate
-    // suffix on every doc_id % 5 == 0 — the shape this operator
-    // exists for — on top of the corpus's organic near-dup clusters
-    "dd23_substring_excision" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"),
-        when(col("doc_id") % 5 === 0,
-          concat(col("text"), lit(" " + bpBoiler))).otherwise(col("text"))
-          .as("text"))
-      Decontaminate.duplicateSubstringExcision(docs, "doc_id", "text",
-        anchorWords = 8, minChars = 60)
-    }),
-
-    // C4-style over-duplicated span detection: word 3-grams occurring
-    // in >= 5 docs corpus-wide, counted per containing doc
-    "dd9_hot_spans" -> ((s, dir) =>
-      Decontaminate.hotSpanDocs(t(s, dir, "documents"), "doc_id", "text",
-        gramSize = 3, minDocs = 5)),
-
-    // the removal rule dd9 only detects: duplicated spans excised from
-    // every doc EXCEPT the min-id first occurrence — the cleaned
-    // corpus with audit columns (C4's "remove repeated spans" step)
-    "dd18_hot_span_excision" -> ((s, dir) =>
-      Decontaminate.hotSpanExcision(t(s, dir, "documents"), "doc_id", "text",
-        gramSize = 3, minDocs = 5)),
-
-    // span-level decontamination: WHERE the contamination sits in each
-    // train doc (maximal runs of consecutive matching 3-gram
-    // positions), so pipelines can excise spans instead of dropping
-    // docs; same train/eval split as dd8
-    "dd10_contaminated_spans" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Decontaminate.contaminatedSpans(
-        docs.filter(col("doc_id") > 250), docs.filter(col("doc_id") <= 250),
-        "doc_id", "text", gramSize = 3, expectedEvalGrams = 1 << 16)
-    }),
-
-    // memorization/novelty audit (r9): docs < 100 act as "model
-    // generations", the rest as the training corpus — per generation,
-    // the fraction of its word 3-grams already in the corpus and the
-    // longest contiguous memorized span (the planted near-dup pairs
-    // that cross the id-100 boundary surface as long runs); the
-    // oracle replays grams, the distinct-corpus join, and the
-    // gaps-and-islands runs
-    "mem1_novelty_audit" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Decontaminate.memorizationAudit(
-        docs.filter(col("doc_id") < 100), docs.filter(col("doc_id") >= 100),
-        "doc_id", "text", gramSize = 3)
-    }),
-
-    // edit-tolerant memorization audit (r10): mem1's verbatim k-gram
-    // runs miss paraphrase-level regurgitation, so this one audits
-    // winnowed fingerprints instead. Fixture plants both classes
-    // against the corpus (docs >= 100): gens 0-49 are NEAR-VERBATIM
-    // copies of corpus docs with every 20th word edited (the
-    // 1-edit-per-20-words paraphrase), gens 50-99 are NOVEL text over
-    // the same vocabulary (token order reversed). The former must
-    // flag near_verbatim, the latter must not; the oracle replays the
-    // fixture construction, both winnowing passes, and the join
-    "mem2_paraphrase_audit" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      // 5-grams, not 3: at trigram granularity a 60k-doc corpus
-      // contains most common-word triples somewhere, so even
-      // reversed text "matches" spuriously; 5-gram fingerprints keep
-      // the paraphrase class >= 0.7 memorized while novel text
-      // collapses toward 0
-      Decontaminate.paraphraseAudit(mem2GenFixture(docs),
-        docs.filter(col("doc_id") >= 100), "gen_id", "text",
-        gramSize = 5, window = 4)
-    }),
-
-    // r10: WHERE the lifted material sits — maximal matched-
-    // fingerprint runs with an edit-sized gap tolerance, so each
-    // near-verbatim generation reports its paraphrased region as ONE
-    // span (start/end in word coordinates) instead of fragmenting at
-    // every 20th-word edit; novel generations report nothing (the
-    // minFps support filter kills vocabulary-coincidence matches)
-    "mem3_paraphrase_spans" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Decontaminate.paraphraseSpans(mem2GenFixture(docs),
-        docs.filter(col("doc_id") >= 100), "gen_id", "text",
-        gramSize = 5, window = 4)
-        .select(col("gen_id"), col("span_start").cast("long").as("span_start"),
-          col("span_end").cast("long").as("span_end"), col("n_fps"),
-          col("span_words").cast("long").as("span_words"))
-    }),
-
-    // r10: cross-source gram-overlap matrix — the governance signal
-    // behind mixture design and dedup planning: per source pair,
-    // shared distinct 3-grams, Jaccard, and min-containment (the
-    // "small source is a subset" signal); one distinct set per
-    // source + one keyed self-join, never corpus x corpus
-    "ovl1_source_overlap" -> ((s, dir) =>
-      Profiling.sourceGramOverlap(t(s, dir, "documents"),
-        "source", "text", gramSize = 3)),
-
-    // r11: the ubiquitous-gram guard exercised — grams present in
-    // more than 6 of the 20 sources are boilerplate that inflates
-    // every pair's fan-out (S² rows per shared gram) with no pairwise
-    // signal; they leave the join and surface as a count so the cap
-    // is observable. Keeps the overlap join bounded at adversarial S
-    // or boilerplate-heavy corpora (verdict-r10 #6)
-    "ovl2_source_overlap_capped" -> ((s, dir) =>
-      Profiling.sourceGramOverlap(t(s, dir, "documents"),
-        "source", "text", gramSize = 3, maxGramSources = 6)),
-
-    // r11: MMR diversity re-ranking between retrieval and consumption
-    // — candidates from the exact yardstick retriever, then the
-    // greedy lambda*rel - (1-lambda)*max-sim-to-picked chain (k
-    // distributed rounds over ALL queries at once, never per-query
-    // loops). The oracle replays the greedy chain unrolled. lambda =
-    // 0.5: both weights are EXACT in binary, so Spark's lit(1.0 -
-    // lambda) and the oracle's (1.0 - 0.5) are the same double and
-    // near-tie argmax decisions cannot diverge on literal rounding
-    "mmr1_diversified_topk" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val cand = Similarity.bruteForceTopK(e.filter("vec_id < 10"), e,
-        "vec_id", "embedding", 25)
-      Retrieval.mmrRerank(cand, e, "vec_id", "embedding", k = 5, lambda = 0.5)
-    }),
-
-    // r11: KLL quantile sketch — the FIRST-CLASS mergeable-percentile
-    // column (TypedImperativeAggregate): one map-combined pass builds
-    // O(k)-byte per-group sketches. Contract output (the pf3/pf10
-    // pattern): exact aggregates DuckDB can replay + booleans
-    // asserting the returned element's true rank sits within eps*n of
-    // the target — the estimate itself is merge-order-dependent, the
-    // BOUND is the tested contract
-    "qsk1_kll_quantiles" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val K = graft.functions.KllExpressions
-      val sk = docs.groupBy("lang").agg(
-        count(lit(1)).as("n_docs"),
-        min("n_chars").as("min_len"), max("n_chars").as("max_len"),
-        K.kll_sketch(col("n_chars").cast("double"), 200).as("__sk"))
-        .select(col("lang"), col("n_docs"), col("min_len"), col("max_len"),
-          K.kll_quantile(col("__sk"), 0.5).as("__q50"),
-          K.kll_quantile(col("__sk"), 0.9).as("__q90"))
-      val ranks = docs.join(sk.select("lang", "__q50", "__q90"), "lang")
-        .groupBy("lang").agg(
-          count(when(col("n_chars") < col("__q50"), 1)).as("__lo50"),
-          count(when(col("n_chars") <= col("__q50"), 1)).as("__hi50"),
-          count(when(col("n_chars") < col("__q90"), 1)).as("__lo90"),
-          count(when(col("n_chars") <= col("__q90"), 1)).as("__hi90"))
-      sk.join(ranks, "lang").select(col("lang"), col("n_docs"),
-        col("min_len"), col("max_len"),
-        kllRankBound(col("__lo50"), col("__hi50"), 0.5, col("n_docs"))
-          .as("q50_in_bound"),
-        kllRankBound(col("__lo90"), col("__hi90"), 0.9, col("n_docs"))
-          .as("q90_in_bound"))
-    }),
-
-    // r11: the sketch ROLLUP path — per-(lang, source) sketches built
-    // once, coarser per-lang answers via kll_merge with NO corpus
-    // rescan (what approx_percentile cannot do: its sketch is not a
-    // value). count_preserved pins the losslessness of merge weights;
-    // the quantile bounds re-verify accuracy AFTER merging
-    "qsk2_kll_rollup" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val K = graft.functions.KllExpressions
-      val parts = docs.groupBy("lang", "source").agg(
-        count(lit(1)).as("__n_part"),
-        K.kll_sketch(col("n_chars").cast("double"), 200).as("__sk"))
-      val rolled = parts.groupBy("lang").agg(
-        count(lit(1)).as("n_parts"),
-        sum("__n_part").as("n_docs"),
-        K.kll_merge(col("__sk")).as("__msk"))
-        .select(col("lang"), col("n_parts"), col("n_docs"),
-          K.kll_count(col("__msk")).as("__cnt"),
-          K.kll_quantile(col("__msk"), 0.5).as("__q50"),
-          K.kll_quantile(col("__msk"), 0.9).as("__q90"))
-      val ranks = docs.join(rolled.select("lang", "__q50", "__q90"), "lang")
-        .groupBy("lang").agg(
-          count(when(col("n_chars") < col("__q50"), 1)).as("__lo50"),
-          count(when(col("n_chars") <= col("__q50"), 1)).as("__hi50"),
-          count(when(col("n_chars") < col("__q90"), 1)).as("__lo90"),
-          count(when(col("n_chars") <= col("__q90"), 1)).as("__hi90"))
-      rolled.join(ranks, "lang").select(col("lang"), col("n_parts"),
-        col("n_docs"),
-        (col("__cnt") === col("n_docs")).as("count_preserved"),
-        kllRankBound(col("__lo50"), col("__hi50"), 0.5, col("n_docs"))
-          .as("q50_in_bound"),
-        kllRankBound(col("__lo90"), col("__hi90"), 0.9, col("n_docs"))
-          .as("q90_in_bound"))
-    }),
-
-    // r11: the KLL sketch maintained at INGESTION — two real
-    // micro-batches write replay-safe per-batch PART sketches
-    // (batch_id partitions: KLL merge is not retry-idempotent, so
-    // the layout, not the merge, carries exactly-once), the fold on
-    // read must satisfy the one-shot batch sketch's contract:
-    // lossless count, rank-bounded quantiles (qsk1's oracle shape)
-    "st26_stream_kll" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val base = tmpDir("graft_st26")
-      val in = s"$base/in"
-      docs.filter(col("doc_id") % 2 === 0)
-        .coalesce(1).write.mode("append").parquet(in)
-      docs.filter(col("doc_id") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(in)
-      val schema = s.read.parquet(in).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-      val q = graft.streaming.EventStream.streamingKllSketch(
-        stream, "lang", col("n_chars"), 200, s"$base/store", s"$base/ckpt")
-      try q.processAllAvailable() finally q.stop()
-      val K = graft.functions.KllExpressions
-      val folded = graft.streaming.EventStream
-        .kllSketchTable(s, s"$base/store", "lang")
-        .select(col("lang"),
-          K.kll_count(col("sk")).as("n_docs"),
-          K.kll_quantile(col("sk"), 0.5).as("__q50"),
-          K.kll_quantile(col("sk"), 0.9).as("__q90"))
-      val ranks = docs.join(folded.select("lang", "__q50", "__q90"), "lang")
-        .groupBy("lang").agg(
-          count(when(col("n_chars") < col("__q50"), 1)).as("__lo50"),
-          count(when(col("n_chars") <= col("__q50"), 1)).as("__hi50"),
-          count(when(col("n_chars") < col("__q90"), 1)).as("__lo90"),
-          count(when(col("n_chars") <= col("__q90"), 1)).as("__hi90"))
-      folded.join(ranks, "lang").select(col("lang"), col("n_docs"),
-        kllRankBound(col("__lo50"), col("__hi50"), 0.5, col("n_docs"))
-          .as("q50_in_bound"),
-        kllRankBound(col("__lo90"), col("__hi90"), 0.9, col("n_docs"))
-          .as("q90_in_bound"))
-    }),
-
-    // r11: the manifest maintained at INGESTION — per-batch manifest
-    // parts fold on read (sums add, digests XOR: a mergeable partial
-    // by design). The folded store must be BYTE-IDENTICAL to the
-    // one-shot batch manifest — man1's oracle re-verifies the fold,
-    // digest and all
-    "st27_stream_manifest" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val base = tmpDir("graft_st27")
-      val in = s"$base/in"
-      docs.filter(col("doc_id") % 2 === 0)
-        .coalesce(1).write.mode("append").parquet(in)
-      docs.filter(col("doc_id") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(in)
-      val schema = s.read.parquet(in).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-      val q = graft.streaming.EventStream.streamingShardManifest(
-        stream, "doc_id", "text", 16, s"$base/store", s"$base/ckpt")
-      try q.processAllAvailable() finally q.stop()
-      graft.streaming.EventStream.manifestTable(s, s"$base/store")
-    }),
-
-    // r11: content-addressed shard manifest — the reproducibility
-    // record pinned next to a corpus generation: counts, char/token
-    // totals, id range, and an order-free md5-xor digest per shard
-    // (manifest diff localizes changed shards without reading data)
-    "man1_shard_manifest" -> ((s, dir) =>
-      Profiling.shardManifest(t(s, dir, "documents"), "doc_id", "text", 16)),
-
-    // r11: manifest DIFF between two corpus generations — gen B edits
-    // shard 3 (10 docs gain a suffix) and shrinks shard 7 (6 docs
-    // dropped); the diff must flag exactly those two shards, moving
-    // only 2x16 manifest rows, never documents
-    "man2_manifest_diff" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val gen2 = docs
-        .filter(!(pmod(col("doc_id"), lit(16)) === 7 && col("doc_id") < 100))
-        .withColumn("text",
-          when(pmod(col("doc_id"), lit(16)) === 3 && col("doc_id") < 160,
-            concat(col("text"), lit(" [rev2]"))).otherwise(col("text")))
-      Profiling.manifestDiff(
-        Profiling.shardManifest(docs, "doc_id", "text", 16),
-        Profiling.shardManifest(gen2, "doc_id", "text", 16))
-    }),
-
-    // r11: MMR over IVF candidates — the production composition: the
-    // scale retriever feeds the diversity pass. Full probe makes the
-    // candidate pool bit-identical to brute force (sim2's verified
-    // configuration), so mmr1's greedy oracle re-verifies the whole
-    // chain; production runs reduced probe with the same plan
-    "mmr2_diversified_ivf" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val cand = Similarity.ivfTopK(e.filter("vec_id < 10"), e,
-        "vec_id", "embedding", 25, nCentroids = 8, nProbe = 8)
-      Retrieval.mmrRerank(cand, e, "vec_id", "embedding", k = 5, lambda = 0.5)
-    }),
-
-    // r10: fill-in-the-middle training triples — the infilling
-    // transform code models pretrain with: deterministic idHash cut
-    // points, (prefix, middle, suffix) + the PSM-ordered training
-    // string; short docs pass through as plain left-to-right examples
-    "fim1_fill_in_middle" -> ((s, dir) =>
-      Chunking.fimSplits(t(s, dir, "documents"), "doc_id", "text")),
-
-    // r10: SFT prompt/completion pair construction — one
-    // deterministic boundary in the 20-80% band of each doc, with
-    // the loss boundary reported as a token index so packing can
-    // mask prompt tokens out of the loss; map-only like fim1
-    "inst1_prompt_completion" -> ((s, dir) =>
-      Chunking.promptCompletionPairs(t(s, dir, "documents"),
-        "doc_id", "text")),
-
-    // r10: per-source duplicate-rate rollup — the governance view of
-    // dd1's exact-dup groups: per source, how many docs are copies of
-    // something (anywhere in the corpus) and how many are redundant
-    // (non-first members, dd1's keep rule) — the number a mixture
-    // designer discounts a source's token count by. Same 96-bit hash
-    // key as dd1, one groupBy + one keyed join back
-    "dq11_source_dup_rate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val h = docs.select(col("doc_id"), col("source"),
-        xxhash64(col("text")).as("__h"), hash(col("text")).as("__h2"))
-      val groups = h.groupBy("__h", "__h2")
-        .agg(count(lit(1)).as("__n"), min("doc_id").as("__first"))
-      h.join(groups, Seq("__h", "__h2"))
-        .groupBy("source").agg(
-          count(lit(1)).as("n_docs"),
-          sum(when(col("__n") > 1, 1L).otherwise(0L)).as("n_dup_docs"),
-          sum(when(col("doc_id") =!= col("__first"), 1L).otherwise(0L))
-            .as("n_redundant"),
-          round(sum(when(col("__n") > 1, 1L).otherwise(0L)).cast("double") /
-            count(lit(1)), 6).as("dup_rate"))
-    }),
-
-    // r10: Zipf rank-frequency slope over the top-1000 tokens — the
-    // corpus-health fingerprint (natural text sits near -1; template
-    // spam flattens, boilerplate steepens). Vocab-bounded global
-    // rank (the freq table, not the corpus, is what sorts — same
-    // bounded-global-window class as the percentile grid); OLS via
-    // regr_slope/intercept on (ln rank, ln freq), round(4) because
-    // double SUMS are aggregation-order-sensitive in the last ulp
-    "ta11_zipf_slope" -> ((s, dir) => {
-      val freq = t(s, dir, "documents")
-        .select(explode(TextAnalysis.tokens(lower(trim(col("text")))))
-          .as("tok"))
-        .filter(col("tok") =!= "")
-        .groupBy("tok").agg(count(lit(1)).as("f"))
-      val top = freq.orderBy(col("f").desc, col("tok").asc).limit(1000)
-        .withColumn("r", row_number().over(
-          Window.orderBy(col("f").desc, col("tok").asc)))
-      top.agg(count(lit(1)).as("n_top"),
-        round(expr("regr_slope(ln(f), ln(r))"), 4).as("zipf_slope"),
-        round(expr("regr_intercept(ln(f), ln(r))"), 4).as("zipf_intercept"))
-    }),
-
-    // r10: distinct-n diversity ACROSS the generation set (Li et al.
-    // 2016's distinct-1/2 — the standard mode-collapse signal): one
-    // row per n with pooled total vs distinct n-grams. Different
-    // axis from the per-doc repetition gates: a sampler can emit
-    // individually non-repetitive generations that are all alike
-    "eval10_distinct_n" -> ((s, dir) => {
-      val gens = t(s, dir, "documents").filter(col("doc_id") < 100)
-      (1 to 3).map { n =>
-        gens.select(explode(
-            TextExpressions.word_ngrams(col("text"), n)).as("gram"))
-          .groupBy(lit(n).as("n"))
-          .agg(count(lit(1)).as("total_grams"),
-            countDistinct(col("gram")).as("distinct_grams"))
-      }.reduce(_.unionByName(_))
-        .select(col("n"), col("total_grams"), col("distinct_grams"),
-          round(col("distinct_grams").cast("double") / col("total_grams"), 6)
-            .as("distinct_ratio"))
-    }),
-
-    // cross-run incremental dedup: the corpus's LSH signatures persist
-    // as bucketed store tables; the new batch probes them without
-    // rescanning the corpus. Exact shingle-Jaccard verify on the
-    // candidates -> deterministic output (band generation is seeded;
-    // at 64/16 the per-pair miss probability on the >= 0.9 planted
-    // dups is ~4e-8, and the whole path is deterministic per dataset)
-    "dd14_incremental_dedup" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      // table names scoped by sf dir: this lambda WRITES the store at
-      // construction time, so globally-named tables would let a later
-      // construction (another sf dir) silently corrupt an earlier
-      // not-yet-executed plan's store
-      val suffix = java.lang.Integer.toHexString(dir.hashCode)
-      val (bandsTable, shinglesTable) =
-        (s"dd14_bands_$suffix", s"dd14_shingles_$suffix")
-      val (bands, shingles) = Dedup.signatureStore(
-        docs.filter(col("doc_id") <= 400), "doc_id", "text",
-        shingleSize = 3, numHashes = 64, numBands = 16)
-      graft.sources.Bucketing.writeBucketed(bands, bandsTable,
-        Seq("bucket"), 8)
-      graft.sources.Bucketing.writeBucketed(shingles, shinglesTable,
-        Seq("id"), 8)
-      Dedup.incrementalDedup(docs.filter(col("doc_id") > 400),
-        graft.sources.Bucketing.readBucketed(s, bandsTable),
-        graft.sources.Bucketing.readBucketed(s, shinglesTable),
-        "doc_id", "text", shingleSize = 3, numHashes = 64,
-        numBands = 16, threshold = 0.8)
-    }),
-
-    // blocked fuzzy entity linkage: deterministic name fixture
-    // (8-name pool, per-group typo variants: char dropped / char
-    // appended), token blocking with a size gate, exact Levenshtein
-    // verify — never all-pairs
-    "link1_fuzzy_match" -> ((s, dir) =>
-      Dedup.blockedFuzzyPairs(namedFixture(t(s, dir, "documents")),
-        "doc_id", "name", maxDistance = 2, maxBlockSize = 500)),
-
-    // entity resolution end-to-end: fuzzy pairs -> transitive closure
-    // -> one golden record per entity (shortest-name election);
-    // unmatched records survive as singleton entities
-    "link2_golden_record" -> ((s, dir) => {
-      val named = namedFixture(t(s, dir, "documents"))
-      val pairs = Dedup.blockedFuzzyPairs(named, "doc_id", "name",
-        maxDistance = 2, maxBlockSize = 500)
-      Dedup.goldenRecords(named, "doc_id", "name", pairs)
-    }),
-
-    // SymSpell deletion-neighborhood join over the typo'd name
-    // vocabulary: guaranteed-recall blocking (shared <=1-deletion
-    // key), exact levenshtein verify — hash-matches the full
-    // quadratic oracle without ever running it
-    "ed2_deletion_join" -> ((s, dir) =>
-      Dedup.deletionNeighborhoodPairs(
-        namedFixture(t(s, dir, "documents")), "name", maxDistance = 1)),
-
-    // character-level verify: every non-leader doc paired with its
-    // 5-group leader, edit distance + similarity over capped texts
-    "ed1_edit_distance" -> ((s, dir) => {
-      val cands = t(s, dir, "documents")
-        .select(col("doc_id").as("a"),
-          (col("doc_id") - col("doc_id") % 5).as("b"))
-        .filter(col("a") =!= col("b"))
-      Dedup.editDistancePairs(t(s, dir, "documents"), "doc_id", "text",
-        cands, "a", "b", maxLen = 256)
-    }),
-
-    // dense equi-width histogram of order values: every bucket
-    // present including empty over/underflow
-    "pf6_histogram" -> ((s, dir) =>
-      Profiling.histogram(t(s, dir, "orders"), "o_totalprice",
-        lo = 0.0, hi = 500000.0, nBuckets = 10)),
-
-    // C4-style paragraph dedup over a paragraphed fixture: each doc
-    // becomes 3 word-slice paragraphs, the middle one taken from its
-    // 5-group leader — planting cross-doc duplicate paragraphs that
-    // the operator must excise while reassembling survivors in order
-    "dd15_paragraph_dedup" -> ((s, dir) => {
-      val own = t(s, dir, "documents")
-        .select(col("doc_id"), split(col("text"), " ").as("w"))
-      val leaders = t(s, dir, "documents")
-        .select(col("doc_id").as("l_id"), split(col("text"), " ").as("lw"))
-      val fixture = own
-        .join(broadcast(leaders),
-          col("l_id") === col("doc_id") - col("doc_id") % 5)
-        .select(col("doc_id"),
-          concat_ws("\n\n",
-            array_join(slice(col("w"), 1, 4), " "),
-            array_join(slice(col("lw"), 5, 4), " "),
-            array_join(slice(col("w"), 9, 2), " ")).as("text"))
-      Dedup.paragraphDedup(fixture, "doc_id", "text")
-    }),
-
-    // cluster labeling over a DETERMINISTIC pair source (exact Jaccard,
-    // same params as dd4, doc subset to keep it light) so the min-label
-    // connected components can be checked against a DuckDB recursive CTE
-    "dd6_jaccard_clusters" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").filter(col("doc_id") <= 100)
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        blockCols = Seq("lang"), shingleSize = 1, threshold = 0.5)
-      Dedup.clusters(pairs.select("id_a", "id_b"))
-        .select(col("id").as("doc_id"), col("cluster"))
-    }),
-
-    // soft dedup: 1/|cluster| training weight per doc over dd6's
-    // components — reweighting instead of removal, singletons weight 1
-    "dd26_soft_dedup_weights" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").filter(col("doc_id") <= 100)
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        blockCols = Seq("lang"), shingleSize = 1, threshold = 0.5)
-      Dedup.softDedupWeights(docs, "doc_id", pairs.select("id_a", "id_b"))
-    }),
-
-    // SAME pair set through the large-star/small-star contraction path
-    // (driverCcMaxEdges = 0 disables the driver union-find shortcut):
-    // the branch that actually runs at 100 TB edge counts, verified
-    // against the identical recursive-CTE oracle as dd6
-    "dd6b_clusters_contraction" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").filter(col("doc_id") <= 100)
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        blockCols = Seq("lang"), shingleSize = 1, threshold = 0.5)
-      Dedup.clusters(pairs.select("id_a", "id_b"), driverCcMaxEdges = 0L)
-        .select(col("id").as("doc_id"), col("cluster"))
-    }),
-
-    // quality-aware survivor per duplicate cluster (same deterministic
-    // pair source as dd6; longest doc wins, ties -> min id)
-    "dd12_cluster_survivors" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").filter(col("doc_id") <= 100)
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        blockCols = Seq("lang"), shingleSize = 1, threshold = 0.5)
-      Dedup.clustersKeepBest(pairs.select("id_a", "id_b"),
-        docs, "doc_id", "n_chars")
-    }),
-
-    // ---- beyond-parity: similarity search -------------------------
-    // late-interaction retrieval: vectors grouped into pseudo-docs of
-    // 10 chunks; doc score = max chunk cosine, winning chunk emitted
-    "sim8_maxsim_topk" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.maxSimTopK(e.filter("vec_id < 5"),
-        e.withColumn("doc_id", expr("vec_id DIV 10")),
-        "vec_id", "embedding", "doc_id", 5)
-    }),
-
-    // embedding-space decontamination: train vectors too close to ANY
-    // eval vector flagged with their best eval match — catches the
-    // paraphrased benchmark leakage gram overlap (dd8/dd10) misses
-    "dd24_semantic_decontamination" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.semanticDecontaminate(
-        e.filter(col("vec_id") >= 50), e.filter(col("vec_id") < 50),
-        "vec_id", "embedding", threshold = 0.35)
-    }),
-
-    "sim1_bruteforce_topk" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.bruteForceTopK(e.filter("vec_id < 10"), e, "vec_id", "embedding", 5)
-        .select("query_id", "neighbor_id", "rank")
-    }),
-
-    // contrastive hard negatives: per query, the 5 most-similar
-    // vectors with a DIFFERENT label — label exclusion before
-    // ranking, so heavily same-label neighborhoods still yield k
-    // true negatives
-    "sim7_hard_negatives" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.hardNegatives(e.filter("vec_id < 10"), e,
-        "vec_id", "embedding", "label", 5)
-        .select("query_id", "neighbor_id", "n_label", "rank")
-    }),
-
-    // per-label centroid via element-wise mean pooling (chunk->doc /
-    // member->class aggregation), one map-combined pass
-    "emb1_label_centroids" -> ((s, dir) =>
-      Similarity.meanPool(t(s, dir, "embeddings"), "label", "embedding")),
-
-    "sim2_ivf_topk" -> ((s, dir) => {
-      // full-probe IVF == exhaustive: verifiable against the
-      // brute-force oracle while exercising the IVF plan
-      val e = t(s, dir, "embeddings")
-      Similarity.ivfTopK(e.filter("vec_id < 10"), e, "vec_id", "embedding", 5,
-        nCentroids = 8, nProbe = 8)
-        .select("query_id", "neighbor_id", "rank")
-    }),
-
-    // hyperplane-LSH bucketed top-k (multi-probe). r9: moved from
-    // rows-only to MATCH the dd2/dd5 way — the query pins an explicit
-    // wide banding (16 bands x 2 planes, Hamming-1 multi-probe) under
-    // which a true neighbor at angle θ misses ALL bands with prob
-    // (θ/π)^32 (per band both planes must split the pair, miss
-    // (θ/π)^2, 16 independent bands): <= 3e-12 even at cosine 0.2,
-    // far below any fixture neighbor — so candidate recall is 1 and
-    // the exact-cosine rank stage makes the output identical to the
-    // brute-force sweep (oracle = sim1's SQL; verified pair-for-pair
-    // at sf0.01 AND sf0.1). Production banding (8x8) keeps its
-    // probabilistic recall spec in SimilaritySpec — this pin is the
-    // verification yardstick, the banding stays the scale knob.
-    "sim3_lsh_topk" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.lshTopK(e.filter("vec_id < 10"), e, "vec_id", "embedding", 5,
-        planes = 2, bands = 16)
-        .select("query_id", "neighbor_id", "rank")
-    }),
-
-    // int8 quantization exact-recovery check: quantized values are
-    // integers (sum_q/max_abs_q hash-compare exactly) and the
-    // dequantization error bound |dequant - x| <= scale/2 is a
-    // deterministic property of round-half-away — a MATCH oracle for
-    // the 4x-smaller embedding representation sim pipelines shuffle
-    "sim4_quantize" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val (qv, scale) = Similarity.quantize(col("embedding"))
-      e.select(col("vec_id"), col("embedding"), qv.as("qv"), scale.as("scale"))
-        .select(
-          col("vec_id"),
-          size(col("qv")).as("n_dims"),
-          array_max(transform(col("qv"), x => abs(x))).cast("int").as("max_abs_q"),
-          aggregate(col("qv"), lit(0L), (acc, x) => acc + x.cast("long")).as("sum_q"),
-          (array_max(zip_with(
-            Similarity.dequantize(col("qv"), col("scale")), col("embedding"),
-            (d, x) => abs(d.cast("double") - x.cast("double"))))
-            <= col("scale") * 0.5000001).as("err_within_bound"))
-    }),
-
-    // quantized IVF (sim2's probe + sim4's int8 payload) at full
-    // probe: integer dot products are exact in double, so the ranks
-    // hash-match brute force over the quantized vectors
-    "sim6_ivf_quantized" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.ivfTopKQuantized(e.filter("vec_id < 10"), e,
-          "vec_id", "embedding", 5, nCentroids = 8, nProbe = 8)
-        .select("query_id", "neighbor_id", "rank")
-    }),
-
-    // Cohen's kappa between the lang column and a perturbed second
-    // rater (every 7th doc forced to 'en'): chance-corrected
-    // agreement from exact marginal counts
-    "ab5_cohens_kappa" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      Stats.cohensKappa(d, col("lang"),
-        when(col("doc_id") % 7 === 0, lit("en")).otherwise(col("lang")))
-    }),
-
-    // per-cluster purity of the deterministic k-means assignment
-    // against the embeddings' true labels — the supervised clustering
-    // scorecard; the oracle replays the full k-means trajectory then
-    // the two count aggregates
-    "eval2_cluster_purity" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val assign = Clustering.kmeans(e, "vec_id", "embedding",
-        k = 8, maxIter = 2)
-      Clustering.clusterPurity(assign, e, "vec_id", "label")
-    }),
-
-    // MRR + nDCG@5 of the exact cosine ranking against same-label
-    // relevance — retrieval ORDER quality (eval1 measures overlap)
-    // generated-text eval metrics (r9): BLEU-4 over deterministic
-    // candidate/reference pairs — doc d vs doc d+100 (partial vocab
-    // overlap exercises clipping) plus 50 self-pairs (exact 1.0).
-    // The oracle replays the clipped n-gram counts, brevity penalty,
-    // and the ln/exp geometric mean (round-4, ta4's parity envelope)
-    "eval4_bleu" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val shifted = d.toDF("b_id", "cand_text")
-      val pairs = d.join(shifted, col("doc_id") + 100 === col("b_id"))
-        .select(col("doc_id").as("pair_id"),
-          col("cand_text").as("cand"), col("text").as("ref"))
-        .unionByName(d.filter(col("doc_id") < 50)
-          .select((col("doc_id") + 100000).as("pair_id"),
-            col("text").as("cand"), col("text").as("ref")))
-      Scoring.bleuPairs(pairs, "pair_id", "cand", "ref")
-    }),
-
-    // unbiased pass@5 (the Codex estimator) over synthetic per-task
-    // sample outcomes (n = 10 + doc_id % 6 samples, c = doc_id % 11
-    // correct, capped at n) — exact integer telescoped binomial
-    // ratio, one division, bit-identical across engines; exercises
-    // the 1.0 short-circuit (n - c < k) and the k > n null
-    "eval8_pass_at_k" -> ((s, dir) => {
-      val tasks = t(s, dir, "documents").select(
-        col("doc_id").as("task_id"),
-        (lit(10) + col("doc_id") % 6).as("n"),
-        least(col("doc_id") % 11, lit(10) + col("doc_id") % 6).as("c"))
-      Scoring.passAtK(tasks, "task_id", "n", "c", k = 5)
-    }),
-
-    // chrF over the same pairing (+ self-pairs pinning 1.0): char
-    // 1..6-gram clipped overlap, effective-order P/R means, F-beta=2
-    "eval7_chrf" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val shifted = d.toDF("b_id", "cand_text")
-      val pairs = d.join(shifted, col("doc_id") + 100 === col("b_id"))
-        .select(col("doc_id").as("pair_id"),
-          col("cand_text").as("cand"), col("text").as("ref"))
-        .unionByName(d.filter(col("doc_id") < 50)
-          .select((col("doc_id") + 100000).as("pair_id"),
-            col("text").as("cand"), col("text").as("ref")))
-      Scoring.chrF(pairs, "pair_id", "cand", "ref")
-    }),
-
-    // word error rate over the same pairing: token-level edit
-    // distance built from char-level levenshtein via a per-pair
-    // token→CJK-codepoint encoding (both engines replay the identical
-    // encoding, so the integer distances hash-match); self-pairs pin
-    // the zero-distance row
-    "eval6_wer" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val shifted = d.toDF("b_id", "cand_text")
-      val pairs = d.join(shifted, col("doc_id") + 100 === col("b_id"))
-        .select(col("doc_id").as("pair_id"),
-          col("cand_text").as("cand"), col("text").as("ref"))
-        .unionByName(d.filter(col("doc_id") < 50)
-          .select((col("doc_id") + 100000).as("pair_id"),
-            col("text").as("cand"), col("text").as("ref")))
-      Scoring.werPairs(pairs, "pair_id", "cand", "ref")
-    }),
-
-    // ROUGE-1/2 over the same pairing: clipped-match recall/
-    // precision/F1, long-form per (pair, n) — all integer ratios
-    "eval5_rouge_n" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val shifted = d.toDF("b_id", "cand_text")
-      val pairs = d.join(shifted, col("doc_id") + 100 === col("b_id"))
-        .select(col("doc_id").as("pair_id"),
-          col("cand_text").as("cand"), col("text").as("ref"))
-      Scoring.rougeN(pairs, "pair_id", "cand", "ref", ns = Seq(1, 2))
-    }),
-
-    "eval3_ranking_metrics" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val ranking = Similarity.bruteForceTopK(
-        e.filter("vec_id < 10"), e, "vec_id", "embedding", 5)
-      val rel = e.filter("vec_id < 10")
-        .select(col("vec_id").as("query_id"), col("label").as("__ql"))
-        .join(e.select(col("vec_id").as("neighbor_id"),
-          col("label").as("__nl")),
-          col("__ql") === col("__nl") &&
-            col("query_id") =!= col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-      Retrieval.rankingMetrics(ranking, rel, k = 5)
-    }),
-
-    // recall@5 of the int8-quantized ranking vs full-precision brute
-    // force — the ANN evaluation harness as a first-class operator;
-    // the oracle replays BOTH ranking pipelines and the join
-    "eval1_ann_recall" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val exact = Similarity.bruteForceTopK(
-        e.filter("vec_id < 10"), e, "vec_id", "embedding", 5)
-      val approx = Similarity.ivfTopKQuantized(
-        e.filter("vec_id < 10"), e, "vec_id", "embedding", 5,
-        nCentroids = 8, nProbe = 8)
-      Similarity.annRecall(approx, exact, k = 5)
-    }),
-
-    // r7: product quantization — the 32x-compressed ANN payload tier.
-    // Deterministic fused Lloyd's per subspace (kmeans1's contract:
-    // smallest-id init, (cost, cid) tie-break, empty clusters keep
-    // their centroid); codes are INTEGRAL so the full training replay
-    // hash-matches despite engine-specific avg ulps in the centroid
-    // doubles (the kmeans1 adjudication)
-    "sim9_pq_codes" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.pqEncode(e, "vec_id", "embedding", trainedPq(s, dir))
-        .select(col("id").as("vec_id"),
-          posexplode(col("codes")).as(Seq("sub", "code")))
-    }),
-
-    // ADC top-k over the PQ codes: per-neighbor distance is m literal
-    // codebook lookups — corpus floats never touched after encoding.
-    // Brute-force ADC (the verification shape, like sim1); the scale
-    // path probes IVF lists first. Both engines train their own
-    // codebooks and sum the per-subspace terms in the same order, so
-    // ranks hash-match on this fixture
-    "sim10_pq_adc_topk" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      // rank-only output (sim6's pattern — r7 advisory): adc_dist is
-      // a double built directly on engine-averaged centroid values,
-      // so a 6-dp rounding of it is the one place an engine ulp
-      // could flip a hash; the RANKS built on the integral codes are
-      // the robust contract
-      Similarity.pqAdcTopK(e.filter("vec_id < 10"), e,
-        "vec_id", "embedding", trainedPq(s, dir), 5)
-        .select("query_id", "neighbor_id", "rank")
-    }),
-
-    // r7: margin-based bitext mining — mutual-best cross-side pairs
-    // scored by ratio margin over k-NN neighborhood means (the
-    // parallel-corpus extraction rule). label parity splits the
-    // fixture into the two "languages"; the ordered-fold k-NN means
-    // make every double SQL-replayable
-    "mine1_bitext_margin" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.bitextMarginPairs(
-        e.filter(col("label") % 2 === 0), e.filter(col("label") % 2 === 1),
-        "vec_id", "embedding", k = 4, marginThreshold = 1.0)
-    }),
-
-    // IVF-PQ composition at FULL PROBE (nProbe == nCentroids): the
-    // candidate set is the whole corpus, so ranks equal brute-force
-    // ADC — sim6's full-probe oracle pattern, sharing sim10's replay
-    "sim11_ivfpq_topk" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      // rank-only like sim10 (same advisory, same shared oracle)
-      Similarity.pqIvfTopK(e.filter("vec_id < 10"), e,
-        "vec_id", "embedding", trainedPq(s, dir), 5,
-        nCentroids = 16, nProbe = 16)
-        .select("query_id", "neighbor_id", "rank")
-    }),
-
-    // r8: the IVF-PQ index made durable — build the (cent_id, codes)
-    // store once (bucketed on cent_id: every probe reads it
-    // exchange-free, the dd14 pattern for vectors), persist the
-    // coarse centroids beside it, probe through the codebook-
-    // generation guard. Full probe == the inline sim11 plan, so
-    // sim10's oracle re-verifies the whole store round-trip
-    "sim15_ivfpq_index_store" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val books = trainedPq(s, dir)
-      val suffix = java.lang.Integer.toHexString(dir.hashCode)
-      val idxTable = s"sim15_idx_$suffix"
-      val (index, cents) = Similarity.pqIndexStore(e, "vec_id", "embedding",
-        books, nCentroids = 16)
-      graft.sources.Bucketing.writeBucketed(index, idxTable, Seq("cent_id"), 4)
-      val centPath = tmpDir("graft_sim15") + "/cents"
-      cents.write.mode("overwrite").parquet(centPath)
-      Similarity.pqIvfProbeIndex(e.filter("vec_id < 10"),
-        graft.sources.Bucketing.readBucketed(s, idxTable),
-        s.read.parquet(centPath),
-        "vec_id", "embedding", books, 5, nProbe = 16)
-        .select("query_id", "neighbor_id", "rank")
-    }),
-
-    // r8: reciprocal-rank fusion — the hybrid-retrieval combiner,
-    // fusing the full-precision dense ranking with the 32x-compressed
-    // ADC ranking over the same queries (rank positions, not raw
-    // scores, so the heterogeneous scorers need no calibration)
-    "fuse1_rrf" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val dense = Similarity.bruteForceTopK(
-        e.filter("vec_id < 10"), e, "vec_id", "embedding", 10)
-        .select("query_id", "neighbor_id", "rank")
-      val adc = Similarity.pqAdcTopK(e.filter("vec_id < 10"), e,
-        "vec_id", "embedding", trainedPq(s, dir), 10)
-        .select("query_id", "neighbor_id", "rank")
-      Retrieval.rrfFuse(Seq(dense, adc), k0 = 60, topK = 5)
-    }),
-
-    // r8: ONLINE index maintenance — the ingestion half of sim16 as
-    // a real two-micro-batch stream: each arriving vector gets its
-    // full index row (coarse cent_id via the literal-centroid argmax
-    // + PQ codes) before landing, the streaming completion of the
-    // st15 encode / st16 drift / sim15 store lifecycle. The oracle
-    // replays both the codebook training (codes) and the cosine
-    // coarse assignment on raw vectors (exact IEEE trees)
-    "st17_stream_index_append" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val books = trainedPq(s, dir)
-      val (_, cents) = Similarity.pqIndexStore(
-        e.filter(col("vec_id") <= 250), "vec_id", "embedding",
-        books, nCentroids = 16)
-      val base = tmpDir("graft_st17")
-      val in = s"$base/in"
-      e.filter(col("vec_id") > 250 && col("vec_id") % 2 === 0)
-        .coalesce(1).write.mode("append").parquet(in)
-      e.filter(col("vec_id") > 250 && col("vec_id") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(in)
-      val schema = s.read.parquet(in).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-      val rows = Similarity.pqIndexAppendOnline(stream, cents,
-        "vec_id", "embedding", books)
-      val q = graft.streaming.EventStream.writeFileStream(
-        rows, s"$base/out", s"$base/ckpt")
-      try q.processAllAvailable() finally q.stop()
-      s.read.parquet(s"$base/out")
-        .select(col("neighbor_id").as("vec_id"), col("cent_id"),
-          posexplode(col("codes")).as(Seq("sub", "code")))
-    }),
-
-    // r8: streaming KMV — the distinct-vocabulary sketch maintained
-    // at ingestion, two real micro-batches folding into a persisted
-    // groups×k store; the final store must equal the batch sketch of
-    // the whole corpus (pf10's oracle re-verifies the fold)
-    "st18_stream_kmv" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val base = tmpDir("graft_st18")
-      val in = s"$base/in"
-      docs.filter(col("doc_id") % 2 === 0)
-        .coalesce(1).write.mode("append").parquet(in)
-      docs.filter(col("doc_id") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(in)
-      val schema = s.read.parquet(in).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-      val q = graft.streaming.EventStream.streamingKmv(
-        kmvTokens(stream), "lang", col("token"), 128,
-        s"$base/store", s"$base/ckpt")
-      try q.processAllAvailable() finally q.stop()
-      s.read.parquet(s"$base/store")
-    }),
-
-    // r8: incremental index maintenance — the second half of the
-    // corpus is encoded AGAINST THE STORE'S centroids and appended;
-    // union(store, appended) == a full rebuild (the dd14 incremental
-    // contract for vectors), so the full-probe result again MATCHes
-    // the inline IVF-PQ oracle
-    "sim16_ivfpq_index_append" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val books = trainedPq(s, dir)
-      val (index0, cents) = Similarity.pqIndexStore(
-        e.filter(col("vec_id") <= 250), "vec_id", "embedding",
-        books, nCentroids = 16)
-      val appended = Similarity.pqIndexAppend(
-        e.filter(col("vec_id") > 250), cents, "vec_id", "embedding", books)
-      // materialize the unioned store once: the generation-tag guard
-      // is an action and the probe a second consumer — without this
-      // the whole encode pipeline runs twice (a persisted store, as
-      // in sim15, is materialized by definition)
-      Similarity.pqIvfProbeIndex(e.filter("vec_id < 10"),
-        index0.unionByName(appended).localCheckpoint(eager = false), cents,
-        "vec_id", "embedding", books, 5, nProbe = 16)
-        .select("query_id", "neighbor_id", "rank")
-    }),
-
-    // r9: sim19's occupancy monitor AT INGESTION — the skew-planted
-    // append streamed in two real micro-batches, per-list counts
-    // folded into a persisted occupancy table (counts are the
-    // mergeable partial, so stream-fold == batch recount exactly and
-    // the report shares sim19's oracle)
-    "st23_stream_ivf_occupancy" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val books = trainedPq(s, dir)
-      val (index0, cents) = Similarity.pqIndexStore(
-        e.filter(col("vec_id") <= 250), "vec_id", "embedding",
-        books, nCentroids = 16)
-      val base = tmpDir("graft_st23")
-      val occPath = s"$base/occ"
-      val occ0 = Similarity.ivfListOccupancy(index0, cents)
-        .localCheckpoint(true)
-      graft.streaming.EventStream.seedIvfOccupancy(occ0, occPath)
-      val planted = e.filter(col("vec_id") === 1)
-        .select(col("embedding").as("planted"))
-      val batch = e.filter(col("vec_id") > 250).select("vec_id")
-        .crossJoin(broadcast(planted))
-        .select(col("vec_id"), col("planted").as("embedding"))
-        .localCheckpoint(true)
-      val in = s"$base/in"
-      batch.filter(col("vec_id") % 2 === 0)
-        .coalesce(1).write.mode("append").parquet(in)
-      batch.filter(col("vec_id") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(in)
-      val schema = s.read.parquet(in).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-      val q = graft.streaming.EventStream.streamingIvfOccupancy(
-        stream, cents, "vec_id", "embedding", books,
-        occPath, s"$base/ckpt")
-      try q.processAllAvailable() finally q.stop()
-      Similarity.ivfListSkewReport(
-        graft.streaming.EventStream.ivfOccupancyTable(s, occPath), occ0)
-    }),
-
-    // r10: mem1's audit AT GENERATION-INGESTION TIME — the corpus
-    // reference (distinct gram set + Bloom) is built once, the
-    // generations arrive as two real micro-batches, each batch's
-    // audit rows land in a replay-safe batch_id partition; the union
-    // of the partials must equal the batch audit exactly (every audit
-    // column is per-generation-independent), so st24 shares mem1's
-    // oracle verbatim
-    "st24_stream_memorization" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val (cg, bloom) = Decontaminate.corpusReference(
-        docs.filter(col("doc_id") >= 100), "text", gramSize = 3)
-      val gens = docs.filter(col("doc_id") < 100)
-        .select("doc_id", "text").localCheckpoint(true)
-      val base = tmpDir("graft_st24")
-      val in = s"$base/in"
-      gens.filter(col("doc_id") % 2 === 0)
-        .coalesce(1).write.mode("append").parquet(in)
-      gens.filter(col("doc_id") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(in)
-      val schema = s.read.parquet(in).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-      val q = graft.streaming.EventStream.streamingMemorizationAudit(
-        stream, "doc_id", "text", 3, cg, bloom, s"$base/out", s"$base/ckpt")
-      try q.processAllAvailable() finally q.stop()
-      s.read.parquet(s"$base/out").select("gen_id", "n_grams",
-        "n_memorized_grams", "novelty", "max_memorized_words")
-    }),
-
-    // r10: the PERSISTED model at stream-ingestion time — the quality
-    // gate a production pipeline runs on arriving docs: weights load
-    // once from the generation-guarded store (training never sits in
-    // the ingestion path), scoring is a stateless codegen projection
-    // per micro-batch, partials land replay-safe in batch_id
-    // partitions; the streamed gate must equal qf9's oracle exactly
-    "st25_stream_quality_gate" -> ((s, dir) => {
-      trainedQf9(s, dir) // ensure the artifact exists
-      val w = ModelStore.load(s, qf9ModelPath(dir), qf9FeatureSpec,
-        qf9Iters, qf9Lr, qf9DataHash(s, dir))
-      val aug = qf9Frame(t(s, dir, "documents")).localCheckpoint(true)
-      val base = tmpDir("graft_st25")
-      val in = s"$base/in"
-      aug.filter(col("doc_id") % 2 === 0)
-        .coalesce(1).write.mode("append").parquet(in)
-      aug.filter(col("doc_id") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(in)
-      val schema = s.read.parquet(in).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-      val feats = qf9Features(col("text"))
-      val scored = stream.select(col("doc_id"),
-        round(QualityFilters.classifierScore(feats, w), 6).as("score"),
-        (QualityFilters.classifierScore(feats, w) >= 0.5).as("flagged"),
-        (col("doc_id") % 5 === 0).as("is_junk"))
-      val q = scored.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", s"$base/ckpt")
-        .foreachBatch {
-          (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           batchId: Long) =>
-            b.write.mode("overwrite").parquet(s"$base/out/batch_id=$batchId")
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      s.read.parquet(s"$base/out")
-        .select("doc_id", "score", "flagged", "is_junk")
-    }),
-
-    // r8: index deletion — RTBF purge of the odd back-half ids, then
-    // a full probe of the purged store; must equal brute ADC over
-    // exactly the survivors (per-vector-independent index rows)
-    "sim17_ivfpq_index_delete" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val books = trainedPq(s, dir)
-      val (index, cents) = Similarity.pqIndexStore(e, "vec_id",
-        "embedding", books, nCentroids = 16)
-      val purged = Similarity.pqIndexDelete(index,
-        e.filter(col("vec_id") > 250 && col("vec_id") % 2 === 1)
-          .select("vec_id"))
-        // materialize the purged store once: the generation-tag guard
-        // is an action and the probe a second consumer (sim16's note)
-        .localCheckpoint(eager = false)
-      Similarity.pqIvfProbeIndex(e.filter("vec_id < 10"), purged, cents,
-        "vec_id", "embedding", books, 5, nProbe = 16)
-        .select("query_id", "neighbor_id", "rank")
-    }),
-
-    // r9: list-occupancy skew monitor — the lifecycle signal sim16's
-    // appends and st16's codebook-drift guard both miss: appends that
-    // concentrate in a few coarse lists silently degrade probe recall
-    // with perfect codebooks. The fixture plants the skew (every
-    // appended id carries centroid 1's vector, so the whole batch
-    // routes to one list) and the report's max-share/Gini vs the
-    // training-time baseline must flip recluster_flag; the oracle
-    // replays coarse routing, occupancy (zero lists included), and
-    // both concentration stats in SQL
-    "sim19_ivf_list_skew" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val books = trainedPq(s, dir)
-      val (index0, cents) = Similarity.pqIndexStore(
-        e.filter(col("vec_id") <= 250), "vec_id", "embedding",
-        books, nCentroids = 16)
-      val planted = e.filter(col("vec_id") === 1)
-        .select(col("embedding").as("planted"))
-      val batch = e.filter(col("vec_id") > 250).select("vec_id")
-        .crossJoin(broadcast(planted))
-        .select(col("vec_id"), col("planted").as("embedding"))
-      val appended = Similarity.pqIndexAppend(
-        batch, cents, "vec_id", "embedding", books)
-      Similarity.ivfListSkewReport(
-        Similarity.ivfListOccupancy(index0.unionByName(appended), cents),
-        Similarity.ivfListOccupancy(index0, cents))
-    }),
-
-    // r8: two-stage retrieval — IVF-PQ ADC candidates, then a
-    // full-precision cosine re-rank of just those candidates (the
-    // production serving pattern). Verified config: full probe +
-    // depth >= corpus makes it bit-identical to brute force, so
-    // sim1's oracle re-verifies the whole composition; production
-    // recall at reduced probe/depth is priced in SimilaritySpec
-    "sim14_ivfpq_rerank" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.pqIvfRerankTopK(e.filter("vec_id < 10"), e,
-        "vec_id", "embedding", trainedPq(s, dir), 5,
-        rerankDepth = 1000000, nCentroids = 16, nProbe = 16)
-        .select("query_id", "neighbor_id", "rank")
-    }),
-
-    // r8: binary (sign-bit) quantization ANN — Hamming prefilter over
-    // 16-byte packed signatures, exact-cosine rerank of the top-64
-    // candidates. Unlike PQ/hyperplane paths the signature has zero
-    // arithmetic (one float-vs-zero comparison per bit), so the
-    // ORACLE REPLAYS THE WHOLE TWO-STAGE PIPELINE bit-for-bit —
-    // candidate truncation included — not just a full-probe
-    // degenerate form
-    "sim18_binary_hamming" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.binarySignTopK(e.filter("vec_id < 10"), e,
-        "vec_id", "embedding", k = 5, candidates = 64)
-    }),
-
-    // r8: the composed candidate-probed mining operators, verified at
-    // FULL PROBE against their exact yardsticks' oracles (the sim11
-    // pattern) — reduced-probe recall is priced in PERF.md
-    "mine2_bitext_ivf" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.bitextMarginPairsIvf(
-        e.filter(col("label") % 2 === 0), e.filter(col("label") % 2 === 1),
-        "vec_id", "embedding", k = 4, marginThreshold = 1.0,
-        nCentroids = 16, nProbe = 16)
-    }),
-
-    "sim12_hard_negatives_ivf" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.hardNegativesIvf(e.filter("vec_id < 10"), e,
-        "vec_id", "embedding", "label", 5, nCentroids = 8, nProbe = 8)
-        .select("query_id", "neighbor_id", "n_label", "rank")
-    }),
-
-    "sim13_maxsim_ivf" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.maxSimTopKIvf(e.filter("vec_id < 5"),
-        e.withColumn("doc_id", expr("vec_id DIV 10")),
-        "vec_id", "embedding", "doc_id", 5, nCentroids = 8, nProbe = 8)
-    }),
-
-    // exact cosine pair enumeration (the brute-force baseline dd5's
-    // LSH recall is measured against) — oracle-checkable because the
-    // codegen dot product accumulates double left-to-right, exactly
-    // like the SQL mirror
-    "sim5_exact_cosine_pairs" -> ((s, dir) =>
-      Dedup.exactCosinePairs(t(s, dir, "embeddings"), "vec_id", "embedding",
-          threshold = 0.35)
-        .select(col("id_a"), col("id_b"),
-          round(col("cosine"), 6).as("cos_sim"))),
-
-    // deterministic Lloyd's k-means: projection-only assignment
-    // against literal centroids, k-row mean aggregation per
-    // iteration; integral output so the oracle replay (same init,
-    // same iterations, unrolled CTEs) hash-matches despite
-    // engine-specific summation ulps in the centroid doubles
-    "kmeans1_embedding_clusters" -> ((s, dir) =>
-      Clustering.kmeans(t(s, dir, "embeddings"), "vec_id", "embedding",
-        k = 8, maxIter = 2)),
-
-    // haversine distance to a reference point over the deterministic
-    // coordinate fixture — lon stays off the antimeridian, matching the grid join's contract (stable-libm formula, rounded to meters)
-    "geo1_haversine" -> ((s, dir) =>
-      t(s, dir, "customer").select(col("c_custkey"),
-        ((col("c_custkey") * 7) % 1200 / 10.0 - 60).as("lat"),
-        ((col("c_custkey") * 13) % 3400 / 10.0 - 170).as("lon"))
-        .select(col("c_custkey"), col("lat"), col("lon"),
-          round(Geo.haversineKm(col("lat"), col("lon"),
-            lit(0.0), lit(0.0)), 3).as("dist_km"))),
-
-    // spatial self-join: all customer pairs within 120 km via 2.5°
-    // grid cells + 3x3 neighborhood — equals the all-pairs answer the
-    // oracle computes the quadratic way, without the cross join
-    "geo2_pairs_within" -> ((s, dir) =>
-      Geo.pairsWithinKm(
-        t(s, dir, "customer").select(col("c_custkey").as("id"),
-          ((col("c_custkey") * 7) % 1200 / 10.0 - 60).as("lat"),
-          ((col("c_custkey") * 13) % 3400 / 10.0 - 170).as("lon")),
-        "id", "lat", "lon", radiusKm = 120.0, cellDeg = 2.5)),
-
-    // cluster-quality readout over the kmeans1 fit: per-cluster mean
-    // silhouette — costs one assignment-shaped pass
-    "kmeans2_silhouette" -> ((s, dir) =>
-      Clustering.silhouette(t(s, dir, "embeddings"), "vec_id",
-        "embedding", k = 8, maxIter = 2)),
-
-    // cluster-stratified diversity sample: the 3 most central docs
-    // per semantic cluster — "cover every topic, keep the most
-    // representative" curation
-    "div1_diversity_sample" -> ((s, dir) =>
-      Clustering.diversitySample(t(s, dir, "embeddings"), "vec_id",
-        "embedding", k = 8, maxIter = 2, perCluster = 3)),
-
-    // SemDeDup end-to-end: semantic pairs -> connected components ->
-    // keep the min-id member per cluster; unpaired vectors survive
-    "dd17_semantic_survivors" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val pairs = Clustering.semanticNearDupPairs(e, "vec_id", "embedding",
-        k = 8, maxIter = 2, threshold = 0.35)
-      val dropped = Dedup.clusters(pairs.select("id_a", "id_b"))
-        .filter(col("id") =!= col("cluster"))
-      e.join(dropped.select(col("id").as("vec_id")), Seq("vec_id"), "left_anti")
-        .select("vec_id")
-    }),
-
-    // equal-frequency binning on an integer column: exact decile
-    // cutoffs ride back as literals, binning is row-local — the
-    // length-curriculum / balanced-batching primitive
-    "pf7_percentile_bins" -> ((s, dir) =>
-      Profiling.percentileBins(t(s, dir, "documents"), "doc_id",
-        "n_chars", nBins = 10)),
-
-    // DSIR importance weights: every doc scored by how much more
-    // likely its tokens are under the French-subset unigram model
-    // than the corpus's own (add-one smoothing on the joint vocab)
-    "dsir1_importance_weights" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Scoring.importanceWeights(docs, docs.filter(col("lang") === "fr"),
-        "doc_id", "text")
-    }),
-
-    // domain-targeted selection: the 50 most French-like docs
-    "dsir2_domain_select" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Scoring.selectByImportance(docs, docs.filter(col("lang") === "fr"),
-        "doc_id", "text", topN = 50)
-    }),
-
-    // SemDeDup: k-means clusters as blocking, exact cosine within —
-    // |corpus|^2 falls to sum(|cluster|^2); the missed cross-cluster
-    // pairs are the documented recall trade (spec prices it against
-    // the exact yardstick)
-    "dd16_semantic_pairs" -> ((s, dir) =>
-      Clustering.semanticNearDupPairs(t(s, dir, "embeddings"), "vec_id",
-          "embedding", k = 8, maxIter = 2, threshold = 0.35)
-        .select(col("id_a"), col("id_b"), col("cluster"),
-          round(col("cosine"), 6).as("cos_sim"))),
-
-    // reproducible per-epoch training order: fresh deterministic
-    // permutation per epoch, dealt into shards (window parallelism =
-    // epochs x shards, never a global sort)
-    "shuf1_epoch_shuffle" -> ((s, dir) =>
-      Sampling.epochShuffle(t(s, dir, "documents"), "doc_id",
-        epochs = 3, shards = 4)),
-
-    // bandwidth throttling changes TIMING, not content: the throttled
-    // scan must hash-match the plain scan's oracle (sink-protection
-    // parity operator, rate generous enough to finish promptly)
-    "u1_throttled_scan" -> ((s, dir) =>
-      Throttle.byRows(t(s, dir, "supplier"), rowsPerSecond = 500000)),
-
-    // ---- beyond-parity: text analysis -----------------------------
-    "ta1_text_stats" -> ((s, dir) =>
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        TextAnalysis.charCount(col("text")).as("n_chars_calc"),
-        TextAnalysis.tokenCount(col("text")).as("n_tokens"),
-        TextAnalysis.bpeishTokenCount(col("text")).as("n_bpeish"),
-        TextAnalysis.digitCount(col("text")).as("n_digits"))),
-
-    "ta2_lang_id" -> ((s, dir) =>
-      t(s, dir, "documents").select(
-        col("doc_id"), col("lang"),
-        TextAnalysis.langId(col("text")).as("lang_guess"))),
-
-    // paragraph-level language routing on a mixed-language fixture:
-    // two own-text paragraphs + one foreign-marker paragraph + one
-    // marker-free ('und') paragraph per doc; the majority election
-    // and minority flags are the excision coordinates
-    "ta7_paragraph_lang" -> ((s, dir) => {
-      val own = t(s, dir, "documents")
-        .select(col("doc_id"), split(col("text"), " ").as("w"))
-      val fx = own.select(col("doc_id"), concat_ws("\n\n",
-        array_join(slice(col("w"), 1, 6), " "),
-        array_join(slice(col("w"), 7, 6), " "),
-        when(col("doc_id") % 3 === 1, lit("der und ist nicht das ein zu"))
-          .when(col("doc_id") % 3 === 2, lit("le la est dans les et un une"))
-          .otherwise(lit("the and of to is in")),
-        lit("zzz qqq xxx")).as("text"))
-      TextAnalysis.paragraphLangRoute(fx, "doc_id", "text")
-    }),
-
-    // MOSS winnowing: every 4-gram-window's minimum word 3-gram,
-    // deduped — the recall-complete substring-blocking key set at
-    // ~2/(w+1) the full gram density (selection replayable in SQL:
-    // lexicographic order, not hash order)
-    "ta6_winnow_fingerprints" -> ((s, dir) =>
-      TextAnalysis.winnowFingerprints(t(s, dir, "documents"),
-        "doc_id", "text", gramSize = 3, window = 4)),
-
-    // the blocking stage winnowing exists for: candidate pairs by
-    // fingerprint collision with the shared count; hot fingerprints
-    // (df > cap) dropped deterministically as boilerplate
-    "dd19_winnow_pairs" -> ((s, dir) =>
-      TextAnalysis.winnowCandidatePairs(t(s, dir, "documents"),
-        "doc_id", "text", gramSize = 3, window = 4, maxBucketSize = 1000)),
-
-    "ta3_fingerprint" -> ((s, dir) =>
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        TextAnalysis.fingerprint(col("text")).as("fingerprint"),
-        // raw double, deliberately unrounded: the per-row arithmetic
-        // is bit-identical across engines, while round(.,4) splits at
-        // exact half-boundaries (0.93125) where Spark's HALF_UP and
-        // DuckDB's float rounding disagree
-        TextAnalysis.qualityScore(col("text")).as("quality"))),
-
-    // zlib redundancy signal. No SQL engine mirrors DEFLATE, so r11
-    // reshapes the output to the kernel's provable CONTRACT, per doc:
-    //  - ratio_in_deflate_bound: 0 < ratio <= 1 + overhead/n (zlib's
-    //    worst-case raw-deflate expansion, n/1000 + 64 slack);
-    //  - doubling_compresses: deflate(text||text) ≤ 2·deflate(text)
-    //    + 8 — self-concatenation subadditivity (the encoder can
-    //    always code the second copy the way it coded the first, so
-    //    only block-boundary slack can be lost; in practice cross-
-    //    copy back-references make it strictly cheaper). Holds at ANY
-    //    length, compressibility, or window relation — 0 violations
-    //    over words/runs/random × 1B..100KB × doubled. A tighter
-    //    additive form (len1 + n/32) was tried and is FALSE for
-    //    20-30 KB compressible text: level-6 hash chains miss distant
-    //    matches and the delta grows ~n/8. DuckDB emits strlen +
-    //    literal true, so both bounds are hash-verified per doc
-    "qf2_compression_signal" -> ((s, dir) => {
-      val nb = octet_length(col("text")).cast("long")
-      val nd = nb.cast("double")
-      val r = TextAnalysis.compressionRatio(col("text"))
-      val rr = TextAnalysis.compressionRatio(concat(col("text"), col("text")))
-      t(s, dir, "documents").select(col("doc_id"), nb.as("n_bytes"),
-        (nb === 0 || (r > 0.0 && r * nd <= nd + nd / 1000.0 + 64.0))
-          .as("ratio_in_deflate_bound"),
-        // len2 = rr * 2n, len1 = r * n; claim len2 <= 2*len1 + 8
-        (rr * 2.0 * nd <= r * nd * 2.0 + 8.0)
-          .as("doubling_compresses"))
-    }),
-
-    // r7/r8: IN-ENGINE trained quality classifier — full-batch GD with
-    // integer-quantized gradients and a rational squash, so the
-    // trained weights are bit-reproducible and the oracle replays the
-    // ENTIRE 64-iteration trajectory (planted junk docs = labels;
-    // features are dyadic scalings of exact integer counts; the
-    // minority junk class is upweighted 4x — converged config from
-    // the r7 hyperparameter grid, accuracy 1.0 on the fixture)
-    "qf9_trained_quality_gate" -> ((s, dir) => {
-      val aug = qf9Frame(t(s, dir, "documents"))
-      val feats = qf9Features(col("text"))
-      val w = trainedQf9(s, dir)
-      aug.select(col("doc_id"),
-        round(QualityFilters.classifierScore(feats, w), 6).as("score"),
-        (QualityFilters.classifierScore(feats, w) >= 0.5).as("flagged"),
-        (col("doc_id") % 5 === 0).as("is_junk"))
-    }),
-
-    // the TRAIN step of the persisted-model lifecycle (r10): ensure
-    // the store artifact exists (train once + persist, or validate
-    // the existing generation) and emit the weight vector itself —
-    // the oracle replays the full 64-iteration trajectory and must
-    // agree on every raw double (bit-reproducible trainer)
-    "qf9_train" -> ((s, dir) => {
-      val w = trainedQf9(s, dir) // loads, or trains + persists
-      s.createDataFrame(w.toIndexedSeq.zipWithIndex.map {
-        case (wt, d) => (d, wt)
-      }).toDF("dim", "weight")
-    }),
-
-    // the SCORE step against the PERSISTED artifact (r10): strict
-    // generation-guarded load (algo + feature spec + config + data
-    // fingerprint — a store trained under any other generation
-    // throws, spec'd in ModelStoreSpec), then the gate is a pure
-    // projection over the loaded weights. Same oracle as qf9: a
-    // persist/load roundtrip must not move a bit
-    "qf11_model_store" -> ((s, dir) => {
-      trainedQf9(s, dir) // ensure the artifact exists
-      val w = ModelStore.load(s, qf9ModelPath(dir), qf9FeatureSpec,
-        qf9Iters, qf9Lr, qf9DataHash(s, dir))
-      val aug = qf9Frame(t(s, dir, "documents"))
-      val feats = qf9Features(col("text"))
-      aug.select(col("doc_id"),
-        round(QualityFilters.classifierScore(feats, w), 6).as("score"),
-        (QualityFilters.classifierScore(feats, w) >= 0.5).as("flagged"),
-        (col("doc_id") % 5 === 0).as("is_junk"))
-    }),
-
-    // calibration report over the trained gate's scores (r9): the
-    // reliability diagram + ECE terms that decide whether qf9's
-    // threshold can be trusted; the oracle wraps qf9's full training
-    // replay and re-bins its rounded scores
-    "eval9_calibration" -> ((s, dir) => {
-      val aug = qf9Frame(t(s, dir, "documents"))
-      val feats = qf9Features(col("text"))
-      val w = trainedQf9(s, dir)
-      val scored = aug.select(col("doc_id"),
-        round(QualityFilters.classifierScore(feats, w), 6).as("score"),
-        (col("doc_id") % 5 === 0).as("is_junk"))
-      QualityFilters.calibrationReport(scored, "score", "is_junk")
-    }),
-
-    "sp1_stratified_sample" -> ((s, dir) =>
-      // deterministic exact-count stratified sample (training mix)
-      Sampling.stratified(t(s, dir, "documents"), "doc_id", Seq("lang"), 10)
-        .select("doc_id", "lang")),
-
-    "sp2_mixture" -> ((s, dir) =>
-      // weighted per-source corpus mixture, reproducible by id-hash
-      Sampling.mixture(t(s, dir, "documents"), "doc_id", "source",
-        Map("src0" -> 1.0, "src1" -> 0.5))
-        .select("doc_id", "source")),
-
-    // leakage-safe splits: every member of a near-dup cluster (dd6's
-    // deterministic pair set) gets its component root's split; docs
-    // outside any cluster key on their own id
-    "sp3_leakage_safe_split" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.ngramJaccardPairs(
-        docs.filter(col("doc_id") <= 100), "doc_id", "text",
-        blockCols = Seq("lang"), shingleSize = 1, threshold = 0.5)
-      Sampling.leakageSafeSplits(docs, "doc_id",
-        pairs.select("id_a", "id_b"), trainFrac = 0.8, validFrac = 0.1)
-        .select("doc_id", "split")
-    }),
-
-    // alpha-smoothed (temperature) mixture weights per source — the
-    // multilingual/multi-source rebalancing primitive
-    "mix1_temperature_weights" -> ((s, dir) =>
-      Sampling.temperatureWeights(t(s, dir, "documents"), "source",
-        alpha = 0.5)),
-
-    // per-source TOKEN budgets (Pile/Dolma corpus construction):
-    // hash-priority order, exclusive-running-sum cutoff; exercises a
-    // mid-source cutoff (src0/src1), budget-exceeds-supply (src2),
-    // and an explicit zero budget (src3); the per-source prefix sum
-    // runs bucketed, never one task per source
-    "mix3_token_budget" -> ((s, dir) =>
-      Sampling.tokenBudgetMixture(
-        t(s, dir, "documents").withColumn("n_tokens",
-          TextAnalysis.tokenCount(col("text")).cast("long")),
-        "doc_id", "source", "n_tokens",
-        Map("src0" -> 800L, "src1" -> 400L, "src2" -> 1000000L,
-          "src3" -> 0L))
-        .select("doc_id", "source", "n_tokens", "cum_tokens")),
-
-    "tn1_normalize" -> ((s, dir) =>
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        TextNormalize.canonical(col("text")).as("canonical"))),
-
-    // REAL Unicode NFC composition (codegen JDK normalizer): the
-    // appended combining-mark suffix (e + U+0301, A + U+030A)
-    // composes to é / Å — nfc_len proves the codepoint count
-    // actually shrank, and DuckDB's nfc_normalize must agree char
-    // for char
-    "tn2_nfc_normalize" -> ((s, dir) => {
-      val suffixed = concat(col("text"), lit(" e\u0301 A\u030A"))
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        TextNormalize.unicodeNormalize(suffixed).as("nfc"),
-        length(TextNormalize.unicodeNormalize(suffixed)).as("nfc_len"))
-    }),
-
-    // raw-crawl text extraction: each doc wrapped in an HTML fixture
-    // (script with < > operators inside, style, comment, entities
-    // incl. the &amp;amp; double-escape) — extractText must drop the
-    // code blocks wholesale, break words at tags, and decode the
-    // named entities exactly once; the oracle replays the identical
-    // regex/replace chain
-    "html1_extract_text" -> ((s, dir) => {
-      val d = col("doc_id").cast("string")
-      val html = concat(
-        lit("<html><head><script type=\"text/javascript\">if(1<2&&3>0){track('x');}</script>"),
-        lit("<style media=\"all\">p{color:red}</style><title>Doc "), d,
-        lit("</title></head><body><!-- nav --><h1 class=\"t\">Doc "), d,
-        lit("</h1><p>"), substring(col("text"), 1, 120),
-        lit("</p><p>lang &lt;"), col("lang"),
-        lit("&gt;&nbsp;&amp;amp; source &quot;"), col("source"),
-        lit("&quot; &#39;end&#39;</p></body></html>"))
-      t(s, dir, "documents").select(col("doc_id"),
-          TextNormalize.extractText(html).as("extracted"))
-        .withColumn("n_chars_extracted", length(col("extracted")))
-    }),
-
-    // outlink extraction: four planted anchor kinds per doc incl. an
-    // uppercase HREF and a single-quoted value — one codegen
-    // regexp_extract_all, row-local classify, document order kept
-    "html2_extract_links" -> ((s, dir) => {
-      val d = col("doc_id").cast("string")
-      val html = concat(
-        lit("<body><a href=\"http://d"), (col("doc_id") % 7).cast("string"),
-        lit(".example/p/"), d, lit("\">x</a> <A HREF='/rel/"), d,
-        lit("'>y</a> <a class=\"z\" href=\"#sec-"), d,
-        lit("\">z</a><a href=\"//cdn.example/lib.js\">w</a></body>"))
-      TextNormalize.extractLinks(
-        t(s, dir, "documents").select(col("doc_id"), html.as("html")),
-        "doc_id", "html")
-    }),
-
-    // link-graph PageRank in exact fixed-point: the corpus has no
-    // links, so derive a deterministic graph (out-degree doc_id % 4,
-    // targets hashed mod |docs| — includes dangling nodes and
-    // self-loops); 5 integer-recurrence sweeps must agree with the
-    // oracle's unrolled replay to the last fixed-point unit
-    "pr1_pagerank" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val nF = docs.agg(count(lit(1)).as("n_docs"))
-      val edges = docs.crossJoin(broadcast(nF))
-        .select(col("doc_id").as("src"), col("n_docs"),
-          explode(expr("filter(array(0, 1, 2, 3), i -> i < doc_id % 4)")).as("i"))
-        .select(col("src"), expr("(src * 13 + i * 17 + 1) % n_docs").as("dst"))
-      LinkGraph.pageRank(docs.select("doc_id"), edges, "src", "dst",
-        iterations = 5)
-    }),
-
-    // degree-oriented triangle enumeration on a deterministic
-    // ring+chord graph (u—u+1, u—u+2): every consecutive id triple
-    // closes, so the fixture pins both the wedge build and the
-    // close check; input edges arrive duplicated and reversed to
-    // exercise canonicalization
-    "pr2_triangles" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val mxF = docs.agg(max("doc_id").as("mx"))
-      val base = docs.select(col("doc_id").as("s")).crossJoin(broadcast(mxF))
-      def chord(k: Int) = base
-        .select(col("s"), (col("s") + k).as("t"), col("mx"))
-        .filter(col("t") <= col("mx")).select("s", "t")
-      val edges = chord(1).unionByName(chord(2))
-        .unionByName(chord(1).select(col("t").as("s"), col("s").as("t")))
-      LinkGraph.triangles(edges, "s", "t")
-    }),
-
-    // sweep-bounded k-core peeling on the chain+chord fixture: both
-    // chain ends sit below k=4, so every sweep peels the exposed
-    // shell — three sweeps of deterministic cascade, oracle-unrolled
-    "pr4_kcore" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val mxF = docs.agg(max("doc_id").as("mx"))
-      val base = docs.select(col("doc_id").as("s")).crossJoin(broadcast(mxF))
-      def chord(k: Int) = base
-        .select(col("s"), (col("s") + k).as("t"), col("mx"))
-        .filter(col("t") <= col("mx")).select("s", "t")
-      LinkGraph.kCore(chord(1).unionByName(chord(2)), "s", "t",
-        k = 4, sweeps = 3)
-    }),
-
-    // deterministic synchronous label propagation on decade
-    // communities: star-to-hub edges PLUS an intra-decade chain (the
-    // chain gives each decade internal plurality, so the chord edges
-    // between hubs cannot merge communities — every node converges to
-    // its decade hub's label)
-    "pr3_communities" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val mxF = docs.agg(max("doc_id").as("mx"))
-      val stars = docs.filter(col("doc_id") % 10 =!= 0)
-        .select(col("doc_id").as("s"),
-          (col("doc_id") - col("doc_id") % 10).as("t"))
-      val chains = docs.filter(col("doc_id") % 10 < 9)
-        .crossJoin(broadcast(mxF))
-        .select(col("doc_id").as("s"), (col("doc_id") + 1).as("t"), col("mx"))
-        .filter(col("t") <= col("mx")).select("s", "t")
-      val chords = docs.filter(col("doc_id") % 100 === 0)
-        .crossJoin(broadcast(mxF))
-        .select(col("doc_id").as("s"), (col("doc_id") + 10).as("t"), col("mx"))
-        .filter(col("t") <= col("mx")).select("s", "t")
-      LinkGraph.labelPropagation(
-        stars.unionByName(chains).unionByName(chords), "s", "t",
-        iterations = 4)
-    }),
-
-    // mergeable-sketch vocabulary: per-lang HLL sketches + an ALL row
-    // built by UNIONING the sketches (the mergeability property a
-    // 100 TB rollup needs). r11: contract form — exact per-group and
-    // unioned distinct counts (oracle-computable) plus a boolean
-    // asserting each Datasketches estimate (INCLUDING the one from
-    // the merged sketch) lands within 5% of exact; DuckDB replays the
-    // exact side + literal true, so the sketch-union error bound is
-    // hash-verified every round
-    "pf5_sketch_union" -> ((s, dir) => {
-      val toks = t(s, dir, "documents")
-        .select(col("lang"),
-          explode(split(lower(trim(col("text"))), "\\s+")).as("token"))
-        .filter(length(col("token")) > 0)
-      val perGroup = toks.groupBy("lang").agg(
-        hll_sketch_agg(col("token")).as("__sk"),
-        countDistinct(col("token")).as("n_distinct_tokens"),
-        count(lit(1)).as("n_tokens"))
-      val grouped = perGroup.select(col("lang"),
-        col("n_distinct_tokens"), col("n_tokens"),
-        (abs(hll_sketch_estimate(col("__sk")) - col("n_distinct_tokens")) * 20
-          <= col("n_distinct_tokens")).as("est_within_5pct"))
-      // the ALL estimate must come from the MERGED sketches (never
-      // re-scanning tokens) — that is the property under test
-      val allEst = perGroup.agg(
-        hll_sketch_estimate(hll_union_agg(col("__sk"))).as("__est"),
-        sum("n_tokens").as("n_tokens"))
-      val allRow = toks.agg(countDistinct(col("token")).as("n_distinct_tokens"))
-        .crossJoin(broadcast(allEst))
-        .select(lit("ALL").as("lang"), col("n_distinct_tokens"), col("n_tokens"),
-          (abs(col("__est") - col("n_distinct_tokens")) * 20
-            <= col("n_distinct_tokens")).as("est_within_5pct"))
-      grouped.unionByName(allRow)
-    }),
-
-    // ANALYZE-style per-column profile (nulls / exact distinct /
-    // numeric min-max) in one aggregate pass + row-local unpivot
-    "pf4_column_profile" -> ((s, dir) =>
-      Profiling.columnProfile(t(s, dir, "orders"),
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"))),
-
-    // declarative data-quality report over the warehouse tables:
-    // null/uniqueness/referential/domain/range checks, one row each
-    // (mix of passing and violated checks so nonzero paths are tested)
-    "dq1_quality_report" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val l = t(s, dir, "lineitem")
-      DataQuality.report(
-        // the three row-local checks fuse into ONE scan of orders
-        DataQuality.rowChecks(o, Seq(
-          "not_null:o_custkey" -> DataQuality.isNullViolation("o_custkey"),
-          "accepted:o_orderstatus" ->
-            DataQuality.acceptedViolation("o_orderstatus", Seq("F", "O")),
-          "range:o_totalprice" ->
-            DataQuality.rangeViolation("o_totalprice", 0, 200000))),
-        DataQuality.unique(o, Seq("o_orderkey")),
-        DataQuality.referential(l, "l_orderkey", o, "o_orderkey"))
-    }),
-
-    // Tukey-fence outliers on the right-skewed event values, per
-    // event type — exact quartiles, fences broadcast back
-    "dq2_outliers" -> ((s, dir) =>
-      DataQuality.outliers(
-        events(s, dir).select("event_id", "event_type", "value"),
-        Seq("event_type"), "value")),
-
-    // PSI drift: reference = 2/3 of orders, current = the last third
-    // with high prices truncated away (planted upper-tail drain); the
-    // per-bucket terms expose exactly where the distribution moved
-    "dq4_psi_drift" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      DataQuality.psiDrift(
-        o.filter(col("o_orderkey") % 3 < 2),
-        o.filter(col("o_orderkey") % 3 === 2 &&
-          col("o_totalprice") < 300000),
-        "o_totalprice", lo = 0.0, hi = 500000.0, nBuckets = 10)
-    }),
-
-    // weight-proportional sample without replacement (A-ES order
-    // statistics over the portable md5 uniform): longer docs more
-    // likely, yet the draw is a pure function of (seed, id) — the
-    // oracle redraws it exactly
-    "sp4_weighted_sample" -> ((s, dir) =>
-      Sampling.weightedSample(
-        t(s, dir, "documents").select("doc_id", "n_chars"),
-        "doc_id", col("n_chars"), k = 100)),
-
-    // the repair step dq7's validation exists for: keep agreeing
-    // chunks from the sink, re-replicate only the damaged ones —
-    // after repair the sink must equal the source EXACTLY, which is
-    // the whole oracle
-    "m8_checksum_repair" -> ((s, dir) => {
-      val cols = Seq("l_orderkey", "l_linenumber", "l_quantity",
-        "l_returnflag", "l_linestatus")
-      val corrupted = t(s, dir, "lineitem")
-        .withColumn("l_quantity",
-          when(col("l_orderkey").between(1000, 1999), col("l_quantity") + 1.0)
-            .otherwise(col("l_quantity")))
-        .filter(!(col("l_orderkey").between(5000, 5999) &&
-          col("l_linenumber") === 1))
-      Modes.checksumRepair(t(s, dir, "lineitem"), corrupted,
-        "l_orderkey", 1000L, cols)
-    }),
-
-    // replication validation: chunk-level MD5-XOR digests of lineitem
-    // vs a deliberately perturbed copy (chunk 1 mutated, chunk 5
-    // missing rows) — only digests cross the wire, mismatched chunks
-    // localize the damage
-    "dq7_replication_checksum" -> ((s, dir) => {
-      val cols = Seq("l_orderkey", "l_linenumber", "l_quantity",
-        "l_returnflag", "l_linestatus")
-      val src = DataQuality.tableChecksum(
-        t(s, dir, "lineitem"), "l_orderkey", 1000L, cols)
-      val perturbed = t(s, dir, "lineitem")
-        .withColumn("l_quantity",
-          when(col("l_orderkey").between(1000, 1999), col("l_quantity") + 1.0)
-            .otherwise(col("l_quantity")))
-        .filter(!(col("l_orderkey").between(5000, 5999) &&
-          col("l_linenumber") === 1))
-      val dst = DataQuality.tableChecksum(perturbed, "l_orderkey", 1000L, cols)
-      DataQuality.checksumCompare(src, dst)
-    }),
-
-    // unbinned drift: two-sample KS statistic over the same split as
-    // dq4's PSI — sup |ECDF_ref - ECDF_cur| with the value where it
-    // occurs, via the distributed two-counter prefix sum
-    "dq6_ks_drift" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      DataQuality.ksDrift(
-        o.filter(col("o_orderkey") % 3 < 2),
-        o.filter(col("o_orderkey") % 3 === 2 &&
-          col("o_totalprice") < 300000),
-        "o_totalprice")
-    }),
-
-    // token-distribution drift: KL(source || corpus) per source with
-    // add-one smoothing over the corpus vocab — the text counterpart
-    // of dq4's numeric PSI. Absent-term mass folds to closed form
-    // (no source x vocab expansion); the algebra is spec-pinned
-    // against the naive sum, the engine replay here is MATCH
-    "dq5_token_kl" -> ((s, dir) =>
-      Scoring.klDrift(t(s, dir, "documents"), "source", "text")),
-
-    "sk1_salted_distinct" -> ((s, dir) =>
-      // two-stage salted distinct: exact result, hot keys spread over
-      // 32 reducers instead of one
-      Skew.saltedCountDistinct(t(s, dir, "orders"),
-        Seq("o_orderpriority"), "o_custkey")),
-
-    // ordered conversion funnel: view -> click (after) -> purchase
-    // (after that); out-of-order conversions must NOT count, which
-    // the strictly-after join predicates enforce
-    "fun1_funnel" -> ((s, dir) =>
-      Funnel.funnel(events(s, dir), "user_id", "event_type", "ts",
-        Seq("view", "click", "purchase"))),
-
-    // per-transition conversion latency: exact microsecond gaps,
-    // interpolated percentiles, one divide to seconds — how LONG the
-    // funnel takes, not just how far
-    "fun2_step_latency" -> ((s, dir) =>
-      Funnel.stepLatency(events(s, dir), "user_id", "event_type", "ts",
-        Seq("view", "click", "purchase"))),
-
-    // uniqueness / candidate-key profiling: exact distinct-combination
-    // ratios over four candidate column sets (fdProfile's sibling)
-    "dq11_key_profile" -> ((s, dir) =>
-      DataQuality.keyProfile(t(s, dir, "orders"), Seq(
-        Seq("o_orderkey"), Seq("o_custkey"),
-        Seq("o_custkey", "o_orderdate"),
-        Seq("o_orderpriority", "o_orderstatus")))),
-
-    // cohort retention triangle: users grouped by first-activity
-    // week, counted in each week they return
-    "coh1_retention" -> ((s, dir) =>
-      Funnel.retention(events(s, dir), "user_id", "ts")),
-
-    // winsorize the heavy-tailed event values at exact [p5, p95]:
-    // one percentile aggregate, cutoffs broadcast, row-local clamp
-    "dq3_winsorize" -> ((s, dir) =>
-      DataQuality.winsorize(
-        events(s, dir).select("event_id", "value"), "value")),
-
-    // table diff: the after-version plants updates (%7), removals
-    // (%13), and additions (%17, shifted keys); diff must emit
-    // exactly the planted differences — the oracle derives the
-    // expected rows independently from the planting rules
-    "diff1_table_diff" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val k = col("c_custkey")
-      val after = c.filter(k % 13 =!= 0)
-        .withColumn("c_acctbal",
-          when(k % 7 === 0, round(col("c_acctbal") + 10, 2))
-            .otherwise(col("c_acctbal")))
-        .unionByName(c.filter(k % 17 === 0)
-          .withColumn("c_custkey", k + 10000000L))
-      DataQuality.diff(c, after, Seq("c_custkey"))
-    }),
-
-    // per-lang nucleus selection: the best documents covering half
-    // the character mass of each language (integer running sums, so
-    // the boundary is engine-exact)
-    "mix2_nucleus_select" -> ((s, dir) =>
-      Sampling.nucleusByGroup(
-        t(s, dir, "documents").select("doc_id", "lang", "n_chars"),
-        Seq("lang"), "doc_id", "n_chars", p = 0.5)),
-
-    // SFT chat rendering with the loss mask: documents grouped into
-    // conversations (alternating roles), rendered turn-by-turn, and
-    // every assistant response located by exact char offsets —
-    // span_text is SLICED from the rendered string, so a hash match
-    // proves the coordinates land on the response text
-    "sft1_chat_spans" -> ((s, dir) => {
-      val turns = t(s, dir, "documents").select(
-        (col("doc_id") % 40).as("conv_id"),
-        col("doc_id").as("ord"),
-        when(expr("(doc_id div 40) % 2") === 0, lit("user"))
-          .otherwise(lit("assistant")).as("role"),
-        substring(col("text"), 1, 60).as("turn_text"))
-      ChatFormat.assistantSpans(turns, "conv_id", "ord", "role", "turn_text")
-    }),
-
-    // Morton (z-order) key over two scan dimensions: pure bit
-    // arithmetic, engine-pinned exact — the write-side layout tool
-    // (Layout.writeZOrdered) sorts files by this key so parquet
-    // min/max stats prune on BOTH columns
-    "z1_zorder_key" -> ((s, dir) =>
-      t(s, dir, "lineitem").select(col("l_orderkey"), col("l_linenumber"),
-        graft.sources.Layout.interleaveBits(
-          col("l_partkey"), col("l_suppkey"), 16).as("zkey"))),
-
-    // Hilbert-curve layout key (z1's Morton sibling with seamless 2-D
-    // locality): the xy->d walk unrolled over 8 levels of integer
-    // columns; the oracle replays it as a recursive CTE
-    "z2_hilbert_key" -> ((s, dir) =>
-      graft.sources.Layout.hilbertKey(
-        t(s, dir, "lineitem")
-          .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"),
-        "l_partkey", "l_suppkey", bits = 8)
-        .select("l_orderkey", "l_linenumber", "hkey")),
-
-    // hive-partitioned layout + STATIC partition pruning: lineitem
-    // written partitioned by ship month, the 1995 predicate prunes
-    // whole directories at planning time (PartitionFilters plan-pinned)
-    // partition-grain replication: the correction batch (two 1994
-    // months, doubled quantity) REPLACES exactly its partitions via
-    // dynamic partition overwrite; every other month stays
-    // byte-untouched — verified by the per-month totals
-    "m10_partition_overwrite" -> ((s, dir) => {
-      val path = tmpDir("graft_m10") + "/li"
-      val li = t(s, dir, "lineitem").withColumn("l_month",
-        (year(col("l_shipdate")) * 100 + month(col("l_shipdate"))).cast("int"))
-      graft.sources.Layout.writeHivePartitioned(li, path, "l_month")
-      val batch = li.filter(col("l_month").isin(199401, 199402))
-        .withColumn("l_quantity", col("l_quantity") * 2)
-      graft.sources.Layout.overwritePartitions(batch, path, "l_month")
-      s.read.parquet(path).groupBy("l_month")
-        .agg(count(lit(1)).as("n"), round(sum("l_quantity"), 2).as("sum_qty"))
-    }),
-
-    "pp1_partition_prune" -> ((s, dir) => {
-      val path = tmpDir("graft_pp1") + "/li"
-      graft.sources.Layout.writeHivePartitioned(
-        t(s, dir, "lineitem").withColumn("l_month",
-          (year(col("l_shipdate")) * 100 + month(col("l_shipdate"))).cast("int")),
-        path, "l_month")
-      s.read.parquet(path)
-        .filter(col("l_month").between(199501, 199512))
-        .groupBy("l_month")
-        .agg(count(lit(1)).as("n"), round(sum("l_quantity"), 2).as("sum_qty"))
-    }),
-
-    // DYNAMIC partition pruning: the fact's partition column is joined
-    // against a filtered month dimension — Spark broadcasts the dim's
-    // key set and injects a dynamicpruningexpression into the fact
-    // scan, so only the joined month directories are listed
-    "pp2_dynamic_prune" -> ((s, dir) => {
-      val path = tmpDir("graft_pp2") + "/li"
-      graft.sources.Layout.writeHivePartitioned(
-        t(s, dir, "lineitem").withColumn("l_month",
-          (year(col("l_shipdate")) * 100 + month(col("l_shipdate"))).cast("int")),
-        path, "l_month")
-      val months = t(s, dir, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT" &&
-          year(col("o_orderdate")) === 1994)
-        .select((year(col("o_orderdate")) * 100 + month(col("o_orderdate")))
-          .cast("int").as("d_month"))
-        .distinct()
-      s.read.parquet(path)
-        .join(months, col("l_month") === col("d_month"))
-        .groupBy("l_month")
-        .agg(count(lit(1)).as("n"), round(sum("l_quantity"), 2).as("sum_qty"))
-    }),
-
-    // manual skew join: fact salted on a non-key column, dim
-    // replicated 8x, join runs on (partkey, salt) so a hot part's
-    // rows land on 8 reducers — result == the plain join, which is
-    // exactly what the oracle computes
-    "sk2_salted_join" -> ((s, dir) => {
-      val joined = Skew.saltedJoin(
-        t(s, dir, "lineitem"),
-        t(s, dir, "part").withColumnRenamed("p_partkey", "l_partkey"),
-        keys = Seq("l_partkey"), saltFrom = "l_orderkey", replication = 8)
-      joined.groupBy("p_brand")
-        .agg(count(lit(1)).as("n"), round(sum("l_quantity"), 2).as("sum_qty"))
-    }),
-
-    "pipe1_training_pipeline" -> ((s, dir) => {
-      // end-to-end curation: normalize -> quality gate -> near-dup
-      // removal -> annotate; the integration query for the whole
-      // training-data surface. Full hash MATCH since r6: pipe1Oracle
-      // replays the entire funnel over the ground-truth pair closure
-      // (the recall-1 adjudication — LSH finds every qualifying pair
-      // on this fixture)
-      // materialize the normalized+gated corpus once: the filter
-      // pushdown otherwise collapses canonical() into the quality
-      // predicate AND the projection (2 evaluations/row), and
-      // dedupCorpus's exact stage consumes the frame twice more
-      val docs = t(s, dir, "documents")
-        .withColumn("text", TextNormalize.canonical(col("text")))
-        .filter(TextAnalysis.qualityScore(col("text")) >= 0.3)
-        .localCheckpoint()
-      Dedup.dedupCorpus(docs, "doc_id", "text", threshold = 0.8)
-        .select(col("doc_id"), col("lang"), col("source"),
-          TextAnalysis.tokenCount(col("text")).as("n_tokens"),
-          TextAnalysis.fingerprint(col("text")).as("fingerprint"))
-    }),
-
-    // ---- beyond-parity: privacy / quality / scoring / packing -----
-    // salted-hash pseudonymization: names become stable SHA-256
-    // pseudonyms that still join/group; nulls stay null
-    "pii2_pseudonymize" -> ((s, dir) =>
-      Privacy.pseudonymize(t(s, dir, "customer"),
-          Seq("c_name"), salt = "graft-salt")
-        .select("c_custkey", "c_name", "c_mktsegment")),
-
-    // stream-static enrichment: the event stream joins the customer
-    // dim (broadcast) per micro-batch — stateless, so no watermark;
-    // two input files force a real multi-batch run
-    "st9_stream_enrich" -> ((s, dir) => {
-      val ev = events(s, dir)
-        .select("event_id", "user_id", "ts", "event_type", "value")
-      val base = tmpDir("graft_st9")
-      val in = s"$base/in"
-      val cut = lit("2024-01-15 00:00:00").cast("timestamp_ntz")
-      ev.filter(col("ts") < cut).coalesce(1).write.mode("append").parquet(in)
-      ev.filter(col("ts") >= cut).coalesce(1).write.mode("append").parquet(in)
-      val schema = s.read.parquet(in).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-      val dim = t(s, dir, "customer")
-        .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
-      val joined = stream.join(broadcast(dim), Seq("user_id"), "left")
-      val q = graft.streaming.EventStream.writeFileStream(
-        joined, s"$base/out", s"$base/ckpt")
-      try q.processAllAvailable() finally q.stop()
-      s.read.parquet(s"$base/out")
-    }),
-
-    // train-offline / assign-online: centroids fit in batch, then a
-    // REAL two-micro-batch stream routes each vector by topic with a
-    // stateless projection; must agree with the batch assignment
-    // (same oracle as kmeans1)
-    "st10_stream_cluster_assign" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val cents = Clustering.kmeansCentroids(e, "vec_id", "embedding",
-        k = 8, maxIter = 2)
-      val base = tmpDir("graft_st10")
-      val in = s"$base/in"
-      e.filter(col("vec_id") % 2 === 0).coalesce(1).write.mode("append").parquet(in)
-      e.filter(col("vec_id") % 2 === 1).coalesce(1).write.mode("append").parquet(in)
-      val schema = s.read.parquet(in).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-      val assigned = Clustering.assign(stream, "vec_id", "embedding", cents)
-      val q = graft.streaming.EventStream.writeFileStream(
-        assigned, s"$base/out", s"$base/ckpt")
-      try q.processAllAvailable() finally q.stop()
-      s.read.parquet(s"$base/out")
-    }),
-
-    // train-offline / encode-online for the PQ index: codebooks fit
-    // in batch, then a REAL two-micro-batch stream encodes each
-    // vector with the stateless m×k argmin projection — the
-    // ingestion-time form of sim9 (vectors get their 32× code
-    // payload before landing); must equal the batch codes, so it
-    // shares sim9's full-training-replay oracle. Micro-batch order
-    // is irrelevant: the encode is stateless, no mtime pinning needed
-    "st15_stream_pq_codes" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val books = trainedPq(s, dir)
-      val base = tmpDir("graft_st15")
-      val in = s"$base/in"
-      e.filter(col("vec_id") % 2 === 0).coalesce(1).write.mode("append").parquet(in)
-      e.filter(col("vec_id") % 2 === 1).coalesce(1).write.mode("append").parquet(in)
-      val schema = s.read.parquet(in).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-      val codes = Similarity.pqEncode(stream, "vec_id", "embedding", books)
-      val q = graft.streaming.EventStream.writeFileStream(
-        codes, s"$base/out", s"$base/ckpt")
-      try q.processAllAvailable() finally q.stop()
-      s.read.parquet(s"$base/out")
-        .select(col("id").as("vec_id"),
-          posexplode(col("codes")).as(Seq("sub", "code")))
-    }),
-
-    // r8: st4's attribution interval join run as a REAL stream-stream
-    // join — two file streams (views, purchases), each delivered as
-    // two time-split micro-batches, joined with watermark-bounded
-    // state (2 h watermark over a 1 h window: state for a view is
-    // safely retained until no in-window purchase can still arrive,
-    // even across the batch-1/batch-2 time cut). Inner stream-stream
-    // join with all data eventually arriving == the batch interval
-    // join, so it shares st4's oracle
-    "st19_stream_stream_join" -> ((s, dir) => {
-      val ev = events(s, dir).withColumn("ts", col("ts").cast("timestamp"))
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts").as("view_ts"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("p_ts"), col("value"))
-      val base = tmpDir("graft_st19")
-      val cut = lit("2024-01-15 00:00:00").cast("timestamp")
-      withShufflePartitions(s, 8) {
-        val vs = stagedMicroBatches(s, s"$base/v", Seq(
-          views.filter(col("view_ts") < cut), views.filter(col("view_ts") >= cut)))
-        val ps = stagedMicroBatches(s, s"$base/p", Seq(
-          purchases.filter(col("p_ts") < cut), purchases.filter(col("p_ts") >= cut)))
-        val joined = graft.streaming.EventStream.intervalJoin(
-          vs, ps, Seq("user_id"), "view_ts", "p_ts", "1 hour",
-          watermark = "2 hours")
-        val q = graft.streaming.EventStream.writeFileStream(
-          joined, s"$base/out", s"$base/ckpt")
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.read.parquet(s"$base/out")
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_attributed"),
-          round(sum("value"), 2).as("attributed_value"))
-    }),
-
-    // r8: the LEFT OUTER stream-stream join e2e (st5's "which views
-    // never converted") — an outer row may only emit once the
-    // watermark PROVES no in-window purchase can still arrive, so
-    // after the two real batches each side gets two far-future
-    // sentinel micro-batches (user_id -1, filtered out below): the
-    // first pushes both watermarks past every real view's match
-    // deadline, and the rows evict/emit during the batch that
-    // processes the second (the watermark moves at batch boundaries
-    // — the StreamingSpec two-round dance, made deterministic here).
-    // With every real row flushed, stream == batch: st5's oracle
-    "st20_stream_outer_join" -> ((s, dir) => {
-      val ev = events(s, dir).withColumn("ts", col("ts").cast("timestamp"))
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts").as("view_ts"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("p_ts"), col("value"))
-      def sentV(ts: String) = s.range(1).select(lit(-1L).as("user_id"),
-        lit(ts).cast("timestamp").as("view_ts"))
-      def sentP(ts: String) = s.range(1).select(lit(-1L).as("user_id"),
-        lit(ts).cast("timestamp").as("p_ts"), lit(0.0).as("value"))
-      val base = tmpDir("graft_st20")
-      val cut = lit("2024-01-15 00:00:00").cast("timestamp")
-      withShufflePartitions(s, 8) {
-        val vs = stagedMicroBatches(s, s"$base/v", Seq(
-          views.filter(col("view_ts") < cut), views.filter(col("view_ts") >= cut),
-          sentV("2024-03-01 00:00:00"), sentV("2024-03-10 00:00:00")))
-        val ps = stagedMicroBatches(s, s"$base/p", Seq(
-          purchases.filter(col("p_ts") < cut), purchases.filter(col("p_ts") >= cut),
-          sentP("2024-03-01 00:00:00"), sentP("2024-03-10 00:00:00")))
-        val joined = graft.streaming.EventStream.intervalJoin(
-          vs, ps, Seq("user_id"), "view_ts", "p_ts", "1 hour",
-          watermark = "2 hours", joinType = "left_outer")
-        val q = graft.streaming.EventStream.writeFileStream(
-          joined, s"$base/out", s"$base/ckpt")
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.read.parquet(s"$base/out")
-        .filter(col("user_id") >= 0)
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_rows"),
-          count(when(col("p_ts").isNull, 1)).as("n_unattributed"))
-    }),
-
-    // r8: codebook drift guard for st15's train-offline/encode-online
-    // split — per-micro-batch mean PQ reconstruction residual vs the
-    // training-time baseline; residuals are integer-quantized so the
-    // per-batch sums are exact/order-free/mergeable and the oracle
-    // replays the whole statistic. The fixture's two parity batches
-    // share the training distribution, so both flags stay down;
-    // StreamingSpec plants a drifted batch and watches the flag flip
-    "st16_stream_pq_drift" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val books = trainedPq(s, dir)
-      val (baseSq, baseN) = Similarity.pqResidualBaseline(e, "embedding", books)
-      val base = tmpDir("graft_st16")
-      val in = s"$base/in"
-      e.filter(col("vec_id") % 2 === 0).coalesce(1).write.mode("append").parquet(in)
-      e.filter(col("vec_id") % 2 === 1).coalesce(1).write.mode("append").parquet(in)
-      val schema = s.read.parquet(in).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-      val q = graft.streaming.EventStream.pqDriftMonitor(stream, "embedding",
-        books, col("vec_id") % 2, baseSq, baseN, tolerance = 1.5,
-        s"$base/out", s"$base/ckpt")
-      try q.processAllAvailable() finally q.stop()
-      // drop the batch-id partition column: it keys the idempotent
-      // retry overwrite, not the released statistic
-      s.read.parquet(s"$base/out")
-        .select("batch_key", "n_vectors", "mean_resid_sq", "retrain_flag")
-    }),
-
-    // r8: ε-DP released corpus-composition counts — seeded portable
-    // geometric noise walked down driver-precomputed CDF literals
-    // (no libm in either engine's plan; the oracle replays hash,
-    // literals, and walk). Only the noisy counts leave the mechanism
-    "priv1_dp_counts" -> ((s, dir) =>
-      // the PUBLIC group domain (a language-code registry) includes
-      // a code absent from the corpus: its row releases noise-only
-      // (clamped), so the row SET reveals nothing about presence
-      Privacy.dpCounts(t(s, dir, "documents"), "lang",
-        epsilon = 0.5, seed = 42L, noiseBound = 64,
-        domain = Some(Seq("de", "en", "es", "fr", "ja", "zh")))),
-
-    // user-level DP sums: per-customer spend clipped to $4M, rounded
-    // to 16 levels, per-nation step sums + geometric noise at
-    // sensitivity 16 (eps/16 per step). Nation dim = public domain
-    "priv2_dp_sums" -> ((s, dir) =>
-      Privacy.dpSum(privSpendFrame(s, dir), "cust", "n_name",
-        col("cents"), clipCents = 400000000L, steps = 16,
-        epsilon = 0.5, seed = 42L, noiseBound = 512,
-        domain = Some(t(s, dir, "nation").select(col("n_name"))))),
-
-    // composable DP mean: (noisy unit count, noisy sum, quotient);
-    // total budget eps_sum + eps_cnt = 1.0 by sequential composition
-    "priv3_dp_mean" -> ((s, dir) =>
-      Privacy.dpMean(privSpendFrame(s, dir), "cust", "n_name",
-        col("cents"), clipCents = 400000000L, steps = 16,
-        epsSum = 0.5, epsCnt = 0.5, seed = 42L, noiseBound = 512,
-        cntBound = 64,
-        domain = Some(t(s, dir, "nation").select(col("n_name"))))),
-
-    "pii1_redact" -> ((s, dir) => {
-      // the corpus itself is synthetic word salad, so deterministic
-      // PII is injected per row — the oracle builds the identical
-      // string, making the regex semantics the thing under test
-      val aug = t(s, dir, "documents").withColumn("text",
-        concat(col("text"), lit(" contact user"),
-          col("doc_id").cast("string"),
-          lit("@example.com ip 10.0."),
-          (col("doc_id") % 200).cast("string"),
-          lit(".7 ssn 123-45-6789 call 555-867-5309")))
-      Privacy.scrub(aug, "text")
-        .select("doc_id", "pii_email", "pii_ip", "pii_ssn", "pii_card",
-          "pii_phone", "pii_total", "text_redacted")
-    }),
-
-    "qf1_quality_gate" -> ((s, dir) =>
-      QualityFilters.gate(t(s, dir, "documents"), "text")
-        .select("doc_id", "n_words", "mean_word_len", "max_word_len",
-          "symbol_ratio", "stopword_hits", "keep")),
-
-    // trained NB log-odds quality classifier: train on 2/3 of the
-    // corpus (label = lang=='en'), score the held-out 1/3. Unseen
-    // terms ride on the token count (decomposed smoothing), so the
-    // model join touches seen terms only
-    "qf6_nb_classifier" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val train = docs.filter(col("doc_id") % 3 =!= 0)
-        .withColumn("is_en", col("lang") === "en")
-      val held = docs.filter(col("doc_id") % 3 === 0)
-      Scoring.nbLogOdds(train, held, "doc_id", "text", "is_en")
-    }),
-
-    // blocklist scan: ONE Aho-Corasick pass matches every pattern
-    // simultaneously (O(text+matches), not O(patterns*text));
-    // counting is per-pattern leftmost non-overlapping so the oracle
-    // replays it with the replace-length trick. Patterns include a
-    // substring pair ("merge" vs "merge data") and a self-overlapping
-    // bigram ("batch batch") to pin the semantics.
-    "qf5_blocklist" -> ((s, dir) => {
-      val pats = Seq("merge", "merge data", "batch batch", "slow", "vector")
-      QualityFilters.blocklist(t(s, dir, "documents"), "doc_id", "text", pats)
-        .select(col("doc_id"), col("n_matches"),
-          array_join(col("matched"), ",").as("matched"), col("keep"))
-    }),
-
-    // curation-funnel observability: per-source counts through
-    // gate -> exact dedup -> decontamination. Train side carries 50
-    // PLANTED duplicates (copied ids +10000) so the dedup stage has
-    // real work; decon drops docs sharing >= 20 eval 3-grams (the
-    // dd8 exact-overlap machinery). Every stage is deterministic, so
-    // the whole funnel is one MATCH row per source.
-    "pipe2_curation_funnel" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val evalDocs = docs.filter(col("doc_id") <= 250)
-      val planted = docs.filter(col("doc_id") > 250 && col("doc_id") <= 300)
-        .withColumn("doc_id", col("doc_id") + 10000)
-      val train = docs.filter(col("doc_id") > 250).unionByName(planted)
-        .select("doc_id", "source", "text")
-      val gated = QualityFilters.gate(train, "text")
-        .filter(col("keep")).select("doc_id", "source", "text")
-      val deduped = Dedup.exactSurvivors(gated, "doc_id", Seq("text"))
-      val contaminated = Decontaminate.bloomContaminatedDocs(
-        deduped, evalDocs, "doc_id", "text", gramSize = 3,
-        expectedEvalGrams = 1 << 16)
-        .filter(col("n_shared_grams") >= 20)
-        .select("doc_id")
-      val clean = deduped.join(contaminated, Seq("doc_id"), "left_anti")
-      def cnt(df: DataFrame, name: String) =
-        df.groupBy("source").agg(count(lit(1)).as(name))
-      cnt(train, "n_input")
-        .join(cnt(gated, "n_gated"), Seq("source"), "left")
-        .join(cnt(deduped, "n_deduped"), Seq("source"), "left")
-        .join(cnt(clean, "n_clean"), Seq("source"), "left")
-        .select(col("source"), col("n_input"),
-          coalesce(col("n_gated"), lit(0L)).as("n_gated"),
-          coalesce(col("n_deduped"), lit(0L)).as("n_deduped"),
-          coalesce(col("n_clean"), lit(0L)).as("n_clean"))
-    }),
-
-    // URL fixture shared by url1/qf3: two deterministic URLs per doc
-    // (one mixed-case host, one with a port + query) appended to the
-    // text — the extraction and the gate must find and normalize both
-    "url1_extract" -> ((s, dir) =>
-      QualityFilters.extractUrls(urlFixture(t(s, dir, "documents")),
-        "doc_id", "text")),
-
-    "qf3_domain_gate" -> ((s, dir) => {
-      import s.implicits._
-      val blocked = Seq("d2.example", "d5.example", "cdn-d1.example")
-        .toDF("domain")
-      QualityFilters.domainGate(urlFixture(t(s, dir, "documents")),
-        "doc_id", "text", blocked)
-    }),
-
-    "rep1_repetition" -> ((s, dir) =>
-      QualityFilters.repetitionSignals(t(s, dir, "documents"),
-          "doc_id", "text", n = 2)
-        .select("doc_id", "n_grams", "top_gram", "top_gram_frac",
-          "distinct_word_frac")),
-
-    "tf1_top_terms" -> ((s, dir) =>
-      Scoring.topTerms(t(s, dir, "documents"), "doc_id", "text", 3)),
-
-    // inverted index: exact df/total_tf per token, postings CAPPED at
-    // 20 doc ids inside the same token partitioning the aggregate
-    // uses — no agg buffer ever exceeds the cap
-    "ir1_inverted_index" -> ((s, dir) =>
-      Retrieval.invertedIndex(t(s, dir, "documents"), "doc_id", "text",
-        maxPostings = 20)),
-
-    // BM25 against a 3-term topic probe; doc lengths one aggregate,
-    // term stats broadcast, the tail never enters the df aggregation
-    "ir2_bm25" -> ((s, dir) =>
-      Retrieval.bm25(t(s, dir, "documents"), "doc_id", "text",
-        terms = Seq("join", "vector", "spark"))),
-
-    // exact phrase query "stream table hash": the positional-index
-    // lookup collapsed to a row-local codegen conjunction — no
-    // explode, no join, the filter rides the scan
-    "ir3_phrase_match" -> ((s, dir) =>
-      Retrieval.phraseMatch(t(s, dir, "documents"), "doc_id", "text",
-        Seq("stream", "table", "hash"))),
-
-    // windowed PMI collocations: pair generation row-local inside
-    // codegen (no positions self-join), totals broadcast
-    "pmi1_cooccurrence" -> ((s, dir) =>
-      Retrieval.pmiPairs(t(s, dir, "documents"), "text",
-        window = 2, minCount = 5)),
-
-    "ta4_unigram_logprob" -> ((s, dir) =>
-      Scoring.unigramLogProb(t(s, dir, "documents"), "doc_id", "text")),
-
-    // Kneser-Ney smoothed bigram scorer (the CCNet/KenLM smoothing):
-    // absolute discount 0.75 + continuation-probability backoff, all
-    // exact count ratios in a fixed double tree
-    "ta9_kn_bigram_logprob" -> ((s, dir) =>
-      Scoring.knBigramLogProb(t(s, dir, "documents"), "doc_id", "text")),
-
-    // CCNet perplexity bands: head/middle/tail at the 0.3/0.7 exact
-    // score quantiles, cutoffs broadcast back as a 1-row frame
-    "qf4_ppl_band" -> ((s, dir) =>
-      Scoring.perplexityBands(t(s, dir, "documents"), "doc_id", "text")),
-
-    "ta5_bigram_logprob" -> ((s, dir) =>
-      Scoring.ngramLogProb(t(s, dir, "documents"), "doc_id", "text", n = 2)),
-
-    "pack1_shards" -> ((s, dir) =>
-      Packing.assignShards(t(s, dir, "documents"), "doc_id", "text",
-          budget = 2000, buckets = 32)
-        .select("doc_id", "n_tokens", "cum", "shard")),
-
-    // packed-file index map: where each doc lands (char offsets)
-    // inside its shard's concatenated training file
-    "pack4_concat_offsets" -> ((s, dir) =>
-      Packing.concatOffsets(
-        Packing.assignShards(t(s, dir, "documents"), "doc_id", "text",
-          budget = 2000, buckets = 32),
-        "doc_id", "text")),
-
-    // the packed shard files themselves: docs joined in id order,
-    // one budget-bounded row per shard
-    "pack5_packed_shards" -> ((s, dir) =>
-      Packing.packShards(
-        Packing.assignShards(t(s, dir, "documents"), "doc_id", "text",
-          budget = 2000, buckets = 32),
-        "doc_id", "text")),
-
-    // tokenizer-aware packing: same distributed prefix sum, budget
-    // denominated in BPE-ish subword units instead of whitespace words
-    "pack2_bpeish_shards" -> ((s, dir) =>
-      Packing.assignShards(t(s, dir, "documents"), "doc_id", "text",
-          budget = 4000, buckets = 32,
-          tokenCounter = TextAnalysis.bpeishTokenCount)
-        .select("doc_id", "n_tokens", "cum", "shard")),
-
-    // context-window chunking: 32-token windows, 8-token overlap —
-    // the row-local splitting stage between curation and packing
-    "ch1_chunk_documents" -> ((s, dir) =>
-      Chunking.chunkDocuments(t(s, dir, "documents"), "doc_id", "text",
-        maxTokens = 32, overlap = 8)),
-
-    // sentence-boundary chunking (RAG granularity): chunks never
-    // split a sentence; first-token rule on a per-doc window
-    "ch3_sentence_chunks" -> ((s, dir) =>
-      Chunking.chunkBySentences(t(s, dir, "documents"), "doc_id", "text",
-        maxTokens = 40)),
-
-    // corpus-trained subword tokenizer: frequency-ranked vocab (all
-    // chars + top substrings), greedy longest-match in codegen; the
-    // oracle re-learns the same vocab in SQL and replays the greedy
-    // match per distinct word with a recursive CTE
-    "tok1_subword_tokens" -> ((s, dir) => {
-      val vocab = trainedVocab(s, dir)
-      t(s, dir, "documents").select(col("doc_id"),
-        Tokenizer.subwordCount(vocab)(col("text")).cast("long")
-          .as("n_tokens"))
-    }),
-
-    // vocabulary coverage on a DRIFTED corpus: ' zq9x7 kafka'
-    // appended to every doc — z/9/x/7 are outside the training
-    // alphabet (OOV single-codepoint fallbacks), while the unseen
-    // word 'kafka' is fully covered by in-vocab pieces; the oracle
-    // re-learns the vocab and replays the greedy walk with an OOV
-    // counter in the recursion
-    "tok12_oov_rate" -> ((s, dir) => {
-      val vocab = trainedVocab(s, dir)
-      val drifted = t(s, dir, "documents").select(col("doc_id"),
-        concat(col("text"), lit(" zq9x7 kafka")).as("text"))
-      Tokenizer.oovStats(drifted, "doc_id", "text", vocab.toIndexedSeq)
-    }),
-
-    // the tokenizer-drift monitor at INGESTION: tok12's row-local
-    // coverage projection runs unchanged on a real two-micro-batch
-    // stream (the per-doc OOV rates a production monitor aggregates
-    // into its retrain flag) — stream == batch, tok12's oracle
-    "st22_stream_oov_gate" -> ((s, dir) => {
-      val vocab = trainedVocab(s, dir)
-      val drifted = t(s, dir, "documents").select(col("doc_id"),
-        concat(col("text"), lit(" zq9x7 kafka")).as("text"))
-      val base = tmpDir("graft_st22")
-      val in = s"$base/in"
-      drifted.filter(col("doc_id") % 2 === 0)
-        .coalesce(1).write.mode("append").parquet(in)
-      drifted.filter(col("doc_id") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(in)
-      val schema = s.read.parquet(in).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-      val gated = Tokenizer.oovStats(stream, "doc_id", "text",
-        vocab.toIndexedSeq)
-      val q = graft.streaming.EventStream.writeFileStream(
-        gated, s"$base/out", s"$base/ckpt")
-      try q.processAllAvailable() finally q.stop()
-      s.read.parquet(s"$base/out")
-    }),
-
-    // the TRAINING step itself as a table: the learned vocabulary in
-    // rank order (alphabet first, then substrings by corpus score) —
-    // MATCHing the SQL re-learned vocab pins trainVocab end-to-end,
-    // not just the counts it produces
-    "tok2_vocab_table" -> ((s, dir) => {
-      import s.implicits._
-      trainedVocab(s, dir).zipWithIndex
-        .map { case (tk, i) => (tk, (i + 1).toLong) }.toSeq
-        .toDF("token", "rank")
-    }),
-
-    // shard packing budgeted in MERGE-FAITHFUL BPE units — the form a
-    // production pipeline sizes shards in (pack1 words / pack2
-    // regex-heuristic / pack3 BPE; re-based from greedy subwords in
-    // r6 — counts changed because the unit changed, the trajectory
-    // itself is pinned by tok3/tok4)
-    "pack3_subword_shards" -> ((s, dir) => {
-      val merges = trainedBpe(s, dir).toSeq
-      Packing.assignShards(t(s, dir, "documents"), "doc_id", "text",
-          budget = 2000, buckets = 32,
-          tokenCounter = Tokenizer.bpeCount(merges))
-        .select("doc_id", "n_tokens", "cum", "shard")
-    }),
-
-    // context windows budgeted in merge-faithful BPE units at word
-    // boundaries (ch1's trained-tokenizer sibling; same shuffle-free
-    // plan shape; re-based from greedy subwords in r6)
-    "ch2_subword_chunks" -> ((s, dir) => {
-      val merges = trainedBpe(s, dir).toSeq
-      Tokenizer.chunkByBpe(t(s, dir, "documents"), "doc_id",
-        "text", merges, maxTokens = 64)
-    }),
-
-    // TRUE BPE training (VERDICT r5 #1): the learned merges table in
-    // merge order — the oracle re-runs the identical pair-merge
-    // trajectory as an unrolled CTE chain (pair counts from wrapped
-    // segmentation strings, argmax with the same count-DESC/pair-ASC
-    // tie-break, non-overlapping delimited replace), so MATCHing this
-    // row pins the TRAINING LOOP itself, iteration by iteration
-    "tok3_bpe_merges" -> ((s, dir) => {
-      import s.implicits._
-      trainedBpe(s, dir).zipWithIndex
-        .map { case ((l, r), i) => ((i + 1).toLong, l, r, l + r) }.toSeq
-        .toDF("rank", "lhs", "rhs", "merged")
-    }),
-
-    // WordPiece trajectory (the BERT trainer): same alphabet and
-    // merge walk as BPE but the pair picked each step maximizes
-    // count(l,r)/(count(l)·count(r)) — the oracle replays the full
-    // 16-step chain with per-step symbol counts joined into the
-    // ranking (see wordpieceCte)
-    "tok13_wordpiece_merges" -> ((s, dir) => {
-      import s.implicits._
-      trainedWordPiece(s, dir).zipWithIndex
-        .map { case ((l, r), i) => ((i + 1).toLong, l, r, l + r) }.toSeq
-        .toDF("rank", "lhs", "rhs", "merged")
-    }),
-
-    // WordPiece application: merge application is score-agnostic, so
-    // the BPE codegen kernel applies the WordPiece merge list
-    // unchanged; the oracle reads the chain's final segmentation
-    // state — training == in-order application, tok4's identity
-    "tok14_wordpiece_token_counts" -> ((s, dir) => {
-      val merges = trainedWordPiece(s, dir).toSeq
-      t(s, dir, "documents").select(col("doc_id"),
-        Tokenizer.bpeCount(merges)(col("text")).cast("long")
-          .as("n_tokens"))
-    }),
-
-    // BPE APPLICATION through the codegen kernel (merges applied in
-    // learned order per word): per-doc token counts in merge-faithful
-    // units; the oracle reads the unrolled chain's FINAL segmentation
-    // state — training is application, so kernel == final state pins
-    // the in-order walk
-    "tok4_bpe_token_counts" -> ((s, dir) => {
-      val merges = trainedBpe(s, dir).toSeq
-      t(s, dir, "documents").select(col("doc_id"),
-        Tokenizer.bpeCount(merges)(col("text")).cast("long")
-          .as("n_tokens"))
-    }),
-
-    // BYTE-level BPE (GPT-2-class fidelity): symbols are UTF-8 bytes
-    // as hex pairs, so budgets are byte-faithful on multibyte text;
-    // the oracle replays the trajectory over hex(encode(w)) pairs
-    "tok7_byte_bpe_merges" -> ((s, dir) => {
-      import s.implicits._
-      trainedByteBpe(s, dir).zipWithIndex
-        .map { case ((l, r), i) => ((i + 1).toLong, l, r, l + r) }.toSeq
-        .toDF("rank", "lhs", "rhs", "merged")
-    }),
-
-    // byte-level application through the codegen kernel: per-doc
-    // token counts in byte-BPE units (== final trajectory state)
-    "tok8_byte_token_counts" -> ((s, dir) => {
-      val merges = trainedByteBpe(s, dir).toSeq
-      t(s, dir, "documents").select(col("doc_id"),
-        Tokenizer.bpeByteCount(merges)(col("text")).cast("long")
-          .as("n_tokens"))
-    }),
-
-    // byte-level id encoding: TOTAL by construction (the 256-byte
-    // alphabet covers every input — byte-level BPE's defining
-    // property, no OOV possible)
-    "tok9_byte_token_ids" -> ((s, dir) => {
-      val merges = trainedByteBpe(s, dir).toSeq
-      val vocab = Tokenizer.bpeByteVocabTable(merges)
-      val ids = Tokenizer.bpeByteIds(col("text"), merges, vocab)
-      t(s, dir, "documents").select(col("doc_id"),
-        size(ids).cast("long").as("n_tokens"),
-        array_join(transform(ids, _.cast("string")), " ").as("ids"))
-    }),
-
-    // r8: unigram-LM (SentencePiece-style) tokenizer — the
-    // probabilistic family beside greedy WordPiece (tok1) and BPE
-    // (tok3+): substring seeding, one hard-EM round, prune. Integer
-    // fixed-point log2 scores make the whole training trajectory and
-    // the Viterbi argmax engine-reproducible; the oracle replays
-    // seeding, E-step (by exhaustive segmentation enumeration —
-    // equal to the DP), M-step, prune, and final scores
-    "tok10_unigram_vocab" -> ((s, dir) => {
-      import s.implicits._
-      trainedUnigram(s, dir).toSeq.toDF("piece", "piece_count", "qscore")
-    }),
-
-    // encode under the trained unigram vocab: Viterbi-best pieces
-    // per distinct corpus word (the row-local codegen expression a
-    // 100 TB encode pass maps over documents)
-    // the tok10 LM closing the loop into quality filtering: per-doc
-    // mean piece log2-prob gate, all-integer (exact) scoring
-    "qf10_unigram_lm_gate" -> ((s, dir) =>
-      QualityFilters.unigramLmGate(t(s, dir, "documents"), "doc_id",
-        "text", trainedUnigram(s, dir).map(v => (v._1, v._3)).toSeq,
-        oovQ = -20000L, meanThresholdQ = -5250L)),
-
-    "tok11_unigram_encode" -> ((s, dir) => {
-      val vocab = trainedUnigram(s, dir).map(v => (v._1, v._3)).toSeq
-      val words = t(s, dir, "documents")
-        .select(explode(split(lower(trim(col("text"))), "\\s+")).as("word"))
-        .filter(col("word") =!= "").distinct()
-      val pieces = Tokenizer.unigramTokens(col("word"), vocab)
-      words.select(col("word"),
-        array_join(pieces, " ").as("pieces"),
-        size(pieces).cast("long").as("n_pieces"))
-    }),
-
-    // the BPE VOCABULARY table (chars sorted, then merged symbols in
-    // learned order; duplicate merged strings keep their first id,
-    // HF-style) — the id space tok5's encoding writes in
-    "tok6_bpe_vocab" -> ((s, dir) => {
-      import s.implicits._
-      trainedBpeVocab(s, dir).toDF("token", "id")
-    }),
-
-    // token-ID encoding, the form a training pipeline actually ships:
-    // per-doc BPE token ids (space-joined for the compare) via one
-    // codegen tokenize pass + a literal-map lookup — no join, no
-    // shuffle; the oracle re-derives ids from the unrolled trajectory's
-    // final segmentations joined to the replayed vocab
-    "tok5_bpe_token_ids" -> ((s, dir) => {
-      val merges = trainedBpe(s, dir).toSeq
-      val vocab = trainedBpeVocab(s, dir)
-      val ids = Tokenizer.bpeIds(col("text"), merges, vocab)
-      t(s, dir, "documents").select(col("doc_id"),
-        size(ids).cast("long").as("n_tokens"),
-        array_join(transform(ids, _.cast("string")), " ").as("ids"))
-    }),
-
-    // r10: the tokenizer as a PERSISTED artifact — the third
-    // production artifact class (IVF-PQ index store, classifier
-    // weights, now merges + vocab): train once, persist with the
-    // generation guard (algo tag + config + corpus fingerprint,
-    // contiguous-rank/distinct-id integrity), and encode with the
-    // LOADED tokenizer — ids must equal tok5's trajectory replay
-    // exactly, because merge ORDER is the model
-    "tok15_tokenizer_store" -> ((s, dir) => {
-      val cfg = s"bpe|merges=$bpeMergeCount|char-alphabet"
-      val dh = qf9DataHash(s, dir)
-      val path = s"${sys.props("java.io.tmpdir")}/graft_bpe_store_" +
-        java.lang.Integer.toHexString(dir.hashCode)
-      ModelStore.saveTokenizer(s, path, trainedBpe(s, dir).toSeq,
-        trainedBpeVocab(s, dir), cfg, dh)
-      val (lm, lv) = ModelStore.loadTokenizer(s, path, cfg, dh)
-      val ids = Tokenizer.bpeIds(col("text"), lm.toSeq, lv.toSeq)
-      t(s, dir, "documents").select(col("doc_id"),
-        size(ids).cast("long").as("n_tokens"),
-        array_join(transform(ids, _.cast("string")), " ").as("ids"))
-    }),
-
-    // the artifact a dataloader memmaps: BPE-budgeted shards with the
-    // concatenated token-ID payload per shard, docs in id order
-    "pack6_token_id_payload" -> ((s, dir) => {
-      val merges = trainedBpe(s, dir).toSeq
-      val vocab = trainedBpeVocab(s, dir)
-      val assigned = Packing.assignShards(t(s, dir, "documents"),
-          "doc_id", "text", budget = 2000, buckets = 32,
-          tokenCounter = Tokenizer.bpeCount(merges))
-        .withColumn("ids", array_join(transform(
-          Tokenizer.bpeIds(col("text"), merges, vocab),
-          _.cast("string")), " "))
-      Packing.packTokenIds(assigned, "doc_id", "ids")
-    }),
-
-    "pf1_corpus_stats" -> ((s, dir) =>
-      Profiling.corpusStats(t(s, dir, "documents"), Seq("lang"), "n_chars")),
-
-    "pf2_token_freq" -> ((s, dir) =>
-      Profiling.tokenFrequencies(t(s, dir, "documents"), Seq("lang"), "text", 5)),
-
-    // KMV bottom-k distinct sketch: the deterministic, engine-
-    // portable sibling of pf5's HLL — bit-reproducible (full hash
-    // MATCH, not rows-only) and intersectable. At 100 TB the
-    // persisted groups×k sketch store answers every rollup/overlap
-    // question without rescanning the corpus
-    "pf10_kmv_vocab" -> ((s, dir) =>
-      Profiling.kmvEstimate(
-        Profiling.kmvSketch(kmvTokens(t(s, dir, "documents")),
-          "lang", col("token"), 128),
-        "lang", 128)),
-
-    // pairwise union / Jaccard / INTERSECTION estimates over the
-    // per-lang sketches — the overlap matrix HLL cannot produce;
-    // runs on sketch rows only (groups²·k), corpus-size-free
-    "pf11_kmv_setops" -> ((s, dir) =>
-      Profiling.kmvSetOps(
-        Profiling.kmvSketch(kmvTokens(t(s, dir, "documents")),
-          "lang", col("token"), 128),
-        "lang", 128)),
-
-    // exact heavy hitters without shuffling the token tail:
-    // Misra-Gries candidates (bounded per-partition maps, merged),
-    // then exact counts for candidate rows only — output == the
-    // HAVING-clause answer the oracle computes the expensive way
-    "hh1_heavy_hitters" -> ((s, dir) => {
-      val toks = t(s, dir, "documents")
-        .select(explode(split(lower(trim(col("text"))), "\\s+")).as("token"))
-        .filter(length(col("token")) > 0)
-      Profiling.exactHeavyHitters(toks, "token", support = 0.02)
-    }),
-
-    // the 100 TB profiling path: HLL distinct + approx percentiles.
-    // r11: the output is the operator's CONTRACT — exact aggregates
-    // (oracle-computable) plus bound-check booleans computed from the
-    // engine's own estimates (HLL within 5% of exact distinct, approx
-    // percentiles within 5% of the exact quantile), so the error
-    // bound itself is hash-verified against DuckDB (which emits the
-    // exact side + literal true) instead of living in a spec note
-    "pf3_approx_stats" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val agg = docs.groupBy(col("lang")).agg(
-        count(lit(1)).as("n_docs"),
-        countDistinct(col("n_chars")).as("n_distinct_len"),
-        min("n_chars").as("min_len"),
-        max("n_chars").as("max_len"),
-        round(avg("n_chars"), 4).as("mean_len"),
-        // rsd 0.01: the 5% contract below is then a 5-sigma bound
-        // (the default rsd 0.05 makes 5% a coin-flip 1-sigma claim)
-        approx_count_distinct(col("n_chars"), 0.01).as("__hll"),
-        expr("approx_percentile(n_chars, 0.5, 10000)").cast("double").as("__amed"),
-        expr("approx_percentile(n_chars, 0.95, 10000)").cast("double").as("__ap95"),
-        expr("percentile(n_chars, 0.5)").as("__emed"),
-        expr("percentile(n_chars, 0.95)").as("__ep95"))
-      // percentile() interpolates; approx_percentile returns an
-      // ELEMENT. The provable contract is: within 5% of the
-      // interpolated exact value OR a bracketing order statistic (no
-      // element lies strictly between the two) — the second arm is
-      // guaranteed whenever the group fits the sketch (rank error
-      // < 1), so tiny/skewed groups can't flip the boolean
-      val between = docs.join(agg.select("lang", "__amed", "__ap95", "__emed", "__ep95"), "lang")
-        .groupBy("lang").agg(
-          count(when(col("n_chars") > least(col("__amed"), col("__emed")) &&
-            col("n_chars") < greatest(col("__amed"), col("__emed")), 1))
-            .as("__med_between"),
-          count(when(col("n_chars") > least(col("__ap95"), col("__ep95")) &&
-            col("n_chars") < greatest(col("__ap95"), col("__ep95")), 1))
-            .as("__p95_between"))
-      agg.join(between, "lang").select(
-        col("lang"), col("n_docs"), col("n_distinct_len"),
-        col("min_len"), col("max_len"), col("mean_len"),
-        (abs(col("__hll") - col("n_distinct_len")) * 20 <= col("n_distinct_len"))
-          .as("hll_within_5pct"),
-        (abs(col("__amed") - col("__emed")) * 20 <= col("__emed") ||
-          col("__med_between") === 0).as("median_bound_ok"),
-        (abs(col("__ap95") - col("__ep95")) * 20 <= col("__ep95") ||
-          col("__p95_between") === 0).as("p95_bound_ok"))
-    }),
-
-    // ---- beyond-parity: multimodal --------------------------------
-    "mm1_media_metadata" -> ((s, dir) =>
-      Multimodal.toMediaTable(t(s, dir, "documents"),
-          "doc_id", "text", "text/plain", "source")
-        .select(col("media_id"), col("meta.format").as("format"),
-          col("meta.n_bytes").as("n_bytes"), col("meta.source").as("source"))),
-
-    // perceptual dHash over the REAL decoder: horizontally-uniform
-    // two-band fixtures pin dhash_h = 0 exactly, and the oracle
-    // replays dhash_v's integer block arithmetic analytically
-    "mm6_image_dhash" -> ((s, dir) => {
-      val d = col("doc_id")
-      def pack(r: Column, g: Column, b: Column): Column =
-        shiftleft(r, 16).bitwiseOR(shiftleft(g, 8)).bitwiseOR(b)
-      val media = Multimodal.synthesizePngTable(
-        t(s, dir, "documents").select("doc_id"), "doc_id",
-        width = d % 40 + 16, height = d % 23 + 16,
-        topRgb = pack(d % 256, (d * 7) % 256, (d * 13) % 256),
-        bottomRgb = pack((d * 3) % 256, (d * 11) % 256, (d * 17) % 256))
-      Multimodal.imageDHash(media)
-    }),
-
-    // image near-dup pairs end-to-end: real decode -> dHash ->
-    // chunk-blocked hamming join (never all-pairs). The fixture's
-    // dhash_v bits repeat per byte row, so differences are
-    // byte-aligned and <= 1 differing byte (hamming 8) leaves 3 of 4
-    // blocking chunks equal — recall is exact, and the oracle can
-    // verify against the analytic all-pairs answer
-    "mm7_image_neardup" -> ((s, dir) => {
-      val d = col("doc_id")
-      def pack(r: Column, g: Column, b: Column): Column =
-        shiftleft(r, 16).bitwiseOR(shiftleft(g, 8)).bitwiseOR(b)
-      val media = Multimodal.synthesizePngTable(
-        t(s, dir, "documents").select("doc_id"), "doc_id",
-        width = d % 40 + 16, height = d % 23 + 16,
-        topRgb = pack(d % 256, (d * 7) % 256, (d * 13) % 256),
-        bottomRgb = pack((d * 3) % 256, (d * 11) % 256, (d * 17) % 256))
-      Dedup.hammingPairs(Multimodal.imageDHash(media),
-        "media_id", "dhash_v", maxHamming = 8)
-    }),
-
-    // explicit block-mean RESIZE of the two-band PNGs to a 4x4 grid:
-    // real decode, exact block sums, one divide per cell — the
-    // oracle computes every cell's mean analytically from the band
-    // geometry (column-uniform colors: the mean depends only on gy,
-    // the pixel count on both axes)
-    "mm9_image_resize" -> ((s, dir) => {
-      val d = col("doc_id")
-      def pack(r: Column, g: Column, b: Column): Column =
-        shiftleft(r, 16).bitwiseOR(shiftleft(g, 8)).bitwiseOR(b)
-      val media = Multimodal.synthesizePngTable(
-        t(s, dir, "documents").select("doc_id"), "doc_id",
-        width = d % 40 + 16, height = d % 23 + 16,
-        topRgb = pack(d % 256, (d * 7) % 256, (d * 13) % 256),
-        bottomRgb = pack((d * 3) % 256, (d * 11) % 256, (d * 17) % 256))
-      Multimodal.resizeLuma(media, gw = 4, gh = 4)
-    }),
-
-    // audio near-dup: groups of 5 docs share (n, halfPeriod) but
-    // differ in amplitude — the gain-invariant window-parity
-    // fingerprint (REAL javax.sound decode on executors) collides
-    // exactly within groups; the oracle computes every fingerprint
-    // analytically from the square-wave parameters
-    "mm8_audio_neardup" -> ((s, dir) => {
-      val media = Multimodal.synthesizeWavTable(
-        t(s, dir, "documents").select("doc_id"), "doc_id",
-        sampleRate = lit(8000),
-        nSamples = expr("(doc_id DIV 5) % 200 + 400"),
-        amp = expr("(doc_id % 5) * 500 + 1000"),
-        halfPeriod = expr("(doc_id DIV 5) % 9 + 1"))
-      Multimodal.audioNearDupPairs(media)
-    }),
-
-    "mm2_media_features" -> ((s, dir) => {
-      // REAL codec round-trip: deterministic two-band PNGs (dims and
-      // colors are arithmetic in doc_id) encoded AND decoded with
-      // javax.imageio on executors; the oracle recomputes the decoded
-      // dimensions and exact channel means analytically
-      val d = col("doc_id")
-      def pack(r: Column, g: Column, b: Column): Column =
-        shiftleft(r, 16).bitwiseOR(shiftleft(g, 8)).bitwiseOR(b)
-      val media = Multimodal.synthesizePngTable(
-        t(s, dir, "documents").select("doc_id"), "doc_id",
-        width = d % 40 + 8, height = d % 23 + 8,
-        topRgb = pack(d % 256, (d * 7) % 256, (d * 13) % 256),
-        bottomRgb = pack((d * 3) % 256, (d * 11) % 256, (d * 17) % 256))
-      Multimodal.extractFeatures(media)
-        .select(col("media_id"), col("width"), col("height"),
-          round(col("features")(0), 4).as("mean_r"),
-          round(col("features")(1), 4).as("mean_g"),
-          round(col("features")(2), 4).as("mean_b"))
-    }),
-
-    // TPC-H Q7 shape (volume shipping): the same nation dim joined
-    // TWICE under different roles (supplier vs customer side), a
-    // symmetric pair filter, and a year-bucketed revenue rollup
-    "q7_volume_shipping" -> ((s, dir) => {
-      val n1 = t(s, dir, "nation")
-        .select(col("n_nationkey").as("s_nk"), col("n_name").as("supp_nation"))
-      val n2 = t(s, dir, "nation")
-        .select(col("n_nationkey").as("c_nk"), col("n_name").as("cust_nation"))
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n1), col("s_nationkey") === col("s_nk"))
-        .join(broadcast(n2), col("c_nationkey") === col("c_nk"))
-        .filter((col("supp_nation") === "NATION_6" && col("cust_nation") === "NATION_7") ||
-          (col("supp_nation") === "NATION_7" && col("cust_nation") === "NATION_6"))
-        .groupBy(col("supp_nation"), col("cust_nation"),
-          year(col("l_shipdate")).cast("long").as("l_year"))
-        .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-          .as("revenue"))
-    }),
-
-    // TPC-H Q10 shape (returned items): quarter-scoped revenue lost
-    // to returns per customer, top 20 — date-range pushdown, a
-    // return-flag filter, and a deterministic rounded-revenue TopK
-    "q10_returned_items" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-        .filter(col("o_orderdate") >= lit("1996-07-01").cast("timestamp_ntz"))
-        .filter(col("o_orderdate") < lit("1996-10-01").cast("timestamp_ntz"))
-      t(s, dir, "lineitem").filter(col("l_returnflag") === "R")
-        .join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, dir, "nation")),
-          col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("c_custkey"), col("c_name"),
-          round(col("c_acctbal"), 2).as("c_acctbal"), col("n_name"))
-        .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-          .as("revenue"))
-        .orderBy(col("revenue").desc, col("c_custkey").asc)
-        .limit(20)
-    }),
-
-    // TPC-H Q18 shape (large orders): IN-subquery over a HAVING
-    // aggregate — orders whose total quantity clears a threshold,
-    // re-joined to customers and re-aggregated
-    "q18_large_orders" -> ((s, dir) => {
-      // fresh scan for the subquery side: reusing the same DataFrame
-      // in both roles trips the ambiguous-self-join check
-      val big = t(s, dir, "lineitem").groupBy("l_orderkey")
-        .agg(round(sum("l_quantity"), 2).as("sum_qty"))
-        .filter(col("sum_qty") > 300)
-        .select(col("l_orderkey").as("big_orderkey"))
-      val li = t(s, dir, "lineitem")
-      t(s, dir, "orders")
-        .join(big, col("o_orderkey") === col("big_orderkey"), "left_semi")
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(li, col("o_orderkey") === li("l_orderkey"))
-        .groupBy(col("c_name"), col("c_custkey"), col("o_orderkey"),
-          col("o_orderdate"), round(col("o_totalprice"), 2).as("o_totalprice"))
-        .agg(round(sum(col("l_quantity")), 2).as("total_qty"))
-    }),
-
-    // TPC-H Q8 shape (market share): one supplier nation's share of
-    // ECONOMY-part revenue sold into ASIA customers, per order year —
-    // a conditional-sum ratio over a six-way join with a semi-join
-    // region filter
-    "q8_market_share" -> ((s, dir) => {
-      val vol = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-      val supNation = t(s, dir, "nation")
-        .select(col("n_nationkey").as("s_nk"), col("n_name").as("supp_nation"))
-      val asiaNations = t(s, dir, "nation")
-        .join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
-        .filter(col("r_name") === "ASIA")
-        .select(col("n_nationkey").as("c_nk"))
-      t(s, dir, "lineitem")
-        .join(broadcast(t(s, dir, "part").filter(col("p_type") === "ECONOMY")
-          .select("p_partkey")), col("l_partkey") === col("p_partkey"))
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(asiaNations), col("c_nationkey") === col("c_nk"), "left_semi")
-        .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(supNation), col("s_nationkey") === col("s_nk"))
-        .groupBy(year(col("o_orderdate")).cast("long").as("o_year"))
-        .agg(round(
-          sum(when(col("supp_nation") === "NATION_6", vol).otherwise(lit(0.0))) /
-            sum(vol), 4).as("mkt_share"))
-    }),
-
-    // TPC-H Q14 shape (promo revenue): conditional-sum percentage of
-    // PROMO-part revenue within one ship month
-    "q14_promo_revenue" -> ((s, dir) => {
-      val vol = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1997-09-01").cast("timestamp_ntz"))
-        .filter(col("l_shipdate") < lit("1997-10-01").cast("timestamp_ntz"))
-        .join(broadcast(t(s, dir, "part")), col("l_partkey") === col("p_partkey"))
-        .agg(round(
-          lit(100.0) * sum(when(col("p_type") === "PROMO", vol).otherwise(lit(0.0))) /
-            sum(vol), 4).as("promo_revenue"))
-    }),
-
-    // TPC-H Q15 shape (top supplier): quarter revenue per supplier,
-    // keep the max — the scalar-subquery-on-an-aggregate pattern, as
-    // a broadcast join against the 1-row max frame
-    "q15_top_supplier" -> ((s, dir) => {
-      val rev = t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp_ntz"))
-        .filter(col("l_shipdate") < lit("1997-04-01").cast("timestamp_ntz"))
-        .groupBy(col("l_suppkey"))
-        .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-          .as("total_revenue"))
-      val maxRev = rev.agg(max(col("total_revenue")).as("max_revenue"))
-      rev.join(broadcast(maxRev), col("total_revenue") === col("max_revenue"))
-        .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .select(col("s_suppkey"), col("s_name"), col("total_revenue"))
-    }),
-
-    // TPC-H Q17 shape (small-quantity revenue): correlated
-    // avg-quantity-per-part subquery as a self-aggregate join; the
-    // threshold is exact because quantities are integral (their sum
-    // is an exact double in any order)
-    "q17_small_quantity" -> ((s, dir) => {
-      val pk = broadcast(t(s, dir, "part")
-        .filter(col("p_brand") === "Brand#12").select("p_partkey"))
-      // fresh scans on each side of the self-aggregate join
-      val avgq = t(s, dir, "lineitem")
-        .join(pk, col("l_partkey") === col("p_partkey"), "left_semi")
-        .groupBy(col("l_partkey").as("agg_partkey"))
-        .agg((avg(col("l_quantity")) * 0.2).as("qty_limit"))
-      t(s, dir, "lineitem")
-        .join(pk, col("l_partkey") === col("p_partkey"), "left_semi")
-        .join(avgq, col("l_partkey") === col("agg_partkey"))
-        .filter(col("l_quantity") < col("qty_limit"))
-        .agg(round(sum(col("l_extendedprice")) / 7.0, 2).as("avg_yearly"))
-    }),
-
-    // TPC-H Q19 shape (disjunctive predicates): three brand/size/
-    // quantity disjuncts over the lineitem-part join — the OR must
-    // not defeat the broadcast or the scan pruning
-    "q19_disjunctive" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .join(broadcast(t(s, dir, "part")), col("l_partkey") === col("p_partkey"))
-        .filter(
-          (col("p_brand") === "Brand#12" && col("p_size").between(1, 5) &&
-            col("l_quantity").between(1, 11)) ||
-          (col("p_brand") === "Brand#23" && col("p_size").between(1, 10) &&
-            col("l_quantity").between(10, 20)) ||
-          (col("p_brand") === "Brand#3" && col("p_size").between(1, 15) &&
-            col("l_quantity").between(20, 30)))
-        .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-          .as("revenue"))
-    }),
-
-    // TPC-H Q21 shape (suppliers who kept orders waiting): EXISTS and
-    // NOT EXISTS correlated on the same fact table with an inequality
-    // rider — a semi join AND an anti join against fresh lineitem
-    // scans, sharing the orderkey equi-key
-    "q21_waiting_supplier" -> ((s, dir) => {
-      val l1 = t(s, dir, "lineitem").filter(col("l_returnflag") === "R")
-      val l2 = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("k2"), col("l_suppkey").as("s2"))
-      val l3 = t(s, dir, "lineitem").filter(col("l_returnflag") === "R")
-        .select(col("l_orderkey").as("k3"), col("l_suppkey").as("s3"))
-      l1.join(t(s, dir, "orders").filter(col("o_orderstatus") === "F"),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(l2, col("l_orderkey") === col("k2") &&
-          col("l_suppkey") =!= col("s2"), "left_semi")
-        .join(l3, col("l_orderkey") === col("k3") &&
-          col("l_suppkey") =!= col("s3"), "left_anti")
-        .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("s_name"))
-        .agg(count(lit(1)).as("numwait"))
-        .orderBy(col("numwait").desc, col("s_name").asc)
-        .limit(20)
-    }),
-
-    // TPC-H Q22 shape (global-balance anti join): customers above the
-    // positive-balance average with no orders, bucketed — a global
-    // scalar aggregate broadcast back plus an anti join
-    "q22_global_balance" -> ((s, dir) => {
-      val avgBal = t(s, dir, "customer")
-        .filter(col("c_acctbal") > 0.0)
-        .agg(round(avg(col("c_acctbal")), 2).as("avg_bal"))
-      t(s, dir, "customer")
-        .join(broadcast(avgBal))
-        .filter(col("c_acctbal") > col("avg_bal"))
-        .join(t(s, dir, "orders").select("o_custkey"),
-          col("c_custkey") === col("o_custkey"), "left_anti")
-        .groupBy((col("c_nationkey") % 5).cast("int").as("cntry_bucket"))
-        .agg(count(lit(1)).as("numcust"),
-          round(sum(col("c_acctbal")), 2).as("totacctbal"))
-    }),
-
-    // TPC-H Q2 shape (minimum-cost supplier): the correlated
-    // min-supplycost-per-part subquery as a self-aggregate join;
-    // exact equality works because supplycost is 2-decimal by
-    // construction. partsupp is the deterministic fixture.
-    "q2_min_cost_supplier" -> ((s, dir) => {
-      val euro = t(s, dir, "nation")
-        .join(broadcast(t(s, dir, "region")),
-          col("n_regionkey") === col("r_regionkey"))
-        .filter(col("r_name") === "EUROPE")
-        .select(col("n_nationkey"), col("n_name"))
-      val euroSupp = t(s, dir, "supplier")
-        .join(broadcast(euro), col("s_nationkey") === col("n_nationkey"))
-      val ps = partsuppFixture(s, dir)
-        .join(euroSupp.select("s_suppkey"),
-          col("ps_suppkey") === col("s_suppkey"), "left_semi")
-      val minCost = ps.groupBy(col("ps_partkey").as("mc_partkey"))
-        .agg(min(col("ps_supplycost")).as("min_cost"))
-      partsuppFixture(s, dir)
-        .join(broadcast(t(s, dir, "part").filter(col("p_size") === 15)
-          .select("p_partkey", "p_name")),
-          col("ps_partkey") === col("p_partkey"))
-        .join(minCost, col("ps_partkey") === col("mc_partkey") &&
-          col("ps_supplycost") === col("min_cost"))
-        .join(euroSupp, col("ps_suppkey") === col("s_suppkey"))
-        .select(round(col("s_acctbal"), 2).as("s_acctbal"), col("s_name"),
-          col("n_name"), col("p_partkey"), col("p_name"),
-          col("ps_supplycost"))
-        .orderBy(col("s_acctbal").desc, col("n_name").asc,
-          col("s_name").asc, col("p_partkey").asc)
-        .limit(100)
-    }),
-
-    // TPC-H Q9 shape (product-type profit): revenue minus supply cost
-    // over a five-way join, grouped by supplier nation and year
-    "q9_product_profit" -> ((s, dir) => {
-      val ps = partsuppFixture(s, dir)
-      t(s, dir, "lineitem")
-        .join(broadcast(t(s, dir, "part")
-          .filter(col("p_name").like("%red%")).select("p_partkey")),
-          col("l_partkey") === col("p_partkey"))
-        .join(ps, col("l_partkey") === col("ps_partkey") &&
-          col("l_suppkey") === col("ps_suppkey"))
-        .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(t(s, dir, "nation")),
-          col("s_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name").as("nation"),
-          year(col("o_orderdate")).cast("long").as("o_year"))
-        .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-          - col("ps_supplycost") * col("l_quantity")), 2).as("profit"))
-    }),
-
-    // TPC-H Q11 shape (important stock): one nation's inventory value
-    // per part, kept above a fraction of the total — the total rides
-    // back in as a broadcast 1-row frame, never a driver action
-    "q11_important_stock" -> ((s, dir) => {
-      val natSupp = t(s, dir, "supplier")
-        .join(broadcast(t(s, dir, "nation").filter(col("n_name") === "NATION_3")),
-          col("s_nationkey") === col("n_nationkey"))
-        .select("s_suppkey")
-      val v = partsuppFixture(s, dir)
-        .join(natSupp, col("ps_suppkey") === col("s_suppkey"), "left_semi")
-        .groupBy(col("ps_partkey"))
-        .agg(sum(col("ps_supplycost") * col("ps_availqty")).as("value"))
-      val tot = v.agg((sum(col("value")) * 0.002).as("threshold"))
-      v.join(broadcast(tot))
-        .filter(round(col("value"), 2) > round(col("threshold"), 2))
-        .select(col("ps_partkey"), round(col("value"), 2).as("value"))
-        .orderBy(col("value").desc, col("ps_partkey").asc)
-    }),
-
-    // TPC-H Q16 shape (supplier relationship): distinct-supplier
-    // counts per part shape, excluding flagged suppliers via NOT IN
-    // (planned as a broadcast anti join)
-    "q16_supplier_relationship" -> ((s, dir) => {
-      val flagged = t(s, dir, "supplier")
-        .filter(col("s_acctbal") < 0).select("s_suppkey")
-      partsuppFixture(s, dir)
-        .join(broadcast(flagged),
-          col("ps_suppkey") === col("s_suppkey"), "left_anti")
-        .join(t(s, dir, "part"), col("ps_partkey") === col("p_partkey"))
-        .filter(col("p_brand") =!= "Brand#1" && col("p_type") =!= "PROMO" &&
-          col("p_size").isin(1, 5, 9, 14, 19, 23, 36, 45))
-        .groupBy(col("p_brand"), col("p_type"), col("p_size"))
-        .agg(countDistinct(col("ps_suppkey")).as("supplier_cnt"))
-    }),
-
-    // TPC-H Q20 shape (part promotion): suppliers whose stock exceeds
-    // half a year's shipments of that part — nested IN subqueries as
-    // chained semi joins; the threshold is exact (integral quantities)
-    "q20_part_promotion" -> ((s, dir) => {
-      val sq = t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp_ntz"))
-        .filter(col("l_shipdate") < lit("1998-01-01").cast("timestamp_ntz"))
-        .groupBy(col("l_partkey"), col("l_suppkey"))
-        .agg((sum(col("l_quantity")) * 0.5).as("half_qty"))
-      val redParts = t(s, dir, "part")
-        .filter(col("p_name").like("red%")).select("p_partkey")
-      val qualified = partsuppFixture(s, dir)
-        .join(broadcast(redParts),
-          col("ps_partkey") === col("p_partkey"), "left_semi")
-        .join(sq, col("ps_partkey") === col("l_partkey") &&
-          col("ps_suppkey") === col("l_suppkey"))
-        .filter(col("ps_availqty") > col("half_qty"))
-        .select(col("ps_suppkey"))
-      t(s, dir, "supplier")
-        .join(qualified, col("s_suppkey") === col("ps_suppkey"), "left_semi")
-        .select(col("s_suppkey"), col("s_name"))
-        .orderBy(col("s_suppkey").asc)
-    }),
-
-    "mm3_audio_features" -> ((s, dir) => {
-      // REAL audio codec round-trip: square-wave mono 16-bit PCM
-      // clips (params arithmetic in doc_id) encoded AND decoded with
-      // javax.sound.sampled on executors; every sample is ±amp, so
-      // the decoded peak and RMS equal amp EXACTLY and the sign-flip
-      // count is closed-form — the oracle recomputes all of it
-      val d = col("doc_id")
-      val media = Multimodal.synthesizeWavTable(
-        t(s, dir, "documents").select("doc_id"), "doc_id",
-        sampleRate = (d % 4) * 4000 + 8000,
-        nSamples = (d % 200) + 400,
-        amp = (d % 20) * 500 + 1000,
-        halfPeriod = (d % 9) + 1)
-      Multimodal.extractAudioFeatures(media)
-    }),
-
-    "mm4_video_features" -> ((s, dir) => {
-      // REAL video container round-trip: RIFF/AVI clips of solid
-      // alternating-color DIB frames (params arithmetic in doc_id)
-      // assembled on executors, then demuxed + frame-decoded by
-      // extractVideoFeatures; header fields round-trip exactly and
-      // channel means are the frame-count-weighted color average
-      val d = col("doc_id")
-      val er = (d % 4) * 60 + 10
-      val eg = (d % 8) * 30 + 5
-      val eb = (d % 16) * 15
-      val media = Multimodal.synthesizeAviTable(
-        t(s, dir, "documents").select("doc_id"), "doc_id",
-        width = (d % 3) * 8 + 16,
-        height = (d % 5) * 4 + 8,
-        nFrames = (d % 7) + 2,
-        microsPerFrame = (d % 5) * 1000 + 20000,
-        evenRgb = er * 65536 + eg * 256 + eb,
-        oddRgb = (lit(255) - er) * 65536 + (lit(250) - eg) * 256 + (lit(240) - eb))
-      Multimodal.extractVideoFeatures(media)
-        .select(col("media_id"), col("width"), col("height"),
-          col("micros_per_frame"), col("n_frames"),
-          round(col("mean_r"), 4).as("mean_r"),
-          round(col("mean_g"), 4).as("mean_g"),
-          round(col("mean_b"), 4).as("mean_b"))
-    }),
-
-    "mm5_frame_sample" -> ((s, dir) => {
-      // REAL frame sampling: decode every 2nd frame of the same AVI
-      // fixture; sampled (even) frames are solid evenRgb, so the
-      // per-frame means are the exact color components
-      val d = col("doc_id")
-      val er = (d % 4) * 60 + 10
-      val eg = (d % 8) * 30 + 5
-      val eb = (d % 16) * 15
-      val media = Multimodal.synthesizeAviTable(
-        t(s, dir, "documents").select("doc_id"), "doc_id",
-        width = (d % 3) * 8 + 16,
-        height = (d % 5) * 4 + 8,
-        nFrames = (d % 7) + 2,
-        microsPerFrame = (d % 5) * 1000 + 20000,
-        evenRgb = er * 65536 + eg * 256 + eb,
-        oddRgb = (lit(255) - er) * 65536 + (lit(250) - eg) * 256 + (lit(240) - eb))
-      Multimodal.sampleVideoFrames(media, stride = 2)
-    }),
-
-    "agg3_rollup" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(round(sum("l_quantity"), 2).as("sum_qty"),
-          count(lit(1)).as("n"))),
-
-    "j2_asof_join" -> ((s, dir) => {
-      // as-of enrichment: each event gets the value of the user's
-      // most recent purchase at-or-before its timestamp
-      val ev = events(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .groupBy("user_id", "ts").agg(max("value").as("purchase_value"))
-      AsOfJoin.asofBackward(
-        ev.select("event_id", "user_id", "ts"), purchases,
-        keys = Seq("user_id"), leftTs = "ts", rightTs = "ts",
-        valueCols = Seq("purchase_value"))
-    }),
-
-    // forward as-of: each event gets the user's NEXT purchase at or
-    // after its timestamp
-    "j4_asof_forward" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .groupBy("user_id", "ts").agg(max("value").as("purchase_value"))
-      AsOfJoin.asofForward(
-        ev.select("event_id", "user_id", "ts"), purchases,
-        keys = Seq("user_id"), leftTs = "ts", rightTs = "ts",
-        valueCols = Seq("purchase_value"))
-    }),
-
-    // nearest as-of: whichever purchase is temporally closest, ties
-    // resolved backward
-    // point-in-time join: orders (fact time t = o_orderkey % 4) pick
-    // up the customer-balance VERSION valid at t from the same
-    // CDC-style history scd1 builds; facts before the first version
-    // or inside the gap the seq-2 delete opened stay NULL. The range
-    // predicate never reaches the planner — asofBackward's union +
-    // one-exchange carry plus a row-local expiry check
-    "j6_temporal_join" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val k = col("c_custkey")
-      def v(df: DataFrame, op: String, seq: Long): DataFrame =
-        df.withColumn("op", lit(op)).withColumn("seq", lit(seq))
-      val base = c.select(col("c_custkey"), col("c_acctbal"))
-      val feed =
-        v(base.filter(k % 10 <= 2), "I", 0L)
-          .unionByName(v(base.filter(k % 10 <= 2)
-            .withColumn("c_acctbal", round(col("c_acctbal") + 100, 2)), "U", 1L))
-          .unionByName(v(base.filter(k % 10 === 0), "D", 2L))
-      val hist = Modes.scdHistory(feed, Seq("c_custkey"), "op", "seq")
-        .select("c_custkey", "c_acctbal", "valid_from", "valid_to")
-      val facts = t(s, dir, "orders").select(
-        col("o_orderkey"), col("o_custkey").as("c_custkey"),
-        (col("o_orderkey") % 4).as("t"))
-      AsOfJoin.pointInTime(facts, hist, Seq("c_custkey"), "t",
-        Seq("c_acctbal"))
-    }),
-
-    "j5_asof_nearest" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .groupBy("user_id", "ts").agg(max("value").as("purchase_value"))
-      AsOfJoin.asofNearest(
-        ev.select("event_id", "user_id", "ts"), purchases,
-        keys = Seq("user_id"), leftTs = "ts", rightTs = "ts",
-        valueCols = Seq("purchase_value"))
-    }),
-
-    // keyless interval join: Spark would plan the raw range predicate
-    // as a BroadcastNestedLoopJoin (O(|L|*|R|)); the binned operator
-    // turns it into an equi-join on time bins + exact filter
-    "j3_range_join" -> ((s, dir) => {
-      // filtered sides keep the matched-pair volume demonstrative
-      // rather than quadratic-in-sf (the unfiltered 3-day window is
-      // ~1e8 TRUE pairs at sf0.1 — a property of the query, not the
-      // operator; candidate overhead vs true pairs stays ~2x)
-      val li = t(s, dir, "lineitem").filter(col("l_quantity") >= 45)
-        .select("l_shipdate", "l_quantity")
-      val ord = t(s, dir, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_orderkey"), col("o_orderdate"),
-          (col("o_orderdate") + expr("INTERVAL 3 DAYS")).as("o_end"))
-      AsOfJoin.binnedRangeJoin(li, ord, "l_shipdate", "o_orderdate", "o_end",
-          binWidth = "3 days")
-        .groupBy("o_orderkey")
-        .agg(count(lit(1)).as("n_items"),
-          round(sum("l_quantity"), 2).as("sum_qty"))
-    }),
-
-    // two-sided keyless interval overlap: both sides explode to time
-    // bins, the pair is emitted once from the bin that contains the
-    // overlap's first instant — no nested loop, no dedup pass
-    "j7_interval_overlap" -> ((s, dir) => {
-      // shipping window per item: [shipdate, shipdate + 1..25 days)
-      // derived from the keys (the testdata has no receiptdate), so
-      // both engines rebuild identical intervals
-      val li = t(s, dir, "lineitem").filter(col("l_quantity") >= 49)
-        .select(col("l_shipdate"), col("l_quantity"),
-          expr("l_shipdate + make_dt_interval(CAST(l_quantity AS INT) % 25 + 1)")
-            .as("l_shipend"))
-      val ord = t(s, dir, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT" &&
-          col("o_totalprice") > 400000)
-        .select(col("o_orderkey"), col("o_orderdate"),
-          (col("o_orderdate") + expr("INTERVAL 5 DAYS")).as("o_end"))
-      Joins.intervalOverlapJoin(li, ord,
-          "l_shipdate", "l_shipend", "o_orderdate", "o_end",
-          binWidth = "25 days")
-        .groupBy("o_orderkey")
-        .agg(count(lit(1)).as("n_overlaps"),
-          round(sum("l_quantity"), 2).as("sum_qty"))
-    }),
-
-    // semi-join reduction: the selective dim's KEY SET rides to the
-    // fact scan as a Bloom filter probed in codegen BEFORE the
-    // shuffle — the exact join then makes the result identical to the
-    // plain join (false positives only ever add candidates)
-    "j8_bloom_join" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .select("l_orderkey", "l_extendedprice", "l_discount")
-      val ord = t(s, dir, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT" &&
-          col("o_totalprice") > 250000)
-        .select("o_orderkey", "o_orderdate")
-      Joins.bloomPrefilteredJoin(li, ord, "l_orderkey", "o_orderkey",
-          expectedDimKeys = 200000)
-        .groupBy("o_orderkey")
-        // revenue summed in exact integer 1/10000ths: the per-row
-        // product is deterministic IEEE, the integer sum is
-        // order-independent — so small per-order groups can't flip a
-        // half-cent boundary between engines
-        .agg(round(sum(round(col("l_extendedprice") * (lit(1) - col("l_discount"))
-              * 10000).cast("long")) / 10000.0, 2).as("revenue"),
-          count(lit(1)).as("n_items"))
-    }),
-
-    "agg4_cube" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .cube("l_returnflag", "l_linestatus")
-        .agg(round(sum("l_extendedprice"), 2).as("sum_price"),
-          count(lit(1)).as("n"))),
-
-    // pivot with EXPLICIT values: never collect-distinct the pivot
-    // column at scale — declare the spine
-    "pv1_pivot" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .groupBy("o_orderpriority")
-        .pivot("o_orderstatus", Seq("F", "O", "P"))
-        .agg(round(sum("o_totalprice"), 2))),
-
-    // exact interpolated percentiles (matches quantile_cont); at
-    // 100 TB swap for approx_percentile and a rows-only gate
-    "pct1_percentiles" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(round(expr("percentile(l_extendedprice, 0.25)"), 4).as("p25"),
-          round(expr("percentile(l_extendedprice, 0.5)"), 4).as("p50"),
-          round(expr("percentile(l_extendedprice, 0.75)"), 4).as("p75"),
-          round(expr("percentile(l_extendedprice, 0.95)"), 4).as("p95"))),
-
-    // time-RANGE window frame: trailing 1-hour sum/count per user —
-    // frames over a numeric order key plan as a single shuffle+sort,
-    // state bounded by the frame
-    "w3_window_range" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy(col("ts_us"))
-        .rangeBetween(-3600000000L, 0L)
-      events(s, dir)
-        .select(col("event_id"), col("user_id"), col("ts"),
-          unix_micros(col("ts").cast("timestamp")).as("ts_us"), col("value"))
-        .withColumn("trail_1h_sum", round(sum("value").over(w), 2))
-        .withColumn("trail_1h_n", count(lit(1)).over(w))
-        .select("event_id", "user_id", "ts", "trail_1h_sum", "trail_1h_n")
-    }),
-
-    // ---- stream-shaped (batch-equivalent of graft.streaming) ------
-    "st1_event_windows" -> ((s, dir) =>
-      events(s, dir)
-        .groupBy(window(col("ts"), "1 hour").getField("start").as("window_start"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(sum("value"), 2).as("sum_value"))),
-
-    // dense hourly resample + forward fill: every hour between first
-    // and last present (gaps carry the last non-empty hour's sum);
-    // the ffill window runs over grid rows, never events
-    "ts1_hourly_resample" -> ((s, dir) =>
-      TimeSeries.resampleHourly(events(s, dir), "ts", "value")),
-
-    // trailing 3-hour moving baseline over the dense grid: gaps stay
-    // in the frame (mov_n counts them out) instead of shrinking it
-    "ts2_rolling_stats" -> ((s, dir) =>
-      TimeSeries.rollingStats(
-        TimeSeries.resampleHourly(events(s, dir), "ts", "value")
-          .drop("sum_value_ffill"),
-        "h", "sum_value", trailing = 3)),
-
-    // rolling-z-score anomalies over the hourly grid: baseline is the
-    // 6 hours strictly BEFORE each row (the tested point never sits
-    // in its own baseline); undefined/zero-std baselines never flag
-    "ts3_anomalies" -> ((s, dir) =>
-      TimeSeries.anomalies(
-        TimeSeries.resampleHourly(events(s, dir), "ts", "value")
-          .drop("sum_value_ffill"),
-        "h", "sum_value", trailing = 6, k = 2.0)),
-
-    // distributed sweep-line: max simultaneously-open intervals per
-    // day (each event opens a deterministic 1..36-hour interval, so
-    // intervals cross day boundaries and the carry-in path is live);
-    // the global running sum decomposes into per-day windows + a
-    // one-row-per-day prefix pass
-    "iv1_concurrency" -> ((s, dir) => {
-      val iv = events(s, dir).select(
-        col("ts").cast("timestamp").as("s"),
-        expr("timestampadd(HOUR, CAST(event_id % 36 + 1 AS INT), CAST(ts AS TIMESTAMP))").as("e"))
-      TimeSeries.maxConcurrencyByDay(iv, "s", "e")
-    }),
-
-    // incremental aggregate maintenance: state built on 2/3 of
-    // lineitem, the remaining third folded in as an arrival batch,
-    // rolled up to returnflag from STATE alone — the oracle
-    // recomputes from scratch, proving merge == recompute
-    "inc1_incremental_state" -> ((s, dir) => {
-      val l = t(s, dir, "lineitem")
-      val existing = IncrementalAgg.state(
-        l.filter(col("l_orderkey") % 3 =!= 0),
-        Seq("l_returnflag", "l_linestatus"), "l_quantity")
-      val arrival = IncrementalAgg.state(
-        l.filter(col("l_orderkey") % 3 === 0),
-        Seq("l_returnflag", "l_linestatus"), "l_quantity")
-      IncrementalAgg.withAvg(
-          IncrementalAgg.rollup(
-            IncrementalAgg.merge(existing, arrival), Seq("l_returnflag")))
-        .select(col("l_returnflag"), col("n"), col("n_v"),
-          round(col("sum_v"), 2).as("sum_v"),
-          col("min_v"), col("max_v"), col("avg_v"))
-    }),
-
-    // incremental JOIN-view maintenance: the maintained view advances
-    // by the delta-join identity dA⋈(B∪dB) ∪ A⋈dB — the bases never
-    // re-join; the oracle recomputes the full join from scratch, so
-    // MATCH proves view ∪ delta == join of the advanced bases
-    "inc2_join_view_delta" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer")
-      val (baseO, dO) = (o.filter(col("o_orderkey") % 10 =!= 0),
-        o.filter(col("o_orderkey") % 10 === 0))
-      val (baseC, dC) = (c.filter(col("c_custkey") % 7 =!= 0),
-        c.filter(col("c_custkey") % 7 === 0))
-      val view0 = baseO.join(baseC, baseO("o_custkey") === baseC("c_custkey"))
-      val maintained = view0.unionByName(IncrementalAgg.joinDelta(
-        baseO, dO, baseC, dC, Seq("o_custkey"), Seq("c_custkey")))
-      maintained.groupBy("c_mktsegment", "o_orderpriority")
-        .agg(count(lit(1)).as("n_orders"),
-          round(sum("o_totalprice"), 2).as("sum_price"))
-    }),
-
-    // SCD2 dimension history: each change opens a version, the next
-    // change (or delete) closes it — half-open [valid_from, valid_to)
-    "scd1_dimension_history" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val k = col("c_custkey")
-      def v(df: DataFrame, op: String, seq: Long): DataFrame =
-        df.withColumn("op", lit(op)).withColumn("seq", lit(seq))
-      val base = c.select(col("c_custkey"), col("c_acctbal"))
-      val feed =
-        v(base.filter(k % 10 <= 2), "I", 0L)
-          .unionByName(v(base.filter(k % 10 <= 2)
-            .withColumn("c_acctbal", round(col("c_acctbal") + 100, 2)), "U", 1L))
-          .unionByName(v(base.filter(k % 10 === 0), "D", 2L))
-      Modes.scdHistory(feed, Seq("c_custkey"), "op", "seq")
-        .select("c_custkey", "c_acctbal", "valid_from", "valid_to", "is_current")
-    }),
-
-    // streaming exact-dedup gate e2e: the event table arrives TWICE
-    // (two identical files, maxFilesPerTrigger=1 forces separate
-    // micro-batches), so every second-batch row is a cross-batch
-    // duplicate that dropDuplicatesWithinWatermark must match against
-    // state and drop; the surviving set is exactly the distinct rows
-    "st8_stream_dedup" -> ((s, dir) => {
-      val ev = events(s, dir)
-        .select("event_id", "user_id", "ts", "event_type", "value")
-      val base = tmpDir("graft_st8")
-      val in = s"$base/in"
-      ev.coalesce(1).write.mode("append").parquet(in)
-      ev.coalesce(1).write.mode("append").parquet(in)
-      val schema = s.read.parquet(in).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-        // watermarks need an instant (TimestampType); UTC session ->
-        // same wall-clock values as the NTZ source
-        .withColumn("ts", col("ts").cast("timestamp"))
-      val deduped = graft.streaming.EventStream.streamingDedup(
-        stream, Seq("event_id"), "ts", "30 days")
-      val q = graft.streaming.EventStream.writeFileStream(
-        deduped, s"$base/out", s"$base/ckpt")
-      try q.processAllAvailable() finally q.stop()
-      s.read.parquet(s"$base/out")
-    }),
-
-    // streaming trending top-k e2e: tumbling-hour counts per event
-    // type in APPEND mode over a real multi-micro-batch run. Append
-    // only emits windows the watermark has passed, so two far-future
-    // sentinel files close every real window at end-of-stream (the
-    // first advances the watermark, the second's batch flushes) —
-    // the sentinel's own window is never finalized and never appears.
-    // Ranking is a batch post-step over the emitted counts; the
-    // oracle replays hour-truncated counts + top-3 from the table.
-    "st11_trending" -> ((s, dir) => {
-      val ev = events(s, dir).select("event_id", "ts", "event_type")
-      val base = tmpDir("graft_st11")
-      val in = s"$base/in"
-      val cut = lit("2024-01-15 00:00:00").cast("timestamp_ntz")
-      ev.filter(col("ts") < cut).coalesce(1).write.mode("append").parquet(in)
-      ev.filter(col("ts") >= cut).coalesce(1).write.mode("append").parquet(in)
-      val sentinel = ev.limit(1).select(lit(-1L).as("event_id"),
-        lit("2030-01-01 00:00:00").cast("timestamp_ntz").as("ts"),
-        lit("zz_sentinel").as("event_type"))
-      sentinel.coalesce(1).write.mode("append").parquet(in)
-      sentinel.coalesce(1).write.mode("append").parquet(in)
-      withShufflePartitions(s, 8) {
-        val schema = s.read.parquet(in).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(in)
-          .withColumn("ts", col("ts").cast("timestamp"))
-        val counts = stream
-          .withWatermark("ts", "1 hour")
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .select(col("window.start").cast("timestamp_ntz").as("window_start"),
-            col("event_type"), col("n"))
-        val q = graft.streaming.EventStream.writeFileStream(
-          counts, s"$base/out", s"$base/ckpt")
-        try q.processAllAvailable() finally q.stop()
-      }
-      val emitted = s.read.parquet(s"$base/out")
-      val w = Window.partitionBy("window_start")
-        .orderBy(col("n").desc, col("event_type").asc)
-      emitted.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .select("window_start", "rank", "event_type", "n")
-    }),
-
-    // streaming incremental replication e2e: a chronological file
-    // stream of events runs through Structured Streaming into a JDBC
-    // sink via foreachBatch (per-batch latest-per-key reduce + staged
-    // merge). Two input files + maxFilesPerTrigger=1 force a real
-    // multi-micro-batch run; the readback is the newest event per user.
-    "st3_stream_upsert" -> ((s, dir) => {
-      val ev = events(s, dir)
-        .select("user_id", "ts", "event_id", "event_type", "value")
-      val base = tmpDir("graft_st3")
-      val in = s"$base/in"
-      val cut = lit("2024-01-15 00:00:00").cast("timestamp_ntz")
-      ev.filter(col("ts") < cut).coalesce(1).write.mode("append").parquet(in)
-      ev.filter(col("ts") >= cut).coalesce(1).write.mode("append").parquet(in)
-      val url = s"jdbc:derby:memory:graftst3${System.nanoTime()};create=true"
-      JdbcConnector.withConnection(url, Map.empty) { c =>
-        val st = c.createStatement()
-        st.execute("CREATE TABLE LATEST (USER_ID BIGINT PRIMARY KEY, " +
-          "TS TIMESTAMP, EVENT_ID BIGINT, EVENT_TYPE VARCHAR(20), VALUE DOUBLE)")
-        st.close()
-      }
-      val schema = s.read.parquet(in).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in)
-        .toDF("USER_ID", "TS", "EVENT_ID", "EVENT_TYPE", "VALUE")
-      val q = graft.streaming.EventStream.writeJdbcUpsert(stream,
-        SinkConf(connect = url, table = Some("LATEST"),
-          mode = ReplicationMode.Incremental),
-        s"$base/chk",
-        b => graft.streaming.EventStream.latestPerKey(
-          b, Seq("USER_ID"), Seq("TS", "EVENT_ID")))
-      try q.processAllAvailable() finally q.stop()
-      val back = JdbcConnector.read(s, SourceConf(connect = url,
-        table = Some("LATEST"), partitions = 1))
-      ntz(back.toDF(back.columns.map(_.toLowerCase).toIndexedSeq: _*))
-    }),
-
-    // per-user ordered event sequence — the trajectory builder
-    // behavioral training examples come from; one partial-agg shuffle,
-    // in-row ordering, capped payload
-    "seq1_user_sequences" -> ((s, dir) =>
-      Sequences.orderedJoined(events(s, dir), Seq("user_id"),
-        Seq("ts", "event_id"), "event_type")),
-
-    // regex over the chronological event-type symbols per user:
-    // "view converting to purchase with no second view between"
-    "seq4_event_pattern" -> ((s, dir) =>
-      Sequences.matchPattern(events(s, dir), Seq("user_id"),
-        Seq("ts", "event_id"), "event_type", "v[^vp]*p")),
-
-    // the TRUNCATING form of seq1: maxLen below the busiest key's
-    // event count, so the pre-aggregation row_number cap (the scale
-    // contract — no agg buffer ever holds more than maxLen elements)
-    // is what produces the output; n_events still reports the true
-    // pre-cap count
-    "seq3_truncated_sequences" -> ((s, dir) =>
-      Sequences.orderedJoined(events(s, dir), Seq("user_id"),
-        Seq("ts", "event_id"), "event_type", maxLen = 5)),
-
-    // stream-stream interval join, batch equivalent: purchases
-    // attributed to the same user's views within the previous hour
-    // (the streaming form with watermark-bounded state is exercised
-    // in StreamingSpec; this is the same mode-agnostic function)
-    "st4_attribution_join" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts").as("view_ts"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("p_ts"), col("value"))
-      graft.streaming.EventStream.intervalJoin(
-          views, purchases, Seq("user_id"), "view_ts", "p_ts", "1 hour")
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_attributed"),
-          round(sum("value"), 2).as("attributed_value"))
-    }),
-
-    // the outer half of attribution: every view kept, matched or not
-    // (right columns null for views that never converted within the
-    // hour); per user, the row count and how many never converted
-    "st5_unattributed_views" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts").as("view_ts"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("p_ts"), col("value"))
-      graft.streaming.EventStream.intervalJoin(
-          views, purchases, Seq("user_id"), "view_ts", "p_ts", "1 hour",
-          joinType = "left_outer")
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_rows"),
-          count(when(col("p_ts").isNull, 1)).as("n_unattributed"))
-    }),
-
-    // session-scoped trajectories: st2's gaps-and-islands session ids
-    // composed with the sequence builder -> one training example per
-    // (user, session)
-    "seq2_session_sequences" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy(col("ts").asc, col("event_id").asc)
-      val flagged = events(s, dir)
-        .withColumn("prev_ts", lag(col("ts"), 1).over(w))
-        .withColumn("new_session",
-          when(col("prev_ts").isNull ||
-            unix_micros(col("ts").cast("timestamp")) -
-              unix_micros(col("prev_ts").cast("timestamp")) > 30L * 60 * 1000000, 1)
-            .otherwise(0))
-        .withColumn("session_id",
-          sum("new_session").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      Sequences.orderedJoined(flagged, Seq("user_id", "session_id"),
-        Seq("ts", "event_id"), "event_type")
-    }),
-
-    // schema-on-read over the semi-structured props column: from_json
-    // with an explicit schema (codegen JacksonParser), then relational
-    // aggregation on the extracted field
-    "et1_json_props" -> ((s, dir) =>
-      events(s, dir)
-        .select(col("event_type"),
-          from_json(col("props"),
-            org.apache.spark.sql.types.StructType.fromDDL("k LONG"))
-            .getField("k").as("k"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum("k").as("sum_k"),
-          min("k").as("min_k"), max("k").as("max_k"))),
-
-    "st2_sessionize" -> ((s, dir) => {
-      // gaps-and-islands sessionization: 30-minute inactivity gap
-      val w = Window.partitionBy("user_id").orderBy(col("ts").asc, col("event_id").asc)
-      events(s, dir)
-        .withColumn("prev_ts", lag(col("ts"), 1).over(w))
-        .withColumn("new_session",
-          when(col("prev_ts").isNull ||
-            unix_micros(col("ts").cast("timestamp")) -
-              unix_micros(col("prev_ts").cast("timestamp")) > 30L * 60 * 1000000, 1)
-            .otherwise(0))
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_events"), sum("new_session").as("n_sessions"))
-    }),
-
-    // closed sessions WITH bounds (the per-session rows st2's per-user
-    // totals roll up from); the streaming event-time-timeout form is
-    // EventStream.closedSessionsStream, spec-covered
-    "st6_session_bounds" -> ((s, dir) =>
-      graft.streaming.EventStream.sessionBounds(
-        events(s, dir).select("user_id", "ts"), gapMinutes = 30)),
-
-    // Spark's BUILT-IN session windows (the same operator works
-    // unchanged on a stream): session_window.end = last event + gap,
-    // which the oracle mirrors as max(ts) + INTERVAL
-    "st7_session_window" -> ((s, dir) =>
-      events(s, dir)
-        .groupBy(col("user_id"),
-          session_window(col("ts"), "30 minutes").as("sw"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("user_id"),
-          col("sw.start").as("session_start"),
-          col("sw.end").as("session_end"),
-          col("n_events"))),
-
-    // REAL multi-micro-batch stream-static TEMPORAL enrichment: each
-    // event joins the dimension VERSION valid at its event time
-    // (SCD-style [from, to) intervals; the static side broadcasts) —
-    // st9 enriches against current state, this against history
-    // stateful streaming banded-LSH near-dup gate e2e (VERDICT r5
-    // #3): a REAL two-micro-batch run (corpus batch then new batch,
-    // dd14's split) through transformWithState on RocksDB — per-band
-    // bucket state, exact in-state Jaccard verify. The oracle is the
-    // planted ground truth: every ordered pair at exact 3-gram
-    // Jaccard >= 0.8 (recall 1 on this fixture, the dd14
-    // adjudication); stream == batch, in-flight
-    "st14_stream_neardup" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"),
-        timestamp_seconds(lit(1704067200L) + col("doc_id")).as("ts"))
-      val base = tmpDir("graft_st14")
-      val in = s"$base/in"
-      docs.filter(col("doc_id") <= 400).coalesce(1)
-        .write.mode("append").parquet(in)
-      val firstSplit = listDataFiles(in).map(_.getName).toSet
-      docs.filter(col("doc_id") > 400).coalesce(1)
-        .write.mode("append").parquet(in)
-      // pin micro-batch order explicitly: FileStreamSource sorts by
-      // millisecond modification time, so an mtime TIE between the
-      // two writes could process the doc_id>400 split first and flip
-      // cross-batch pair direction (r6 advisory) — stamp the splits
-      // 5 s apart
-      val t0 = System.currentTimeMillis() - 60000L
-      listDataFiles(in).foreach(f =>
-        f.setLastModified(if (firstSplit(f.getName)) t0 else t0 + 5000L))
-      val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try withShufflePartitions(s, 8) {
-        val stream = s.readStream.schema(s.read.parquet(in).schema)
-          .option("maxFilesPerTrigger", 1).parquet(in)
-        val hits = graft.streaming.EventStream.streamingLshNearDup(
-          stream, "doc_id", "text", tsCol = "ts", watermark = "30 days",
-          shingleSize = 3, numHashes = 64, numBands = 16, threshold = 0.8)
-        val name = s"st14out${System.nanoTime()}"
-        val q = hits.toDF().writeStream.outputMode("append")
-          .option("checkpointLocation", s"$base/chk")
-          .format("memory").queryName(name).start()
-        try q.processAllAvailable() finally q.stop()
-        // multi-band emissions are identical rows; distinct restores
-        // set semantics (batch post-step, st11-style)
-        s.table(name).distinct()
-      } finally {
-        prev match {
-          case Some(v) =>
-            s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-          case None =>
-            s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-      }
-    }),
-
-    "st13_stream_temporal_enrich" -> ((s, dir) => {
-      val ev = events(s, dir).select("event_id", "user_id", "ts")
-      val cut = lit("2024-01-16").cast("timestamp_ntz")
-      val users = ev.select("user_id").distinct()
-      val dim = users
-        .select(col("user_id"), lit(null).cast("timestamp_ntz").as("valid_from"),
-          cut.as("valid_to"), (col("user_id") * 10).as("segment"))
-        .unionByName(users.select(col("user_id"), cut.as("valid_from"),
-          lit(null).cast("timestamp_ntz").as("valid_to"),
-          (col("user_id") * 10 + 1).as("segment")))
-      val base = tmpDir("graft_st13")
-      val in = s"$base/in"
-      ev.filter(col("event_id") % 2 === 0).coalesce(1)
-        .write.mode("append").parquet(in)
-      ev.filter(col("event_id") % 2 =!= 0).coalesce(1)
-        .write.mode("append").parquet(in)
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-      val joined = stream.join(broadcast(dim),
-        stream("user_id") === dim("user_id") &&
-          (dim("valid_from").isNull || col("ts") >= dim("valid_from")) &&
-          (dim("valid_to").isNull || col("ts") < dim("valid_to")))
-        .select(col("event_id"), stream("user_id"), col("ts"), col("segment"))
-      val name = s"st13out${System.nanoTime()}"
-      val q = joined.writeStream.outputMode("append")
-        .option("checkpointLocation", s"$base/chk")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(name)
-    }),
-
-    // REAL multi-micro-batch count-min: two file batches fold into
-    // the 4x64 counter table through a streaming aggregation; because
-    // increments are associative the drained counters equal the batch
-    // fold, so the STREAMING sketch's estimates oracle-MATCH
-    "st12_stream_countmin" -> ((s, dir) => {
-      val items = events(s, dir).select((col("event_id") % 500).as("it"))
-      val base = tmpDir("graft_st12")
-      val in = s"$base/in"
-      items.filter(col("it") % 2 === 0).coalesce(1)
-        .write.mode("append").parquet(in)
-      items.filter(col("it") % 2 =!= 0).coalesce(1)
-        .write.mode("append").parquet(in)
-      val name = s"st12ctr${System.nanoTime()}"
-      val stream = s.readStream.schema(items.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-      val q = graft.streaming.EventStream.streamingCountMin(
-        stream, col("it"), depth = 4, width = 64, name, s"$base/chk")
-      try q.processAllAvailable() finally q.stop()
-      val exact = items.groupBy(col("it").as("item"))
-        .agg(count(lit(1)).as("n_true"))
-      Profiling.cmsEstimates(exact, s.table(name), depth = 4, width = 64)
-    }),
-
-    // ---- experiment statistics (beyond-parity) --------------------
-    // Welch t-test per metric slice: arms by user-id parity, the
-    // metric scaled to exact cents so both engines aggregate exact
-    // integers and replay identical double algebra (Stats scaladoc)
-    "ab1_welch_ttest" -> ((s, dir) =>
-      Stats.welchTTest(
-        events(s, dir).select(col("event_type"), col("user_id"),
-          round(col("value") * 100).cast("long").as("v_cents")),
-        Seq("event_type"), col("user_id") % 2, col("v_cents"),
-        scale = 100.0)),
-
-    // 2x2 independence: does the arm change the share of HEAVY
-    // purchasers? outcome collapsed per user first (the unit of
-    // randomization; "ever purchased" is degenerate on this data —
-    // every user has), then one counter row per arm x outcome
-    "ab2_conversion_chisq" -> ((s, dir) => {
-      val perUser = events(s, dir)
-        .groupBy("user_id")
-        .agg((sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          >= 14L).cast("int").as("converted"))
-      Stats.chiSquare2x2(perUser, Seq.empty,
-        col("user_id") % 2, col("converted"))
-    }),
-
-    // curriculum training order: 4 length-difficulty bands walked
-    // easiest-first, Knuth-hash shuffled within band, GLOBAL rank via
-    // the bucketed prefix sum (no single-partition window anywhere)
-    "mix4_curriculum" -> ((s, dir) =>
-      Sampling.curriculumOrder(t(s, dir, "documents"),
-        "doc_id", least(expr("n_chars div 150"), lit(3)))),
-
-    // EWMA (alpha = 1/2) over each user's last 16 events: integer
-    // cents + dyadic weights make the running-sum unrolling exact, so
-    // the smoother is hash-MATCHable, not approximately-equal
-    "ts4_ewma" -> ((s, dir) =>
-      TimeSeries.ewmaHalf(
-        events(s, dir).select(col("user_id"), col("event_id"), col("ts"),
-          round(col("value") * 100).cast("long").as("v_cents")),
-        Seq("user_id"), Seq("ts", "event_id"), col("v_cents"),
-        lastN = 16, scale = 100.0)),
-
-    // intra-document repetition hygiene: cut every repeat of a token
-    // after its first occurrence — one O(n) row-local codegen kernel,
-    // no shuffle (the HOF array_position form is O(n²) + fallback)
-    "rep2_intra_doc_dedup" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        TextExpressions.dedup_tokens_in_doc(col("text")).as("d"))
-        .select(col("doc_id"), col("d.clean_text").as("clean_text"),
-          col("d.n_tokens").as("n_tokens"),
-          col("d.n_removed").as("n_removed"))),
-
-    // DPO pair construction: 4 candidate "responses" per prompt
-    // group, reward = vocabulary richness (distinct-word count — an
-    // integer both engines compute identically); strict-margin pairs
-    // only, deterministic tiebreaks
-    "sft2_preference_pairs" -> ((s, dir) =>
-      ChatFormat.preferencePairs(
-        t(s, dir, "documents").select(col("doc_id"),
-          expr("doc_id div 4").as("prompt_id"),
-          size(array_distinct(split(lower(trim(col("text"))), "\\s+")))
-            .cast("long").as("score")),
-        "prompt_id", "doc_id", col("score"))),
-
-    // PCA to 2-D over the embedding corpus: exact integer moment
-    // sums (one treeAggregate into d(d+3)/2+1 counters), driver
-    // eigensolve on the 64x64 covariance, codegen dot projection.
-    // r6: the eigensolve IS SQL-replayable after all (VERDICT r5 #7)
-    // — every driver loop is an ascending sequential fold, so a
-    // recursive CTE carrying (v, deflated m) through the same 200
-    // fixed iterations reproduces the projection BIT-EXACTLY; the
-    // PCA property specs (variance ordering, orthonormality,
-    // invariance) stay as defense in depth
-    "emb2_pca_project" -> ((s, dir) =>
-      Similarity.pcaProject(t(s, dir, "embeddings"), "vec_id",
-        "embedding", k = 2)),
-
-    // Johnson–Lindenstrauss ±1 projection 64 -> 16: md5-seeded
-    // literal sign matrix, quantized exact integer sums, one final
-    // divide — the oracle regenerates the signs and replays the
-    // arithmetic bit-for-bit
-    "emb3_jl_project" -> ((s, dir) =>
-      Similarity.jlProject(t(s, dir, "embeddings"), "vec_id",
-        "embedding", inDim = 64, outDim = 16)),
-
-    // per-dimension z-score standardization: exact quantized moments,
-    // fixed mean/variance tree, NULL for constant dimensions
-    "emb4_standardize" -> ((s, dir) =>
-      Similarity.standardize(t(s, dir, "embeddings"), "vec_id",
-        "embedding")),
-
-    // vocabulary-diversity quality signals: type-token ratio + hapax
-    // fraction per doc, the rep1 aggregation shape
-    "ta10_lexical_richness" -> ((s, dir) =>
-      TextAnalysis.lexicalRichness(t(s, dir, "documents"), "doc_id",
-        "text")),
-
-    // linear gap-fill over a sparse hourly grid (high-value events
-    // only, so real gaps exist): interior nulls interpolate between
-    // nearest non-null hours, edges stay null
-    "ts5_interpolate" -> ((s, dir) =>
-      TimeSeries.interpolateLinear(
-        TimeSeries.resampleHourly(
-          events(s, dir).filter(col("value") >= 300),
-          "ts", "value").drop("sum_value_ffill"),
-        "h", "sum_value")),
-
-    // embargoed temporal split: train < Jan 20, 2-day gap dropped,
-    // test >= Jan 22 — autocorrelation can't leak across the cutoff
-    "sp5_temporal_split" -> ((s, dir) =>
-      Sampling.temporalSplit(
-        events(s, dir).select("event_id", "user_id", "ts"),
-        "ts", lit("2024-01-20").cast("timestamp_ntz"),
-        expr("INTERVAL 2 DAYS"))),
-
-    // leave-last-out: each user's 2 most recent events are the test
-    // set — "predict what this user did NEXT"
-    "sp6_leave_last_out" -> ((s, dir) =>
-      Sampling.leaveLastOut(
-        events(s, dir).select("event_id", "user_id", "ts"),
-        Seq("user_id"), Seq("ts", "event_id"), lastN = 2)),
-
-    // lenient JSONL ingestion: two planted garbage lines quarantine
-    // as (is_corrupt, corrupt_raw) with NULL data columns while every
-    // good line parses — FAILFAST would abort the load, DROPMALFORMED
-    // would lie about volume
-    "c3_corrupt_records" -> ((s, dir) => {
-      val base = tmpDir("graft_c3") + "/in"
-      t(s, dir, "documents")
-        .select(to_json(struct(col("doc_id"), col("lang"), col("n_chars")))
-          .as("value"))
-        .unionByName(s.range(1, 2).select(lit("{\"oops").as("value")))
-        .unionByName(s.range(1, 2).select(lit("not json at all").as("value")))
-        .coalesce(1).write.mode("overwrite").text(base)
-      FileConnector.readJsonAudited(s, base,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("lang",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("n_chars",
-            org.apache.spark.sql.types.LongType))))
-    }),
-
-    // Flesch reading ease from portable proxies (terminal-punct
-    // sentences, vowel-group syllables) — exact counts, one formula
-    "ta8_readability" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        TextAnalysis.readability(col("text")).as("flesch"))),
-
-    // quantity-weighted median price per return flag: half the UNITS
-    // sold sit at or below this price (row median is wrong whenever
-    // weights vary); exact integer cumulative-weight comparison
-    "pct2_weighted_median" -> ((s, dir) =>
-      Stats.weightedMedian(t(s, dir, "lineitem"), Seq("l_returnflag"),
-        "l_extendedprice", round(col("l_quantity")))),
-
-    // cohort LTV: cumulative cents per acquisition week x weeks-since
-    // (the revenue companion to coh1's retention triangle)
-    "coh2_ltv" -> ((s, dir) =>
-      Funnel.ltvCurve(events(s, dir), "user_id", "ts",
-        round(col("value") * 100))),
-
-    // right-to-be-forgotten: purge every 29th user from events; the
-    // query returns the MANIFEST (per-key purge counts incl. the
-    // planted never-present key = 0) — the auditable half; the purged
-    // frame itself is the m1-shape complement
-    "m9_forget" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val forget = ev.select(col("user_id")).distinct()
-        .filter(col("user_id") % 29 === 0)
-        .unionByName(s.range(1, 2) // planted never-present key -> 0
-          .select((col("id") + 900000000L).as("user_id")))
-      val (purged, manifest) = Modes.purgeKeys(ev, "user_id", forget)
-      // audit the erasure: manifest counts + survivor count must tile
-      // the table exactly (n_remaining rides in as a broadcast 1-row)
-      manifest.crossJoin(
-        broadcast(purged.agg(count(lit(1)).as("n_remaining"))))
-    }),
-
-    // ratio-to-report: each priority's revenue share within its order
-    // status — window partitioned by status (never global), exact
-    // cent sums, one division
-    "w6_share_of_total" -> ((s, dir) => {
-      val a = t(s, dir, "orders")
-        .groupBy("o_orderstatus", "o_orderpriority")
-        .agg(sum(round(col("o_totalprice") * 100).cast("long"))
-          .as("revenue_cents"))
-      val w = Window.partitionBy("o_orderstatus")
-      a.withColumn("share",
-        round(col("revenue_cents").cast("double") /
-          sum("revenue_cents").over(w).cast("double"), 6))
-    }),
-
-    // long-form unpivot of the four lineitem measures (the melt every
-    // metric store ingests); values pass through untouched
-    "pv2_unpivot" -> ((s, dir) =>
-      t(s, dir, "lineitem").filter(col("l_orderkey") < 1000)
-        .select("l_orderkey", "l_linenumber", "l_quantity",
-          "l_extendedprice", "l_discount", "l_tax")
-        .unpivot(
-          Array(col("l_orderkey"), col("l_linenumber")),
-          Array(col("l_quantity").as("qty"),
-            col("l_extendedprice").as("price"),
-            col("l_discount").as("disc"), col("l_tax").as("tax")),
-          "measure", "value")),
-
-    // canonical-URL dedup keys: lowercase host, tracking params out,
-    // default port and fragment stripped — the "same page?" identity
-    // raw strings lie about
-    "url2_canonical" -> ((s, dir) => {
-      val docs = urlFixture(t(s, dir, "documents"))
-        .select(col("doc_id"), concat(col("text"),
-          lit(" http://Track-d"), (col("doc_id") % 5).cast("string"),
-          lit(".Example:80/p/"), col("doc_id").cast("string"),
-          lit("?utm_source=feed&q="), col("doc_id").cast("string"),
-          lit("&fbclid=abc#frag")).as("text"))
-      QualityFilters.extractUrls(docs, "doc_id", "text")
-        .withColumn("canonical", QualityFilters.canonicalUrl(col("url")))
-    }),
-
-    // period-over-period: weekly revenue with absolute and relative
-    // deltas vs the PREVIOUS OBSERVED week (lag over the week grid —
-    // bounded by calendar weeks, never by events); exact cent sums,
-    // pct change one division, NULL on the first week
-    "ts6_period_over_period" -> ((s, dir) => {
-      val weekly = events(s, dir)
-        .groupBy(date_trunc("week", col("ts")).as("week"))
-        .agg(sum(round(col("value") * 100).cast("long")).as("rev_cents"))
-      val w = Window.orderBy("week")
-      weekly
-        .withColumn("prev_cents", lag("rev_cents", 1).over(w))
-        .withColumn("delta_cents", col("rev_cents") - col("prev_cents"))
-        .withColumn("pct_change",
-          round(col("delta_cents").cast("double") /
-            col("prev_cents").cast("double"), 6))
-    }),
-
-    // exact largest-remainder allocation: every order's total cents
-    // split across its lines by quantity with zero residue — naive
-    // rounding leaves or mints cents
-    "fin1_allocate" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(col("l_orderkey"),
-        col("l_linenumber"), round(col("l_quantity")).cast("long").as("qty"))
-      val o = t(s, dir, "orders").select(col("o_orderkey").as("l_orderkey"),
-        round(col("o_totalprice") * 100).cast("long").as("total_cents"))
-      Stats.allocateProportional(li.join(o, "l_orderkey"),
-        Seq("l_orderkey"), "l_linenumber", col("qty"), col("total_cents"))
-    }),
-
-    // source-pair vocabulary Jaccard: which sources mirror each
-    // other, answered before document-level dedup pays for it
-    "pf9_source_overlap" -> ((s, dir) =>
-      Profiling.sourceOverlap(t(s, dir, "documents"), "source", "text")),
-
-    // the loop url2 exists for: dedup citations BY canonical URL —
-    // tracking-param and case variants collapse to one page
-    "dd22_url_dedup" -> ((s, dir) => {
-      val docs = urlFixture(t(s, dir, "documents"))
-        .select(col("doc_id"), concat(col("text"),
-          lit(" http://Track-d"), (col("doc_id") % 5).cast("string"),
-          lit(".Example:80/p/"), (col("doc_id") % 25).cast("string"),
-          lit("?utm_source=feed&fbclid=abc")).as("text"))
-      QualityFilters.extractUrls(docs, "doc_id", "text")
-        .withColumn("canonical", QualityFilters.canonicalUrl(col("url")))
-        .groupBy("canonical")
-        .agg(min("doc_id").as("first_doc"),
-          count(lit(1)).as("n_citations"),
-          count_distinct(col("url")).as("n_raw_variants"))
-    }),
-
-    // quantile mapping: every source's length-score distribution
-    // rewritten onto src0's via rank lookup — the full-distribution
-    // harmonization qf7's single threshold is a special case of
-    "qf8_quantile_map" -> ((s, dir) =>
-      QualityFilters.quantileMap(
-        t(s, dir, "documents").select(col("doc_id"), col("source"),
-          col("n_chars")),
-        "doc_id", "source", col("n_chars"), referenceSource = "src0")),
-
-    // cross-source score calibration: per-source empirical-CDF rank
-    // replaces the raw score, so one threshold keeps the best 80% of
-    // EVERY source instead of silently emptying the weak ones
-    "qf7_calibrated_gate" -> ((s, dir) =>
-      QualityFilters.calibratedGate(
-        t(s, dir, "documents").select(col("doc_id"), col("source"),
-          size(array_distinct(split(lower(trim(col("text"))), "\\s+")))
-            .cast("long").as("score")),
-        "doc_id", "source", col("score"), keepFrac = 0.8)),
-
-    // top user journeys: each user's first five event types as a
-    // path string, ranked by frequency (the Sankey feed) — ties
-    // broken by path text so the cut is engine-stable
-    "seq6_top_paths" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val paths = events(s, dir)
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= 5)
-        .groupBy("user_id")
-        .agg(concat_ws(">", array_sort(collect_list(
-          struct(col("__rn"), col("event_type")))).getField("event_type"))
-          .as("path"))
-      paths.groupBy("path").agg(count(lit(1)).as("n_users"))
-        .orderBy(col("n_users").desc, col("path").asc)
-        .limit(20)
-    }),
-
-    // Wilson 95% score interval on per-type heavy-purchaser rates —
-    // the CI an experimentation readout actually ships (normal
-    // approximation misbehaves near 0/1); exact counts, fixed tree
-    "ab4_wilson_interval" -> ((s, dir) => {
-      val perUser = events(s, dir)
-        .groupBy("user_id", "event_type")
-        .agg((count(lit(1)) >= 14L).cast("int").as("hit"))
-      val agg = perUser.groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum("hit").as("k"))
-      val n = col("n").cast("double"); val k = col("k").cast("double")
-      val z = lit(1.96)
-      val p = k / n
-      val denom = lit(1.0) + z * z / n
-      val center = (p + z * z / (lit(2.0) * n)) / denom
-      val half = z * sqrt(p * (lit(1.0) - p) / n
-        + z * z / (lit(4.0) * n * n)) / denom
-      agg.select(col("event_type"), col("n"), col("k"),
-        round(p, 6).as("rate"),
-        round(center - half, 6).as("ci_lo"),
-        round(center + half, 6).as("ci_hi"))
-    }),
-
-    // first-order Markov transitions between event types per user —
-    // the journey matrix; counts exact, P(to|from) one division
-    "seq5_transitions" -> ((s, dir) =>
-      Sequences.transitions(events(s, dir), "user_id",
-        Seq("ts", "event_id"), "event_type")),
-
-    // Gopher line-level repetition: 4-line fixture with the third
-    // line duplicating the first on every doc_id % 3 == 0 — both the
-    // line fraction and the char-weighted fraction are row-local
-    // array algebra, no explode
-    "rep3_line_repetition" -> ((s, dir) =>
-      QualityFilters.gopherRepetition(
-        linedFixture(t(s, dir, "documents")), "doc_id", "text")),
-
-    // the same gate at INGESTION: rep3's row-local projection runs
-    // unchanged on a real two-micro-batch file stream (stateless, no
-    // watermark) — stream == batch, so it shares rep3's oracle
-    "st21_stream_line_repetition" -> ((s, dir) => {
-      val fixture = linedFixture(t(s, dir, "documents"))
-      val base = tmpDir("graft_st21")
-      val in = s"$base/in"
-      fixture.filter(col("doc_id") % 2 === 0)
-        .coalesce(1).write.mode("append").parquet(in)
-      fixture.filter(col("doc_id") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(in)
-      val schema = s.read.parquet(in).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-      val gated = QualityFilters.gopherRepetition(stream, "doc_id", "text")
-      val q = graft.streaming.EventStream.writeFileStream(
-        gated, s"$base/out", s"$base/ckpt")
-      try q.processAllAvailable() finally q.stop()
-      s.read.parquet(s"$base/out")
-    }),
-
-    // growth curve: first-seen day per user (one min aggregate),
-    // new-per-day counts, cumulative uniques via the range-bucketed
-    // prefix sum — never a per-day DISTINCT rescan
-    "growth1_cumulative_uniques" -> ((s, dir) =>
-      TimeSeries.cumulativeUniques(events(s, dir), "user_id", "ts")
-        .select(col("d").cast("timestamp_ntz").as("d"),
-          col("new_entities"), col("cum_entities"))),
-
-    // day-of-week seasonal index on cents-scaled event values: 7
-    // exact counter rows + a broadcast grand total; the weekday is
-    // epoch-day arithmetic, no locale-dependent weekday function
-    "ts7_seasonal_index" -> ((s, dir) =>
-      TimeSeries.seasonalIndex(events(s, dir), "ts",
-        round(col("value") * 100), scale = 100.0)),
-
-    // Benford first-digit screen on order totals: observed vs
-    // log10(1+1/d) with per-digit chi-square terms
-    "dq9_benford" -> ((s, dir) =>
-      DataQuality.benford(t(s, dir, "orders"), "o_totalprice")),
-
-    // approximate-FD profiling (g3 measure): a unique key that holds,
-    // two real-world soft dependencies that don't — counts are exact
-    // integer sums, the rate is one final divide
-    "dq10_fd_profile" -> ((s, dir) =>
-      DataQuality.fdProfile(t(s, dir, "orders"),
-        Seq(("o_orderkey", "o_orderstatus"),
-          ("o_custkey", "o_orderpriority"),
-          ("o_orderpriority", "o_orderstatus")))),
-
-    // per-source token entropy (nats) via the one-pass identity
-    // H = ln T - (sum n ln n)/T — the id-vs-category profiling signal
-    "pf8_entropy" -> ((s, dir) =>
-      Profiling.entropy(
-        t(s, dir, "documents").select(col("source"),
-          explode(split(lower(trim(col("text"))), "\\s+")).as("w"))
-          .filter(length(col("w")) > 0),
-        Seq("source"), "w")),
-
-    // CUPED: per-user pre-period spend (first half of January) as the
-    // covariate for post-period spend — the variance-reduced A/B
-    // readout, exact to the bit via integer-cent sums
-    "ab3_cuped" -> ((s, dir) => {
-      val perUser = events(s, dir)
-        .groupBy("user_id")
-        .agg(
-          sum(when(col("ts") < lit("2024-01-16").cast("timestamp_ntz"),
-            round(col("value") * 100).cast("long")).otherwise(0L)).as("x"),
-          sum(when(col("ts") >= lit("2024-01-16").cast("timestamp_ntz"),
-            round(col("value") * 100).cast("long")).otherwise(0L)).as("y"))
-      Stats.cuped(perUser, col("user_id") % 2, col("x"), col("y"),
-        scale = 100.0)
-    }),
-
-    // U-shaped multi-touch attribution: views/clicks credit the next
-    // purchase 40/20/40 in exact basis points (largest-remainder
-    // middles) — credits per conversion sum to exactly 10000
-    "att1_position_credit" -> ((s, dir) =>
-      Funnel.positionCredit(
-        events(s, dir).filter(
-          col("event_type").isin("view", "click", "purchase")),
-        "user_id", "ts", "event_id",
-        isTouch = col("event_type").isin("view", "click"),
-        isConv = col("event_type") === "purchase")),
-
-    // count-min sketch priced against truth: 2000 part buckets into a
-    // 4x256 counter array — collisions overestimate, and because the
-    // salted Knuth hash replays in SQL, the ESTIMATES are oracle-
-    // verifiable, not merely error-bounded
-    "hh2_countmin" -> ((s, dir) =>
-      Profiling.countMinEstimates(
-        t(s, dir, "lineitem").select((col("l_partkey") % 2000).as("it")),
-        col("it"), depth = 4, width = 256)),
-
-    // k-anonymity release gate on customers: quasi-identifiers
-    // (nation, segment, balance band) NULLed wherever the exact
-    // combination isolates fewer than 3 customers
-    "pii3_k_anonymity" -> ((s, dir) =>
-      Privacy.kAnonymize(
-        t(s, dir, "customer").select(col("c_custkey"),
-          col("c_nationkey"), col("c_mktsegment"),
-          floor(col("c_acctbal") / 2000).cast("long").as("bal_band")),
-        Seq("c_nationkey", "c_mktsegment", "bal_band"), k = 3)),
-
-    // l-diversity release gate on customers: a (nation, segment)
-    // class whose members all sit in fewer than 3 distinct balance
-    // bands gets the quasi pair NULLed — the homogeneity attack the
-    // pii3 k-size gate misses
-    "priv4_l_diversity" -> ((s, dir) =>
-      Privacy.lDiversify(
-        t(s, dir, "customer").select(col("c_custkey"),
-          col("c_nationkey"), col("c_mktsegment"),
-          floor(col("c_acctbal") / 2000).cast("long").as("bal_band")),
-        Seq("c_nationkey", "c_mktsegment"), "bal_band", l = 3)),
-
-    // one-pass correlation matrix over four lineitem measures (all
-    // fixed-point-exact): k(k+3)/2 counters in a single aggregate
-    // row, 6 pair correlations derived from the scalars
-    "reg2_corr_matrix" -> ((s, dir) =>
-      Stats.corrMatrix(t(s, dir, "lineitem"), Seq(
-        "qty" -> round(col("l_quantity")),
-        "price" -> round(col("l_extendedprice")),
-        "disc" -> round(col("l_discount") * 100),
-        "tax" -> round(col("l_tax") * 100)))),
-
-    // market-basket rules over orders: items = part-key buckets, all
-    // counts exact integers, margins/total broadcast — the ratios
-    // replay exactly in any engine
-    "mb1_association_rules" -> ((s, dir) =>
-      Basket.associationRules(
-        t(s, dir, "lineitem").select(col("l_orderkey").as("basket"),
-          (col("l_partkey") % 50).as("item")),
-        "basket", "item", minSupport = 30L)),
-
-    // closed-form OLS of price on quantity per return flag; quantity
-    // is integral and price rounds to whole units, so every sum is an
-    // exact integer (Σy² ~ 2e15 « 2^63) -> engine-reproducible
-    // slope/intercept/r2
-    "reg1_ols" -> ((s, dir) =>
-      Stats.olsFit(
-        t(s, dir, "lineitem").select(col("l_returnflag"),
-          round(col("l_quantity")).cast("long").as("qty"),
-          round(col("l_extendedprice")).cast("long").as("price_units")),
-        Seq("l_returnflag"), col("qty"), col("price_units"))),
-
-    // 2-D Pareto frontier of parts: maximize size, MINIMIZE price
-    // (negated into the maximize-both operator) — the
-    // efficient-frontier shape without a global sort; the oracle is
-    // the quadratic NOT EXISTS dominance definition
-    "sky1_pareto_front" -> ((s, dir) =>
-      Stats.paretoFront(
-        t(s, dir, "part").withColumn("__negprice", -col("p_retailprice")),
-        "p_size", "__negprice")
-        .select(col("p_partkey"), col("p_size"), col("p_retailprice"))))
-
-  /** DuckDB-runnable oracles. Omitted keys (LSH/simhash candidate
-    * generation, engine-specific JSON/fingerprint/decode-stub) get the
-    * driver's weaker rows-only check by design. */
-  /** Shared CTE prefix for the subword-tokenizer oracles (tok1, pack3,
-    * ch2): re-learns Tokenizer.trainVocab's vocabulary in SQL
-    * (vocabSize 64, maxTokenLen 8 — the query parameters) and replays
-    * the greedy longest-match per distinct word with a recursive CTE,
-    * ending in `doctok(doc_id, n_tokens)`. Deliberately NOT closed —
-    * each oracle appends its own final select (and further CTEs). */
-  /** Planted boilerplate for dd23: long enough (19 words, ~120
-    * normalized chars) that its interior 8-gram anchors chain into
-    * one span comfortably past the 60-char excision floor. */
-  private val bpBoiler: String =
-    "this dataset is distributed under the standard open license " +
-      "terms and conditions described in the accompanying corpus " +
-      "governance file"
-
-  /** Unrolled-CTE replay of the BPE training trajectory (the kmeans1
-    * pattern): each word's segmentation is a wrapped string — every
-    * symbol delimited by chr(30) on BOTH sides, so two RS chars sit
-    * between adjacent symbols — and one merge iteration is (a) pair
-    * counts from the split symbols, (b) the argmax pair with the
-    * count-DESC/(l,r)-ASC tie-break, requiring count >= 2, (c) a
-    * plain `replace` of the delimited pair with the delimited merged
-    * symbol. Non-overlapping left-to-right `replace` on the wrapped
-    * form is exactly the BPE scan-and-skip walk (a match can only
-    * align at a symbol start: a symbol never contains chr(30)), which
-    * is exactly the Spark fold in `Tokenizer.applyMerge`. After the
-    * last iteration the final segmentations ARE the trained
-    * tokenizer's output per distinct word — application falls out of
-    * training. Exposes: `mg(rank, l, r)` the merges table, `sN` the
-    * final state, `wtok(w, n)` per-word token counts, `doctok` per-doc
-    * counts. */
-  private def bpeCte(numMerges: Int, byteLevel: Boolean = false): String = {
-    val rs = "chr(30)"
-    val sep2 = s"$rs || $rs"
-    // char mode: one symbol per code point; byte mode: one two-hex
-    // symbol per UTF-8 byte (hex(encode(w)) sliced in pairs) — the
-    // same representation the Spark trainer and kernel use
-    val initSyms =
-      if (byteLevel)
-        "[hex(encode(w))[2*i-1:2*i] for i in range(1, octet_length(encode(w))+1)]"
-      else
-        "[w[i:i] for i in range(1, len(w)+1)]"
-    val sb = new StringBuilder
-    // the chr(30) wrapping is only unambiguous while no WORD contains
-    // U+001E (\s+ does not split on it, so it would survive into a
-    // symbol); fail LOUDLY instead of silently diverging from the
-    // Spark kernel if the fixture ever grows such a word (r6 advisory)
-    sb ++= s"""WITH wcnt AS (
-      |  SELECT w, count(*) AS f FROM (
-      |    SELECT unnest(string_split_regex(lower(trim(text)), '\\s+')) AS w
-      |    FROM documents) WHERE w <> '' GROUP BY w),
-      |rsguard AS (SELECT CASE WHEN count(*) > 0
-      |         THEN error('corpus word contains U+001E: bpeCte delimiting invalid')
-      |         ELSE 0 END AS ok
-      |       FROM wcnt WHERE contains(w, $rs)),
-      |s0 AS MATERIALIZED (SELECT w, f,
-      |         $rs || array_to_string($initSyms,
-      |                                $sep2) || $rs AS seg
-      |       FROM wcnt CROSS JOIN rsguard
-      |       WHERE rsguard.ok = 0)""".stripMargin
-    for (k <- 1 to numMerges) {
-      val p = k - 1
-      sb ++= s""",
-        |p$k AS MATERIALIZED (SELECT sy[i] AS l, sy[i+1] AS r, sum(f) AS c
-        |       FROM (SELECT f, string_split(seg[2:len(seg)-1], $sep2) AS sy
-        |             FROM s$p),
-        |            unnest(generate_series(1, len(sy) - 1)) AS ix(i)
-        |       GROUP BY 1, 2),
-        |b$k AS MATERIALIZED (SELECT l, r FROM p$k WHERE c >= 2
-        |       ORDER BY c DESC, l ASC, r ASC LIMIT 1),
-        |s$k AS MATERIALIZED (SELECT w, f, CASE WHEN b.l IS NULL THEN s.seg
-        |         ELSE replace(s.seg, $rs || b.l || $sep2 || b.r || $rs,
-        |                      $rs || b.l || b.r || $rs) END AS seg
-        |       FROM s$p s LEFT JOIN b$k b ON TRUE)""".stripMargin
-    }
-    val ranks = (1 to numMerges)
-      .map(k => s"SELECT CAST($k AS BIGINT) AS rank, l, r FROM b$k")
-      .mkString("\n        UNION ALL ")
-    sb ++= s""",
-      |mg AS ($ranks),
-      |wtok AS (SELECT w,
-      |           len(string_split(seg[2:len(seg)-1], $sep2)) AS n
-      |         FROM s$numMerges),
-      |dw AS (SELECT doc_id,
-      |         unnest(string_split_regex(lower(trim(text)), '\\s+')) AS w
-      |       FROM documents),
-      |cnt AS (SELECT doc_id, sum(n) AS n FROM dw JOIN wtok USING (w)
-      |        WHERE w <> '' GROUP BY doc_id),
-      |doctok AS (SELECT d.doc_id, CAST(coalesce(c.n, 0) AS BIGINT) AS n_tokens
-      |           FROM documents d LEFT JOIN cnt c USING (doc_id))""".stripMargin
-    sb.toString
-  }
-
-  /** WordPiece trajectory replay — [[bpeCte]] with the ranking key
-    * swapped: each step joins the pair counts against per-step SYMBOL
-    * counts (u$k) and picks max count(l,r)/(count(l)·count(r)), score
-    * computed as one exact-integer product cast to double and one
-    * IEEE division on both engines, ties l ASC then r ASC. Same
-    * chr(30)-delimited segmentation state, same replace-based merge
-    * application, same c >= 2 floor. */
-  private def wordpieceCte(numMerges: Int): String = {
-    val rs = "chr(30)"
-    val sep2 = s"$rs || $rs"
-    val sb = new StringBuilder
-    sb ++= s"""WITH wcnt AS (
-      |  SELECT w, count(*) AS f FROM (
-      |    SELECT unnest(string_split_regex(lower(trim(text)), '\\s+')) AS w
-      |    FROM documents) WHERE w <> '' GROUP BY w),
-      |rsguard AS (SELECT CASE WHEN count(*) > 0
-      |         THEN error('corpus word contains U+001E: wordpieceCte delimiting invalid')
-      |         ELSE 0 END AS ok
-      |       FROM wcnt WHERE contains(w, $rs)),
-      |s0 AS MATERIALIZED (SELECT w, f,
-      |         $rs || array_to_string([w[i:i] for i in range(1, len(w)+1)],
-      |                                $sep2) || $rs AS seg
-      |       FROM wcnt CROSS JOIN rsguard
-      |       WHERE rsguard.ok = 0)""".stripMargin
-    for (k <- 1 to numMerges) {
-      val p = k - 1
-      sb ++= s""",
-        |x$k AS MATERIALIZED (SELECT f, string_split(seg[2:len(seg)-1], $sep2) AS sy
-        |       FROM s$p),
-        |p$k AS MATERIALIZED (SELECT sy[i] AS l, sy[i+1] AS r, sum(f) AS c
-        |       FROM x$k, unnest(generate_series(1, len(sy) - 1)) AS ix(i)
-        |       GROUP BY 1, 2),
-        |u$k AS MATERIALIZED (SELECT sy[i] AS s, sum(f) AS sc
-        |       FROM x$k, unnest(generate_series(1, len(sy))) AS ix(i)
-        |       GROUP BY 1),
-        |b$k AS MATERIALIZED (SELECT p.l, p.r FROM p$k p
-        |       JOIN u$k ul ON ul.s = p.l JOIN u$k ur ON ur.s = p.r
-        |       WHERE p.c >= 2
-        |       ORDER BY CAST(p.c AS DOUBLE) /
-        |                (CAST(ul.sc AS DOUBLE) * CAST(ur.sc AS DOUBLE)) DESC,
-        |                p.l ASC, p.r ASC LIMIT 1),
-        |s$k AS MATERIALIZED (SELECT w, f, CASE WHEN b.l IS NULL THEN s.seg
-        |         ELSE replace(s.seg, $rs || b.l || $sep2 || b.r || $rs,
-        |                      $rs || b.l || b.r || $rs) END AS seg
-        |       FROM s$p s LEFT JOIN b$k b ON TRUE)""".stripMargin
-    }
-    val ranks = (1 to numMerges)
-      .map(k => s"SELECT CAST($k AS BIGINT) AS rank, l, r FROM b$k")
-      .mkString("\n        UNION ALL ")
-    sb ++= s""",
-      |mg AS ($ranks),
-      |wtok AS (SELECT w,
-      |           len(string_split(seg[2:len(seg)-1], $sep2)) AS n
-      |         FROM s$numMerges),
-      |dw AS (SELECT doc_id,
-      |         unnest(string_split_regex(lower(trim(text)), '\\s+')) AS w
-      |       FROM documents),
-      |cnt AS (SELECT doc_id, sum(n) AS n FROM dw JOIN wtok USING (w)
-      |        WHERE w <> '' GROUP BY doc_id),
-      |doctok AS (SELECT d.doc_id, CAST(coalesce(c.n, 0) AS BIGINT) AS n_tokens
-      |           FROM documents d LEFT JOIN cnt c USING (doc_id))""".stripMargin
-    sb.toString
-  }
-
-  /** Shared vocab-replay suffix for the BPE id oracles: `alphabetCv`
-    * must define cv(tok, id); merges get ids offset by |alphabet|,
-    * duplicate token strings keep their min (first) id. Requires `mg`
-    * from [[bpeCte]]. */
-  private def bpeVocabCtes(alphabetCv: String): String =
-    s""",
-      |cv AS ($alphabetCv),
-      |nch AS (SELECT count(*) AS n FROM cv),
-      |mv AS (SELECT l || r AS tok,
-      |         CAST(rank + (SELECT n FROM nch) AS BIGINT) AS id FROM mg),
-      |uni AS (SELECT tok, min(id) AS id
-      |        FROM (SELECT * FROM cv UNION ALL SELECT * FROM mv)
-      |        GROUP BY tok)""".stripMargin
-
-  /** The corpus-alphabet cv (char-level: distinct corpus chars ranked
-    * ascending) for [[bpeVocabCtes]]. */
-  private val bpeCharAlphabetCv: String =
-    """SELECT tok, CAST(row_number() OVER (ORDER BY tok ASC)
-      |         AS BIGINT) AS id
-      |       FROM (SELECT DISTINCT unnest([w[i:i] for i in range(1, len(w)+1)]) AS tok
-      |             FROM wcnt)""".stripMargin
-
-  /** The CLOSED byte alphabet cv (ids 1..256 in byte order). */
-  private val bpeByteAlphabetCv: String =
-    """SELECT upper(lpad(to_hex(i), 2, '0')) AS tok,
-      |               CAST(i + 1 AS BIGINT) AS id
-      |       FROM (SELECT unnest(range(0, 256)) AS i)""".stripMargin
-
-  /** Shared id-encoding suffix: final segmentations re-split to
-    * symbols with positions, joined to `uni`, re-joined per doc in
-    * word order; `docids` covers every doc (empty docs get 0 tokens /
-    * empty ids). Requires [[bpeVocabCtes]] and the trajectory's final
-    * state `s<N>`. */
-  private def bpeEncodeCtes(finalState: String): String =
-    s""",
-      |wsym AS (SELECT w, string_split(seg[2:len(seg)-1], chr(30) || chr(30)) AS syms
-      |         FROM $finalState),
-      |wse AS (SELECT w, i, syms[i] AS tok
-      |        FROM wsym, unnest(generate_series(1, len(syms))) t(i)),
-      |wstr AS (SELECT w.w, string_agg(CAST(u.id AS VARCHAR), ' ' ORDER BY w.i) AS ids,
-      |                CAST(count(*) AS BIGINT) AS n
-      |         FROM wse w JOIN uni u USING (tok) GROUP BY w.w),
-      |pw AS (SELECT doc_id, unnest([{'pos': i, 'wr': lr[i]}
-      |                              for i in range(1, len(lr)+1)],
-      |                             recursive := true)
-      |       FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS lr
-      |             FROM documents)),
-      |pz AS (SELECT p.doc_id, p.pos, ws.ids, ws.n
-      |       FROM pw p JOIN wstr ws ON ws.w = lower(p.wr)),
-      |agg AS (SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_tokens,
-      |               string_agg(ids, ' ' ORDER BY pos) AS ids
-      |        FROM pz GROUP BY doc_id),
-      |docids AS (SELECT d.doc_id, coalesce(a.n_tokens, 0) AS n_tokens,
-      |                  coalesce(a.ids, '') AS ids
-      |           FROM documents d LEFT JOIN agg a USING (doc_id))""".stripMargin
-
-  private val subwordCte: String =
-    """WITH RECURSIVE wcnt AS (
-      |  SELECT w, count(*) AS f FROM (
-      |    SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS w
-      |    FROM documents) WHERE w <> '' GROUP BY w),
-      |chars AS (SELECT DISTINCT unnest([w[i:i] for i in range(1, len(w)+1)]) AS tok
-      |          FROM wcnt),
-      |subs AS (
-      |  SELECT unnest(flatten([[w[i:i+l-1] for l in range(2, least(8, len(w)-i+1)+1)]
-      |                         for i in range(1, len(w)+1)])) AS tok, f
-      |  FROM wcnt),
-      |score AS (SELECT tok, sum(f) AS s FROM subs GROUP BY tok),
-      |ranked AS (SELECT tok, row_number() OVER (ORDER BY s DESC, tok ASC) AS rn
-      |           FROM score),
-      |vocab AS (SELECT tok FROM chars
-      |          UNION ALL
-      |          SELECT tok FROM ranked
-      |          WHERE rn <= 64 - (SELECT count(*) FROM chars)),
-      |tk AS (
-      |  SELECT w, 1 AS pos, 0 AS n FROM wcnt
-      |  UNION ALL
-      |  SELECT w, pos + coalesce((SELECT max(len(v.tok)) FROM vocab v
-      |                            WHERE v.tok = substr(tk.w, CAST(tk.pos AS INT),
-      |                                                 len(v.tok))), 1),
-      |         n + 1
-      |  FROM tk WHERE pos <= len(w)),
-      |wtok AS (SELECT w, n FROM tk WHERE pos > len(w)),
-      |dw AS (SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS w
-      |       FROM documents),
-      |cnt AS (SELECT doc_id, sum(n) AS n FROM dw JOIN wtok USING (w)
-      |        WHERE w <> '' GROUP BY doc_id),
-      |doctok AS (SELECT d.doc_id, CAST(coalesce(c.n, 0) AS BIGINT) AS n_tokens
-      |           FROM documents d LEFT JOIN cnt c USING (doc_id))""".stripMargin
-
-  /** Shared by rep3 (batch) and st21 (the identical stateless
-    * projection on a two-micro-batch stream). */
-  private val rep3OracleSql: String =
-    """WITH base AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |fx AS (SELECT doc_id,
-        |         array_to_string(w[1:3], ' ') || chr(10) ||
-        |         array_to_string(w[4:6], ' ') || chr(10) ||
-        |         (CASE WHEN doc_id % 3 = 0 THEN array_to_string(w[1:3], ' ')
-        |               ELSE array_to_string(w[7:9], ' ') END) || chr(10) ||
-        |         array_to_string(w[10:12], ' ') AS text
-        |       FROM base),
-        |l AS (SELECT doc_id,
-        |        list_filter(list_transform(string_split(text, chr(10)),
-        |          x -> trim(x)), x -> length(x) > 0) AS ls
-        |      FROM fx),
-        |m AS (SELECT doc_id, len(ls) AS nl, len(list_distinct(ls)) AS nd,
-        |        list_aggregate(list_transform(ls, x -> length(x)), 'sum') AS ch,
-        |        list_aggregate(list_transform(list_distinct(ls),
-        |          x -> length(x)), 'sum') AS dch
-        |      FROM l)
-        |SELECT doc_id, CAST(nl AS BIGINT) AS n_lines,
-        |       CASE WHEN nl > 0 THEN round(CAST(nl - nd AS DOUBLE) / nl, 6)
-        |            ELSE 0.0 END AS dup_line_frac,
-        |       CASE WHEN ch > 0 THEN round(CAST(ch - dch AS DOUBLE) / ch, 6)
-        |            ELSE 0.0 END AS dup_line_char_frac
-        |FROM m""".stripMargin
-
-  /** Shared by tok12 (batch) and st22 (the identical stateless
-    * coverage projection on a two-micro-batch stream). */
-  private val tok12OracleSql: String =
-    """WITH RECURSIVE wcnt AS (
-        |  SELECT w, count(*) AS f FROM (
-        |    SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS w
-        |    FROM documents) WHERE w <> '' GROUP BY w),
-        |chars AS (SELECT DISTINCT unnest([w[i:i] for i in range(1, len(w)+1)]) AS tok
-        |          FROM wcnt),
-        |subs AS (
-        |  SELECT unnest(flatten([[w[i:i+l-1] for l in range(2, least(8, len(w)-i+1)+1)]
-        |                         for i in range(1, len(w)+1)])) AS tok, f
-        |  FROM wcnt),
-        |score AS (SELECT tok, sum(f) AS s FROM subs GROUP BY tok),
-        |ranked AS (SELECT tok, row_number() OVER (ORDER BY s DESC, tok ASC) AS rn
-        |           FROM score),
-        |vocab AS (SELECT tok FROM chars
-        |          UNION ALL
-        |          SELECT tok FROM ranked
-        |          WHERE rn <= 64 - (SELECT count(*) FROM chars)),
-        |docs2 AS (SELECT doc_id, text || ' zq9x7 kafka' AS text FROM documents),
-        |w2 AS (SELECT DISTINCT w FROM (
-        |         SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS w
-        |         FROM docs2) WHERE w <> ''),
-        |tk AS (
-        |  SELECT w, 1 AS pos, 0 AS n, 0 AS oov FROM w2
-        |  UNION ALL
-        |  SELECT w,
-        |         pos + coalesce((SELECT max(len(v.tok)) FROM vocab v
-        |                         WHERE v.tok = substr(tk.w, CAST(tk.pos AS INT),
-        |                                              len(v.tok))), 1),
-        |         n + 1,
-        |         oov + CASE WHEN (SELECT max(len(v.tok)) FROM vocab v
-        |                          WHERE v.tok = substr(tk.w, CAST(tk.pos AS INT),
-        |                                               len(v.tok))) IS NULL
-        |                    THEN 1 ELSE 0 END
-        |  FROM tk WHERE pos <= len(w)),
-        |wtok AS (SELECT w, n, oov FROM tk WHERE pos > len(w)),
-        |dw AS (SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS w
-        |       FROM docs2),
-        |cnt AS (SELECT doc_id, sum(n) AS n, sum(oov) AS o FROM dw JOIN wtok USING (w)
-        |        WHERE w <> '' GROUP BY doc_id)
-        |SELECT d.doc_id, CAST(coalesce(c.n, 0) AS BIGINT) AS n_tokens,
-        |       CAST(coalesce(c.o, 0) AS BIGINT) AS n_oov,
-        |       CASE WHEN coalesce(c.n, 0) > 0
-        |            THEN round(CAST(c.o AS DOUBLE) / c.n, 6) ELSE 0.0 END AS oov_rate
-        |FROM documents d LEFT JOIN cnt c USING (doc_id)""".stripMargin
-
-  private lazy val oracleSqlBase: Map[String, String] = Map(
-    "s1_scan_project" ->
-      "SELECT l_orderkey, l_extendedprice, l_shipdate FROM lineitem",
-
-    "s2_partitioned_scan" ->
-      "SELECT * FROM orders",
-
-    "u1_throttled_scan" ->
-      "SELECT * FROM supplier",
-
-    "f1_filter_where" ->
-      "SELECT * FROM orders WHERE o_totalprice > 100000 AND o_orderstatus = 'F'",
-
-    "q1_source_query" ->
-      "SELECT o_orderpriority, count(*) AS n, round(sum(o_totalprice), 2) AS total FROM orders GROUP BY o_orderpriority",
-
-    "c1_csv_declared_schema" ->
-      "SELECT o_orderkey, o_orderstatus, o_totalprice, o_orderdate FROM orders",
-
-    "c2_orc_json_roundtrip" ->
-      "SELECT * FROM supplier UNION ALL SELECT * FROM supplier",
-
-    "c4_avro_roundtrip" ->
-      "SELECT * FROM supplier",
-
-    "s9_mongo_filter" ->
-      "SELECT doc_id, lang, n_chars FROM documents WHERE lang IN ('en', 'de') AND n_chars > 200",
-
-    "s10_mongo_pipeline" ->
-      """SELECT source AS _id, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_chars
-        |FROM documents WHERE n_chars >= 100 GROUP BY source""".stripMargin,
-
-    "w11_object_per_row" ->
-      "SELECT doc_id, strlen(text) AS n_bytes FROM documents WHERE doc_id < 100",
-
-    "m1_mode_complete" ->
-      "SELECT * FROM lineitem",
-
-    // serialize -> parse roundtrip identity
-    "k2_kafka_parse" ->
-      "SELECT * FROM orders",
-
-    "m2_mode_complete_atomic" ->
-      "SELECT * FROM orders",
-
-    "m6_compaction" ->
-      "SELECT * FROM customer",
-
-    "geo1_haversine" ->
-      """WITH p AS (
-        |  SELECT c_custkey, (c_custkey * 7) % 1200 / 10.0 - 60 AS lat,
-        |         (c_custkey * 13) % 3400 / 10.0 - 170 AS lon
-        |  FROM customer)
-        |SELECT c_custkey, lat, lon,
-        |       round(2 * 6371.0088 * asin(sqrt(
-        |         sin(radians(0.0 - lat) / 2) * sin(radians(0.0 - lat) / 2)
-        |         + cos(radians(lat)) * cos(radians(0.0))
-        |           * sin(radians(0.0 - lon) / 2) * sin(radians(0.0 - lon) / 2))),
-        |         3) AS dist_km
-        |FROM p""".stripMargin,
-
-    "geo2_pairs_within" ->
-      """WITH p AS (
-        |  SELECT c_custkey AS id, (c_custkey * 7) % 1200 / 10.0 - 60 AS lat,
-        |         (c_custkey * 13) % 3400 / 10.0 - 170 AS lon
-        |  FROM customer),
-        |d AS (
-        |  SELECT a.id AS id_a, b.id AS id_b,
-        |         round(2 * 6371.0088 * asin(sqrt(
-        |           sin(radians(b.lat - a.lat) / 2) * sin(radians(b.lat - a.lat) / 2)
-        |           + cos(radians(a.lat)) * cos(radians(b.lat))
-        |             * sin(radians(b.lon - a.lon) / 2)
-        |             * sin(radians(b.lon - a.lon) / 2))), 3) AS dist_km
-        |  FROM p a JOIN p b ON a.id < b.id)
-        |SELECT id_a, id_b, dist_km FROM d WHERE dist_km <= 120.0""".stripMargin,
-
-    // the drift delta is fully determined by the two fixture schemas
-    "sc2_schema_drift" ->
-      """SELECT 'c_mktsegment' AS column, 'removed' AS change_type,
-        |       'string' AS type_before, CAST(NULL AS VARCHAR) AS type_after
-        |UNION ALL
-        |SELECT 'c_tier', 'added', CAST(NULL AS VARCHAR), 'string'
-        |UNION ALL
-        |SELECT 'c_acctbal', 'type_changed', 'double', 'string'""".stripMargin,
-
-    "sc1_schema_evolution" ->
-      """SELECT c_custkey, c_name, c_acctbal, c_mktsegment,
-        |       CAST(NULL AS VARCHAR) AS c_tier
-        |FROM customer WHERE c_custkey % 2 = 0
-        |UNION ALL
-        |SELECT c_custkey, c_name, c_acctbal, NULL, 'basic'
-        |FROM customer WHERE c_custkey % 2 = 1""".stripMargin,
-
-    "m7_cdc_apply" ->
-      """WITH chg AS (
-        |  SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment,
-        |         'D' AS op, 1 AS seq FROM customer WHERE c_custkey % 10 = 0
-        |  UNION ALL
-        |  SELECT c_custkey, c_name, c_nationkey, c_acctbal + 55, c_mktsegment,
-        |         'U', 0 FROM customer WHERE c_custkey % 10 = 0
-        |  UNION ALL
-        |  SELECT c_custkey, c_name, c_nationkey, round(c_acctbal + 1000, 2),
-        |         c_mktsegment, 'U', 1
-        |  FROM customer WHERE c_custkey % 10 IN (1, 2)
-        |  UNION ALL
-        |  SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment,
-        |         'D', 0 FROM customer WHERE c_custkey % 10 = 1
-        |  UNION ALL
-        |  SELECT c_custkey + 1000000, c_name, c_nationkey, c_acctbal,
-        |         c_mktsegment, 'I', 1 FROM customer WHERE c_custkey % 10 = 3),
-        |latest AS (
-        |  SELECT *, row_number() OVER (PARTITION BY c_custkey
-        |                               ORDER BY seq DESC, op DESC) AS rn
-        |  FROM chg)
-        |SELECT c.c_custkey, c.c_name, c.c_nationkey, c.c_acctbal, c.c_mktsegment
-        |FROM customer c
-        |WHERE c.c_custkey NOT IN (SELECT c_custkey FROM latest WHERE rn = 1)
-        |UNION ALL
-        |SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
-        |FROM latest WHERE rn = 1 AND op <> 'D'""".stripMargin,
-
-    "agg5_priority_sets" ->
-      """SELECT o_custkey,
-        |       array_to_string(list_sort(list(DISTINCT o_orderpriority)), ',')
-        |         AS priorities,
-        |       count(DISTINCT o_orderpriority) AS n_priorities
-        |FROM orders GROUP BY 1""".stripMargin,
-
-    "m3_mode_incremental_jdbc" ->
-      """WITH staging AS (
-        |  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice + 1000.0 AS o_totalprice,
-        |         o_orderdate, o_orderpriority
-        |  FROM orders WHERE o_orderkey % 2 = 0)
-        |SELECT * FROM staging
-        |UNION ALL
-        |SELECT t.* FROM orders t
-        |WHERE t.o_orderkey % 3 <> 0
-        |  AND t.o_orderkey NOT IN (SELECT o_orderkey FROM staging)""".stripMargin,
-
-    "m11_cli_incremental" ->
-      """WITH staging AS (
-        |  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice + 1000.0 AS o_totalprice,
-        |         o_orderdate, o_orderpriority
-        |  FROM orders WHERE o_orderkey % 2 = 0)
-        |SELECT * FROM staging
-        |UNION ALL
-        |SELECT t.* FROM orders t
-        |WHERE t.o_orderkey % 3 <> 0
-        |  AND t.o_orderkey NOT IN (SELECT o_orderkey FROM staging)""".stripMargin,
-
-    "m4_upsert_dataframe" ->
-      """WITH staging AS (
-        |  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice + 1000.0 AS o_totalprice,
-        |         o_orderdate, o_orderpriority
-        |  FROM orders WHERE o_orderkey % 2 = 0)
-        |SELECT * FROM staging
-        |UNION ALL
-        |SELECT t.* FROM orders t
-        |WHERE t.o_orderkey % 3 <> 0
-        |  AND t.o_orderkey NOT IN (SELECT o_orderkey FROM staging)""".stripMargin,
-
-    "m5_mode_incremental_file" ->
-      """WITH staging AS (
-        |  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice + 1000.0 AS o_totalprice,
-        |         o_orderdate, o_orderpriority
-        |  FROM orders WHERE o_orderkey % 2 = 0)
-        |SELECT * FROM staging
-        |UNION ALL
-        |SELECT t.* FROM orders t
-        |WHERE t.o_orderkey % 3 <> 0
-        |  AND t.o_orderkey NOT IN (SELECT o_orderkey FROM staging)""".stripMargin,
-
-    "w3_window_range" ->
-      """SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,
-        |       round(sum(value) OVER w, 2) AS trail_1h_sum,
-        |       count(*) OVER w AS trail_1h_n
-        |FROM (SELECT event_id, user_id, ts, value,
-        |             epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us FROM events)
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts_us
-        |             RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)""".stripMargin,
-
-    "j1_join_agg" ->
-      """SELECT n.n_name, round(sum(l.l_extendedprice * (1.0 - l.l_discount)), 2) AS revenue,
-        |       count(DISTINCT o.o_orderkey) AS n_orders
-        |FROM lineitem l
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |JOIN customer c ON o.o_custkey = c.c_custkey
-        |JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |GROUP BY n.n_name""".stripMargin,
-
-    "agg1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       round(sum(l_quantity), 2) AS sum_qty,
-        |       round(sum(l_extendedprice), 2) AS sum_base_price,
-        |       round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS sum_disc_price,
-        |       round(avg(l_quantity), 4) AS avg_qty,
-        |       round(avg(l_discount), 4) AS avg_disc,
-        |       count(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus""".stripMargin,
-
-    "agg2_distinct" ->
-      """SELECT o_orderpriority, count(DISTINCT o_custkey) AS n_customers, count(*) AS n_orders
-        |FROM orders GROUP BY o_orderpriority""".stripMargin,
-
-    "w1_window_topn" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |         row_number() OVER (PARTITION BY o_custkey
-        |                            ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
-        |  FROM orders) WHERE rn = 1""".stripMargin,
-
-    "w2_window_running" ->
-      """SELECT l_suppkey, l_orderkey, l_linenumber,
-        |       round(sum(l_quantity) OVER (PARTITION BY l_suppkey
-        |         ORDER BY l_shipdate ASC, l_orderkey ASC, l_linenumber ASC
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS running_qty
-        |FROM lineitem""".stripMargin,
-
-    "sort1_topk" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 100""".stripMargin,
-
-    "set1_symmetric_difference" ->
-      """(SELECT DISTINCT o_custkey FROM orders WHERE year(o_orderdate) = 1994
-        | EXCEPT
-        | SELECT DISTINCT o_custkey FROM orders WHERE year(o_orderdate) = 1995)
-        |UNION ALL
-        |(SELECT DISTINCT o_custkey FROM orders WHERE year(o_orderdate) = 1995
-        | EXCEPT
-        | SELECT DISTINCT o_custkey FROM orders WHERE year(o_orderdate) = 1994)""".stripMargin,
-
-    // r7: k1 graduated from rows-only to MATCH. Spark's to_json
-    // emits fields in struct order with no whitespace and renders
-    // doubles via Java's shortest-round-trip Double.toString; DuckDB
-    // VARCHAR casts use the same shortest-representation digits (the
-    // shortest form is unique), and the fixture's o_totalprice domain
-    // [1013.7, 499978.59] stays far inside both engines' fixed-
-    // notation windows (Java switches to E-notation at 1e7), so the
-    // concatenated replay is byte-identical. Strings in the fixture
-    // need no JSON escaping (single-char status, enum priorities).
-    "k1_kafka_payload" ->
-      """SELECT CAST(o_orderkey AS VARCHAR) AS key,
-        |  '{"o_orderkey":' || o_orderkey ||
-        |  ',"o_custkey":' || o_custkey ||
-        |  ',"o_orderstatus":"' || o_orderstatus ||
-        |  '","o_totalprice":' || CAST(o_totalprice AS VARCHAR) ||
-        |  ',"o_orderdate":"' || strftime(o_orderdate, '%Y-%m-%dT%H:%M:%S.%gZ') ||
-        |  '","o_orderpriority":"' || o_orderpriority || '"}' AS value
-        |FROM orders""".stripMargin,
-
-    "t1_conversions" ->
-      """SELECT l_orderkey, l_linenumber,
-        |       epoch_ms(l_shipdate) AS ship_epoch_ms,
-        |       strftime(l_shipdate, '%Y-%m-%dT%H:%M:%S') AS ship_iso,
-        |       CAST(l_shipdate AS DATE) AS ship_date,
-        |       date_diff('day', DATE '1970-01-01', CAST(l_shipdate AS DATE)) AS ship_epoch_day
-        |FROM lineitem""".stripMargin,
-
-    "agg3_rollup" ->
-      """SELECT l_returnflag, l_linestatus, round(sum(l_quantity), 2) AS sum_qty,
-        |       count(*) AS n
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-
-    "q3_shipping_priority" ->
-      """SELECT l.l_orderkey, o.o_orderdate, o.o_orderpriority,
-        |       round(sum(l.l_extendedprice * (1.0 - l.l_discount)), 2) AS revenue
-        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |JOIN customer c ON o.o_custkey = c.c_custkey
-        |WHERE c.c_mktsegment = 'BUILDING' AND o.o_orderdate < TIMESTAMP '1996-01-01'
-        |  AND l.l_shipdate > TIMESTAMP '1996-01-01'
-        |GROUP BY 1, 2, 3 ORDER BY revenue DESC, l.l_orderkey ASC LIMIT 10""".stripMargin,
-
-    "gs1_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid,
-        |       round(sum(l_quantity), 2) AS sum_qty, count(*) AS n
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus),
-        |                        (l_returnflag, l_linestatus))""".stripMargin,
-
-    "agg4_cube" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       round(sum(l_extendedprice), 2) AS sum_price, count(*) AS n
-        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin,
-
-    "pv1_pivot" ->
-      """SELECT o_orderpriority,
-        |       round(sum(o_totalprice) FILTER (o_orderstatus = 'F'), 2) AS "F",
-        |       round(sum(o_totalprice) FILTER (o_orderstatus = 'O'), 2) AS "O",
-        |       round(sum(o_totalprice) FILTER (o_orderstatus = 'P'), 2) AS "P"
-        |FROM orders GROUP BY o_orderpriority""".stripMargin,
-
-    "pct1_percentiles" ->
-      """SELECT l_returnflag,
-        |       round(quantile_cont(l_extendedprice, 0.25), 4) AS p25,
-        |       round(quantile_cont(l_extendedprice, 0.5), 4) AS p50,
-        |       round(quantile_cont(l_extendedprice, 0.75), 4) AS p75,
-        |       round(quantile_cont(l_extendedprice, 0.95), 4) AS p95
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "j3_range_join" ->
-      """SELECT o.o_orderkey, count(*) AS n_items,
-        |       round(sum(l.l_quantity), 2) AS sum_qty
-        |FROM orders o JOIN lineitem l
-        |  ON l.l_shipdate >= o.o_orderdate
-        | AND l.l_shipdate < o.o_orderdate + INTERVAL 3 DAY
-        |WHERE o.o_orderpriority = '1-URGENT' AND l.l_quantity >= 45
-        |GROUP BY 1""".stripMargin,
-
-    "j7_interval_overlap" ->
-      """SELECT o.o_orderkey, count(*) AS n_overlaps,
-        |       round(sum(l.l_quantity), 2) AS sum_qty
-        |FROM orders o JOIN lineitem l
-        |  ON l.l_shipdate < o.o_orderdate + INTERVAL 5 DAY
-        | AND o.o_orderdate < l.l_shipdate
-        |       + (CAST(l.l_quantity AS INT) % 25 + 1) * INTERVAL 1 DAY
-        |WHERE o.o_orderpriority = '1-URGENT' AND o.o_totalprice > 400000
-        |  AND l.l_quantity >= 49
-        |GROUP BY 1""".stripMargin,
-
-    "j8_bloom_join" ->
-      """SELECT o.o_orderkey,
-        |       round(sum(CAST(round(l.l_extendedprice * (1 - l.l_discount)
-        |                            * 10000) AS BIGINT)) / 10000.0, 2) AS revenue,
-        |       count(*) AS n_items
-        |FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        |WHERE o.o_orderpriority = '1-URGENT' AND o.o_totalprice > 250000
-        |GROUP BY 1""".stripMargin,
-
-    "j6_temporal_join" ->
-      """WITH f AS (
-        |  SELECT c_custkey, c_acctbal, 'I' AS op, CAST(0 AS BIGINT) AS seq
-        |  FROM customer WHERE c_custkey % 10 <= 2
-        |  UNION ALL
-        |  SELECT c_custkey, round(c_acctbal + 100, 2), 'U', 1
-        |  FROM customer WHERE c_custkey % 10 <= 2
-        |  UNION ALL
-        |  SELECT c_custkey, c_acctbal, 'D', 2
-        |  FROM customer WHERE c_custkey % 10 = 0),
-        |h AS (
-        |  SELECT c_custkey, c_acctbal, op, seq AS valid_from,
-        |         lead(seq) OVER (PARTITION BY c_custkey ORDER BY seq) AS valid_to
-        |  FROM f),
-        |hist AS (SELECT * FROM h WHERE op <> 'D'),
-        |facts AS (
-        |  SELECT o_orderkey, o_custkey AS c_custkey, o_orderkey % 4 AS t
-        |  FROM orders)
-        |SELECT facts.c_custkey, facts.t, facts.o_orderkey, hist.c_acctbal
-        |FROM facts LEFT JOIN hist
-        |  ON facts.c_custkey = hist.c_custkey
-        | AND facts.t >= hist.valid_from
-        | AND (hist.valid_to IS NULL OR facts.t < hist.valid_to)""".stripMargin,
-
-    "ts3_anomalies" ->
-      """WITH e AS (
-        |  SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h, value
-        |  FROM events),
-        |agg AS (
-        |  SELECT h, count(*) AS n_events, round(sum(value), 4) AS sum_value
-        |  FROM e GROUP BY h),
-        |b AS (SELECT min(h) AS lo, max(h) AS hi FROM e),
-        |spine AS (SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS h FROM b),
-        |g AS (
-        |  SELECT s.h, coalesce(a.n_events, 0) AS n_events, a.sum_value
-        |  FROM spine s LEFT JOIN agg a USING (h)),
-        |w AS (
-        |  SELECT h, n_events, sum_value,
-        |         count(sum_value) OVER win AS base_n,
-        |         avg(sum_value) OVER win AS base_avg,
-        |         stddev_samp(sum_value) OVER win AS base_std
-        |  FROM g WINDOW win AS (ORDER BY h ROWS BETWEEN 6 PRECEDING AND 1 PRECEDING))
-        |SELECT h, n_events, sum_value, base_n,
-        |       round(base_avg, 4) AS base_avg, round(base_std, 4) AS base_std
-        |FROM w
-        |WHERE sum_value IS NOT NULL AND base_n >= 2 AND base_std > 0
-        |  AND abs(sum_value - base_avg) > base_std * 2.0""".stripMargin,
-
-    "iv1_concurrency" ->
-      """WITH iv AS (
-        |  SELECT CAST(ts AS TIMESTAMP) AS s,
-        |         CAST(ts AS TIMESTAMP) + to_hours(event_id % 36 + 1) AS e
-        |  FROM events),
-        |b AS (
-        |  SELECT s AS t, 1 AS d FROM iv
-        |  UNION ALL
-        |  SELECT e, -1 FROM iv),
-        |r AS (
-        |  SELECT CAST(t AS DATE) AS "day",
-        |         sum(d) OVER (ORDER BY t, d
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run
-        |  FROM b)
-        |SELECT "day", CAST(max(run) AS BIGINT) AS max_concurrent
-        |FROM r GROUP BY "day"""".stripMargin,
-
-    "j2_asof_join" ->
-      """WITH e AS (
-        |  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
-        |p AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, max(value) AS purchase_value
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)
-        |SELECT e.user_id, e.ts, e.event_id, p.purchase_value
-        |FROM e ASOF LEFT JOIN p ON e.user_id = p.user_id AND e.ts >= p.ts""".stripMargin,
-
-    "j4_asof_forward" ->
-      """WITH e AS (
-        |  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
-        |p AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, max(value) AS purchase_value
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)
-        |SELECT e.user_id, e.ts, e.event_id, p.purchase_value
-        |FROM e ASOF LEFT JOIN p ON e.user_id = p.user_id AND e.ts <= p.ts""".stripMargin,
-
-    // two directional ASOF joins, the closer candidate wins, exact
-    // ties -> backward (the at-or-before row)
-    "j5_asof_nearest" ->
-      """WITH e AS (
-        |  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
-        |p AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, max(value) AS purchase_value
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-        |b AS (
-        |  SELECT e.event_id, e.user_id, e.ts, p.ts AS bts, p.purchase_value AS bval
-        |  FROM e ASOF LEFT JOIN p ON e.user_id = p.user_id AND e.ts >= p.ts),
-        |f AS (
-        |  SELECT e.event_id, p.ts AS fts, p.purchase_value AS fval
-        |  FROM e ASOF LEFT JOIN p ON e.user_id = p.user_id AND e.ts <= p.ts)
-        |SELECT b.user_id, b.ts, b.event_id,
-        |       CASE WHEN fts IS NULL THEN bval
-        |            WHEN bts IS NULL THEN fval
-        |            WHEN epoch_us(fts) - epoch_us(b.ts)
-        |                 < epoch_us(b.ts) - epoch_us(bts) THEN fval
-        |            ELSE bval END AS purchase_value
-        |FROM b JOIN f USING (event_id)""".stripMargin,
-
-    "q5_local_supplier_volume" ->
-      """SELECT n.n_name,
-        |       round(sum(l.l_extendedprice * (1.0 - l.l_discount)), 2) AS revenue
-        |FROM lineitem l
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |JOIN customer c ON o.o_custkey = c.c_custkey
-        | AND c.c_nationkey = s.s_nationkey
-        |JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |JOIN region r ON n.n_regionkey = r.r_regionkey
-        |WHERE r.r_name = 'ASIA'
-        |  AND o.o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o.o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY n.n_name""".stripMargin,
-
-    "anti1_inactive_customers" ->
-      """SELECT c_mktsegment, count(*) AS n_inactive
-        |FROM customer c
-        |WHERE NOT EXISTS (SELECT 1 FROM orders o
-        |                  WHERE o.o_custkey = c.c_custkey
-        |                    AND o.o_orderdate >= TIMESTAMP '1996-01-01')
-        |GROUP BY c_mktsegment""".stripMargin,
-
-    "q13_customer_distribution" ->
-      """SELECT c_count, count(*) AS custdist
-        |FROM (SELECT c.c_custkey, count(o.o_orderkey) AS c_count
-        |      FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
-        |      GROUP BY c.c_custkey)
-        |GROUP BY c_count""".stripMargin,
-
-    "w4_window_ranks" ->
-      """SELECT o_orderkey, o_orderpriority,
-        |       ntile(10) OVER w AS decile,
-        |       round(percent_rank() OVER w, 6) AS pct_rank,
-        |       round(cume_dist() OVER w, 6) AS cume
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_orderpriority
-        |             ORDER BY o_totalprice ASC, o_orderkey ASC)""".stripMargin,
-
-    "w5_lag_lead" ->
-      """SELECT o_custkey, o_orderkey, o_orderdate,
-        |       CAST(date_diff('day', lag(o_orderdate, 1) OVER w, o_orderdate)
-        |            AS BIGINT) AS days_since_prev,
-        |       round(lead(o_totalprice, 1) OVER w, 2) AS next_price,
-        |       round(first_value(o_totalprice) OVER w, 2) AS first_price
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey
-        |             ORDER BY o_orderdate ASC, o_orderkey ASC)""".stripMargin,
-
-    "q6_forecast_revenue" ->
-      """SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01'
-        |  AND l_discount BETWEEN 0.02 AND 0.06
-        |  AND l_quantity < 10""".stripMargin,
-
-    "q12_priority_count" ->
-      """SELECT l.l_returnflag, l.l_linestatus,
-        |       CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |                     THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |       CAST(sum(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-        |                     THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-        |FROM lineitem l
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |WHERE l.l_shipdate >= TIMESTAMP '1997-01-01'
-        |  AND l.l_shipdate < TIMESTAMP '1998-01-01'
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q4_order_priority" ->
-      """SELECT o_orderpriority, count(*) AS order_count
-        |FROM orders o
-        |WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o.o_orderdate < TIMESTAMP '1996-07-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem l
-        |              WHERE l.l_orderkey = o.o_orderkey
-        |                AND l.l_shipdate > o.o_orderdate)
-        |GROUP BY o_orderpriority""".stripMargin,
-
-    "dd1_dedup_exact" ->
-      "SELECT min(doc_id) AS keep_id, count(*) AS n_copies FROM documents GROUP BY text",
-
-    // the same df cap and directed ratio on string grams
-    "dd21_containment_pairs" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_distinct(
-        |    CASE WHEN len(l) <= 2 THEN [array_to_string(l, ' ')]
-        |         ELSE [array_to_string(l[i:i+1], ' ')
-        |               for i in range(1, len(l))] END) AS gs
-        |  FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS l
-        |        FROM documents)),
-        |g AS (SELECT doc_id AS id, unnest(gs) AS gram FROM t),
-        |dfc AS (SELECT gram, count(*) AS d FROM g GROUP BY 1),
-        |kept AS (SELECT g.id, g.gram FROM g JOIN dfc USING (gram)
-        |         WHERE d <= 100),
-        |sz AS (SELECT id, CAST(count(*) AS BIGINT) AS n_a FROM kept GROUP BY 1),
-        |sh AS (SELECT a.id AS id_a, b.id AS id_b,
-        |              CAST(count(*) AS BIGINT) AS n_shared
-        |       FROM kept a JOIN kept b ON a.gram = b.gram AND a.id <> b.id
-        |       GROUP BY 1, 2)
-        |SELECT sh.id_a, sh.id_b, sh.n_shared, sz.n_a,
-        |       round(CAST(sh.n_shared AS DOUBLE) / CAST(sz.n_a AS DOUBLE), 6)
-        |         AS containment
-        |FROM sh JOIN sz ON sz.id = sh.id_a
-        |WHERE CAST(sh.n_shared AS DOUBLE) >= 0.8 * CAST(sz.n_a AS DOUBLE)"""
-        .stripMargin,
-
-    "dd20_token_sort_dedup" ->
-      """WITH s AS (
-        |  SELECT doc_id, array_to_string(
-        |           list_sort(string_split_regex(lower(trim(text)), '\s+')), ' ')
-        |           AS sig
-        |  FROM documents)
-        |SELECT min(doc_id) AS keep_id, count(*) AS n_copies
-        |FROM s GROUP BY sig""".stripMargin,
-
-    // r7: the simhash token hash moved from xxhash64 to
-    // rolling-31 + Murmur3 fmix64 (TextExpressions.tokenHash64),
-    // every step of which replays exactly in HUGEINT arithmetic —
-    // the ta3 trick extended with split 32-bit multiplies for the
-    // finalizer — so dd3 graduates from rows-only to a full brute-
-    // force hamming-join oracle (valid because no signature bucket
-    // approaches maxBucketSize on this fixture: blocking recall is
-    // guaranteed by the 4x16-bit pigeonhole at hamming <= 3)
-    "dd3_dedup_simhash" -> dd3Oracle,
-
-    "dd4_ngram_jaccard" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang,
-        |         list_distinct(string_split_regex(lower(trim(text)), '\s+')) AS w
-        |  FROM documents)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |       len(list_intersect(a.w, b.w))::DOUBLE /
-        |         (len(a.w) + len(b.w) - len(list_intersect(a.w, b.w))) AS jaccard,
-        |       a.lang AS lang
-        |FROM t a JOIN t b ON a.lang = b.lang AND a.doc_id < b.doc_id
-        |WHERE len(list_intersect(a.w, b.w))::DOUBLE /
-        |        (len(a.w) + len(b.w) - len(list_intersect(a.w, b.w))) >= 0.5""".stripMargin,
-
-    // same replay as sim5 (list_sum accumulates the cast-to-double
-    // products left-to-right like the codegen dot kernel); valid as
-    // dd5's oracle under the recall-1 adjudication — the banded LSH
-    // finds every qualifying pair on this fixture, verified
-    // pair-for-pair against exactCosinePairs
-    "dd5_embedding_neardup" ->
-      """WITH p AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |    list_sum(list_transform(range(1, 65),
-        |      i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
-        |    / (sqrt(list_sum(list_transform(range(1, 65),
-        |        i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE))))
-        |     * sqrt(list_sum(list_transform(range(1, 65),
-        |        i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))))) AS cos
-        |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
-        |SELECT id_a, id_b, round(cos, 6) AS cos_sim FROM p
-        |WHERE cos >= 0.35 AND isfinite(cos)""".stripMargin,
-
-    "dd7_contamination" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang,
-        |         list_distinct(string_split_regex(lower(trim(text)), '\s+')) AS w
-        |  FROM documents)
-        |SELECT l.doc_id AS left_id, r.doc_id AS right_id,
-        |       len(list_intersect(l.w, r.w))::DOUBLE /
-        |         (len(l.w) + len(r.w) - len(list_intersect(l.w, r.w))) AS jaccard,
-        |       l.lang AS lang
-        |FROM t l JOIN t r ON l.lang = r.lang
-        |WHERE l.doc_id <= 250 AND r.doc_id > 250
-        |  AND len(list_intersect(l.w, r.w))::DOUBLE /
-        |        (len(l.w) + len(r.w) - len(list_intersect(l.w, r.w))) >= 0.5""".stripMargin,
-
-    // word 3-grams via DuckDB list comprehension over the same
-    // whitespace tokenization; DISTINCT per doc mirrors the
-    // sorted_shingle_hashes distinct-per-doc contract. The CASE
-    // mirrors the kernel's short-doc branch (docs with <= gramSize
-    // words contribute ONE whole-text gram, never zero) so the oracle
-    // cannot silently diverge on corpora containing short docs.
-    "dd8_decontaminate" ->
-      """WITH g AS (
-        |  SELECT doc_id, unnest(list_distinct(
-        |    CASE WHEN len(l) <= 3 THEN [array_to_string(l, ' ')]
-        |         ELSE [array_to_string(l[i:i+2], ' ') for i in range(1, len(l) - 1)] END
-        |  )) AS gram
-        |  FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS l
-        |        FROM documents)),
-        |ev AS (SELECT DISTINCT gram FROM g WHERE doc_id <= 250),
-        |tr AS (SELECT doc_id, gram FROM g WHERE doc_id > 250)
-        |SELECT tr.doc_id, count(*) AS n_shared_grams
-        |FROM tr JOIN ev USING (gram) GROUP BY tr.doc_id""".stripMargin,
-
-    "dd9_hot_spans" ->
-      """WITH g AS (
-        |  SELECT doc_id, unnest(list_distinct(
-        |    CASE WHEN len(l) <= 3 THEN [array_to_string(l, ' ')]
-        |         ELSE [array_to_string(l[i:i+2], ' ') for i in range(1, len(l) - 1)] END
-        |  )) AS gram
-        |  FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS l
-        |        FROM documents)),
-        |hot AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 5)
-        |SELECT doc_id, count(*) AS n_hot_spans
-        |FROM g JOIN hot USING (gram) GROUP BY doc_id""".stripMargin,
-
-    // dd10 + the offsets join; the ruler uses the RAW-case token list
-    // (lowercasing can change character counts — e.g. İ -> i̇ — and
-    // the product measures original-case text)
-    "dd11_span_char_offsets" ->
-      """WITH tok AS (SELECT doc_id,
-        |                    string_split_regex(lower(trim(text)), '\s+') AS l,
-        |                    string_split_regex(trim(text), '\s+') AS lr
-        |             FROM documents),
-        |g AS (
-        |  SELECT doc_id, unnest(
-        |    CASE WHEN len(l) <= 3 THEN [{'pos': 0, 'gram': array_to_string(l, ' ')}]
-        |         ELSE [{'pos': i - 1, 'gram': array_to_string(l[i:i+2], ' ')}
-        |               for i in range(1, len(l) - 1)] END,
-        |    recursive := true)
-        |  FROM tok),
-        |ev AS (SELECT DISTINCT doc_id AS eval_id, gram FROM g WHERE doc_id <= 250),
-        |tr AS (SELECT doc_id AS train_id, pos, gram FROM g WHERE doc_id > 250),
-        |m AS (SELECT train_id, eval_id, pos FROM tr JOIN ev USING (gram)),
-        |isl AS (SELECT train_id, eval_id, pos,
-        |        pos - row_number() OVER (PARTITION BY train_id, eval_id ORDER BY pos) AS grp
-        |        FROM m),
-        |sp AS (SELECT train_id, eval_id, min(pos) AS span_start,
-        |              count(*) + 2 AS span_words
-        |       FROM isl GROUP BY train_id, eval_id, grp)
-        |SELECT sp.train_id, sp.eval_id, sp.span_start, sp.span_words,
-        |       CASE WHEN sp.span_start = 0 THEN 0
-        |            ELSE len(array_to_string(t.lr[1:CAST(sp.span_start AS INT)], ' ')) + 1
-        |       END AS char_start,
-        |       len(array_to_string(
-        |         t.lr[CAST(sp.span_start AS INT) + 1
-        |              : CAST(sp.span_start + sp.span_words AS INT)], ' ')) AS char_len
-        |FROM sp JOIN tok t ON t.doc_id = sp.train_id""".stripMargin,
-
-    // the substring-stitch form of excision: dd10's span set deduped
-    // across eval docs, merged in token space (touching intervals
-    // collapse), mapped to char regions on the raw-case ruler — an
-    // interior region consumes its trailing separator, a doc-final
-    // one its leading separator — then the complement segments are
-    // stitched back together. A MATCH proves the Spark operator's
-    // row-local token filtering equals this char-offset slice.
-    "dd13_excised_corpus" ->
-      """WITH tok AS (SELECT doc_id,
-        |                    string_split_regex(lower(trim(text)), '\s+') AS l,
-        |                    string_split_regex(trim(text), '\s+') AS lr
-        |             FROM documents),
-        |g AS (
-        |  SELECT doc_id, unnest(
-        |    CASE WHEN len(l) <= 3 THEN [{'pos': 0, 'gram': array_to_string(l, ' ')}]
-        |         ELSE [{'pos': i - 1, 'gram': array_to_string(l[i:i+2], ' ')}
-        |               for i in range(1, len(l) - 1)] END,
-        |    recursive := true)
-        |  FROM tok),
-        |ev AS (SELECT DISTINCT doc_id AS eval_id, gram FROM g WHERE doc_id <= 250),
-        |tr AS (SELECT doc_id AS train_id, pos, gram FROM g WHERE doc_id > 250),
-        |m AS (SELECT train_id, eval_id, pos FROM tr JOIN ev USING (gram)),
-        |isl AS (SELECT train_id, eval_id, pos,
-        |        pos - row_number() OVER (PARTITION BY train_id, eval_id ORDER BY pos) AS grp
-        |        FROM m),
-        |sp AS (SELECT DISTINCT train_id, min(pos) AS s,
-        |              min(pos) + count(*) + 2 AS e
-        |       FROM isl GROUP BY train_id, eval_id, grp),
-        |tisl AS (SELECT train_id, s, e,
-        |         CASE WHEN s > coalesce(max(e) OVER (PARTITION BY train_id ORDER BY s, e
-        |              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-        |              THEN 1 ELSE 0 END AS brk
-        |         FROM sp),
-        |tm AS (SELECT train_id, min(s) AS s, max(e) AS e
-        |       FROM (SELECT *, sum(brk) OVER (PARTITION BY train_id ORDER BY s, e) AS grp
-        |             FROM tisl)
-        |       GROUP BY train_id, grp),
-        |reg AS (SELECT tm.train_id,
-        |        CASE WHEN tm.e >= len(t.l) AND tm.s > 0
-        |             THEN len(array_to_string(t.lr[1:CAST(tm.s AS INT)], ' '))
-        |             WHEN tm.s = 0 THEN 0
-        |             ELSE len(array_to_string(t.lr[1:CAST(tm.s AS INT)], ' ')) + 1 END AS a,
-        |        CASE WHEN tm.e >= len(t.l) THEN len(array_to_string(t.lr, ' '))
-        |             ELSE len(array_to_string(t.lr[1:CAST(tm.e AS INT)], ' ')) + 1 END AS b
-        |        FROM tm JOIN tok t ON t.doc_id = tm.train_id),
-        |seg AS (
-        |  SELECT train_id,
-        |         coalesce(lag(b) OVER (PARTITION BY train_id ORDER BY a), 0) AS p,
-        |         a AS q
-        |  FROM reg
-        |  UNION ALL
-        |  SELECT train_id, max(b) AS p, NULL AS q FROM reg GROUP BY train_id),
-        |stitched AS (
-        |  SELECT s.train_id,
-        |         string_agg(substr(array_to_string(t.lr, ' '), CAST(s.p AS INT) + 1,
-        |           CAST(coalesce(s.q, len(array_to_string(t.lr, ' '))) - s.p AS INT)),
-        |           '' ORDER BY s.p) AS cleaned,
-        |         count(*) - 1 AS n_spans
-        |  FROM seg s JOIN tok t ON t.doc_id = s.train_id
-        |  GROUP BY s.train_id)
-        |SELECT t.doc_id,
-        |       coalesce(st.cleaned, array_to_string(t.lr, ' ')) AS clean_text,
-        |       CAST(len(array_to_string(t.lr, ' ')) -
-        |            len(coalesce(st.cleaned, array_to_string(t.lr, ' '))) AS BIGINT)
-        |         AS removed_chars,
-        |       CAST(coalesce(st.n_spans, 0) AS BIGINT) AS n_spans
-        |FROM tok t LEFT JOIN stitched st ON st.train_id = t.doc_id
-        |WHERE t.doc_id > 250""".stripMargin,
-
-    // dd23: suffix-array-style exact substring dedup replay — 8-gram
-    // anchors with df >= 2, min-id owner immune, islands merged, the
-    // 60-char floor applied per merged region, then the dd13
-    // substring-stitch; fixture plants the 19-word boilerplate on
-    // doc_id % 5 == 0
-    "dd23_substring_excision" ->
-      (s"""WITH fx AS (SELECT doc_id,
-        |       CASE WHEN doc_id % 5 = 0 THEN text || ' $bpBoiler'
-        |            ELSE text END AS text
-        |     FROM documents),""".stripMargin + """
-        |tok AS (SELECT doc_id,
-        |               string_split_regex(lower(trim(text)), '\s+') AS l,
-        |               string_split_regex(trim(text), '\s+') AS lr
-        |        FROM fx),
-        |g AS (
-        |  SELECT doc_id, unnest(
-        |    CASE WHEN len(l) <= 8 THEN [{'pos': 0, 'gram': array_to_string(l, ' ')}]
-        |         ELSE [{'pos': i - 1, 'gram': array_to_string(l[i:i+7], ' ')}
-        |               for i in range(1, len(l) - 6)] END,
-        |    recursive := true)
-        |  FROM tok),
-        |dup AS (SELECT gram, min(doc_id) AS owner
-        |        FROM (SELECT DISTINCT doc_id, gram FROM g)
-        |        GROUP BY gram HAVING count(*) >= 2),
-        |mk AS (SELECT g.doc_id AS train_id, g.pos
-        |       FROM g JOIN dup USING (gram)
-        |       WHERE g.doc_id <> dup.owner),
-        |isl AS (SELECT train_id, pos,
-        |        pos - row_number() OVER (PARTITION BY train_id ORDER BY pos) AS grp
-        |        FROM mk),
-        |sp0 AS (SELECT train_id, min(pos) AS s, min(pos) + count(*) + 7 AS e
-        |        FROM isl GROUP BY train_id, grp),
-        |sp AS (SELECT sp0.train_id, sp0.s, sp0.e
-        |       FROM sp0 JOIN tok tt ON tt.doc_id = sp0.train_id
-        |       WHERE len(array_to_string(
-        |               tt.lr[CAST(sp0.s + 1 AS INT):CAST(sp0.e AS INT)], ' ')) >= 60),
-        |tisl AS (SELECT train_id, s, e,
-        |         CASE WHEN s > coalesce(max(e) OVER (PARTITION BY train_id ORDER BY s, e
-        |              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-        |              THEN 1 ELSE 0 END AS brk
-        |         FROM sp),
-        |tm AS (SELECT train_id, min(s) AS s, max(e) AS e
-        |       FROM (SELECT *, sum(brk) OVER (PARTITION BY train_id ORDER BY s, e) AS grp
-        |             FROM tisl)
-        |       GROUP BY train_id, grp),
-        |reg AS (SELECT tm.train_id,
-        |        CASE WHEN tm.e >= len(t.l) AND tm.s > 0
-        |             THEN len(array_to_string(t.lr[1:CAST(tm.s AS INT)], ' '))
-        |             WHEN tm.s = 0 THEN 0
-        |             ELSE len(array_to_string(t.lr[1:CAST(tm.s AS INT)], ' ')) + 1 END AS a,
-        |        CASE WHEN tm.e >= len(t.l) THEN len(array_to_string(t.lr, ' '))
-        |             ELSE len(array_to_string(t.lr[1:CAST(tm.e AS INT)], ' ')) + 1 END AS b
-        |        FROM tm JOIN tok t ON t.doc_id = tm.train_id),
-        |seg AS (
-        |  SELECT train_id,
-        |         coalesce(lag(b) OVER (PARTITION BY train_id ORDER BY a), 0) AS p,
-        |         a AS q
-        |  FROM reg
-        |  UNION ALL
-        |  SELECT train_id, max(b) AS p, NULL AS q FROM reg GROUP BY train_id),
-        |stitched AS (
-        |  SELECT s.train_id,
-        |         string_agg(substr(array_to_string(t.lr, ' '), CAST(s.p AS INT) + 1,
-        |           CAST(coalesce(s.q, len(array_to_string(t.lr, ' '))) - s.p AS INT)),
-        |           '' ORDER BY s.p) AS cleaned,
-        |         count(*) - 1 AS n_spans
-        |  FROM seg s JOIN tok t ON t.doc_id = s.train_id
-        |  GROUP BY s.train_id)
-        |SELECT t.doc_id,
-        |       coalesce(st.cleaned, array_to_string(t.lr, ' ')) AS clean_text,
-        |       CAST(len(array_to_string(t.lr, ' ')) -
-        |            len(coalesce(st.cleaned, array_to_string(t.lr, ' '))) AS BIGINT)
-        |         AS removed_chars,
-        |       CAST(coalesce(st.n_spans, 0) AS BIGINT) AS n_spans
-        |FROM tok t LEFT JOIN stitched st ON st.train_id = t.doc_id""".stripMargin),
-
-    // dd18: hot grams (df >= 5 distinct docs) keep their min-id owner
-    // untouched; every other doc's hot-position islands merge and cut
-    // via the same substring-stitch machinery as dd13
-    "dd18_hot_span_excision" ->
-      """WITH tok AS (SELECT doc_id,
-        |                    string_split_regex(lower(trim(text)), '\s+') AS l,
-        |                    string_split_regex(trim(text), '\s+') AS lr
-        |             FROM documents),
-        |g AS (
-        |  SELECT doc_id, unnest(
-        |    CASE WHEN len(l) <= 3 THEN [{'pos': 0, 'gram': array_to_string(l, ' ')}]
-        |         ELSE [{'pos': i - 1, 'gram': array_to_string(l[i:i+2], ' ')}
-        |               for i in range(1, len(l) - 1)] END,
-        |    recursive := true)
-        |  FROM tok),
-        |hotg AS (SELECT gram, min(doc_id) AS owner FROM g
-        |         GROUP BY gram HAVING count(DISTINCT doc_id) >= 5),
-        |m AS (SELECT g.doc_id AS train_id, g.pos
-        |      FROM g JOIN hotg USING (gram) WHERE g.doc_id <> hotg.owner),
-        |isl AS (SELECT train_id, pos,
-        |        pos - row_number() OVER (PARTITION BY train_id ORDER BY pos) AS grp
-        |        FROM m),
-        |sp AS (SELECT train_id, min(pos) AS s, min(pos) + count(*) + 2 AS e
-        |       FROM isl GROUP BY train_id, grp),
-        |tisl AS (SELECT train_id, s, e,
-        |         CASE WHEN s > coalesce(max(e) OVER (PARTITION BY train_id ORDER BY s, e
-        |              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-        |              THEN 1 ELSE 0 END AS brk
-        |         FROM sp),
-        |tm AS (SELECT train_id, min(s) AS s, max(e) AS e
-        |       FROM (SELECT *, sum(brk) OVER (PARTITION BY train_id ORDER BY s, e) AS grp
-        |             FROM tisl)
-        |       GROUP BY train_id, grp),
-        |reg AS (SELECT tm.train_id,
-        |        CASE WHEN tm.e >= len(t.l) AND tm.s > 0
-        |             THEN len(array_to_string(t.lr[1:CAST(tm.s AS INT)], ' '))
-        |             WHEN tm.s = 0 THEN 0
-        |             ELSE len(array_to_string(t.lr[1:CAST(tm.s AS INT)], ' ')) + 1 END AS a,
-        |        CASE WHEN tm.e >= len(t.l) THEN len(array_to_string(t.lr, ' '))
-        |             ELSE len(array_to_string(t.lr[1:CAST(tm.e AS INT)], ' ')) + 1 END AS b
-        |        FROM tm JOIN tok t ON t.doc_id = tm.train_id),
-        |seg AS (
-        |  SELECT train_id,
-        |         coalesce(lag(b) OVER (PARTITION BY train_id ORDER BY a), 0) AS p,
-        |         a AS q
-        |  FROM reg
-        |  UNION ALL
-        |  SELECT train_id, max(b) AS p, NULL AS q FROM reg GROUP BY train_id),
-        |stitched AS (
-        |  SELECT s.train_id,
-        |         string_agg(substr(array_to_string(t.lr, ' '), CAST(s.p AS INT) + 1,
-        |           CAST(coalesce(s.q, len(array_to_string(t.lr, ' '))) - s.p AS INT)),
-        |           '' ORDER BY s.p) AS cleaned,
-        |         count(*) - 1 AS n_spans
-        |  FROM seg s JOIN tok t ON t.doc_id = s.train_id
-        |  GROUP BY s.train_id)
-        |SELECT t.doc_id,
-        |       coalesce(st.cleaned, array_to_string(t.lr, ' ')) AS clean_text,
-        |       CAST(len(array_to_string(t.lr, ' ')) -
-        |            len(coalesce(st.cleaned, array_to_string(t.lr, ' '))) AS BIGINT)
-        |         AS removed_chars,
-        |       CAST(coalesce(st.n_spans, 0) AS BIGINT) AS n_spans
-        |FROM tok t LEFT JOIN stitched st ON st.train_id = t.doc_id""".stripMargin,
-
-    // positional grams (struct comprehension keeps pos), gram join,
-    // then gaps-and-islands: consecutive positions share pos - row_number
-    // gram/positions replay (dd10's CTE), distinct-corpus join,
-    // gaps-and-islands runs, per-generation novelty + max span
-    "mem1_novelty_audit" ->
-      """WITH tok AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS l
-        |             FROM documents),
-        |g AS (
-        |  SELECT doc_id, unnest(
-        |    CASE WHEN len(l) <= 3 THEN [{'pos': 0, 'gram': array_to_string(l, ' ')}]
-        |         ELSE [{'pos': i - 1, 'gram': array_to_string(l[i:i+2], ' ')}
-        |               for i in range(1, len(l) - 1)] END,
-        |    recursive := true)
-        |  FROM tok),
-        |corpus AS (SELECT DISTINCT gram FROM g WHERE doc_id >= 100),
-        |geng AS (SELECT doc_id AS gen_id, pos, gram FROM g WHERE doc_id < 100),
-        |tot AS (SELECT doc_id AS gen_id,
-        |          CASE WHEN len(l) <= 3 THEN 1 ELSE len(l) - 2 END AS n_grams
-        |        FROM tok WHERE doc_id < 100),
-        |m AS (SELECT gen_id, pos FROM geng JOIN corpus USING (gram)),
-        |isl AS (SELECT gen_id, pos,
-        |          pos - row_number() OVER (PARTITION BY gen_id ORDER BY pos) AS grp
-        |        FROM m),
-        |runs AS (SELECT gen_id, grp, count(*) AS run FROM isl GROUP BY 1, 2),
-        |agg AS (SELECT gen_id, max(run) AS maxrun,
-        |          CAST(sum(run) AS BIGINT) AS nhit FROM runs GROUP BY 1)
-        |SELECT t.gen_id, CAST(t.n_grams AS BIGINT) AS n_grams,
-        |  coalesce(a.nhit, 0) AS n_memorized_grams,
-        |  CASE WHEN t.n_grams > 0
-        |       THEN round(1.0 - coalesce(a.nhit, 0) * 1.0 / t.n_grams, 6) END AS novelty,
-        |  CAST(CASE WHEN coalesce(a.maxrun, 0) > 0 THEN a.maxrun + 2
-        |            ELSE 0 END AS BIGINT) AS max_memorized_words
-        |FROM tot t LEFT JOIN agg a USING (gen_id)""".stripMargin,
-
-    // replay the planted-paraphrase fixture (edit every 20th word /
-    // reverse tokens), both winnowing passes (dd19's selection CTEs:
-    // per-4-window lexicographic-min 3-gram), and the distinct join;
-    // the flag compares by integer cross-multiplication on both sides
-    "mem2_paraphrase_audit" ->
-      """WITH gensrc AS (
-        |  SELECT doc_id - 100 AS gen_id,
-        |    CASE WHEN doc_id < 150 THEN
-        |      array_to_string([CASE WHEN i % 20 = 0 THEN 'zqz' ELSE l[i] END
-        |                       for i in range(1, len(l) + 1)], ' ')
-        |    ELSE array_to_string(list_reverse(l), ' ') END AS text
-        |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS l
-        |        FROM documents WHERE doc_id >= 100 AND doc_id < 200)),
-        |gtok AS (SELECT gen_id, string_split_regex(lower(trim(text)), '\s+') AS l
-        |         FROM gensrc),
-        |gg AS (SELECT gen_id,
-        |         CASE WHEN len(l) <= 5 THEN [array_to_string(l, ' ')]
-        |              ELSE [array_to_string(l[i:i+4], ' ')
-        |                    for i in range(1, len(l) - 3)] END AS gl
-        |       FROM gtok),
-        |gsel AS (SELECT gen_id,
-        |           CASE WHEN len(gl) <= 4 THEN [list_sort(gl)[1]]
-        |                ELSE [list_sort(gl[i+1:i+4])[1]
-        |                      for i in range(0, len(gl) - 3)] END AS s
-        |         FROM gg),
-        |gfp AS (SELECT DISTINCT gen_id, g AS gram
-        |        FROM (SELECT gen_id, unnest(s) AS g FROM gsel)),
-        |ctok AS (SELECT string_split_regex(lower(trim(text)), '\s+') AS l
-        |         FROM documents WHERE doc_id >= 100),
-        |cg AS (SELECT CASE WHEN len(l) <= 5 THEN [array_to_string(l, ' ')]
-        |              ELSE [array_to_string(l[i:i+4], ' ')
-        |                    for i in range(1, len(l) - 3)] END AS gl
-        |       FROM ctok),
-        |csel AS (SELECT CASE WHEN len(gl) <= 4 THEN [list_sort(gl)[1]]
-        |                ELSE [list_sort(gl[i+1:i+4])[1]
-        |                      for i in range(0, len(gl) - 3)] END AS s
-        |         FROM cg),
-        |cfp AS (SELECT DISTINCT g AS gram FROM (SELECT unnest(s) AS g FROM csel)),
-        |tot AS (SELECT gen_id, CAST(count(*) AS BIGINT) AS n_fingerprints
-        |        FROM gfp GROUP BY 1),
-        |hit AS (SELECT gen_id, CAST(count(*) AS BIGINT) AS n_matched
-        |        FROM gfp JOIN cfp USING (gram) GROUP BY 1)
-        |SELECT t.gen_id, t.n_fingerprints,
-        |       COALESCE(h.n_matched, 0) AS n_matched,
-        |       round(COALESCE(h.n_matched, 0) * 1.0 / t.n_fingerprints, 6)
-        |         AS memorized_frac,
-        |       COALESCE(h.n_matched, 0) * 2 >= t.n_fingerprints AS near_verbatim
-        |FROM tot t LEFT JOIN hit h USING (gen_id)""".stripMargin,
-
-    // mem2's winnow replay carrying positions ({'g','p'} structs sort
-    // by gram then leftmost position, the kernel's tie rule), then
-    // lag/cumsum islands with the gramSize + 2*window = 13 gap
-    // tolerance and the n_fps >= 3 support filter
-    "mem3_paraphrase_spans" ->
-      """WITH gensrc AS (
-        |  SELECT doc_id - 100 AS gen_id,
-        |    CASE WHEN doc_id < 150 THEN
-        |      array_to_string([CASE WHEN i % 20 = 0 THEN 'zqz' ELSE l[i] END
-        |                       for i in range(1, len(l) + 1)], ' ')
-        |    ELSE array_to_string(list_reverse(l), ' ') END AS text
-        |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS l
-        |        FROM documents WHERE doc_id >= 100 AND doc_id < 200)),
-        |gtok AS (SELECT gen_id, string_split_regex(lower(trim(text)), '\s+') AS l
-        |         FROM gensrc),
-        |gg AS (SELECT gen_id,
-        |         CASE WHEN len(l) <= 5 THEN [{'g': array_to_string(l, ' '), 'p': 0}]
-        |              ELSE [{'g': array_to_string(l[i:i+4], ' '), 'p': i - 1}
-        |                    for i in range(1, len(l) - 3)] END AS gl
-        |       FROM gtok),
-        |gsel AS (SELECT gen_id,
-        |           CASE WHEN len(gl) <= 4 THEN [list_sort(gl)[1]]
-        |                ELSE [list_sort(gl[i+1:i+4])[1]
-        |                      for i in range(0, len(gl) - 3)] END AS s
-        |         FROM gg),
-        |gfp AS (SELECT DISTINCT gen_id, f.g AS gram, f.p AS pos
-        |        FROM (SELECT gen_id, unnest(s) AS f FROM gsel)),
-        |ctok AS (SELECT string_split_regex(lower(trim(text)), '\s+') AS l
-        |         FROM documents WHERE doc_id >= 100),
-        |cg AS (SELECT CASE WHEN len(l) <= 5 THEN [array_to_string(l, ' ')]
-        |              ELSE [array_to_string(l[i:i+4], ' ')
-        |                    for i in range(1, len(l) - 3)] END AS gl
-        |       FROM ctok),
-        |csel AS (SELECT CASE WHEN len(gl) <= 4 THEN [list_sort(gl)[1]]
-        |                ELSE [list_sort(gl[i+1:i+4])[1]
-        |                      for i in range(0, len(gl) - 3)] END AS s
-        |         FROM cg),
-        |cfp AS (SELECT DISTINCT g AS gram FROM (SELECT unnest(s) AS g FROM csel)),
-        |m AS (SELECT gen_id, pos FROM gfp JOIN cfp USING (gram)),
-        |lg AS (SELECT gen_id, pos,
-        |         CASE WHEN pos - lag(pos) OVER (PARTITION BY gen_id ORDER BY pos)
-        |              > 13 THEN 1 ELSE 0 END AS gap
-        |       FROM m),
-        |isl AS (SELECT gen_id, pos,
-        |          sum(gap) OVER (PARTITION BY gen_id ORDER BY pos) AS grp
-        |        FROM lg),
-        |sp AS (SELECT gen_id, min(pos) AS span_start, max(pos) AS span_end,
-        |         CAST(count(*) AS BIGINT) AS n_fps
-        |       FROM isl GROUP BY gen_id, grp)
-        |SELECT gen_id, span_start, span_end, n_fps,
-        |       span_end - span_start + 5 AS span_words
-        |FROM sp WHERE n_fps >= 3""".stripMargin,
-
-    // distinct 3-gram sets per source (mem1's gram replay, keyed by
-    // source), one self-join on the gram, totals joined back; jaccard
-    // and containment rounded identically on both sides
-    "ovl1_source_overlap" ->
-      """WITH tok AS (SELECT source, string_split_regex(lower(trim(text)), '\s+') AS l
-        |             FROM documents),
-        |g AS (SELECT DISTINCT source AS src, gram FROM (
-        |        SELECT source, unnest(
-        |          CASE WHEN len(l) <= 3 THEN [array_to_string(l, ' ')]
-        |               ELSE [array_to_string(l[i:i+2], ' ')
-        |                     for i in range(1, len(l) - 1)] END) AS gram
-        |        FROM tok)),
-        |tot AS (SELECT src, CAST(count(*) AS BIGINT) AS n FROM g GROUP BY 1),
-        |sh AS (SELECT a.src AS source_a, b.src AS source_b,
-        |         CAST(count(*) AS BIGINT) AS shared_grams
-        |       FROM g a JOIN g b USING (gram)
-        |       WHERE a.src < b.src
-        |       GROUP BY 1, 2)
-        |SELECT ta.src AS source_a, tb.src AS source_b,
-        |       COALESCE(sh.shared_grams, 0) AS shared_grams,
-        |       ta.n AS grams_a, tb.n AS grams_b,
-        |       round(COALESCE(sh.shared_grams, 0) * 1.0 /
-        |             (ta.n + tb.n - COALESCE(sh.shared_grams, 0)), 6)
-        |         AS jaccard,
-        |       round(COALESCE(sh.shared_grams, 0) * 1.0 / least(ta.n, tb.n), 6)
-        |         AS containment,
-        |       CAST(0 AS BIGINT) AS ubiquitous_grams
-        |FROM tot ta JOIN tot tb ON ta.src < tb.src
-        |LEFT JOIN sh ON sh.source_a = ta.src AND sh.source_b = tb.src""".stripMargin,
-
-    // same replay with the df-cap: grams in > 6 sources are excluded
-    // from totals and the pair join, and counted once
-    "ovl2_source_overlap_capped" ->
-      """WITH tok AS (SELECT source, string_split_regex(lower(trim(text)), '\s+') AS l
-        |             FROM documents),
-        |g0 AS (SELECT DISTINCT source AS src, gram FROM (
-        |        SELECT source, unnest(
-        |          CASE WHEN len(l) <= 3 THEN [array_to_string(l, ' ')]
-        |               ELSE [array_to_string(l[i:i+2], ' ')
-        |                     for i in range(1, len(l) - 1)] END) AS gram
-        |        FROM tok)),
-        |dfreq AS (SELECT gram, count(*) AS nsrc FROM g0 GROUP BY gram),
-        |nu AS (SELECT CAST(count(*) FILTER (nsrc > 6) AS BIGINT) AS ubiquitous_grams
-        |       FROM dfreq),
-        |g AS (SELECT g0.* FROM g0 JOIN dfreq USING (gram) WHERE dfreq.nsrc <= 6),
-        |tot AS (SELECT src, CAST(count(*) AS BIGINT) AS n FROM g GROUP BY 1),
-        |sh AS (SELECT a.src AS source_a, b.src AS source_b,
-        |         CAST(count(*) AS BIGINT) AS shared_grams
-        |       FROM g a JOIN g b USING (gram)
-        |       WHERE a.src < b.src
-        |       GROUP BY 1, 2)
-        |SELECT ta.src AS source_a, tb.src AS source_b,
-        |       COALESCE(sh.shared_grams, 0) AS shared_grams,
-        |       ta.n AS grams_a, tb.n AS grams_b,
-        |       round(COALESCE(sh.shared_grams, 0) * 1.0 /
-        |             (ta.n + tb.n - COALESCE(sh.shared_grams, 0)), 6)
-        |         AS jaccard,
-        |       round(COALESCE(sh.shared_grams, 0) * 1.0 / least(ta.n, tb.n), 6)
-        |         AS containment,
-        |       (SELECT ubiquitous_grams FROM nu) AS ubiquitous_grams
-        |FROM tot ta JOIN tot tb ON ta.src < tb.src
-        |LEFT JOIN sh ON sh.source_a = ta.src AND sh.source_b = tb.src""".stripMargin,
-
-    // r11: the MMR greedy chain replayed exactly — same candidate
-    // pool (top-25 cosine), same lambda-0.5 marginal score, the k=5
-    // selection rounds unrolled as CTE levels (arg_min on a
-    // [-score, id] key = score desc / id asc, Spark's tie rule)
-    "mmr1_diversified_topk" -> mmrGreedyOracle,
-
-    // full-probe IVF candidates == brute-force candidates (sim2's
-    // verified configuration), so the SAME greedy oracle adjudicates
-    // the composed retrieval->diversify chain
-    "mmr2_diversified_ivf" -> mmrGreedyOracle,
-
-    // r11: both generations' manifests replayed + the O(shards) diff
-    "man2_manifest_diff" ->
-      """WITH ra AS (
-        |  SELECT doc_id % 16 AS shard_id,
-        |         CAST(concat('0x', substr(md5(concat_ws(chr(31),
-        |           coalesce(CAST(doc_id AS VARCHAR), chr(1)),
-        |           coalesce(text, chr(1)))), 1, 15)) AS BIGINT) AS h
-        |  FROM documents),
-        |ma AS (SELECT shard_id, count(*) AS n, bit_xor(h) AS digest
-        |       FROM ra GROUP BY shard_id),
-        |gb AS (
-        |  SELECT doc_id,
-        |         CASE WHEN doc_id % 16 = 3 AND doc_id < 160
-        |              THEN text || ' [rev2]' ELSE text END AS text
-        |  FROM documents
-        |  WHERE NOT (doc_id % 16 = 7 AND doc_id < 100)),
-        |rb AS (
-        |  SELECT doc_id % 16 AS shard_id,
-        |         CAST(concat('0x', substr(md5(concat_ws(chr(31),
-        |           coalesce(CAST(doc_id AS VARCHAR), chr(1)),
-        |           coalesce(text, chr(1)))), 1, 15)) AS BIGINT) AS h
-        |  FROM gb),
-        |mb AS (SELECT shard_id, count(*) AS n, bit_xor(h) AS digest
-        |       FROM rb GROUP BY shard_id)
-        |SELECT shard_id,
-        |       coalesce(ma.n, 0) AS n_docs_a,
-        |       coalesce(mb.n, 0) AS n_docs_b,
-        |       coalesce(ma.n, 0) = coalesce(mb.n, 0) AS count_ok,
-        |       ma.digest IS NOT DISTINCT FROM mb.digest AS digest_ok
-        |FROM ma FULL OUTER JOIN mb USING (shard_id)""".stripMargin,
-
-    // r11: the KLL contracts — DuckDB computes the exact aggregates
-    // and literal trues; Spark computes the booleans FROM THE DATA
-    // (pf3's pattern), so a sketch outside its rank bound fails the
-    // gate
-    "qsk1_kll_quantiles" ->
-      """SELECT lang, count(*) AS n_docs, min(n_chars) AS min_len,
-        |       max(n_chars) AS max_len,
-        |       true AS q50_in_bound, true AS q90_in_bound
-        |FROM documents GROUP BY lang""".stripMargin,
-
-    // n_parts counts PART SKETCHES = groupBy(lang, source) groups; a
-    // NULL source is a group on the Spark side, so the oracle must
-    // count NULL as a distinct value too (chr(1) stand-in), not skip
-    // it the way bare count(DISTINCT) would
-    "qsk2_kll_rollup" ->
-      """SELECT lang,
-        |       count(DISTINCT coalesce(source, chr(1))) AS n_parts,
-        |       count(*) AS n_docs,
-        |       true AS count_preserved,
-        |       true AS q50_in_bound, true AS q90_in_bound
-        |FROM documents GROUP BY lang""".stripMargin,
-
-    // the stream fold's contract equals the batch sketch's: the
-    // lossless count IS the exact per-lang count, the bounds hold
-    "st26_stream_kll" ->
-      """SELECT lang, count(*) AS n_docs,
-        |       true AS q50_in_bound, true AS q90_in_bound
-        |FROM documents GROUP BY lang""".stripMargin,
-
-    // r11: manifest digests replayed with the dq7 md5-xor convention
-    "man1_shard_manifest" -> manifestOracle,
-
-    // the streamed fold must equal the one-shot manifest BYTE-FOR-BYTE
-    // (digest included): same oracle
-    "st27_stream_manifest" -> manifestOracle,
-
-    // replay idHash cut points (ids stay far below the 16-bit-limb
-    // overflow guard, shuf1's precedent) and the three slices; CASE
-    // guards keep the n<3 modulus unevaluated on both engines
-    "fim1_fill_in_middle" ->
-      """WITH tok AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS l
-        |             FROM documents),
-        |c AS (SELECT doc_id, l, len(l) AS n,
-        |        ((doc_id * 2) * 2654435761) % 4294967296 AS h1,
-        |        ((doc_id * 2 + 1) * 2654435761) % 4294967296 AS h2
-        |      FROM tok),
-        |s1 AS (SELECT doc_id, l, n, h2,
-        |         CASE WHEN n >= 3 THEN CAST(h1 % (n - 2) + 1 AS INT) END AS cut1
-        |       FROM c),
-        |s2 AS (SELECT doc_id, l, n, cut1,
-        |         CASE WHEN n >= 3
-        |              THEN CAST(cut1 + 1 + h2 % (n - cut1 - 1) AS INT) END AS cut2
-        |       FROM s1),
-        |parts AS (SELECT doc_id, n >= 3 AS fim_applied,
-        |            CAST(n AS BIGINT) AS n_tokens,
-        |            CASE WHEN n >= 3 THEN array_to_string(l[1:cut1], ' ')
-        |                 ELSE array_to_string(l, ' ') END AS prefix,
-        |            CASE WHEN n >= 3
-        |                 THEN array_to_string(l[cut1+1:cut2], ' ')
-        |                 ELSE '' END AS middle,
-        |            CASE WHEN n >= 3 THEN array_to_string(l[cut2+1:n], ' ')
-        |                 ELSE '' END AS suffix
-        |          FROM s2)
-        |SELECT doc_id, fim_applied, n_tokens, prefix, middle, suffix,
-        |       CASE WHEN fim_applied THEN '<PRE> ' || prefix || ' <SUF> ' ||
-        |            suffix || ' <MID> ' || middle END AS psm
-        |FROM parts""".stripMargin,
-
-    // replay the banded idHash boundary (floor/ceil on n*0.2 / n*0.8
-    // are IEEE-identical) and the two slices; short docs unsplit
-    "inst1_prompt_completion" ->
-      """WITH tok AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS l
-        |             FROM documents),
-        |c AS (SELECT doc_id, l, len(l) AS n,
-        |        (doc_id * 2654435761) % 4294967296 AS h
-        |      FROM tok),
-        |b AS (SELECT doc_id, l, n, h,
-        |        greatest(1, CAST(floor(n * 0.2) AS INT)) AS lo,
-        |        least(n - 1, CAST(ceil(n * 0.8) AS INT)) AS hi
-        |      FROM c),
-        |s AS (SELECT doc_id, l, n,
-        |        CASE WHEN n >= 2
-        |             THEN CAST(lo + h % (hi - lo + 1) AS INT) END AS cut
-        |      FROM b)
-        |SELECT doc_id, n >= 2 AS pair_applied, CAST(n AS BIGINT) AS n_tokens,
-        |       CASE WHEN n >= 2 THEN CAST(cut AS BIGINT)
-        |            ELSE CAST(n AS BIGINT) END AS boundary_tokens,
-        |       CASE WHEN n >= 2 THEN array_to_string(l[1:cut], ' ')
-        |            ELSE array_to_string(l, ' ') END AS prompt,
-        |       CASE WHEN n >= 2 THEN array_to_string(l[cut+1:n], ' ')
-        |            ELSE '' END AS completion
-        |FROM s""".stripMargin,
-
-    // exact-text groups (string equality == the 96-bit hash groups on
-    // any collision-free corpus, dd1's precedent), rolled up by source
-    "dq11_source_dup_rate" ->
-      """WITH g AS (SELECT text, count(*) AS n, min(doc_id) AS first_id
-        |           FROM documents GROUP BY text)
-        |SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(sum(CASE WHEN g.n > 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_dup_docs,
-        |       CAST(sum(CASE WHEN d.doc_id <> g.first_id THEN 1 ELSE 0 END)
-        |         AS BIGINT) AS n_redundant,
-        |       round(sum(CASE WHEN g.n > 1 THEN 1 ELSE 0 END) * 1.0
-        |             / count(*), 6) AS dup_rate
-        |FROM documents d JOIN g USING (text)
-        |GROUP BY d.source""".stripMargin,
-
-    // top-1000 token ranks (freq desc, token asc — deterministic),
-    // OLS over (ln r, ln f) via the same regr_ aggregates
-    "ta11_zipf_slope" ->
-      """WITH tk AS (SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
-        |            FROM documents),
-        |fr AS (SELECT tok, count(*) AS f FROM tk WHERE tok <> '' GROUP BY tok),
-        |top AS (SELECT f, row_number() OVER (ORDER BY f DESC, tok ASC) AS r
-        |        FROM fr ORDER BY f DESC, tok ASC LIMIT 1000)
-        |SELECT CAST(count(*) AS BIGINT) AS n_top,
-        |       round(regr_slope(ln(f), ln(r)), 4) AS zipf_slope,
-        |       round(regr_intercept(ln(f), ln(r)), 4) AS zipf_intercept
-        |FROM top""".stripMargin,
-
-    // pooled n-gram replay per n in 1..3 (range() goes empty when a
-    // doc has fewer than n tokens — same as the kernel's empty array)
-    "eval10_distinct_n" ->
-      """WITH tok AS (SELECT string_split_regex(lower(trim(text)), '\s+') AS l
-        |             FROM documents WHERE doc_id < 100),
-        |g AS (
-        |  SELECT n, unnest([array_to_string(l[i:i+n-1], ' ')
-        |                    for i in range(1, greatest(len(l) - n + 2, 1))]) AS gram
-        |  FROM tok CROSS JOIN (SELECT unnest([1, 2, 3]) AS n))
-        |SELECT CAST(n AS INT) AS n,
-        |       CAST(count(*) AS BIGINT) AS total_grams,
-        |       CAST(count(DISTINCT gram) AS BIGINT) AS distinct_grams,
-        |       round(count(DISTINCT gram) * 1.0 / count(*), 6) AS distinct_ratio
-        |FROM g GROUP BY n""".stripMargin,
-
-    "dd10_contaminated_spans" ->
-      """WITH tok AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS l
-        |             FROM documents),
-        |g AS (
-        |  SELECT doc_id, unnest(
-        |    CASE WHEN len(l) <= 3 THEN [{'pos': 0, 'gram': array_to_string(l, ' ')}]
-        |         ELSE [{'pos': i - 1, 'gram': array_to_string(l[i:i+2], ' ')}
-        |               for i in range(1, len(l) - 1)] END,
-        |    recursive := true)
-        |  FROM tok),
-        |ev AS (SELECT DISTINCT doc_id AS eval_id, gram FROM g WHERE doc_id <= 250),
-        |tr AS (SELECT doc_id AS train_id, pos, gram FROM g WHERE doc_id > 250),
-        |m AS (SELECT train_id, eval_id, pos FROM tr JOIN ev USING (gram)),
-        |isl AS (SELECT train_id, eval_id, pos,
-        |        pos - row_number() OVER (PARTITION BY train_id, eval_id ORDER BY pos) AS grp
-        |        FROM m)
-        |SELECT train_id, eval_id, min(pos) AS span_start, count(*) + 2 AS span_words
-        |FROM isl GROUP BY train_id, eval_id, grp""".stripMargin,
-
-    // the probe's ground truth: every new-vs-corpus pair at exact
-    // 3-gram Jaccard >= 0.8 (the oracle assumes LSH recall 1 on this
-    // dataset — deterministic, verified; planted dups sit at >= 0.9)
-    "dd14_incremental_dedup" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS l
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, list_distinct(
-        |    CASE WHEN len(l) <= 3 THEN [array_to_string(l, ' ')]
-        |         ELSE [array_to_string(l[i:i+2], ' ') for i in range(1, len(l) - 1)] END) AS w
-        |  FROM t)
-        |SELECT n.doc_id AS new_id, c.doc_id AS dup_of,
-        |       len(list_intersect(n.w, c.w))::DOUBLE /
-        |         (len(n.w) + len(c.w) - len(list_intersect(n.w, c.w))) AS jaccard
-        |FROM g n JOIN g c ON n.doc_id > 400 AND c.doc_id <= 400
-        |WHERE len(list_intersect(n.w, c.w))::DOUBLE /
-        |      (len(n.w) + len(c.w) - len(list_intersect(n.w, c.w))) >= 0.8""".stripMargin,
-
-    // ground-truth pairs at >= 0.7 (recall-1 fixture, verified
-    // pair-for-pair; deterministic hash family so the equality is
-    // stable); jaccard is the same I/(A+B-I) division
-    "dd2_dedup_minhash_lsh" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS l
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, list_distinct(
-        |    CASE WHEN len(l) <= 3 THEN [array_to_string(l, ' ')]
-        |         ELSE [array_to_string(l[i:i+2], ' ') for i in range(1, len(l) - 1)] END) AS w
-        |  FROM t)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |       len(list_intersect(a.w, b.w))::DOUBLE /
-        |         (len(a.w) + len(b.w) - len(list_intersect(a.w, b.w))) AS jaccard
-        |FROM g a JOIN g b ON a.doc_id < b.doc_id
-        |WHERE len(list_intersect(a.w, b.w))::DOUBLE /
-        |      (len(a.w) + len(b.w) - len(list_intersect(a.w, b.w))) >= 0.7""".stripMargin,
-
-    // stream == batch: the in-flight LSH gate must emit exactly the
-    // ordered qualifying pairs (recall-1 fixture, dd14 adjudication);
-    // jaccard is the same I/(A+B-I) division of the same exact ints
-    "st14_stream_neardup" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS l
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, list_distinct(
-        |    CASE WHEN len(l) <= 3 THEN [array_to_string(l, ' ')]
-        |         ELSE [array_to_string(l[i:i+2], ' ') for i in range(1, len(l) - 1)] END) AS w
-        |  FROM t)
-        |SELECT n.doc_id AS new_id, c.doc_id AS dup_of,
-        |       len(list_intersect(n.w, c.w))::DOUBLE /
-        |         (len(n.w) + len(c.w) - len(list_intersect(n.w, c.w))) AS jaccard
-        |FROM g n JOIN g c ON n.doc_id > c.doc_id
-        |WHERE len(list_intersect(n.w, c.w))::DOUBLE /
-        |      (len(n.w) + len(c.w) - len(list_intersect(n.w, c.w))) >= 0.8""".stripMargin,
-
-    "link1_fuzzy_match" ->
-      """WITH n AS (
-        |  SELECT doc_id,
-        |         CASE (doc_id // 3) % 8
-        |           WHEN 0 THEN 'john' WHEN 1 THEN 'jane' WHEN 2 THEN 'alice'
-        |           WHEN 3 THEN 'robert' WHEN 4 THEN 'maria' WHEN 5 THEN 'david'
-        |           WHEN 6 THEN 'susan' ELSE 'peter' END AS fn,
-        |         doc_id % 3 AS r, doc_id // 3 AS g
-        |  FROM documents),
-        |nm AS (
-        |  SELECT doc_id,
-        |         (CASE r WHEN 1 THEN substr(fn, 1, length(fn) - 1)
-        |                 WHEN 2 THEN fn || 'e' ELSE fn END)
-        |           || ' fam' || CAST(g AS VARCHAR) AS name
-        |  FROM n),
-        |tok AS (
-        |  SELECT DISTINCT doc_id, lower(trim(name)) AS name, t.token
-        |  FROM nm, unnest(list_filter(
-        |    string_split_regex(lower(trim(name)), '\s+'),
-        |    x -> length(x) > 0)) AS t(token)),
-        |sz AS (SELECT token, count(*) AS bn FROM tok GROUP BY token),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-        |         a.name AS na, b.name AS nb
-        |  FROM tok a JOIN tok b USING (token) JOIN sz USING (token)
-        |  WHERE a.doc_id < b.doc_id AND sz.bn BETWEEN 2 AND 500)
-        |SELECT id_a, id_b, CAST(levenshtein(na, nb) AS BIGINT) AS edit_distance
-        |FROM cand WHERE levenshtein(na, nb) <= 2""".stripMargin,
-
-    "link2_golden_record" ->
-      """WITH RECURSIVE n AS (
-        |  SELECT doc_id,
-        |         CASE (doc_id // 3) % 8
-        |           WHEN 0 THEN 'john' WHEN 1 THEN 'jane' WHEN 2 THEN 'alice'
-        |           WHEN 3 THEN 'robert' WHEN 4 THEN 'maria' WHEN 5 THEN 'david'
-        |           WHEN 6 THEN 'susan' ELSE 'peter' END AS fn,
-        |         doc_id % 3 AS r, doc_id // 3 AS g
-        |  FROM documents),
-        |nm AS (
-        |  SELECT doc_id,
-        |         (CASE r WHEN 1 THEN substr(fn, 1, length(fn) - 1)
-        |                 WHEN 2 THEN fn || 'e' ELSE fn END)
-        |           || ' fam' || CAST(g AS VARCHAR) AS name
-        |  FROM n),
-        |tok AS (
-        |  SELECT DISTINCT doc_id, lower(trim(name)) AS name, t.token
-        |  FROM nm, unnest(list_filter(
-        |    string_split_regex(lower(trim(name)), '\s+'),
-        |    x -> length(x) > 0)) AS t(token)),
-        |sz AS (SELECT token, count(*) AS bn FROM tok GROUP BY token),
-        |p AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM tok a JOIN tok b USING (token) JOIN sz USING (token)
-        |  WHERE a.doc_id < b.doc_id AND sz.bn BETWEEN 2 AND 500
-        |    AND levenshtein(a.name, b.name) <= 2),
-        |e AS (SELECT id_a AS s, id_b AS d FROM p
-        |      UNION SELECT id_b AS s, id_a AS d FROM p),
-        |reach AS (
-        |  SELECT s AS id, s AS label FROM e
-        |  UNION
-        |  SELECT e.s AS id, r.label AS label FROM e JOIN reach r ON e.d = r.id),
-        |cl AS (SELECT id, min(label) AS cluster FROM reach GROUP BY id),
-        |lab AS (
-        |  SELECT nm.doc_id AS id, nm.name,
-        |         coalesce(cl.cluster, nm.doc_id) AS cluster
-        |  FROM nm LEFT JOIN cl ON cl.id = nm.doc_id),
-        |rk AS (
-        |  SELECT cluster, id, name,
-        |         row_number() OVER (PARTITION BY cluster
-        |                            ORDER BY length(name), name, id) AS rn,
-        |         count(*) OVER (PARTITION BY cluster) AS n_members
-        |  FROM lab)
-        |SELECT cluster, id AS golden_id, name AS golden_name,
-        |       n_members
-        |FROM rk WHERE rn = 1""".stripMargin,
-
-    // the oracle IS the quadratic scan the operator avoids — the
-    // blocked result must hash-equal it (recall proof, not estimate)
-    "ed2_deletion_join" ->
-      """WITH n AS (
-        |  SELECT doc_id,
-        |         CASE (doc_id // 3) % 8
-        |           WHEN 0 THEN 'john' WHEN 1 THEN 'jane' WHEN 2 THEN 'alice'
-        |           WHEN 3 THEN 'robert' WHEN 4 THEN 'maria' WHEN 5 THEN 'david'
-        |           WHEN 6 THEN 'susan' ELSE 'peter' END AS fn,
-        |         doc_id % 3 AS r, doc_id // 3 AS g
-        |  FROM documents),
-        |nm AS (
-        |  SELECT doc_id,
-        |         (CASE r WHEN 1 THEN substr(fn, 1, length(fn) - 1)
-        |                 WHEN 2 THEN fn || 'e' ELSE fn END)
-        |           || ' fam' || CAST(g AS VARCHAR) AS name
-        |  FROM n),
-        |w AS (SELECT DISTINCT lower(trim(name)) AS w FROM nm
-        |      WHERE length(lower(trim(name))) > 0)
-        |SELECT a.w AS word_a, b.w AS word_b,
-        |       CAST(levenshtein(a.w, b.w) AS BIGINT) AS edit_distance
-        |FROM w a JOIN w b ON a.w < b.w
-        |WHERE abs(length(a.w) - length(b.w)) <= 1
-        |  AND levenshtein(a.w, b.w) <= 1""".stripMargin,
-
-    "ed1_edit_distance" ->
-      """WITH c AS (
-        |  SELECT doc_id AS id_a, doc_id - doc_id % 5 AS id_b
-        |  FROM documents WHERE doc_id % 5 <> 0),
-        |j AS (
-        |  SELECT c.id_a, c.id_b,
-        |         substr(a.text, 1, 256) AS ta, substr(b.text, 1, 256) AS tb
-        |  FROM c
-        |  JOIN documents a ON a.doc_id = c.id_a
-        |  JOIN documents b ON b.doc_id = c.id_b)
-        |SELECT id_a, id_b,
-        |       CAST(levenshtein(ta, tb) AS BIGINT) AS edit_distance,
-        |       round(1.0 - levenshtein(ta, tb)::DOUBLE /
-        |             greatest(length(ta), length(tb), 1), 4) AS similarity
-        |FROM j""".stripMargin,
-
-    "pf6_histogram" ->
-      """WITH b AS (
-        |  SELECT CASE WHEN o_totalprice < 0 THEN -1
-        |              WHEN o_totalprice >= 500000 THEN 10
-        |              ELSE CAST(least(floor(o_totalprice / 50000), 9) AS BIGINT)
-        |              END AS bucket
-        |  FROM orders WHERE o_totalprice IS NOT NULL),
-        |c AS (SELECT bucket, count(*) AS n FROM b GROUP BY 1),
-        |spine AS (SELECT unnest(range(-1, 11)) AS bucket)
-        |SELECT s.bucket,
-        |       CASE WHEN s.bucket BETWEEN 0 AND 9
-        |            THEN round(s.bucket * 50000.0, 4) END AS lo_bound,
-        |       CASE WHEN s.bucket BETWEEN 0 AND 9
-        |            THEN round((s.bucket + 1) * 50000.0, 4) END AS hi_bound,
-        |       COALESCE(c.n, 0) AS n
-        |FROM spine s LEFT JOIN c USING (bucket)""".stripMargin,
-
-    // same fixture construction, then first-occurrence-wins paragraph
-    // dedup replayed with window functions; string_agg skips the
-    // NULLed losers and reassembles survivors in paragraph order
-    "dd15_paragraph_dedup" ->
-      """WITH base AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |fixture AS (
-        |  SELECT b.doc_id,
-        |         array_to_string(b.w[1:4], ' ') || chr(10) || chr(10) ||
-        |         array_to_string(l.w[5:8], ' ') || chr(10) || chr(10) ||
-        |         array_to_string(b.w[9:10], ' ') AS text
-        |  FROM base b JOIN base l ON l.doc_id = b.doc_id - b.doc_id % 5),
-        |paras AS (
-        |  SELECT doc_id, CAST(i - 1 AS INT) AS para_idx, ps[i] AS para
-        |  FROM (SELECT doc_id, string_split(text, chr(10) || chr(10)) AS ps
-        |        FROM fixture), unnest([1, 2, 3]) AS t(i)),
-        |ranked AS (
-        |  SELECT doc_id, para_idx, para,
-        |         row_number() OVER (PARTITION BY para
-        |                            ORDER BY doc_id, para_idx) AS rk
-        |  FROM paras)
-        |SELECT doc_id,
-        |       string_agg(CASE WHEN rk = 1 THEN para END,
-        |                  chr(10) || chr(10) ORDER BY para_idx) AS clean_text,
-        |       CAST(sum(CASE WHEN rk = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-        |       CAST(sum(CASE WHEN rk <> 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped
-        |FROM ranked GROUP BY doc_id
-        |HAVING sum(CASE WHEN rk = 1 THEN 1 ELSE 0 END) > 0""".stripMargin,
-
-    // connected components via transitive closure: reach(id, label)
-    // accumulates every smaller-id node reachable from id; min(label)
-    // is exactly the min-label cluster id the Spark operator assigns
-    "dd6_jaccard_clusters" ->
-      """WITH RECURSIVE t AS (
-        |  SELECT doc_id, lang,
-        |         list_distinct(string_split_regex(lower(trim(text)), '\s+')) AS w
-        |  FROM documents WHERE doc_id <= 100),
-        |p AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM t a JOIN t b ON a.lang = b.lang AND a.doc_id < b.doc_id
-        |  WHERE len(list_intersect(a.w, b.w))::DOUBLE /
-        |        (len(a.w) + len(b.w) - len(list_intersect(a.w, b.w))) >= 0.5),
-        |e AS (SELECT id_a AS s, id_b AS d FROM p
-        |      UNION SELECT id_b AS s, id_a AS d FROM p),
-        |reach AS (
-        |  SELECT s AS id, s AS label FROM e
-        |  UNION
-        |  SELECT e.s AS id, r.label AS label FROM e JOIN reach r ON e.d = r.id)
-        |SELECT id AS doc_id, min(label) AS cluster FROM reach GROUP BY id""".stripMargin,
-
-    // dd6's components, then sizes and the inverse weight; unclustered
-    // docs are their own singletons
-    "dd26_soft_dedup_weights" ->
-      """WITH RECURSIVE t AS (
-        |  SELECT doc_id, lang,
-        |         list_distinct(string_split_regex(lower(trim(text)), '\s+')) AS w
-        |  FROM documents WHERE doc_id <= 100),
-        |p AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM t a JOIN t b ON a.lang = b.lang AND a.doc_id < b.doc_id
-        |  WHERE len(list_intersect(a.w, b.w))::DOUBLE /
-        |        (len(a.w) + len(b.w) - len(list_intersect(a.w, b.w))) >= 0.5),
-        |e AS (SELECT id_a AS s, id_b AS d FROM p
-        |      UNION SELECT id_b AS s, id_a AS d FROM p),
-        |reach AS (
-        |  SELECT s AS id, s AS label FROM e
-        |  UNION
-        |  SELECT e.s AS id, r.label AS label FROM e JOIN reach r ON e.d = r.id),
-        |cl AS (SELECT id, min(label) AS cluster FROM reach GROUP BY id),
-        |lab AS (SELECT d.doc_id AS id, coalesce(cl.cluster, d.doc_id) AS cluster
-        |        FROM (SELECT doc_id FROM documents WHERE doc_id <= 100) d
-        |        LEFT JOIN cl ON cl.id = d.doc_id),
-        |sz AS (SELECT cluster, count(*) AS cluster_size FROM lab GROUP BY cluster)
-        |SELECT lab.id AS doc_id, lab.cluster,
-        |       CAST(sz.cluster_size AS BIGINT) AS cluster_size,
-        |       round(1.0 / sz.cluster_size, 6) AS weight
-        |FROM lab JOIN sz USING (cluster)""".stripMargin,
-
-    // identical oracle to dd6 — the contraction path must produce the
-    // exact same min-label components as the driver union-find
-    "dd6b_clusters_contraction" ->
-      """WITH RECURSIVE t AS (
-        |  SELECT doc_id, lang,
-        |         list_distinct(string_split_regex(lower(trim(text)), '\s+')) AS w
-        |  FROM documents WHERE doc_id <= 100),
-        |p AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM t a JOIN t b ON a.lang = b.lang AND a.doc_id < b.doc_id
-        |  WHERE len(list_intersect(a.w, b.w))::DOUBLE /
-        |        (len(a.w) + len(b.w) - len(list_intersect(a.w, b.w))) >= 0.5),
-        |e AS (SELECT id_a AS s, id_b AS d FROM p
-        |      UNION SELECT id_b AS s, id_a AS d FROM p),
-        |reach AS (
-        |  SELECT s AS id, s AS label FROM e
-        |  UNION
-        |  SELECT e.s AS id, r.label AS label FROM e JOIN reach r ON e.d = r.id)
-        |SELECT id AS doc_id, min(label) AS cluster FROM reach GROUP BY id""".stripMargin,
-
-    // dd6's components + per-cluster argmax on n_chars (ties -> min id)
-    "dd12_cluster_survivors" ->
-      """WITH RECURSIVE t AS (
-        |  SELECT doc_id, lang,
-        |         list_distinct(string_split_regex(lower(trim(text)), '\s+')) AS w
-        |  FROM documents WHERE doc_id <= 100),
-        |p AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM t a JOIN t b ON a.lang = b.lang AND a.doc_id < b.doc_id
-        |  WHERE len(list_intersect(a.w, b.w))::DOUBLE /
-        |        (len(a.w) + len(b.w) - len(list_intersect(a.w, b.w))) >= 0.5),
-        |e AS (SELECT id_a AS s, id_b AS d FROM p
-        |      UNION SELECT id_b AS s, id_a AS d FROM p),
-        |reach AS (
-        |  SELECT s AS id, s AS label FROM e
-        |  UNION
-        |  SELECT e.s AS id, r.label AS label FROM e JOIN reach r ON e.d = r.id),
-        |lab AS (SELECT id, min(label) AS cluster FROM reach GROUP BY id),
-        |j AS (SELECT lab.cluster, lab.id, d.n_chars,
-        |      row_number() OVER (PARTITION BY lab.cluster
-        |                         ORDER BY d.n_chars DESC, lab.id ASC) AS rn
-        |      FROM lab JOIN documents d ON d.doc_id = lab.id)
-        |SELECT cluster, id AS survivor, n_chars AS score FROM j WHERE rn = 1""".stripMargin,
-
-    // the bipartite max-cosine sweep replayed exactly: same norm and
-    // dot folds as sim7, argmax by (cosine DESC, eval_id ASC)
-    "dd24_semantic_decontamination" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding,
-        |         sqrt(list_sum(list_transform(range(1, 65),
-        |           i -> embedding[i] * embedding[i]))) AS nrm
-        |  FROM embeddings),
-        |sc AS (
-        |  SELECT t.vec_id AS train_id, q.vec_id AS eval_id,
-        |         list_sum(list_transform(range(1, 65),
-        |           i -> t.embedding[i] * q.embedding[i]))
-        |           / (t.nrm * q.nrm) AS cosine
-        |  FROM e t JOIN e q ON t.vec_id >= 50 AND q.vec_id < 50
-        |  WHERE t.nrm > 0 AND q.nrm > 0),
-        |f AS (SELECT train_id, eval_id, cosine,
-        |             row_number() OVER (PARTITION BY train_id
-        |               ORDER BY cosine DESC, eval_id ASC) AS rn
-        |      FROM sc WHERE cosine >= 0.35)
-        |SELECT train_id, eval_id, round(cosine, 6) AS cosine
-        |FROM f WHERE rn = 1""".stripMargin,
-
-    "sim7_hard_negatives" ->
-      """WITH e AS (
-        |  SELECT vec_id, label, embedding,
-        |         sqrt(list_sum(list_transform(range(1, 65), i -> embedding[i] * embedding[i]))) AS nrm
-        |  FROM embeddings),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |         c.label AS n_label,
-        |         list_sum(list_transform(range(1, 65), i -> q.embedding[i] * c.embedding[i]))
-        |           / (q.nrm * c.nrm) AS cosine
-        |  FROM e q JOIN e c ON q.vec_id < 10 AND q.label <> c.label
-        |  WHERE q.nrm > 0 AND c.nrm > 0),
-        |ranked AS (
-        |  SELECT query_id, neighbor_id, n_label,
-        |         row_number() OVER (PARTITION BY query_id
-        |                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-        |  FROM scored)
-        |SELECT query_id, neighbor_id, n_label, rank
-        |FROM ranked WHERE rank <= 5""".stripMargin,
-
-    // emb2: the FULL PCA pipeline replayed in SQL — exact integer
-    // moments, then a recursive CTE runs the driver's deflated power
-    // iteration verbatim (fixed LCG init, 200 iterations, ascending
-    // sequential folds everywhere the driver loops ascending, sign
-    // fixed at the first-largest-|loading| index, deflation between
-    // components), then the same dot-minus-meanDot projection.
-    // Bit-equal because both engines do the identical IEEE ops in the
-    // identical order; list_aggregate(..., 'sum') is a sequential
-    // in-order fold like the driver's while-loops
-    // sign(j,i) = parity of md5("graft:j:i")'s first hex char — the
-    // driver-side matrix regenerated in SQL; quantized sums are exact
-    // integers so only the final divide + round are float ops
-    "emb3_jl_project" ->
-      """WITH q AS (
-        |  SELECT vec_id, list_transform(embedding,
-        |           x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS q
-        |  FROM embeddings),
-        |idx AS (SELECT unnest(range(1, 65)) AS i),
-        |e AS (SELECT vec_id, CAST(i - 1 AS INTEGER) AS i0, q[i] AS qv
-        |      FROM q, idx),
-        |d AS (SELECT unnest(range(0, 16)) AS j),
-        |ii AS (SELECT unnest(range(0, 64)) AS i0),
-        |s AS (SELECT d.j, ii.i0,
-        |         CASE WHEN CAST(concat('0x', substr(md5(
-        |                'graft:' || d.j || ':' || ii.i0), 1, 1)) AS INTEGER) % 2 = 0
-        |              THEN 1 ELSE -1 END AS sg
-        |      FROM d, ii)
-        |SELECT e.vec_id, CAST(s.j AS INTEGER) AS dim,
-        |       round(CAST(sum(e.qv * s.sg) AS DOUBLE)
-        |             / (10000.0 * sqrt(CAST(16 AS DOUBLE))), 6) AS value
-        |FROM e JOIN s ON e.i0 = s.i0
-        |GROUP BY 1, 2""".stripMargin,
-
-    // the same quantized-moment replay: mean = s/n, variance =
-    // (ss - s*s/n)/n, z = (q - mean)/sqrt(variance)
-    "emb4_standardize" ->
-      """WITH qv AS (
-        |  SELECT vec_id, list_transform(embedding,
-        |           x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS q
-        |  FROM embeddings),
-        |idx AS (SELECT unnest(range(1, 65)) AS i),
-        |e AS (SELECT vec_id, CAST(i - 1 AS INTEGER) AS dim, q[i] AS qval
-        |      FROM qv, idx),
-        |st AS (SELECT dim, count(*) AS n, CAST(sum(qval) AS BIGINT) AS s,
-        |              CAST(sum(qval * qval) AS BIGINT) AS ss
-        |       FROM e GROUP BY dim),
-        |d AS (SELECT dim, CAST(n AS DOUBLE) AS nd, CAST(s AS DOUBLE) AS sd,
-        |             CAST(ss AS DOUBLE) AS ssd
-        |      FROM st)
-        |SELECT e.vec_id, e.dim,
-        |       CASE WHEN (ssd - sd * sd / nd) / nd > 0.0
-        |            THEN round((CAST(e.qval AS DOUBLE) - sd / nd)
-        |                       / sqrt((ssd - sd * sd / nd) / nd), 6)
-        |       END AS z
-        |FROM e JOIN d USING (dim)""".stripMargin,
-
-    // per-(doc, word) counts then one per-doc reduce
-    "ta10_lexical_richness" ->
-      """WITH tw AS (
-        |  SELECT doc_id, w, count(*) AS n FROM (
-        |    SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS w
-        |    FROM documents) WHERE w <> '' GROUP BY doc_id, w)
-        |SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_tokens,
-        |       CAST(count(*) AS BIGINT) AS n_types,
-        |       round(CAST(count(*) AS DOUBLE) / CAST(sum(n) AS DOUBLE), 6) AS ttr,
-        |       round(CAST(sum(CASE WHEN n = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-        |             / CAST(count(*) AS DOUBLE), 6) AS hapax_frac
-        |FROM tw GROUP BY doc_id""".stripMargin,
-
-    "emb2_pca_project" ->
-      """|WITH RECURSIVE
-        |q AS (SELECT list_transform(embedding,
-        |        x -> CAST(round(CAST(x AS DOUBLE) * 1024.0) AS BIGINT)) AS q
-        |      FROM embeddings),
-        |idx AS (SELECT unnest(range(1, 65)) AS i),
-        |nrow AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM q),
-        |s AS (SELECT i, CAST(sum(q[i]) AS BIGINT) AS si FROM q, idx GROUP BY i),
-        |p AS (SELECT ii.i AS i, jj.i AS j, CAST(sum(q.q[ii.i] * q.q[jj.i]) AS BIGINT) AS pij
-        |      FROM q, idx ii, idx jj GROUP BY 1, 2),
-        |cov AS (SELECT p.i, p.j,
-        |        (CAST(p.pij AS DOUBLE)
-        |         - (CAST(si.si AS DOUBLE) * CAST(sj.si AS DOUBLE)) / nr.n)
-        |          / nr.n / 1048576.0 AS c
-        |        FROM p JOIN s si ON si.i = p.i JOIN s sj ON sj.i = p.j, nrow nr),
-        |covrows AS (SELECT i, list(c ORDER BY j) AS mrow FROM cov GROUP BY i),
-        |covm AS (SELECT list(mrow ORDER BY i) AS m FROM covrows),
-        |v0 AS (SELECT list_transform(range(1, 65),
-        |         i -> CAST((i * 2654435761) % 4294967296 AS DOUBLE) / 4294967296.0 - 0.5) AS v),
-        |v0n AS (SELECT list_transform(v, x -> x / n0) AS v
-        |        FROM (SELECT v, sqrt(list_aggregate(list_transform(v, y -> y * y), 'sum')) AS n0
-        |              FROM v0)),
-        |st AS (
-        |  SELECT 0 AS c, 0 AS it, (SELECT v FROM v0n) AS v, (SELECT m FROM covm) AS m,
-        |         CAST([] AS DOUBLE[][]) AS comps, CAST([] AS DOUBLE[]) AS lambdas
-        |  UNION ALL
-        |  SELECT
-        |    CASE WHEN it < 200 THEN c ELSE c + 1 END,
-        |    CASE WHEN it < 200 THEN it + 1 ELSE 0 END,
-        |    CASE WHEN it < 200 THEN
-        |        CASE WHEN nrm > 0 THEN list_transform(w, x -> x / nrm) ELSE v END
-        |      ELSE (SELECT v FROM v0n) END,
-        |    CASE WHEN it < 200 THEN m
-        |      ELSE [list_transform(range(1, 65), j -> m[i][j] - lam * vs[i] * vs[j])
-        |            for i in range(1, 65)] END,
-        |    CASE WHEN it < 200 THEN comps ELSE list_append(comps, vs) END,
-        |    CASE WHEN it < 200 THEN lambdas ELSE list_append(lambdas, lam) END
-        |  FROM (
-        |    SELECT s2.*,
-        |      CASE WHEN it < 200 THEN
-        |        sqrt(list_aggregate(list_transform(w, x -> x * x), 'sum')) END AS nrm,
-        |      CASE WHEN it >= 200 THEN
-        |        list_transform(v, x -> x * (CASE WHEN v[list_position(
-        |          list_transform(v, y -> abs(y)),
-        |          list_aggregate(list_transform(v, y -> abs(y)), 'max'))] < 0
-        |          THEN -1.0 ELSE 1.0 END)) END AS vs
-        |    FROM (
-        |      SELECT st.*,
-        |        CASE WHEN it < 200 THEN
-        |          list_transform(range(1, 65), i ->
-        |            list_aggregate(list_transform(range(1, 65), j -> m[i][j] * v[j]), 'sum'))
-        |        END AS w,
-        |        CASE WHEN it >= 200 THEN
-        |          list_aggregate(list_transform(range(1, 65), i ->
-        |            v[i] * list_aggregate(
-        |              list_transform(range(1, 65), j -> m[i][j] * v[j]), 'sum')), 'sum')
-        |        END AS lam
-        |      FROM st WHERE c < 2
-        |    ) s2
-        |  ) s3),
-        |fin AS (SELECT comps, lambdas FROM st WHERE c = 2),
-        |meanrow AS (SELECT list(CAST(si AS DOUBLE) / nr.n / 1024.0 ORDER BY i) AS mean
-        |            FROM s, nrow nr),
-        |md AS (SELECT
-        |    list_aggregate(list_transform(range(1, 65),
-        |      i -> mean[i] * f.comps[1][i]), 'sum') AS md1,
-        |    list_aggregate(list_transform(range(1, 65),
-        |      i -> mean[i] * f.comps[2][i]), 'sum') AS md2
-        |  FROM meanrow, fin f)
-        |SELECT e.vec_id,
-        |  list_aggregate(list_transform(range(1, 65),
-        |    i -> CAST(e.embedding[i] AS DOUBLE) * f.comps[1][i]), 'sum') - md.md1 AS pc1,
-        |  list_aggregate(list_transform(range(1, 65),
-        |    i -> CAST(e.embedding[i] AS DOUBLE) * f.comps[2][i]), 'sum') - md.md2 AS pc2
-        |FROM embeddings e, fin f, md""".stripMargin,
-
-    "emb1_label_centroids" ->
-      """SELECT label, t.i - 1 AS pos, round(avg(embedding[t.i]), 4) AS mean_val
-        |FROM embeddings, unnest(range(1, 65)) AS t(i)
-        |GROUP BY 1, 2""".stripMargin,
-
-    "sim8_maxsim_topk" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding,
-        |         sqrt(list_sum(list_transform(range(1, 65), i -> embedding[i] * embedding[i]))) AS nrm
-        |  FROM embeddings),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id // 10 AS doc_id,
-        |         c.vec_id AS chunk_id,
-        |         list_sum(list_transform(range(1, 65), i -> q.embedding[i] * c.embedding[i]))
-        |           / (q.nrm * c.nrm) AS cosine
-        |  FROM e q JOIN e c ON q.vec_id < 5),
-        |agg AS (
-        |  SELECT query_id, doc_id, max(cosine) AS mc FROM scored GROUP BY 1, 2),
-        |best AS (
-        |  SELECT s.query_id, s.doc_id, a.mc, min(s.chunk_id) AS best_chunk
-        |  FROM scored s JOIN agg a
-        |    ON s.query_id = a.query_id AND s.doc_id = a.doc_id
-        |   AND s.cosine = a.mc
-        |  GROUP BY s.query_id, s.doc_id, a.mc),
-        |ranked AS (
-        |  SELECT query_id, doc_id, best_chunk,
-        |         row_number() OVER (PARTITION BY query_id
-        |                            ORDER BY mc DESC, doc_id ASC) AS rank
-        |  FROM best)
-        |SELECT query_id, doc_id, best_chunk, rank FROM ranked
-        |WHERE rank <= 5""".stripMargin,
-
-    "sim1_bruteforce_topk" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding,
-        |         sqrt(list_sum(list_transform(range(1, 65), i -> embedding[i] * embedding[i]))) AS nrm
-        |  FROM embeddings),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |         list_sum(list_transform(range(1, 65), i -> q.embedding[i] * c.embedding[i]))
-        |           / (q.nrm * c.nrm) AS cosine
-        |  FROM e q JOIN e c ON q.vec_id < 10 AND q.vec_id <> c.vec_id),
-        |ranked AS (
-        |  SELECT query_id, neighbor_id,
-        |         row_number() OVER (PARTITION BY query_id
-        |                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-        |  FROM scored)
-        |SELECT query_id, neighbor_id, rank FROM ranked WHERE rank <= 5""".stripMargin,
-
-    // recall-1 adjudication at the pinned 16x2 multi-probe banding:
-    // candidate generation provably covers every true neighbor (miss
-    // <= (θ/π)^32), so the exact-cosine rank stage reproduces the
-    // brute-force sweep — the oracle IS sim1's exhaustive top-k
-    "sim3_lsh_topk" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding,
-        |         sqrt(list_sum(list_transform(range(1, 65), i -> embedding[i] * embedding[i]))) AS nrm
-        |  FROM embeddings),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |         list_sum(list_transform(range(1, 65), i -> q.embedding[i] * c.embedding[i]))
-        |           / (q.nrm * c.nrm) AS cosine
-        |  FROM e q JOIN e c ON q.vec_id < 10 AND q.vec_id <> c.vec_id),
-        |ranked AS (
-        |  SELECT query_id, neighbor_id,
-        |         row_number() OVER (PARTITION BY query_id
-        |                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-        |  FROM scored)
-        |SELECT query_id, neighbor_id, rank FROM ranked WHERE rank <= 5""".stripMargin,
-
-    "sim2_ivf_topk" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding,
-        |         sqrt(list_sum(list_transform(range(1, 65), i -> embedding[i] * embedding[i]))) AS nrm
-        |  FROM embeddings),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |         list_sum(list_transform(range(1, 65), i -> q.embedding[i] * c.embedding[i]))
-        |           / (q.nrm * c.nrm) AS cosine
-        |  FROM e q JOIN e c ON q.vec_id < 10 AND q.vec_id <> c.vec_id),
-        |ranked AS (
-        |  SELECT query_id, neighbor_id,
-        |         row_number() OVER (PARTITION BY query_id
-        |                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-        |  FROM scored)
-        |SELECT query_id, neighbor_id, rank FROM ranked WHERE rank <= 5""".stripMargin,
-
-    // quantize/dequantize mirrored element-for-element: same scale
-    // (max|x|/127), same round-half-away-from-zero, same float cast in
-    // dequantize — integer outputs (max_abs_q, sum_q) hash-compare
-    // exactly; the error bound is slack enough (x1.0000002) that both
-    // engines' identical-IEEE doubles agree
-    "sim4_quantize" ->
-      """WITH q AS (
-        |  SELECT vec_id, embedding,
-        |         greatest(list_max(list_transform(embedding, x -> abs(x))),
-        |                  CAST(1e-30 AS FLOAT)) / 127.0 AS scale
-        |  FROM embeddings),
-        |qq AS (
-        |  SELECT vec_id, embedding, scale,
-        |         list_transform(embedding, x -> CAST(round(x / scale) AS TINYINT)) AS qv
-        |  FROM q)
-        |SELECT vec_id, len(qv) AS n_dims,
-        |       CAST(list_max(list_transform(qv, x -> abs(x))) AS INT) AS max_abs_q,
-        |       CAST(list_sum(qv) AS BIGINT) AS sum_q,
-        |       list_max(list_transform(range(1, 65), i ->
-        |         abs(CAST(CAST(qv[i] * scale AS FLOAT) AS DOUBLE)
-        |             - CAST(embedding[i] AS DOUBLE)))) <= scale * 0.5000001
-        |         AS err_within_bound
-        |FROM qq""".stripMargin,
-
-    // brute force over int8-quantized vectors (same scale formula and
-    // rounding as sim4); full-probe IVF must reproduce these ranks
-    // exactly — integer products make every cosine value exact in
-    // double, independent of accumulation order
-    "sim6_ivf_quantized" ->
-      """WITH s AS (
-        |  SELECT vec_id, embedding,
-        |         greatest(list_max(list_transform(embedding, x -> abs(x))),
-        |                  CAST(1e-30 AS FLOAT)) / 127.0 AS scale
-        |  FROM embeddings),
-        |q AS (
-        |  SELECT vec_id,
-        |         list_transform(embedding, x -> CAST(round(x / scale) AS TINYINT)) AS qv
-        |  FROM s),
-        |e AS (
-        |  SELECT vec_id, qv,
-        |         sqrt(list_sum(list_transform(range(1, 65),
-        |           i -> CAST(qv[i] AS DOUBLE) * qv[i]))) AS nrm
-        |  FROM q),
-        |scored AS (
-        |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-        |         list_sum(list_transform(range(1, 65),
-        |           i -> CAST(a.qv[i] AS DOUBLE) * b.qv[i])) / (a.nrm * b.nrm) AS cosine
-        |  FROM e a JOIN e b ON a.vec_id < 10 AND a.vec_id <> b.vec_id
-        |  WHERE a.nrm > 0 AND b.nrm > 0),
-        |ranked AS (
-        |  SELECT query_id, neighbor_id,
-        |         row_number() OVER (PARTITION BY query_id
-        |                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-        |  FROM scored)
-        |SELECT query_id, neighbor_id, rank FROM ranked WHERE rank <= 5""".stripMargin,
-
-    // exact marginal counts, three divides, NULL kappa when pe = 1
-    "ab5_cohens_kappa" ->
-      """WITH b AS (
-        |  SELECT lang AS r1,
-        |         CASE WHEN doc_id % 7 = 0 THEN 'en' ELSE lang END AS r2
-        |  FROM documents WHERE lang IS NOT NULL),
-        |t AS (SELECT count(*) AS n,
-        |             sum(CASE WHEN r1 = r2 THEN 1 ELSE 0 END) AS n_agree
-        |      FROM b),
-        |m1 AS (SELECT r1 AS cat, count(*) AS n1 FROM b GROUP BY 1),
-        |m2 AS (SELECT r2 AS cat, count(*) AS n2 FROM b GROUP BY 1),
-        |p AS (SELECT coalesce(sum(n1 * n2), 0) AS pe_num
-        |      FROM m1 JOIN m2 USING (cat))
-        |SELECT CAST(n AS BIGINT) AS n, CAST(n_agree AS BIGINT) AS n_agree,
-        |       round(CAST(n_agree AS DOUBLE) / CAST(n AS DOUBLE), 6)
-        |         AS p_observed,
-        |       round(CAST(pe_num AS DOUBLE)
-        |             / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)), 6) AS p_expected,
-        |       CASE WHEN CAST(pe_num AS DOUBLE)
-        |                 / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) < 1.0
-        |            THEN round((CAST(n_agree AS DOUBLE) / CAST(n AS DOUBLE)
-        |                        - CAST(pe_num AS DOUBLE)
-        |                          / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)))
-        |                       / (1.0 - CAST(pe_num AS DOUBLE)
-        |                          / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))), 6)
-        |       END AS kappa
-        |FROM t, p""".stripMargin,
-
-    // sim1's exact CTEs, same-label relevance, the identical log
-    // tree (ln(x)/ln(2)) and in-order ideal fold
-    "eval3_ranking_metrics" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding,
-        |         sqrt(list_sum(list_transform(range(1, 65), i -> embedding[i] * embedding[i]))) AS nrm
-        |  FROM embeddings),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |         list_sum(list_transform(range(1, 65), i -> q.embedding[i] * c.embedding[i]))
-        |           / (q.nrm * c.nrm) AS cosine
-        |  FROM e q JOIN e c ON q.vec_id < 10 AND q.vec_id <> c.vec_id),
-        |ranked AS (
-        |  SELECT query_id, neighbor_id,
-        |         row_number() OVER (PARTITION BY query_id
-        |                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-        |  FROM scored),
-        |topk AS (SELECT query_id, neighbor_id, rank FROM ranked WHERE rank <= 5),
-        |rel AS (SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id
-        |        FROM embeddings a JOIN embeddings b
-        |          ON a.vec_id < 10 AND a.vec_id <> b.vec_id
-        |         AND a.label = b.label),
-        |nrel AS (SELECT query_id, count(*) AS n_rel FROM rel GROUP BY 1),
-        |h AS (SELECT t.query_id, t.rank,
-        |             CASE WHEN r.neighbor_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-        |      FROM topk t LEFT JOIN rel r USING (query_id, neighbor_id)),
-        |m AS (SELECT query_id,
-        |             min(CASE WHEN hit = 1 THEN rank END) AS fr,
-        |             sum(CASE WHEN hit = 1 THEN 1.0 / (ln(rank + 1) / ln(2))
-        |                      ELSE 0.0 END) AS dcg
-        |      FROM h GROUP BY query_id)
-        |SELECT m.query_id, CAST(n.n_rel AS BIGINT) AS n_rel,
-        |       CAST(fr AS BIGINT) AS first_rel_rank,
-        |       round(coalesce(1.0 / fr, 0.0), 6) AS mrr,
-        |       round(dcg / list_aggregate(list_transform(
-        |               range(1, least(5, n.n_rel) + 1),
-        |               i -> 1.0 / (ln(i + 1) / ln(2))), 'sum'), 6) AS ndcg
-        |FROM m JOIN nrel n USING (query_id)""".stripMargin,
-
-    // sim1's exact CTEs + sim6's quantized CTEs, then the recall
-    // join: per query, hits over the exact top-5
-    "eval1_ann_recall" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding,
-        |         sqrt(list_sum(list_transform(range(1, 65), i -> embedding[i] * embedding[i]))) AS nrm
-        |  FROM embeddings),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |         list_sum(list_transform(range(1, 65), i -> q.embedding[i] * c.embedding[i]))
-        |           / (q.nrm * c.nrm) AS cosine
-        |  FROM e q JOIN e c ON q.vec_id < 10 AND q.vec_id <> c.vec_id),
-        |exact AS (
-        |  SELECT query_id, neighbor_id FROM (
-        |    SELECT query_id, neighbor_id,
-        |           row_number() OVER (PARTITION BY query_id
-        |                              ORDER BY cosine DESC, neighbor_id ASC) AS rank
-        |    FROM scored) WHERE rank <= 5),
-        |s AS (
-        |  SELECT vec_id, embedding,
-        |         greatest(list_max(list_transform(embedding, x -> abs(x))),
-        |                  CAST(1e-30 AS FLOAT)) / 127.0 AS scale
-        |  FROM embeddings),
-        |qz AS (
-        |  SELECT vec_id,
-        |         list_transform(embedding, x -> CAST(round(x / scale) AS TINYINT)) AS qv
-        |  FROM s),
-        |eq AS (
-        |  SELECT vec_id, qv,
-        |         sqrt(list_sum(list_transform(range(1, 65),
-        |           i -> CAST(qv[i] AS DOUBLE) * qv[i]))) AS nrm
-        |  FROM qz),
-        |qscored AS (
-        |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-        |         list_sum(list_transform(range(1, 65),
-        |           i -> CAST(a.qv[i] AS DOUBLE) * b.qv[i])) / (a.nrm * b.nrm) AS cosine
-        |  FROM eq a JOIN eq b ON a.vec_id < 10 AND a.vec_id <> b.vec_id
-        |  WHERE a.nrm > 0 AND b.nrm > 0),
-        |approx AS (
-        |  SELECT query_id, neighbor_id FROM (
-        |    SELECT query_id, neighbor_id,
-        |           row_number() OVER (PARTITION BY query_id
-        |                              ORDER BY cosine DESC, neighbor_id ASC) AS rank
-        |    FROM qscored) WHERE rank <= 5)
-        |SELECT x.query_id, CAST(count(*) AS BIGINT) AS n_exact,
-        |       CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-        |            AS BIGINT) AS n_hit,
-        |       round(CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-        |                  AS DOUBLE) / count(*), 6) AS recall
-        |FROM exact x LEFT JOIN approx a USING (query_id, neighbor_id)
-        |GROUP BY x.query_id""".stripMargin,
-
-    "ta1_text_stats" ->
-      """SELECT doc_id,
-        |       length(text) AS n_chars_calc,
-        |       len(string_split_regex(trim(text), '\s+')) AS n_tokens,
-        |       len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) AS n_bpeish,
-        |       length(regexp_replace(text, '[^0-9]', '', 'g')) AS n_digits
-        |FROM documents""".stripMargin,
-
-    "ta2_lang_id" -> langIdOracle,
-
-    "ta7_paragraph_lang" -> ta7OracleSql,
-
-    "ta3_fingerprint" -> ta3Oracle,
-
-    "pipe1_training_pipeline" -> pipe1Oracle,
-
-    // winnowing replay: positional grams as {'g','p'} structs (field
-    // order IS the selection order: gram text then position),
-    // list_sort(...)[1] per 4-window = the lexicographic minimum,
-    // DISTINCT = the fused kernel's consecutive-dup removal
-    "ta6_winnow_fingerprints" ->
-      """WITH tok AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS l
-        |             FROM documents),
-        |g AS (SELECT doc_id,
-        |        CASE WHEN len(l) <= 3 THEN [{'g': array_to_string(l, ' '), 'p': 0}]
-        |             ELSE [{'g': array_to_string(l[i:i+2], ' '), 'p': i - 1}
-        |                   for i in range(1, len(l) - 1)] END AS gl
-        |      FROM tok),
-        |sel AS (SELECT doc_id,
-        |          CASE WHEN len(gl) <= 4 THEN [list_sort(gl)[1]]
-        |               ELSE [list_sort(gl[i+1:i+4])[1]
-        |                     for i in range(0, len(gl) - 3)] END AS s
-        |        FROM g)
-        |SELECT DISTINCT doc_id, CAST(fp.p AS INT) AS pos, fp.g AS gram
-        |FROM (SELECT doc_id, unnest(s) AS fp FROM sel)""".stripMargin,
-
-    // ta6's fingerprint sets joined on collision, df-capped at 1000
-    "dd19_winnow_pairs" ->
-      """WITH tok AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS l
-        |             FROM documents),
-        |g AS (SELECT doc_id,
-        |        CASE WHEN len(l) <= 3 THEN [{'g': array_to_string(l, ' '), 'p': 0}]
-        |             ELSE [{'g': array_to_string(l[i:i+2], ' '), 'p': i - 1}
-        |                   for i in range(1, len(l) - 1)] END AS gl
-        |      FROM tok),
-        |sel AS (SELECT doc_id,
-        |          CASE WHEN len(gl) <= 4 THEN [list_sort(gl)[1]]
-        |               ELSE [list_sort(gl[i+1:i+4])[1]
-        |                     for i in range(0, len(gl) - 3)] END AS s
-        |        FROM g),
-        |fp AS (SELECT DISTINCT doc_id, f.g AS gram
-        |       FROM (SELECT doc_id, unnest(s) AS f FROM sel)),
-        |keep AS (SELECT gram FROM fp GROUP BY gram HAVING count(*) <= 1000)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared_fps
-        |FROM fp a JOIN keep USING (gram) JOIN fp b USING (gram)
-        |WHERE a.doc_id < b.doc_id
-        |GROUP BY 1, 2""".stripMargin,
-
-    "sp1_stratified_sample" ->
-      """SELECT doc_id, lang FROM (
-        |  SELECT doc_id, lang,
-        |         row_number() OVER (PARTITION BY lang
-        |           ORDER BY (doc_id * 2654435761) % 4294967296 ASC, doc_id ASC) AS rn
-        |  FROM documents) WHERE rn <= 10""".stripMargin,
-
-    "sp2_mixture" ->
-      """SELECT doc_id, source FROM documents
-        |WHERE (doc_id * 2654435761) % 4294967296 <
-        |      CASE source WHEN 'src0' THEN 4294967296
-        |                  WHEN 'src1' THEN 2147483648 ELSE -1 END""".stripMargin,
-
-    // dd6's recursive-CTE component labels + the idHash split rule on
-    // coalesce(cluster, doc_id); cuts are floor(frac * 2^32)
-    "sp3_leakage_safe_split" ->
-      """WITH RECURSIVE t AS (
-        |  SELECT doc_id, lang,
-        |         list_distinct(string_split_regex(lower(trim(text)), '\s+')) AS w
-        |  FROM documents WHERE doc_id <= 100),
-        |p AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM t a JOIN t b ON a.lang = b.lang AND a.doc_id < b.doc_id
-        |  WHERE len(list_intersect(a.w, b.w))::DOUBLE /
-        |        (len(a.w) + len(b.w) - len(list_intersect(a.w, b.w))) >= 0.5),
-        |e AS (SELECT id_a AS s, id_b AS d FROM p
-        |      UNION SELECT id_b AS s, id_a AS d FROM p),
-        |reach AS (
-        |  SELECT s AS id, s AS label FROM e
-        |  UNION
-        |  SELECT e.s AS id, r.label AS label FROM e JOIN reach r ON e.d = r.id),
-        |cl AS (SELECT id, min(label) AS cluster FROM reach GROUP BY id)
-        |SELECT d.doc_id,
-        |       CASE WHEN (COALESCE(cl.cluster, d.doc_id) * 2654435761)
-        |                 % 4294967296 < 3435973836 THEN 'train'
-        |            WHEN (COALESCE(cl.cluster, d.doc_id) * 2654435761)
-        |                 % 4294967296 < 3865470566 THEN 'valid'
-        |            ELSE 'test' END AS split
-        |FROM documents d LEFT JOIN cl ON d.doc_id = cl.id""".stripMargin,
-
-    // replay idHash(doc_id * epochs + epoch) and the (epoch, shard)
-    // deal; ids here stay far below the 16-bit-limb overflow guard
-    "shuf1_epoch_shuffle" ->
-      """WITH e AS (
-        |  SELECT doc_id, CAST(ep.epoch AS INT) AS epoch
-        |  FROM documents CROSS JOIN (SELECT unnest(range(0, 3)) AS epoch) ep),
-        |k AS (
-        |  SELECT doc_id, epoch,
-        |         ((doc_id * 3 + epoch) * 2654435761) % 4294967296 AS key
-        |  FROM e)
-        |SELECT epoch, CAST(key % 4 AS INT) AS shard,
-        |       row_number() OVER (PARTITION BY epoch, key % 4
-        |         ORDER BY key ASC, doc_id ASC) AS position,
-        |       doc_id
-        |FROM k""".stripMargin,
-
-    "kmeans1_embedding_clusters" ->
-      (kmeansOracleCtes(8, 2, 64) + "\nSELECT vec_id, cluster FROM af"),
-
-    // the full k-means replay, then per-cluster majority-label counts
-    "eval2_cluster_purity" ->
-      (kmeansOracleCtes(8, 2, 64) + """,
-        |lab AS (SELECT af.cluster, CAST(e.label AS VARCHAR) AS l
-        |        FROM af JOIN embeddings e USING (vec_id)),
-        |cell AS (SELECT cluster, l, count(*) AS n FROM lab GROUP BY 1, 2),
-        |g AS (SELECT cluster, sum(n) AS n, max(n) AS maj FROM cell GROUP BY cluster)
-        |SELECT cluster, CAST(n AS BIGINT) AS n, CAST(maj AS BIGINT) AS majority_n,
-        |       round(CAST(maj AS DOUBLE) / CAST(n AS DOUBLE), 6) AS purity
-        |FROM g""".stripMargin),
-
-    // silhouette over the same replayed fit: af carries own-assignment
-    // and d_own; the runner-up distance re-ranks against the final
-    // centroid table
-    "kmeans2_silhouette" ->
-      (kmeansOracleCtes(8, 2, 64) + """,
-        |dall AS (
-        |  SELECT e.vec_id, c.cid,
-        |         list_distance(CAST(e.embedding AS DOUBLE[]), c.cv) AS d
-        |  FROM embeddings e CROSS JOIN c2 c),
-        |nxt AS (
-        |  SELECT d.vec_id, min(d.d) AS d_next
-        |  FROM dall d JOIN af a ON a.vec_id = d.vec_id AND d.cid <> a.cluster
-        |  GROUP BY 1),
-        |s AS (
-        |  SELECT a.cluster,
-        |         CASE WHEN greatest(a.dist, n.d_next) > 0
-        |              THEN (n.d_next - a.dist) / greatest(a.dist, n.d_next)
-        |              ELSE 0.0 END AS sil
-        |  FROM af a JOIN nxt n USING (vec_id))
-        |SELECT cluster, CAST(count(*) AS BIGINT) AS n_points,
-        |       round(avg(sil), 6) AS mean_silhouette
-        |FROM s GROUP BY 1""".stripMargin),
-
-    // the stream must land exactly where the batch assignment does
-    "st10_stream_cluster_assign" ->
-      (kmeansOracleCtes(8, 2, 64) + "\nSELECT vec_id, cluster FROM af"),
-
-    // streaming encode == batch codes (sim9's training replay)
-    "st15_stream_pq_codes" -> sim9Oracle,
-
-    // drift monitor replay: same codebook/assignment replay as sim9,
-    // then the exact ADC own-code residual doubles, quantized to
-    // BIGINTs (order-free sums), grouped by the parity batch key
-    "st16_stream_pq_drift" -> st16Oracle,
-
-    "div1_diversity_sample" ->
-      (kmeansOracleCtes(8, 2, 64) + """
-        |SELECT cluster, vec_id, rank FROM (
-        |  SELECT cluster, vec_id,
-        |         row_number() OVER (PARTITION BY cluster
-        |           ORDER BY dist ASC, vec_id ASC) AS rank
-        |  FROM af) WHERE rank <= 3""".stripMargin),
-
-    "dd16_semantic_pairs" ->
-      (kmeansOracleCtes(8, 2, 64) + ",\n" + semanticPairCte + """
-        |SELECT id_a, id_b, cluster, round(cos, 6) AS cos_sim FROM p
-        |WHERE cos >= 0.35 AND isfinite(cos)""".stripMargin),
-
-    // the kmeans CTE chain + within-cluster pairs + recursive
-    // connected components; survivors = min-id per component plus
-    // every unpaired vector
-    "dd17_semantic_survivors" ->
-      (kmeansOracleCtes(8, 2, 64).replaceFirst("WITH ", "WITH RECURSIVE ") +
-        ",\n" + semanticPairCte + """,
-        |pf AS (SELECT id_a, id_b FROM p
-        |       WHERE cos >= 0.35 AND isfinite(cos)),
-        |e AS (SELECT id_a AS s, id_b AS d FROM pf
-        |      UNION SELECT id_b AS s, id_a AS d FROM pf),
-        |reach AS (
-        |  SELECT s AS id, s AS label FROM e
-        |  UNION
-        |  SELECT e.s AS id, r.label AS label FROM e JOIN reach r ON e.d = r.id),
-        |cc AS (SELECT id, min(label) AS cluster FROM reach GROUP BY id)
-        |SELECT vec_id FROM embeddings
-        |WHERE vec_id NOT IN (SELECT id FROM cc WHERE id <> cluster)""".stripMargin),
-
-    "pf7_percentile_bins" ->
-      """WITH c AS (
-        |  SELECT quantile_cont(n_chars,
-        |    [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS q
-        |  FROM documents)
-        |SELECT doc_id, n_chars,
-        |       (n_chars > q[1])::INT + (n_chars > q[2])::INT
-        |     + (n_chars > q[3])::INT + (n_chars > q[4])::INT
-        |     + (n_chars > q[5])::INT + (n_chars > q[6])::INT
-        |     + (n_chars > q[7])::INT + (n_chars > q[8])::INT
-        |     + (n_chars > q[9])::INT AS bin
-        |FROM documents, c""".stripMargin,
-
-    // chr(769) = U+0301 combining acute, chr(778) = U+030A combining
-    // ring — DuckDB's nfc_normalize must compose them exactly like
-    // the JDK normalizer inside the codegen expression
-    "tn2_nfc_normalize" ->
-      """SELECT doc_id,
-        |       nfc_normalize(text || ' e' || chr(769) || ' A' || chr(778)) AS nfc,
-        |       length(nfc_normalize(text || ' e' || chr(769) || ' A' || chr(778)))
-        |         AS nfc_len
-        |FROM documents""".stripMargin,
-
-    "tn1_normalize" ->
-      """SELECT doc_id,
-        |       trim(regexp_replace(regexp_replace(lower(
-        |         regexp_replace(text, '[\x00-\x1f\x7f]', ' ', 'g')),
-        |         '[^\p{L}\p{N}\s]', '', 'g'), '\s+', ' ', 'g')) AS canonical
-        |FROM documents""".stripMargin,
-
-    "html1_extract_text" ->
-      """WITH f AS (
-        |  SELECT doc_id,
-        |    '<html><head><script type="text/javascript">if(1<2&&3>0){track(''x'');}</script>'
-        |    || '<style media="all">p{color:red}</style><title>Doc ' || CAST(doc_id AS VARCHAR)
-        |    || '</title></head><body><!-- nav --><h1 class="t">Doc ' || CAST(doc_id AS VARCHAR)
-        |    || '</h1><p>' || substr(text, 1, 120)
-        |    || '</p><p>lang &lt;' || lang
-        |    || '&gt;&nbsp;&amp;amp; source &quot;' || source
-        |    || '&quot; &#39;end&#39;</p></body></html>' AS html
-        |  FROM documents),
-        |e AS (
-        |  SELECT doc_id,
-        |    trim(regexp_replace(
-        |      replace(replace(replace(replace(replace(replace(
-        |        regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        |          html,
-        |          '(?is)<script[^>]*>.*?</script>', ' ', 'g'),
-        |          '(?is)<style[^>]*>.*?</style>', ' ', 'g'),
-        |          '(?s)<!--.*?-->', ' ', 'g'),
-        |          '<[^>]*>', ' ', 'g'),
-        |        '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-        |        '&#39;', ''''), '&nbsp;', ' '), '&amp;', '&'),
-        |      '\s+', ' ', 'g')) AS extracted
-        |  FROM f)
-        |SELECT doc_id, extracted, length(extracted) AS n_chars_extracted
-        |FROM e""".stripMargin,
-
-    // identical fixture assembly, regexp_extract_all with the 'i'
-    // option, LIKE-based kind classification
-    "html2_extract_links" ->
-      """WITH h AS (
-        |  SELECT doc_id,
-        |         '<body><a href="http://d' || CAST(doc_id % 7 AS VARCHAR)
-        |         || '.example/p/' || CAST(doc_id AS VARCHAR)
-        |         || '">x</a> <A HREF=''/rel/' || CAST(doc_id AS VARCHAR)
-        |         || '''>y</a> <a class="z" href="#sec-' || CAST(doc_id AS VARCHAR)
-        |         || '">z</a><a href="//cdn.example/lib.js">w</a></body>' AS html
-        |  FROM documents),
-        |u0 AS (
-        |  SELECT doc_id, regexp_extract_all(html,
-        |           'href\s*=\s*["'']([^"'']*)["'']', 1, 'i') AS us
-        |  FROM h),
-        |idx AS (SELECT unnest(range(1, 9)) AS p),
-        |u AS (
-        |  SELECT doc_id, p, us[p] AS u
-        |  FROM u0, idx WHERE p <= len(us))
-        |SELECT doc_id AS doc, CAST(p AS BIGINT) AS link_pos, u AS url,
-        |       CASE WHEN lower(u) LIKE 'http://%' OR lower(u) LIKE 'https://%'
-        |              THEN 'absolute'
-        |            WHEN u LIKE '//%' THEN 'protocol-relative'
-        |            WHEN u LIKE '#%' THEN 'fragment'
-        |            ELSE 'relative' END AS kind
-        |FROM u""".stripMargin,
-
-    "pr1_pagerank" -> pr1OracleSql(5),
-
-    // canonical 3-way join with a < b < c counts each triangle once;
-    // the reversed duplicate edges in the fixture collapse in the
-    // UNION's set semantics like the operator's distinct
-    "pr2_triangles" ->
-      """WITH mx AS (SELECT max(doc_id) AS m FROM documents),
-        |e AS (
-        |  SELECT doc_id AS u, doc_id + 1 AS v FROM documents CROSS JOIN mx
-        |  WHERE doc_id + 1 <= m
-        |  UNION
-        |  SELECT doc_id, doc_id + 2 FROM documents CROSS JOIN mx
-        |  WHERE doc_id + 2 <= m)
-        |SELECT e1.u AS a, e1.v AS b, e2.v AS c
-        |FROM e e1
-        |JOIN e e2 ON e2.u = e1.v
-        |JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v""".stripMargin,
-
-    "pr3_communities" -> pr3OracleSql(4),
-
-    "pr4_kcore" -> pr4OracleSql(4, 3),
-
-    "sk1_salted_distinct" ->
-      """SELECT o_orderpriority, count(DISTINCT o_custkey) AS n_distinct_o_custkey
-        |FROM orders GROUP BY o_orderpriority""".stripMargin,
-
-    "sk2_salted_join" ->
-      """SELECT p_brand, count(*) AS n, round(sum(l_quantity), 2) AS sum_qty
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY 1""".stripMargin,
-
-    "z1_zorder_key" -> z1OracleSql(16),
-
-    // the identical level walk, one recursion step per bit plane
-    "z2_hilbert_key" ->
-      """WITH RECURSIVE base AS (
-        |  SELECT l_orderkey, l_linenumber,
-        |         CAST(l_partkey AS BIGINT) & 255 AS x0,
-        |         CAST(l_suppkey AS BIGINT) & 255 AS y0
-        |  FROM lineitem),
-        |h AS (
-        |  SELECT l_orderkey, l_linenumber, x0 AS x, y0 AS y,
-        |         CAST(0 AS BIGINT) AS d, 7 AS i
-        |  FROM base
-        |  UNION ALL
-        |  SELECT l_orderkey, l_linenumber,
-        |         CASE WHEN ry = 0 THEN CASE WHEN rx = 1 THEN s - 1 - y ELSE y END
-        |              ELSE x END,
-        |         CASE WHEN ry = 0 THEN CASE WHEN rx = 1 THEN s - 1 - x ELSE x END
-        |              ELSE y END,
-        |         d + s * s * xor(rx * 3, ry),
-        |         i - 1
-        |  FROM (SELECT l_orderkey, l_linenumber, x, y, d, i,
-        |               CAST(1 AS BIGINT) << i AS s,
-        |               CAST(CASE WHEN (x & (CAST(1 AS BIGINT) << i)) > 0
-        |                         THEN 1 ELSE 0 END AS BIGINT) AS rx,
-        |               CAST(CASE WHEN (y & (CAST(1 AS BIGINT) << i)) > 0
-        |                         THEN 1 ELSE 0 END AS BIGINT) AS ry
-        |        FROM h WHERE i >= 0) t)
-        |SELECT l_orderkey, l_linenumber, d AS hkey FROM h WHERE i = -1""".stripMargin,
-
-    // post-overwrite table == original months except the two
-    // corrected ones, whose quantities double (counts unchanged)
-    "m10_partition_overwrite" ->
-      """WITH li AS (
-        |  SELECT CAST(year(l_shipdate) * 100 + month(l_shipdate) AS INTEGER)
-        |           AS l_month,
-        |         l_quantity
-        |  FROM lineitem)
-        |SELECT l_month, count(*) AS n,
-        |       round(sum(CASE WHEN l_month IN (199401, 199402)
-        |                      THEN l_quantity * 2 ELSE l_quantity END), 2)
-        |         AS sum_qty
-        |FROM li GROUP BY l_month""".stripMargin,
-
-    "pp1_partition_prune" ->
-      """SELECT (year(l_shipdate) * 100 + month(l_shipdate)) AS l_month,
-        |       count(*) AS n, round(sum(l_quantity), 2) AS sum_qty
-        |FROM lineitem
-        |WHERE (year(l_shipdate) * 100 + month(l_shipdate))
-        |      BETWEEN 199501 AND 199512
-        |GROUP BY 1""".stripMargin,
-
-    "pp2_dynamic_prune" ->
-      """WITH m AS (
-        |  SELECT DISTINCT (year(o_orderdate) * 100 + month(o_orderdate))
-        |           AS d_month
-        |  FROM orders
-        |  WHERE o_orderpriority = '1-URGENT' AND year(o_orderdate) = 1994)
-        |SELECT (year(l_shipdate) * 100 + month(l_shipdate)) AS l_month,
-        |       count(*) AS n, round(sum(l_quantity), 2) AS sum_qty
-        |FROM lineitem JOIN m
-        |  ON (year(l_shipdate) * 100 + month(l_shipdate)) = m.d_month
-        |GROUP BY 1""".stripMargin,
-
-    "fun1_funnel" ->
-      """WITH s1 AS (
-        |  SELECT user_id,
-        |         min(CASE WHEN event_type = 'view'
-        |           THEN CAST(ts AS TIMESTAMP) END) AS t1
-        |  FROM events GROUP BY 1),
-        |s2 AS (
-        |  SELECT e.user_id, min(CAST(e.ts AS TIMESTAMP)) AS t2
-        |  FROM events e JOIN s1 ON e.user_id = s1.user_id
-        |   AND e.event_type = 'click' AND CAST(e.ts AS TIMESTAMP) > s1.t1
-        |  GROUP BY 1),
-        |s3 AS (
-        |  SELECT e.user_id, min(CAST(e.ts AS TIMESTAMP)) AS t3
-        |  FROM events e JOIN s2 ON e.user_id = s2.user_id
-        |   AND e.event_type = 'purchase' AND CAST(e.ts AS TIMESTAMP) > s2.t2
-        |  GROUP BY 1)
-        |SELECT 'view' AS stage, CAST(1 AS BIGINT) AS stage_idx,
-        |       count(t1) AS n_entities FROM s1
-        |UNION ALL
-        |SELECT 'click', 2, count(*) FROM s2
-        |UNION ALL
-        |SELECT 'purchase', 3, count(*) FROM s3""".stripMargin,
-
-    // fun1's ordered first-times, then per-transition epoch_us gaps
-    // with interpolated quantiles over the exact integers
-    "fun2_step_latency" ->
-      """WITH s1 AS (
-        |  SELECT user_id,
-        |         min(CASE WHEN event_type = 'view'
-        |           THEN CAST(ts AS TIMESTAMP) END) AS t1
-        |  FROM events GROUP BY 1),
-        |s2 AS (
-        |  SELECT e.user_id, min(CAST(e.ts AS TIMESTAMP)) AS t2
-        |  FROM events e JOIN s1 ON e.user_id = s1.user_id
-        |   AND e.event_type = 'click' AND CAST(e.ts AS TIMESTAMP) > s1.t1
-        |  GROUP BY 1),
-        |s3 AS (
-        |  SELECT e.user_id, min(CAST(e.ts AS TIMESTAMP)) AS t3
-        |  FROM events e JOIN s2 ON e.user_id = s2.user_id
-        |   AND e.event_type = 'purchase' AND CAST(e.ts AS TIMESTAMP) > s2.t2
-        |  GROUP BY 1),
-        |g12 AS (SELECT epoch_us(t2) - epoch_us(t1) AS gap_us
-        |        FROM s2 JOIN s1 USING (user_id)),
-        |g23 AS (SELECT epoch_us(t3) - epoch_us(t2) AS gap_us
-        |        FROM s3 JOIN s2 USING (user_id))
-        |SELECT 'view' AS from_stage, 'click' AS to_stage,
-        |       CAST(count(*) AS BIGINT) AS n_converted,
-        |       round(quantile_cont(CAST(gap_us AS DOUBLE), 0.5) / 1000000.0, 4)
-        |         AS median_seconds,
-        |       round(quantile_cont(CAST(gap_us AS DOUBLE), 0.9) / 1000000.0, 4)
-        |         AS p90_seconds
-        |FROM g12
-        |UNION ALL
-        |SELECT 'click', 'purchase', CAST(count(*) AS BIGINT),
-        |       round(quantile_cont(CAST(gap_us AS DOUBLE), 0.5) / 1000000.0, 4),
-        |       round(quantile_cont(CAST(gap_us AS DOUBLE), 0.9) / 1000000.0, 4)
-        |FROM g23""".stripMargin,
-
-    // per-candidate groupBy replay; NULL combinations are values
-    "dq11_key_profile" ->
-      """WITH g1 AS (SELECT CAST(o_orderkey AS VARCHAR) AS k, count(*) AS n
-        |            FROM orders GROUP BY 1),
-        |r1 AS (SELECT CAST(sum(n) AS BIGINT) AS n_rows,
-        |              CAST(count(*) AS BIGINT) AS n_distinct FROM g1),
-        |g2 AS (SELECT CAST(o_custkey AS VARCHAR) AS k, count(*) AS n
-        |       FROM orders GROUP BY 1),
-        |r2 AS (SELECT CAST(sum(n) AS BIGINT) AS n_rows,
-        |              CAST(count(*) AS BIGINT) AS n_distinct FROM g2),
-        |g3 AS (SELECT CAST(o_custkey AS VARCHAR) AS k1,
-        |              CAST(o_orderdate AS VARCHAR) AS k2, count(*) AS n
-        |       FROM orders GROUP BY 1, 2),
-        |r3 AS (SELECT CAST(sum(n) AS BIGINT) AS n_rows,
-        |              CAST(count(*) AS BIGINT) AS n_distinct FROM g3),
-        |g4 AS (SELECT CAST(o_orderpriority AS VARCHAR) AS k1,
-        |              CAST(o_orderstatus AS VARCHAR) AS k2, count(*) AS n
-        |       FROM orders GROUP BY 1, 2),
-        |r4 AS (SELECT CAST(sum(n) AS BIGINT) AS n_rows,
-        |              CAST(count(*) AS BIGINT) AS n_distinct FROM g4)
-        |SELECT 'o_orderkey' AS columns, n_rows, n_distinct,
-        |       round(CAST(n_distinct AS DOUBLE) / CAST(n_rows AS DOUBLE), 6)
-        |         AS uniqueness,
-        |       n_distinct = n_rows AS is_key
-        |FROM r1
-        |UNION ALL
-        |SELECT 'o_custkey', n_rows, n_distinct,
-        |       round(CAST(n_distinct AS DOUBLE) / CAST(n_rows AS DOUBLE), 6),
-        |       n_distinct = n_rows FROM r2
-        |UNION ALL
-        |SELECT 'o_custkey,o_orderdate', n_rows, n_distinct,
-        |       round(CAST(n_distinct AS DOUBLE) / CAST(n_rows AS DOUBLE), 6),
-        |       n_distinct = n_rows FROM r3
-        |UNION ALL
-        |SELECT 'o_orderpriority,o_orderstatus', n_rows, n_distinct,
-        |       round(CAST(n_distinct AS DOUBLE) / CAST(n_rows AS DOUBLE), 6),
-        |       n_distinct = n_rows FROM r4""".stripMargin,
-
-    "coh1_retention" ->
-      """WITH e AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
-        |firstw AS (
-        |  SELECT user_id, date_trunc('week', min(ts)) AS cohort_week
-        |  FROM e GROUP BY 1),
-        |act AS (
-        |  SELECT DISTINCT user_id, date_trunc('week', ts) AS w FROM e)
-        |SELECT f.cohort_week,
-        |       CAST(datediff('day', f.cohort_week, a.w) // 7 AS BIGINT)
-        |         AS weeks_since,
-        |       count(*) AS n_users
-        |FROM act a JOIN firstw f USING (user_id)
-        |GROUP BY 1, 2""".stripMargin,
-
-    "dq3_winsorize" ->
-      """WITH cuts AS (
-        |  SELECT quantile_cont(value, 0.05) AS lo,
-        |         quantile_cont(value, 0.95) AS hi
-        |  FROM events)
-        |SELECT event_id, value,
-        |       round(least(greatest(value, (SELECT lo FROM cuts)),
-        |         (SELECT hi FROM cuts)), 4) AS value_w
-        |FROM events""".stripMargin,
-
-    "diff1_table_diff" ->
-      """SELECT c_custkey, 'removed' AS change_type, '' AS changed_cols
-        |FROM customer WHERE c_custkey % 13 = 0
-        |UNION ALL
-        |SELECT c_custkey, 'changed', 'c_acctbal'
-        |FROM customer
-        |WHERE c_custkey % 7 = 0 AND c_custkey % 13 <> 0
-        |  AND round(c_acctbal + 10, 2) IS DISTINCT FROM c_acctbal
-        |UNION ALL
-        |SELECT c_custkey + 10000000, 'added', ''
-        |FROM customer WHERE c_custkey % 17 = 0""".stripMargin,
-
-    "mix2_nucleus_select" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang, n_chars,
-        |         coalesce(sum(n_chars) OVER (PARTITION BY lang
-        |           ORDER BY n_chars DESC, doc_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |           AS before_w,
-        |         sum(n_chars) OVER (PARTITION BY lang) AS total_w
-        |  FROM documents)
-        |SELECT doc_id, lang, n_chars FROM t
-        |WHERE before_w < total_w * 0.5""".stripMargin,
-
-    "sft1_chat_spans" ->
-      """WITH turns AS (
-        |  SELECT doc_id % 40 AS conv_id, doc_id AS ord,
-        |         CASE WHEN (doc_id // 40) % 2 = 0 THEN 'user'
-        |              ELSE 'assistant' END AS role,
-        |         substr(text, 1, 60) AS turn_text
-        |  FROM documents),
-        |seg AS (
-        |  SELECT conv_id, ord, role, turn_text,
-        |         CASE WHEN role = 'assistant' THEN '<|assistant|>' || chr(10)
-        |              ELSE '<|user|>' || chr(10) END
-        |           || turn_text || chr(10) AS seg
-        |  FROM turns),
-        |pos AS (
-        |  SELECT conv_id, ord, role, turn_text,
-        |         CAST(row_number() OVER w AS BIGINT) AS turn_rank,
-        |         CAST(coalesce(sum(length(seg)) OVER (PARTITION BY conv_id
-        |           ORDER BY ord ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |           0) AS BIGINT) AS seg_start
-        |  FROM seg
-        |  WINDOW w AS (PARTITION BY conv_id ORDER BY ord)),
-        |full_t AS (
-        |  SELECT conv_id, string_agg(seg, '' ORDER BY ord) AS full_text
-        |  FROM seg GROUP BY conv_id)
-        |SELECT p.conv_id, p.turn_rank,
-        |       p.seg_start + 14 AS start_char,
-        |       p.seg_start + 14 + length(p.turn_text) AS end_char,
-        |       substr(f.full_text, p.seg_start + 14 + 1, length(p.turn_text))
-        |         AS span_text
-        |FROM pos p JOIN full_t f USING (conv_id)
-        |WHERE p.role = 'assistant'""".stripMargin,
-
-    "pf1_corpus_stats" ->
-      """SELECT lang, count(*) AS n_docs, min(n_chars) AS min_len,
-        |       max(n_chars) AS max_len, round(avg(n_chars), 4) AS mean_len,
-        |       round(quantile_cont(n_chars, 0.5), 4) AS median_len,
-        |       round(quantile_cont(n_chars, 0.95), 4) AS p95_len
-        |FROM documents GROUP BY lang""".stripMargin,
-
-    // pf3/pf5/qf2 contract oracles (r11): DuckDB computes the exact,
-    // deterministic side and literal `true` for each engine-side
-    // bound check — the approximation error bound is the contract
-    "pf3_approx_stats" ->
-      """SELECT lang, count(*) AS n_docs,
-        |       count(DISTINCT n_chars) AS n_distinct_len,
-        |       min(n_chars) AS min_len, max(n_chars) AS max_len,
-        |       round(avg(n_chars), 4) AS mean_len,
-        |       true AS hll_within_5pct, true AS median_bound_ok,
-        |       true AS p95_bound_ok
-        |FROM documents GROUP BY lang""".stripMargin,
-
-    "pf5_sketch_union" ->
-      """WITH toks AS (
-        |  SELECT lang, t.token
-        |  FROM documents,
-        |       unnest(string_split_regex(lower(trim(text)), '\s+')) AS t(token)
-        |  WHERE length(t.token) > 0)
-        |SELECT lang, count(DISTINCT token) AS n_distinct_tokens,
-        |       count(*) AS n_tokens, true AS est_within_5pct
-        |FROM toks GROUP BY lang
-        |UNION ALL
-        |SELECT 'ALL', count(DISTINCT token), count(*), true FROM toks""".stripMargin,
-
-    "qf2_compression_signal" ->
-      """SELECT doc_id, strlen(text) AS n_bytes,
-        |       true AS ratio_in_deflate_bound, true AS doubling_compresses
-        |FROM documents""".stripMargin,
-
-    "pf2_token_freq" ->
-      """WITH toks AS (
-        |  SELECT lang, unnest(string_split_regex(lower(trim(text)), '\s+')) AS token
-        |  FROM documents),
-        |counts AS (
-        |  SELECT lang, token, count(*) AS n FROM toks
-        |  WHERE length(token) > 0 GROUP BY lang, token)
-        |SELECT lang, token, n, rank FROM (
-        |  SELECT lang, token, n,
-        |         row_number() OVER (PARTITION BY lang ORDER BY n DESC, token ASC) AS rank
-        |  FROM counts) WHERE rank <= 5""".stripMargin,
-
-    "pf10_kmv_vocab" ->
-      s"""$kmvSketchCte
-        |SELECT lang, CAST(count(*) AS INT) AS sketch_n, max(hs) AS kth_h,
-        |       ${kmvEstSql("count(*)", "max(hs)")} AS est_distinct
-        |FROM sk GROUP BY lang""".stripMargin,
-
-    "st18_stream_kmv" ->
-      s"""$kmvSketchCte
-        |SELECT lang, rank, hs AS h FROM sk""".stripMargin,
-
-    "pf11_kmv_setops" ->
-      s"""$kmvSketchCte,
-        |gl AS (SELECT DISTINCT lang FROM sk),
-        |pr AS (SELECT a.lang AS group_a, b.lang AS group_b
-        |       FROM gl a JOIN gl b ON a.lang < b.lang),
-        |mem AS (SELECT pr.group_a, pr.group_b, s.hs,
-        |          max(CASE WHEN s.lang = pr.group_a THEN 1 ELSE 0 END) AS in_a,
-        |          max(CASE WHEN s.lang = pr.group_b THEN 1 ELSE 0 END) AS in_b
-        |        FROM pr JOIN sk s ON s.lang = pr.group_a OR s.lang = pr.group_b
-        |        GROUP BY 1, 2, 3),
-        |uu AS (SELECT * FROM (
-        |         SELECT mem.*,
-        |           row_number() OVER (PARTITION BY group_a, group_b ORDER BY hs) AS rk
-        |         FROM mem) WHERE rk <= 128),
-        |ag AS (SELECT group_a, group_b, CAST(count(*) AS INT) AS union_n,
-        |         max(hs) AS kth, sum(in_a * in_b) AS nboth
-        |       FROM uu GROUP BY 1, 2),
-        |fin AS (SELECT group_a, group_b, union_n,
-        |          ${kmvEstSql("union_n", "kth")} AS est_union,
-        |          CAST(nboth AS DOUBLE) / CAST(union_n AS DOUBLE) AS jaccard
-        |        FROM ag)
-        |SELECT group_a, group_b, union_n, est_union, jaccard,
-        |       jaccard * est_union AS est_intersect
-        |FROM fin""".stripMargin,
-
-    "hh1_heavy_hitters" ->
-      """WITH toks AS (
-        |  SELECT t.token
-        |  FROM documents,
-        |       unnest(string_split_regex(lower(trim(text)), '\s+')) AS t(token)
-        |  WHERE length(t.token) > 0),
-        |tot AS (SELECT count(*) AS n_total FROM toks)
-        |SELECT token, count(*) AS n, (SELECT n_total FROM tot) AS n_total
-        |FROM toks GROUP BY token
-        |HAVING count(*) > (SELECT n_total FROM tot) * 0.02""".stripMargin,
-
-    "pii1_redact" -> piiOracle,
-    "priv1_dp_counts" -> priv1Oracle,
-    "priv2_dp_sums" -> priv2Oracle,
-    "priv3_dp_mean" -> priv3Oracle,
-    "tok10_unigram_vocab" -> tok10Oracle,
-    "tok11_unigram_encode" -> tok11Oracle,
-    "qf10_unigram_lm_gate" -> qf10Oracle,
-
-    "pii2_pseudonymize" ->
-      """SELECT c_custkey,
-        |       CASE WHEN c_name IS NOT NULL
-        |            THEN sha256('graft-salt' || c_name) END AS c_name,
-        |       c_mktsegment
-        |FROM customer""".stripMargin,
-
-    "st9_stream_enrich" ->
-      """SELECT e.event_id, e.user_id, CAST(e.ts AS TIMESTAMP) AS ts,
-        |       e.event_type, e.value, c.c_mktsegment
-        |FROM events e
-        |LEFT JOIN customer c ON e.user_id = c.c_custkey""".stripMargin,
-
-    "st11_trending" ->
-      """WITH c AS (
-        |  SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS window_start,
-        |         event_type, count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |r AS (
-        |  SELECT window_start, event_type, n,
-        |         row_number() OVER (PARTITION BY window_start
-        |                            ORDER BY n DESC, event_type ASC) AS rank
-        |  FROM c)
-        |SELECT window_start, rank, event_type, n FROM r WHERE rank <= 3""".stripMargin,
-
-    "qf1_quality_gate" -> qualityGateOracle,
-
-    // full 16-iteration GD trajectory replay — weights bit-identical
-    // by construction (quantized integer gradients, rational squash)
-    "qf9_trained_quality_gate" -> qf9Oracle,
-
-    // the persisted model's weight vector, raw doubles vs the full
-    // trajectory replay (the bit-reproducibility proof)
-    "qf9_train" -> qf9TrainOracle,
-
-    // persist/load roundtrip + generation-guarded load must score
-    // exactly like the in-process weights
-    "qf11_model_store" -> qf9Oracle,
-
-    // re-bin qf9's replayed (rounded) scores into the reliability
-    // report; gaps/ECE terms from the rounded bucket means
-    "eval9_calibration" ->
-      s"""SELECT bin, CAST(count(*) AS BIGINT) AS n_docs,
-         |  round(avg(score), 6) AS avg_score,
-         |  round(avg(lab), 6) AS frac_pos,
-         |  round(abs(round(avg(score), 6) - round(avg(lab), 6)), 6) AS abs_gap,
-         |  round(count(*) * 1.0 / (SELECT count(*) FROM documents) *
-         |    round(abs(round(avg(score), 6) - round(avg(lab), 6)), 6), 6) AS ece_term
-         |FROM (
-         |  SELECT least(CAST(floor(score * 10) AS INT), 9) AS bin, score,
-         |         CASE WHEN is_junk THEN 1.0 ELSE 0.0 END AS lab
-         |  FROM ($qf9Oracle) q)
-         |GROUP BY bin""".stripMargin,
-
-    "qf6_nb_classifier" ->
-      """WITH train AS (
-        |  SELECT doc_id, text, lang = 'en' AS is_en
-        |  FROM documents WHERE doc_id % 3 <> 0),
-        |held AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
-        |ttoks AS (
-        |  SELECT is_en, unnest(string_split_regex(lower(trim(text)), '\s+')) AS term
-        |  FROM train),
-        |model AS (
-        |  SELECT term,
-        |         sum(CASE WHEN is_en THEN 1 ELSE 0 END) AS np,
-        |         sum(CASE WHEN NOT is_en THEN 1 ELSE 0 END) AS nn
-        |  FROM ttoks WHERE term <> '' GROUP BY term),
-        |tot AS (SELECT sum(np) AS p_tot, sum(nn) AS n_tot, count(*) AS v FROM model),
-        |pri AS (SELECT sum(CASE WHEN is_en THEN 1 ELSE 0 END) AS dp,
-        |               sum(CASE WHEN NOT is_en THEN 1 ELSE 0 END) AS dn
-        |        FROM train),
-        |stoks AS (
-        |  SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS term
-        |  FROM held),
-        |stc AS (SELECT doc_id, term, count(*) AS tf FROM stoks
-        |        WHERE term <> '' GROUP BY 1, 2),
-        |dt AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens FROM stc GROUP BY 1),
-        |seen AS (
-        |  SELECT s.doc_id, sum(s.tf * (ln(m.np + 1) - ln(m.nn + 1))) AS ss
-        |  FROM stc s JOIN model m USING (term) GROUP BY 1)
-        |SELECT dt.doc_id, dt.n_tokens,
-        |       round(ln(dp * 1.0 / dn)
-        |             + dt.n_tokens * (ln(n_tot + v) - ln(p_tot + v))
-        |             + coalesce(ss, 0), 4) AS log_odds,
-        |       round(ln(dp * 1.0 / dn)
-        |             + dt.n_tokens * (ln(n_tot + v) - ln(p_tot + v))
-        |             + coalesce(ss, 0), 4) > 0 AS predicted
-        |FROM dt LEFT JOIN seen USING (doc_id), tot, pri""".stripMargin,
-
-    "qf5_blocklist" ->
-      """WITH kw(k) AS (
-        |  SELECT unnest(['merge', 'merge data', 'batch batch', 'slow', 'vector'])),
-        |hits AS (
-        |  SELECT d.doc_id, kw.k,
-        |         CAST((length(d.text) - length(replace(d.text, kw.k, '')))
-        |              / length(kw.k) AS BIGINT) AS n
-        |  FROM documents d CROSS JOIN kw)
-        |SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_matches,
-        |       coalesce(string_agg(CASE WHEN n > 0 THEN k END, ',' ORDER BY k),
-        |                '') AS matched,
-        |       sum(n) = 0 AS keep
-        |FROM hits GROUP BY 1""".stripMargin,
-
-    "pipe2_curation_funnel" -> pipe2Oracle,
-
-    "url1_extract" ->
-      """WITH fx AS (
-        |  SELECT doc_id,
-        |         text || ' http://d' || (doc_id % 7)::VARCHAR ||
-        |         '.example/p/' || doc_id::VARCHAR ||
-        |         ' https://CDN-d' || (doc_id % 4)::VARCHAR ||
-        |         '.Example:8443/x?q=' || doc_id::VARCHAR AS text
-        |  FROM documents)
-        |SELECT doc_id, regexp_replace(u, '[.,;:!?)\]''"]+$', '') AS url,
-        |       lower(regexp_extract(regexp_replace(u, '[.,;:!?)\]''"]+$', ''),
-        |                            '^https?://([^/:?#\s]+)', 1)) AS domain
-        |FROM fx, unnest(regexp_extract_all(text, 'https?://[^\s]+')) AS t(u)""".stripMargin,
-
-    "qf3_domain_gate" ->
-      """WITH fx AS (
-        |  SELECT doc_id,
-        |         text || ' http://d' || (doc_id % 7)::VARCHAR ||
-        |         '.example/p/' || doc_id::VARCHAR ||
-        |         ' https://CDN-d' || (doc_id % 4)::VARCHAR ||
-        |         '.Example:8443/x?q=' || doc_id::VARCHAR AS text
-        |  FROM documents),
-        |urls AS (
-        |  SELECT doc_id,
-        |         lower(regexp_extract(regexp_replace(u, '[.,;:!?)\]''"]+$', ''),
-        |                              '^https?://([^/:?#\s]+)', 1)) AS domain
-        |  FROM fx, unnest(regexp_extract_all(text, 'https?://[^\s]+')) AS t(u)),
-        |blocked AS (
-        |  SELECT DISTINCT doc_id FROM urls
-        |  WHERE domain IN ('d2.example', 'd5.example', 'cdn-d1.example'))
-        |SELECT f.doc_id, f.text FROM fx f
-        |WHERE f.doc_id NOT IN (SELECT doc_id FROM blocked)""".stripMargin,
-
-    "rep1_repetition" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS w
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, CAST(len(w) AS BIGINT) AS n_words,
-        |         CAST(len(list_distinct(w)) AS BIGINT) AS n_distinct_words,
-        |         unnest(list_transform(generate_series(1, len(w) - 1),
-        |           i -> w[i] || ' ' || w[i + 1])) AS gram
-        |  FROM toks WHERE len(w) >= 2),
-        |c AS (
-        |  SELECT doc_id, n_words, n_distinct_words, gram, count(*) AS c
-        |  FROM g GROUP BY doc_id, n_words, n_distinct_words, gram),
-        |ranked AS (
-        |  SELECT *, row_number() OVER (PARTITION BY doc_id
-        |           ORDER BY c DESC, gram ASC) AS rn
-        |  FROM c)
-        |SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_grams,
-        |       min(gram) FILTER (WHERE rn = 1) AS top_gram,
-        |       round(max(c) * 1.0 / greatest(CAST(sum(c) AS BIGINT), 1), 4) AS top_gram_frac,
-        |       round(any_value(n_distinct_words) * 1.0 / greatest(any_value(n_words), 1), 4)
-        |         AS distinct_word_frac
-        |FROM ranked GROUP BY doc_id""".stripMargin,
-
-    "ir1_inverted_index" ->
-      """WITH tok AS (
-        |  SELECT doc_id AS doc, t.token
-        |  FROM documents, unnest(list_filter(
-        |    string_split_regex(lower(trim(text)), '\s+'),
-        |    x -> length(x) > 0)) AS t(token)),
-        |td AS (SELECT token, doc, count(*) AS tf FROM tok GROUP BY 1, 2)
-        |SELECT token, count(*) AS df, CAST(sum(tf) AS BIGINT) AS total_tf,
-        |       array_to_string(list_sort(list(doc))[1:20], ',') AS postings
-        |FROM td GROUP BY token""".stripMargin,
-
-    "ir2_bm25" ->
-      """WITH tok AS (
-        |  SELECT doc_id AS doc, t.token
-        |  FROM documents, unnest(list_filter(
-        |    string_split_regex(lower(trim(text)), '\s+'),
-        |    x -> length(x) > 0)) AS t(token)),
-        |dl AS (SELECT doc, count(*) AS dl FROM tok GROUP BY doc),
-        |stats AS (SELECT count(*) AS n_docs,
-        |                 CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-        |q AS (SELECT * FROM tok WHERE token IN ('join', 'vector', 'spark')),
-        |dfT AS (SELECT token, count(DISTINCT doc) AS df FROM q GROUP BY token),
-        |tf AS (SELECT doc, token, count(*) AS tf FROM q GROUP BY 1, 2)
-        |SELECT tf.doc,
-        |       round(sum(ln((n_docs - df + 0.5) / (df + 0.5) + 1)
-        |         * tf * (1.2 + 1) / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))), 4)
-        |         AS bm25,
-        |       count(*) AS n_terms
-        |FROM tf JOIN dfT USING (token) JOIN dl USING (doc) CROSS JOIN stats
-        |GROUP BY tf.doc""".stripMargin,
-
-    "ir3_phrase_match" ->
-      """WITH tok AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |                             x -> length(x) > 0) AS l
-        |  FROM documents),
-        |m AS (
-        |  SELECT doc_id,
-        |         CASE WHEN len(l) >= 3 THEN
-        |           list_filter(range(1, len(l) - 1),
-        |             i -> l[i] = 'stream' AND l[i+1] = 'table' AND l[i+2] = 'hash')
-        |         ELSE [] END AS ps
-        |  FROM tok)
-        |SELECT doc_id AS doc, CAST(len(ps) AS BIGINT) AS n_matches,
-        |       CAST(ps[1] AS BIGINT) AS first_pos
-        |FROM m WHERE len(ps) > 0""".stripMargin,
-
-    "pmi1_cooccurrence" ->
-      """WITH tok AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |                             x -> length(x) > 0) AS l
-        |  FROM documents),
-        |pos AS (
-        |  SELECT doc_id, unnest([{'p': i, 'tok': l[i]}
-        |                         for i in range(1, len(l) + 1)],
-        |                        recursive := true)
-        |  FROM tok),
-        |pr AS (
-        |  SELECT x.tok AS a, y.tok AS b
-        |  FROM pos x JOIN pos y
-        |    ON x.doc_id = y.doc_id AND y.p > x.p AND y.p <= x.p + 2),
-        |pc AS (SELECT a, b, count(*) AS n_ab FROM pr GROUP BY 1, 2),
-        |uni AS (SELECT tok, count(*) AS n_t FROM pos GROUP BY tok),
-        |tot AS (SELECT (SELECT CAST(sum(n_ab) AS BIGINT) FROM pc) AS n_pairs,
-        |               (SELECT CAST(sum(n_t) AS BIGINT) FROM uni) AS n_tok)
-        |SELECT a, b, n_ab,
-        |       round(ln((CAST(n_ab AS DOUBLE) * n_tok * n_tok)
-        |         / (CAST(n_pairs AS DOUBLE) * ua.n_t * ub.n_t)), 4) AS pmi
-        |FROM pc JOIN uni ua ON pc.a = ua.tok
-        |        JOIN uni ub ON pc.b = ub.tok
-        |        CROSS JOIN tot
-        |WHERE n_ab >= 5""".stripMargin,
-
-    "tf1_top_terms" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS term
-        |  FROM documents),
-        |tc AS (
-        |  SELECT doc_id, term, count(*) AS tf FROM toks
-        |  WHERE term <> '' GROUP BY doc_id, term),
-        |dfq AS (SELECT term, count(*) AS df FROM tc GROUP BY term),
-        |scored AS (
-        |  SELECT doc_id, term, tf, df,
-        |         tf * ln((SELECT count(*) FROM documents) * 1.0 / df) AS tfidf
-        |  FROM tc JOIN dfq USING (term)),
-        |ranked AS (
-        |  SELECT *, row_number() OVER (PARTITION BY doc_id
-        |           ORDER BY tfidf DESC, term ASC) AS rank
-        |  FROM scored)
-        |SELECT doc_id, rank, term, CAST(tf AS BIGINT) AS tf,
-        |       CAST(df AS BIGINT) AS df, round(tfidf, 4) AS tfidf
-        |FROM ranked WHERE rank <= 3""".stripMargin,
-
-    "ta4_unigram_logprob" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS term
-        |  FROM documents),
-        |tc AS (
-        |  SELECT doc_id, term, count(*) AS tf FROM toks
-        |  WHERE term <> '' GROUP BY doc_id, term),
-        |model AS (SELECT term, sum(tf) AS mc FROM tc GROUP BY term),
-        |tot AS (SELECT sum(mc) AS total FROM model)
-        |SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
-        |       round(sum(tf * ln(mc * 1.0 / total)) / sum(tf), 4) AS avg_logprob
-        |FROM tc JOIN model USING (term), tot
-        |GROUP BY doc_id""".stripMargin,
-
-    "qf4_ppl_band" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS term
-        |  FROM documents),
-        |tc AS (
-        |  SELECT doc_id, term, count(*) AS tf FROM toks
-        |  WHERE term <> '' GROUP BY doc_id, term),
-        |model AS (SELECT term, sum(tf) AS mc FROM tc GROUP BY term),
-        |tot AS (SELECT sum(mc) AS total FROM model),
-        |scored AS (
-        |  SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
-        |         round(sum(tf * ln(mc * 1.0 / total)) / sum(tf), 4) AS avg_logprob
-        |  FROM tc JOIN model USING (term), tot
-        |  GROUP BY doc_id),
-        |cuts AS (SELECT round(quantile_cont(avg_logprob, 0.3), 4) AS lo,
-        |                round(quantile_cont(avg_logprob, 0.7), 4) AS hi FROM scored)
-        |SELECT doc_id, n_tokens, avg_logprob,
-        |       CASE WHEN avg_logprob < lo THEN 'tail'
-        |            WHEN avg_logprob >= hi THEN 'head'
-        |            ELSE 'middle' END AS band
-        |FROM scored, cuts""".stripMargin,
-
-    "dsir1_importance_weights" -> dsirOracle(""),
-
-    "dsir2_domain_select" -> dsirOracle(
-      "ORDER BY avg_log_ratio DESC, doc_id ASC LIMIT 50"),
-
-    "ta5_bigram_logprob" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, unnest(list_transform(generate_series(1, len(w) - 1),
-        |           i -> w[i] || ' ' || w[i + 1])) AS term
-        |  FROM toks WHERE len(w) >= 2),
-        |tc AS (
-        |  SELECT doc_id, term, count(*) AS tf FROM g
-        |  WHERE term <> '' GROUP BY doc_id, term),
-        |model AS (SELECT term, sum(tf) AS mc FROM tc GROUP BY term),
-        |tot AS (SELECT sum(mc) AS total FROM model)
-        |SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
-        |       round(sum(tf * ln(mc * 1.0 / total)) / sum(tf), 4) AS avg_logprob
-        |FROM tc JOIN model USING (term), tot
-        |GROUP BY doc_id""".stripMargin,
-
-    // same bigram CTEs as ta5, then the KN decomposition: history
-    // totals + forward/backward continuation counts over MODEL rows
-    "ta9_kn_bigram_logprob" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, unnest(list_transform(generate_series(1, len(w) - 1),
-        |           i -> w[i] || ' ' || w[i + 1])) AS bg
-        |  FROM toks WHERE len(w) >= 2),
-        |tc AS (
-        |  SELECT doc_id, bg, count(*) AS tf FROM g
-        |  WHERE bg <> '' GROUP BY doc_id, bg),
-        |m0 AS (
-        |  SELECT bg, sum(tf) AS c12,
-        |         split_part(bg, ' ', 1) AS w1,
-        |         split_part(bg, ' ', 2) AS w2
-        |  FROM tc GROUP BY bg),
-        |hist AS (SELECT w1, sum(c12) AS c1, count(*) AS n1p_fwd
-        |         FROM m0 GROUP BY w1),
-        |cont AS (SELECT w2, count(*) AS n1p_bwd FROM m0 GROUP BY w2),
-        |ty AS (SELECT count(*) AS n_types FROM m0),
-        |model AS (
-        |  SELECT bg,
-        |         greatest(CAST(c12 AS DOUBLE) - 0.75, 0.0)
-        |           / CAST(c1 AS DOUBLE)
-        |         + 0.75 * CAST(n1p_fwd AS DOUBLE) / CAST(c1 AS DOUBLE)
-        |           * (CAST(n1p_bwd AS DOUBLE) / CAST(n_types AS DOUBLE)) AS p
-        |  FROM m0 JOIN hist USING (w1) JOIN cont USING (w2), ty)
-        |SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_bigrams,
-        |       round(sum(tf * ln(p)) / sum(tf), 4) AS avg_logprob
-        |FROM tc JOIN model USING (bg)
-        |GROUP BY doc_id""".stripMargin,
-
-    "pack1_shards" ->
-      (packOracleCtes("doc_id") +
-        "\nSELECT doc_id, n_tokens, cum, shard FROM a"),
-
-    // replay shard assignment, then the per-shard char layout:
-    // start = sum of (len + sep) over earlier docs in the shard
-    "pack4_concat_offsets" ->
-      (packOracleCtes("doc_id, text") + """
-        |SELECT shard, doc_id,
-        |       CAST(sum(length(text) + 2) OVER (PARTITION BY shard ORDER BY doc_id
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |         - length(text) - 2 AS BIGINT) AS start_char,
-        |       CAST(sum(length(text) + 2) OVER (PARTITION BY shard ORDER BY doc_id
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |         - 2 AS BIGINT) AS end_char
-        |FROM a""".stripMargin),
-
-    "pack5_packed_shards" ->
-      (packOracleCtes("doc_id, text") + """
-        |SELECT shard, count(*) AS n_docs,
-        |       string_agg(text, chr(10) || chr(10) ORDER BY doc_id) AS packed_text,
-        |       CAST(length(string_agg(text, chr(10) || chr(10) ORDER BY doc_id))
-        |         AS BIGINT) AS packed_len
-        |FROM a GROUP BY shard""".stripMargin),
-
-    "pack2_bpeish_shards" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |         CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]'))
-        |           AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, n_tokens,
-        |         sum(n_tokens) OVER (ORDER BY doc_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM t)
-        |SELECT doc_id, n_tokens, CAST(cum AS BIGINT) AS cum,
-        |       CAST(floor((cum - n_tokens) * 1.0 / 4000) AS BIGINT) AS shard
-        |FROM c""".stripMargin,
-
-    // shared trainer + greedy-match replay for tok1/pack3/ch2: learns
-    // the SAME frequency-ranked vocab in SQL (chars + top substrings,
-    // score DESC / token ASC tie-break), then walks each distinct
-    // word with a recursive CTE taking the longest vocab prefix per
-    // step (single chars always advance) — exactly the codegen
-    // matcher's contract
-    "tok1_subword_tokens" ->
-      (subwordCte + "\nSELECT doc_id, n_tokens FROM doctok"),
-
-    // vocab re-learned from the ORIGINAL corpus, greedy walk replayed
-    // over the DRIFTED words with an OOV counter: a step is OOV iff
-    // not even the single character matches the vocab
-    "tok12_oov_rate" -> tok12OracleSql,
-
-    // stream == batch for the stateless coverage gate
-    "st22_stream_oov_gate" -> tok12OracleSql,
-
-    // the BPE training trajectory replayed iteration-by-iteration as
-    // an unrolled CTE chain; the merges table is the output
-    "tok3_bpe_merges" ->
-      (bpeCte(bpeMergeCount) +
-        "\nSELECT rank, l AS lhs, r AS rhs, l || r AS merged FROM mg"),
-
-    // full BLEU replay: clipped n-gram counts via a per-gram
-    // full-outer count join, brevity penalty, ln/exp geometric mean
-    // at round-4 (ta4's log-parity envelope); zero when any pn is 0
-    "eval4_bleu" ->
-      """WITH pr AS (
-        |  SELECT a.doc_id AS pair_id, b.text AS cand, a.text AS ref
-        |  FROM documents a JOIN documents b ON a.doc_id + 100 = b.doc_id
-        |  UNION ALL
-        |  SELECT doc_id + 100000, text, text FROM documents WHERE doc_id < 50),
-        |tok AS (
-        |  SELECT pair_id,
-        |         list_filter(string_split_regex(lower(trim(cand)), '\s+'), x -> x <> '') AS ct,
-        |         list_filter(string_split_regex(lower(trim(ref)),  '\s+'), x -> x <> '') AS rt
-        |  FROM pr),
-        |cg AS (SELECT pair_id, n, array_to_string(ct[i:i+n-1], ' ') AS gram
-        |       FROM tok, unnest([1,2,3,4]) AS ns(n),
-        |            unnest(generate_series(1, len(ct) - n + 1)) AS ix(i)),
-        |rg AS (SELECT pair_id, n, array_to_string(rt[i:i+n-1], ' ') AS gram
-        |       FROM tok, unnest([1,2,3,4]) AS ns(n),
-        |            unnest(generate_series(1, len(rt) - n + 1)) AS ix(i)),
-        |ccnt AS (SELECT pair_id, n, gram, count(*) AS cc FROM cg GROUP BY 1, 2, 3),
-        |rcnt AS (SELECT pair_id, n, gram, count(*) AS rc FROM rg GROUP BY 1, 2, 3),
-        |j AS (SELECT pair_id, n,
-        |        sum(least(coalesce(cc, 0), coalesce(rc, 0))) AS m,
-        |        sum(coalesce(cc, 0)) AS tc, sum(coalesce(rc, 0)) AS tr
-        |      FROM ccnt FULL OUTER JOIN rcnt USING (pair_id, n, gram)
-        |      GROUP BY 1, 2),
-        |st AS (SELECT b.pair_id, b.n,
-        |         coalesce(m, 0) AS m, coalesce(tc, 0) AS tc, coalesce(tr, 0) AS tr
-        |       FROM (SELECT pair_id, n FROM pr, unnest([1,2,3,4]) AS ns(n)) b
-        |       LEFT JOIN j USING (pair_id, n)),
-        |wide AS (SELECT pair_id,
-        |    sum(CASE WHEN n = 1 THEN m END) AS m1, sum(CASE WHEN n = 1 THEN tc END) AS t1,
-        |    sum(CASE WHEN n = 2 THEN m END) AS m2, sum(CASE WHEN n = 2 THEN tc END) AS t2,
-        |    sum(CASE WHEN n = 3 THEN m END) AS m3, sum(CASE WHEN n = 3 THEN tc END) AS t3,
-        |    sum(CASE WHEN n = 4 THEN m END) AS m4, sum(CASE WHEN n = 4 THEN tc END) AS t4,
-        |    sum(CASE WHEN n = 1 THEN tc END) AS c_len,
-        |    sum(CASE WHEN n = 1 THEN tr END) AS r_len
-        |  FROM st GROUP BY 1)
-        |SELECT pair_id,
-        |  CAST(c_len AS BIGINT) AS c_len, CAST(r_len AS BIGINT) AS r_len,
-        |  CAST(m1 AS BIGINT) AS m1, CAST(m2 AS BIGINT) AS m2,
-        |  CAST(m3 AS BIGINT) AS m3, CAST(m4 AS BIGINT) AS m4,
-        |  CASE WHEN c_len = 0 OR m1 = 0 OR t1 = 0 OR m2 = 0 OR t2 = 0
-        |            OR m3 = 0 OR t3 = 0 OR m4 = 0 OR t4 = 0 THEN 0.0
-        |       ELSE round(
-        |         (CASE WHEN c_len >= r_len THEN 1.0
-        |               ELSE exp(1.0 - CAST(r_len AS DOUBLE) / c_len) END)
-        |         * exp((ln(CAST(m1 AS DOUBLE) / t1) + ln(CAST(m2 AS DOUBLE) / t2)
-        |              + ln(CAST(m3 AS DOUBLE) / t3) + ln(CAST(m4 AS DOUBLE) / t4)) / 4), 4)
-        |  END AS bleu
-        |FROM wide""".stripMargin,
-
-    // exact-integer telescoped binomial ratio, one double division
-    "eval8_pass_at_k" ->
-      """WITH tasks AS (
-        |  SELECT doc_id AS task_id,
-        |         CAST(10 + doc_id % 6 AS BIGINT) AS n,
-        |         CAST(least(doc_id % 11, 10 + doc_id % 6) AS BIGINT) AS c
-        |  FROM documents),
-        |p AS (
-        |  SELECT task_id, n AS n_samples, c AS n_correct,
-        |         (n - c - 0) * (n - c - 1) * (n - c - 2) * (n - c - 3) * (n - c - 4) AS num,
-        |         (n - 0) * (n - 1) * (n - 2) * (n - 3) * (n - 4) AS den
-        |  FROM tasks)
-        |SELECT task_id, n_samples, n_correct,
-        |  CASE WHEN n_correct > n_samples OR n_samples < 5 THEN NULL
-        |       WHEN n_samples - n_correct < 5 THEN 1.0
-        |       ELSE round(1.0 - CAST(num AS DOUBLE) / CAST(den AS DOUBLE), 6)
-        |  END AS pass_at_5
-        |FROM p""".stripMargin,
-
-    // chrF replay: char 1..6-grams over whitespace-stripped text,
-    // clipped counts, effective-order averaged P/R, F-beta=2
-    "eval7_chrf" ->
-      """WITH pr AS (
-        |  SELECT a.doc_id AS pair_id, b.text AS cand, a.text AS ref
-        |  FROM documents a JOIN documents b ON a.doc_id + 100 = b.doc_id
-        |  UNION ALL
-        |  SELECT doc_id + 100000, text, text FROM documents WHERE doc_id < 50),
-        |tok AS (
-        |  SELECT pair_id,
-        |         string_split(regexp_replace(lower(cand), '\s+', '', 'g'), '') AS ct,
-        |         string_split(regexp_replace(lower(ref),  '\s+', '', 'g'), '') AS rt
-        |  FROM pr),
-        |cg AS (SELECT pair_id, n, array_to_string(ct[i:i+n-1], '') AS gram
-        |       FROM tok, unnest([1,2,3,4,5,6]) AS ns(n),
-        |            unnest(generate_series(1, len(ct) - n + 1)) AS ix(i)),
-        |rg AS (SELECT pair_id, n, array_to_string(rt[i:i+n-1], '') AS gram
-        |       FROM tok, unnest([1,2,3,4,5,6]) AS ns(n),
-        |            unnest(generate_series(1, len(rt) - n + 1)) AS ix(i)),
-        |ccnt AS (SELECT pair_id, n, gram, count(*) AS cc FROM cg GROUP BY 1, 2, 3),
-        |rcnt AS (SELECT pair_id, n, gram, count(*) AS rc FROM rg GROUP BY 1, 2, 3),
-        |j AS (SELECT pair_id, n,
-        |        sum(least(coalesce(cc, 0), coalesce(rc, 0))) AS m,
-        |        sum(coalesce(cc, 0)) AS tc, sum(coalesce(rc, 0)) AS tr
-        |      FROM ccnt FULL OUTER JOIN rcnt USING (pair_id, n, gram)
-        |      GROUP BY 1, 2),
-        |st AS (SELECT b.pair_id, b.n,
-        |         coalesce(m, 0) AS m, coalesce(tc, 0) AS tc, coalesce(tr, 0) AS tr
-        |       FROM (SELECT pair_id, n FROM pr, unnest([1,2,3,4,5,6]) AS ns(n)) b
-        |       LEFT JOIN j USING (pair_id, n)),
-        |wide AS (SELECT pair_id,
-        |    coalesce(avg(CASE WHEN tc > 0 THEN CAST(m AS DOUBLE) / tc END), 0.0) AS p,
-        |    coalesce(avg(CASE WHEN tr > 0 THEN CAST(m AS DOUBLE) / tr END), 0.0) AS r,
-        |    CAST(sum(m) AS BIGINT) AS total_matches,
-        |    CAST(sum(tc) AS BIGINT) AS cand_grams,
-        |    CAST(sum(tr) AS BIGINT) AS ref_grams
-        |  FROM st GROUP BY 1)
-        |SELECT pair_id, total_matches, cand_grams, ref_grams,
-        |  round(p, 6) AS chr_precision, round(r, 6) AS chr_recall,
-        |  round(CASE WHEN p + r > 0 THEN 5.0 * p * r / (4.0 * p + r)
-        |        ELSE 0.0 END, 6) AS chrf
-        |FROM wide""".stripMargin,
-
-    // token-level levenshtein replay. Levenshtein is invariant under
-    // any injective token relabeling, so the oracle uses its OWN
-    // single-byte ASCII labels (chr(32+pos)) — DuckDB's levenshtein
-    // counts BYTES, so the Spark side's CJK labels would triple
-    // insert/delete costs here; single-byte labels make byte == char.
-    // Valid while every pair's dictionary fits the 94 printable
-    // labels — guarded LOUDLY (error(), the bpeCte rsguard pattern;
-    // fixture max is 31), never silently divergent
-    "eval6_wer" ->
-      """WITH pr AS (
-        |  SELECT a.doc_id AS pair_id, b.text AS cand, a.text AS ref
-        |  FROM documents a JOIN documents b ON a.doc_id + 100 = b.doc_id
-        |  UNION ALL
-        |  SELECT doc_id + 100000, text, text FROM documents WHERE doc_id < 50),
-        |tok AS (
-        |  SELECT pair_id,
-        |         list_filter(string_split_regex(lower(trim(cand)), '\s+'), x -> x <> '') AS ct,
-        |         list_filter(string_split_regex(lower(trim(ref)),  '\s+'), x -> x <> '') AS rt
-        |  FROM pr),
-        |d AS (SELECT pair_id, ct, rt, list_distinct(list_concat(ct, rt)) AS dict
-        |      FROM tok),
-        |guard AS (SELECT CASE WHEN count(*) > 0
-        |         THEN error('pair dictionary exceeds 94 single-byte labels: oracle replay invalid')
-        |         ELSE 0 END AS ok
-        |       FROM d WHERE len(dict) > 94),
-        |e AS (SELECT pair_id, len(ct) AS cand_len, len(rt) AS ref_len,
-        |        levenshtein(
-        |          array_to_string(list_transform(ct, t -> chr(32 + list_position(dict, t))), ''),
-        |          array_to_string(list_transform(rt, t -> chr(32 + list_position(dict, t))), ''))
-        |          AS distance
-        |      FROM d CROSS JOIN guard WHERE guard.ok = 0)
-        |SELECT pair_id,
-        |  CAST(cand_len AS INT) AS cand_len, CAST(ref_len AS INT) AS ref_len,
-        |  CAST(distance AS INT) AS distance,
-        |  CASE WHEN ref_len > 0
-        |       THEN round(CAST(distance AS DOUBLE) / ref_len, 6) END AS wer
-        |FROM e""".stripMargin,
-
-    "eval5_rouge_n" ->
-      """WITH pr AS (
-        |  SELECT a.doc_id AS pair_id, b.text AS cand, a.text AS ref
-        |  FROM documents a JOIN documents b ON a.doc_id + 100 = b.doc_id),
-        |tok AS (
-        |  SELECT pair_id,
-        |         list_filter(string_split_regex(lower(trim(cand)), '\s+'), x -> x <> '') AS ct,
-        |         list_filter(string_split_regex(lower(trim(ref)),  '\s+'), x -> x <> '') AS rt
-        |  FROM pr),
-        |cg AS (SELECT pair_id, n, array_to_string(ct[i:i+n-1], ' ') AS gram
-        |       FROM tok, unnest([1,2]) AS ns(n),
-        |            unnest(generate_series(1, len(ct) - n + 1)) AS ix(i)),
-        |rg AS (SELECT pair_id, n, array_to_string(rt[i:i+n-1], ' ') AS gram
-        |       FROM tok, unnest([1,2]) AS ns(n),
-        |            unnest(generate_series(1, len(rt) - n + 1)) AS ix(i)),
-        |ccnt AS (SELECT pair_id, n, gram, count(*) AS cc FROM cg GROUP BY 1, 2, 3),
-        |rcnt AS (SELECT pair_id, n, gram, count(*) AS rc FROM rg GROUP BY 1, 2, 3),
-        |j AS (SELECT pair_id, n,
-        |        sum(least(coalesce(cc, 0), coalesce(rc, 0))) AS m,
-        |        sum(coalesce(cc, 0)) AS tc, sum(coalesce(rc, 0)) AS tr
-        |      FROM ccnt FULL OUTER JOIN rcnt USING (pair_id, n, gram)
-        |      GROUP BY 1, 2),
-        |st AS (SELECT b.pair_id, b.n,
-        |         coalesce(m, 0) AS m, coalesce(tc, 0) AS tc, coalesce(tr, 0) AS tr
-        |       FROM (SELECT pair_id, n FROM pr, unnest([1,2]) AS ns(n)) b
-        |       LEFT JOIN j USING (pair_id, n))
-        |SELECT pair_id, n,
-        |  CAST(m AS BIGINT) AS matches,
-        |  CAST(tc AS BIGINT) AS cand_total, CAST(tr AS BIGINT) AS ref_total,
-        |  round(CASE WHEN tc > 0 THEN CAST(m AS DOUBLE) / tc ELSE 0.0 END, 6) AS precision,
-        |  round(CASE WHEN tr > 0 THEN CAST(m AS DOUBLE) / tr ELSE 0.0 END, 6) AS recall,
-        |  round(CASE WHEN (CASE WHEN tc > 0 THEN CAST(m AS DOUBLE) / tc ELSE 0.0 END)
-        |           + (CASE WHEN tr > 0 THEN CAST(m AS DOUBLE) / tr ELSE 0.0 END) > 0
-        |        THEN 2.0 * (CASE WHEN tc > 0 THEN CAST(m AS DOUBLE) / tc ELSE 0.0 END)
-        |             * (CASE WHEN tr > 0 THEN CAST(m AS DOUBLE) / tr ELSE 0.0 END)
-        |             / ((CASE WHEN tc > 0 THEN CAST(m AS DOUBLE) / tc ELSE 0.0 END)
-        |              + (CASE WHEN tr > 0 THEN CAST(m AS DOUBLE) / tr ELSE 0.0 END))
-        |        ELSE 0.0 END, 6) AS f1
-        |FROM st""".stripMargin,
-
-    // WordPiece trajectory: likelihood-score ranking replayed per
-    // step (pair counts ⋈ per-step symbol counts)
-    "tok13_wordpiece_merges" ->
-      (wordpieceCte(wpMergeCount) +
-        "\nSELECT rank, l AS lhs, r AS rhs, l || r AS merged FROM mg"),
-
-    "tok14_wordpiece_token_counts" ->
-      (wordpieceCte(wpMergeCount) + "\nSELECT doc_id, n_tokens FROM doctok"),
-
-    // application == training's final segmentation state
-    "tok4_bpe_token_counts" ->
-      (bpeCte(bpeMergeCount) + "\nSELECT doc_id, n_tokens FROM doctok"),
-
-    // id payload replay: tok5's per-doc id strings, pack3's shard
-    // assignment over BPE counts, per-shard ordered string_agg
-    "pack6_token_id_payload" ->
-      (bpeCte(bpeMergeCount) + bpeVocabCtes(bpeCharAlphabetCv) +
-        bpeEncodeCtes(s"s$bpeMergeCount") + """,
-        |cc AS (SELECT doc_id, n_tokens, ids,
-        |       sum(n_tokens) OVER (ORDER BY doc_id
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |       FROM docids)
-        |SELECT CAST(floor((cum - n_tokens) * 1.0 / 2000) AS BIGINT) AS shard,
-        |       CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-        |       string_agg(ids, ' ' ORDER BY doc_id) AS ids_payload
-        |FROM cc GROUP BY 1""".stripMargin),
-
-    // byte-id replay: the CLOSED 256-byte alphabet (ids 1..256 in
-    // byte order) + merges, final segmentations re-encoded per doc
-    "tok9_byte_token_ids" ->
-      (bpeCte(bpeMergeCount, byteLevel = true) +
-        bpeVocabCtes(bpeByteAlphabetCv) +
-        bpeEncodeCtes(s"s$bpeMergeCount") +
-        "\nSELECT doc_id, n_tokens, ids FROM docids"),
-
-    // byte-level trajectory replay: same chain over hex-pair symbols
-    "tok7_byte_bpe_merges" ->
-      (bpeCte(bpeMergeCount, byteLevel = true) +
-        "\nSELECT rank, l AS lhs, r AS rhs, l || r AS merged FROM mg"),
-
-    "tok8_byte_token_counts" ->
-      (bpeCte(bpeMergeCount, byteLevel = true) +
-        "\nSELECT doc_id, n_tokens FROM doctok"),
-
-    // vocab replay: chars ranked ascending, merges offset by |chars|
-    // in learned order, duplicate strings keep their min (first) id
-    "tok6_bpe_vocab" ->
-      (bpeCte(bpeMergeCount) + bpeVocabCtes(bpeCharAlphabetCv) +
-        "\nSELECT tok AS token, id FROM uni"),
-
-    // id encoding replay: final segmentations split back to symbols
-    // with positions, joined to the replayed vocab, re-joined per doc
-    // in word order
-    "tok5_bpe_token_ids" ->
-      (bpeCte(bpeMergeCount) + bpeVocabCtes(bpeCharAlphabetCv) +
-        bpeEncodeCtes(s"s$bpeMergeCount") +
-        "\nSELECT doc_id, n_tokens, ids FROM docids"),
-
-    // trainVocab's array order replayed: alphabet sorted asc, then
-    // substrings by (score desc, tok asc) with offset ranks
-    "tok2_vocab_table" ->
-      (subwordCte + """,
-        |charrank AS (SELECT tok, CAST(row_number() OVER (ORDER BY tok ASC)
-        |                   AS BIGINT) AS rank FROM chars),
-        |nch AS (SELECT count(*) AS n FROM chars)
-        |SELECT tok AS token, rank FROM charrank
-        |UNION ALL
-        |SELECT tok AS token, CAST(rn + (SELECT n FROM nch) AS BIGINT) AS rank
-        |FROM ranked WHERE rn <= 64 - (SELECT n FROM nch)""".stripMargin),
-
-    "pack3_subword_shards" ->
-      (bpeCte(bpeMergeCount) + """,
-        |cc AS (SELECT doc_id, n_tokens,
-        |       sum(n_tokens) OVER (ORDER BY doc_id
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |       FROM doctok)
-        |SELECT doc_id, n_tokens, CAST(cum AS BIGINT) AS cum,
-        |       CAST(floor((cum - n_tokens) * 1.0 / 2000) AS BIGINT) AS shard
-        |FROM cc""".stripMargin),
-
-    "ch2_subword_chunks" ->
-      (bpeCte(bpeMergeCount) + """,
-        |pw AS (SELECT doc_id, unnest([{'pos': i, 'wr': lr[i]}
-        |                              for i in range(1, len(lr)+1)],
-        |                             recursive := true)
-        |       FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS lr
-        |             FROM documents)),
-        |pc AS (SELECT p.doc_id, p.pos, p.wr, t.n
-        |       FROM pw p JOIN wtok t ON t.w = lower(p.wr)),
-        |cw AS (SELECT doc_id, pos, wr, n,
-        |       sum(n) OVER (PARTITION BY doc_id ORDER BY pos
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |       FROM pc),
-        |ci AS (SELECT doc_id, (cum - n) // 64 AS chunk_idx, wr, pos, n FROM cw)
-        |SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
-        |       string_agg(wr, ' ' ORDER BY pos) AS chunk_text,
-        |       CAST(sum(n) AS BIGINT) AS n_tokens
-        |FROM ci GROUP BY doc_id, chunk_idx""".stripMargin),
-
-    "q7_volume_shipping" ->
-      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |       CAST(year(l.l_shipdate) AS BIGINT) AS l_year,
-        |       round(sum(l.l_extendedprice * (1.0 - l.l_discount)), 2) AS revenue
-        |FROM lineitem l
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |JOIN customer c ON o.o_custkey = c.c_custkey
-        |JOIN nation n1 ON s.s_nationkey = n1.n_nationkey
-        |JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
-        |WHERE (n1.n_name = 'NATION_6' AND n2.n_name = 'NATION_7')
-        |   OR (n1.n_name = 'NATION_7' AND n2.n_name = 'NATION_6')
-        |GROUP BY 1, 2, 3""".stripMargin,
-
-    "q10_returned_items" ->
-      """SELECT c.c_custkey, c.c_name, round(c.c_acctbal, 2) AS c_acctbal,
-        |       n.n_name,
-        |       round(sum(l.l_extendedprice * (1.0 - l.l_discount)), 2) AS revenue
-        |FROM lineitem l
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |JOIN customer c ON o.o_custkey = c.c_custkey
-        |JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |WHERE l.l_returnflag = 'R'
-        |  AND o.o_orderdate >= TIMESTAMP '1996-07-01'
-        |  AND o.o_orderdate < TIMESTAMP '1996-10-01'
-        |GROUP BY 1, 2, 3, 4
-        |ORDER BY revenue DESC, c.c_custkey ASC
-        |LIMIT 20""".stripMargin,
-
-    "q18_large_orders" ->
-      """SELECT c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate,
-        |       round(o.o_totalprice, 2) AS o_totalprice,
-        |       round(sum(l.l_quantity), 2) AS total_qty
-        |FROM orders o
-        |JOIN customer c ON o.o_custkey = c.c_custkey
-        |JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-        |WHERE o.o_orderkey IN (
-        |  SELECT l_orderkey FROM lineitem GROUP BY l_orderkey
-        |  HAVING round(sum(l_quantity), 2) > 300)
-        |GROUP BY 1, 2, 3, 4, 5""".stripMargin,
-
-    "q8_market_share" ->
-      """SELECT CAST(year(o.o_orderdate) AS BIGINT) AS o_year,
-        |       round(sum(CASE WHEN sn.n_name = 'NATION_6'
-        |                      THEN l.l_extendedprice * (1.0 - l.l_discount)
-        |                      ELSE 0.0 END)
-        |             / sum(l.l_extendedprice * (1.0 - l.l_discount)), 4) AS mkt_share
-        |FROM lineitem l
-        |JOIN part p ON l.l_partkey = p.p_partkey AND p.p_type = 'ECONOMY'
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |JOIN customer c ON o.o_custkey = c.c_custkey
-        |JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |JOIN nation sn ON s.s_nationkey = sn.n_nationkey
-        |WHERE c.c_nationkey IN (
-        |  SELECT n.n_nationkey FROM nation n
-        |  JOIN region r ON n.n_regionkey = r.r_regionkey
-        |  WHERE r.r_name = 'ASIA')
-        |GROUP BY 1""".stripMargin,
-
-    "q14_promo_revenue" ->
-      """SELECT round(100.0 * sum(CASE WHEN p.p_type = 'PROMO'
-        |                             THEN l.l_extendedprice * (1.0 - l.l_discount)
-        |                             ELSE 0.0 END)
-        |             / sum(l.l_extendedprice * (1.0 - l.l_discount)), 4) AS promo_revenue
-        |FROM lineitem l
-        |JOIN part p ON l.l_partkey = p.p_partkey
-        |WHERE l.l_shipdate >= TIMESTAMP '1997-09-01'
-        |  AND l.l_shipdate < TIMESTAMP '1997-10-01'""".stripMargin,
-
-    "q15_top_supplier" ->
-      """WITH rev AS (
-        |  SELECT l_suppkey,
-        |         round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS total_revenue
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        |    AND l_shipdate < TIMESTAMP '1997-04-01'
-        |  GROUP BY 1)
-        |SELECT s.s_suppkey, s.s_name, r.total_revenue
-        |FROM rev r JOIN supplier s ON r.l_suppkey = s.s_suppkey
-        |WHERE r.total_revenue = (SELECT max(total_revenue) FROM rev)""".stripMargin,
-
-    "q17_small_quantity" ->
-      """WITH pk AS (SELECT p_partkey FROM part WHERE p_brand = 'Brand#12'),
-        |     avgq AS (
-        |  SELECT l_partkey, 0.2 * avg(l_quantity) AS qty_limit
-        |  FROM lineitem WHERE l_partkey IN (SELECT p_partkey FROM pk)
-        |  GROUP BY 1)
-        |SELECT round(sum(l.l_extendedprice) / 7.0, 2) AS avg_yearly
-        |FROM lineitem l
-        |JOIN avgq a ON l.l_partkey = a.l_partkey
-        |WHERE l.l_partkey IN (SELECT p_partkey FROM pk)
-        |  AND l.l_quantity < a.qty_limit""".stripMargin,
-
-    "q19_disjunctive" ->
-      """SELECT round(sum(l.l_extendedprice * (1.0 - l.l_discount)), 2) AS revenue
-        |FROM lineitem l
-        |JOIN part p ON l.l_partkey = p.p_partkey
-        |WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 5
-        |       AND l.l_quantity BETWEEN 1 AND 11)
-        |   OR (p.p_brand = 'Brand#23' AND p.p_size BETWEEN 1 AND 10
-        |       AND l.l_quantity BETWEEN 10 AND 20)
-        |   OR (p.p_brand = 'Brand#3' AND p.p_size BETWEEN 1 AND 15
-        |       AND l.l_quantity BETWEEN 20 AND 30)""".stripMargin,
-
-    "q21_waiting_supplier" ->
-      """SELECT s.s_name, count(*) AS numwait
-        |FROM lineitem l1
-        |JOIN orders o ON l1.l_orderkey = o.o_orderkey
-        |              AND o.o_orderstatus = 'F'
-        |JOIN supplier s ON l1.l_suppkey = s.s_suppkey
-        |WHERE l1.l_returnflag = 'R'
-        |  AND EXISTS (SELECT 1 FROM lineitem l2
-        |              WHERE l2.l_orderkey = l1.l_orderkey
-        |                AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-        |                  WHERE l3.l_orderkey = l1.l_orderkey
-        |                    AND l3.l_suppkey <> l1.l_suppkey
-        |                    AND l3.l_returnflag = 'R')
-        |GROUP BY 1
-        |ORDER BY numwait DESC, s_name ASC
-        |LIMIT 20""".stripMargin,
-
-    "q2_min_cost_supplier" -> ("WITH " + psFixtureSql + "," +
-      """
-        |euro AS (
-        |  SELECT s.s_suppkey, s.s_name, round(s.s_acctbal, 2) AS s_acctbal,
-        |         n.n_name
-        |  FROM supplier s
-        |  JOIN nation n ON s.s_nationkey = n.n_nationkey
-        |  JOIN region r ON n.n_regionkey = r.r_regionkey
-        |  WHERE r.r_name = 'EUROPE'),
-        |mc AS (
-        |  SELECT ps_partkey, min(ps_supplycost) AS min_cost
-        |  FROM ps JOIN euro ON ps.ps_suppkey = euro.s_suppkey
-        |  GROUP BY 1)
-        |SELECT e.s_acctbal, e.s_name, e.n_name, p.p_partkey, p.p_name,
-        |       ps.ps_supplycost
-        |FROM ps
-        |JOIN part p ON ps.ps_partkey = p.p_partkey AND p.p_size = 15
-        |JOIN mc ON ps.ps_partkey = mc.ps_partkey
-        |        AND ps.ps_supplycost = mc.min_cost
-        |JOIN euro e ON ps.ps_suppkey = e.s_suppkey
-        |ORDER BY e.s_acctbal DESC, e.n_name ASC, e.s_name ASC, p.p_partkey ASC
-        |LIMIT 100""".stripMargin),
-
-    "q9_product_profit" -> ("WITH " + psFixtureSql +
-      """
-        |SELECT n.n_name AS nation,
-        |       CAST(year(o.o_orderdate) AS BIGINT) AS o_year,
-        |       round(sum(l.l_extendedprice * (1.0 - l.l_discount)
-        |                 - ps.ps_supplycost * l.l_quantity), 2) AS profit
-        |FROM lineitem l
-        |JOIN part p ON l.l_partkey = p.p_partkey AND p.p_name LIKE '%red%'
-        |JOIN ps ON l.l_partkey = ps.ps_partkey AND l.l_suppkey = ps.ps_suppkey
-        |JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |JOIN nation n ON s.s_nationkey = n.n_nationkey
-        |GROUP BY 1, 2""".stripMargin),
-
-    "q11_important_stock" -> ("WITH " + psFixtureSql + "," +
-      """
-        |v AS (
-        |  SELECT ps_partkey, sum(ps_supplycost * ps_availqty) AS value
-        |  FROM ps
-        |  WHERE ps_suppkey IN (
-        |    SELECT s_suppkey FROM supplier s
-        |    JOIN nation n ON s.s_nationkey = n.n_nationkey
-        |    WHERE n.n_name = 'NATION_3')
-        |  GROUP BY 1)
-        |SELECT ps_partkey, round(value, 2) AS value
-        |FROM v
-        |WHERE round(value, 2) > round((SELECT sum(value) * 0.002 FROM v), 2)
-        |ORDER BY value DESC, ps_partkey ASC""".stripMargin),
-
-    "q16_supplier_relationship" -> ("WITH " + psFixtureSql +
-      """
-        |SELECT p.p_brand, p.p_type, p.p_size,
-        |       count(DISTINCT ps.ps_suppkey) AS supplier_cnt
-        |FROM ps
-        |JOIN part p ON ps.ps_partkey = p.p_partkey
-        |WHERE p.p_brand <> 'Brand#1' AND p.p_type <> 'PROMO'
-        |  AND p.p_size IN (1, 5, 9, 14, 19, 23, 36, 45)
-        |  AND ps.ps_suppkey NOT IN
-        |      (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        |GROUP BY 1, 2, 3""".stripMargin),
-
-    "q20_part_promotion" -> ("WITH " + psFixtureSql + "," +
-      """
-        |sq AS (
-        |  SELECT l_partkey, l_suppkey, 0.5 * sum(l_quantity) AS half_qty
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        |    AND l_shipdate < TIMESTAMP '1998-01-01'
-        |  GROUP BY 1, 2)
-        |SELECT s.s_suppkey, s.s_name
-        |FROM supplier s
-        |WHERE s.s_suppkey IN (
-        |  SELECT ps.ps_suppkey FROM ps
-        |  JOIN sq ON ps.ps_partkey = sq.l_partkey
-        |         AND ps.ps_suppkey = sq.l_suppkey
-        |  WHERE ps.ps_partkey IN
-        |        (SELECT p_partkey FROM part WHERE p_name LIKE 'red%')
-        |    AND ps.ps_availqty > sq.half_qty)
-        |ORDER BY s.s_suppkey ASC""".stripMargin),
-
-    "q22_global_balance" ->
-      """WITH ab AS (
-        |  SELECT round(avg(c_acctbal), 2) AS avg_bal
-        |  FROM customer WHERE c_acctbal > 0.0)
-        |SELECT CAST(c.c_nationkey % 5 AS INT) AS cntry_bucket,
-        |       count(*) AS numcust,
-        |       round(sum(c.c_acctbal), 2) AS totacctbal
-        |FROM customer c, ab
-        |WHERE c.c_acctbal > ab.avg_bal
-        |  AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-        |GROUP BY 1""".stripMargin,
-
-    // analytic square-wave ground truth: every sample is ±amp, so
-    // peak = rms = amp exactly; sign transitions occur at every
-    // halfPeriod boundary -> floor((n-1)/halfPeriod)
-    "mm3_audio_features" ->
-      """WITH p AS (
-        |  SELECT doc_id AS media_id,
-        |         CAST((doc_id % 4) * 4000 + 8000 AS INT) AS sample_rate,
-        |         CAST((doc_id % 200) + 400 AS BIGINT) AS n_samples,
-        |         CAST((doc_id % 20) * 500 + 1000 AS INT) AS peak,
-        |         CAST((doc_id % 9) + 1 AS BIGINT) AS hp
-        |  FROM documents)
-        |SELECT media_id, sample_rate, CAST(1 AS INT) AS channels,
-        |       n_samples, peak, peak * 1.0 AS rms,
-        |       (n_samples - 1) // hp AS n_flips
-        |FROM p""".stripMargin,
-
-    // alternating solid frames: channel means are the frame-count-
-    // weighted average of the two colors — integer numerators over
-    // the frame count, so IEEE division and round(.,4) agree exactly
-    "mm4_video_features" ->
-      """WITH p AS (
-        |  SELECT doc_id AS media_id,
-        |         CAST((doc_id % 3) * 8 + 16 AS INT) AS width,
-        |         CAST((doc_id % 5) * 4 + 8 AS INT) AS height,
-        |         CAST((doc_id % 5) * 1000 + 20000 AS INT) AS micros_per_frame,
-        |         CAST((doc_id % 7) + 2 AS BIGINT) AS n_frames,
-        |         (doc_id % 4) * 60 + 10 AS er,
-        |         (doc_id % 8) * 30 + 5 AS eg,
-        |         (doc_id % 16) * 15 AS eb
-        |  FROM documents)
-        |SELECT media_id, width, height, micros_per_frame, n_frames,
-        |       round(((n_frames + 1) // 2 * er + n_frames // 2 * (255 - er))
-        |             / CAST(n_frames AS DOUBLE), 4) AS mean_r,
-        |       round(((n_frames + 1) // 2 * eg + n_frames // 2 * (250 - eg))
-        |             / CAST(n_frames AS DOUBLE), 4) AS mean_g,
-        |       round(((n_frames + 1) // 2 * eb + n_frames // 2 * (240 - eb))
-        |             / CAST(n_frames AS DOUBLE), 4) AS mean_b
-        |FROM p""".stripMargin,
-
-    // even (sampled) frames are solid evenRgb, so each decoded
-    // frame's means are exactly the color components
-    "mm5_frame_sample" ->
-      """WITH p AS (
-        |  SELECT doc_id AS media_id,
-        |         CAST((doc_id % 3) * 8 + 16 AS INT) AS width,
-        |         CAST((doc_id % 5) * 4 + 8 AS INT) AS height,
-        |         (doc_id % 7) + 2 AS n_frames,
-        |         (doc_id % 4) * 60 + 10 AS er,
-        |         (doc_id % 8) * 30 + 5 AS eg,
-        |         (doc_id % 16) * 15 AS eb
-        |  FROM documents)
-        |SELECT media_id, CAST(unnest(range(0, n_frames, 2)) AS INT) AS frame_idx,
-        |       width, height,
-        |       er * 1.0 AS mean_r, eg * 1.0 AS mean_g, eb * 1.0 AS mean_b
-        |FROM p""".stripMargin,
-
-    "mm1_media_metadata" ->
-      """SELECT doc_id AS media_id, 'text/plain' AS format,
-        |       strlen(text) AS n_bytes, source
-        |FROM documents""".stripMargin,
-
-    // the decoded raster of a two-band image has analytically exact
-    // channel means: (top * floor(h/2) + bottom * (h - floor(h/2)))/h
-    // — integer numerators, so both engines' IEEE division and
-    // round(.,4) agree bit-for-bit
-    // replay of imageDHash's integer block arithmetic: vertical grid
-    // block k spans pixel rows [ceil(k*h/9), ceil((k+1)*h/9)); the
-    // fixture's top band is rows [0, h//2). Horizontal rows are
-    // uniform, so dhash_h is exactly 0; dhash_v's bit y repeats
-    // across all 8 x positions -> byte weight 255*256^y, folded in
-    // HUGEINT and mapped to signed 64-bit like ta3's fingerprint
-    "mm6_image_dhash" ->
-      """WITH p AS (
-        |  SELECT doc_id AS media_id,
-        |         CAST(doc_id % 40 + 16 AS INT) AS width,
-        |         CAST(doc_id % 23 + 16 AS INT) AS height,
-        |         (doc_id % 256) + ((doc_id * 7) % 256) + ((doc_id * 13) % 256) AS ts,
-        |         ((doc_id * 3) % 256) + ((doc_id * 11) % 256) + ((doc_id * 17) % 256) AS bs
-        |  FROM documents),
-        |g AS (
-        |  SELECT media_id, width, height, ts, bs, yy.y AS y,
-        |         ((yy.y + 1) * height + 8) // 9 - (yy.y * height + 8) // 9 AS len0,
-        |         GREATEST(0, LEAST(((yy.y + 1) * height + 8) // 9, height // 2)
-        |                    - (yy.y * height + 8) // 9) AS nt0,
-        |         ((yy.y + 2) * height + 8) // 9 - ((yy.y + 1) * height + 8) // 9 AS len1,
-        |         GREATEST(0, LEAST(((yy.y + 2) * height + 8) // 9, height // 2)
-        |                    - ((yy.y + 1) * height + 8) // 9) AS nt1
-        |  FROM p CROSS JOIN (SELECT unnest(range(0, 8)) AS y) yy),
-        |b AS (
-        |  SELECT media_id, width, height, y,
-        |         CASE WHEN (nt1 * ts + (len1 - nt1) * bs) * len0 >
-        |                   (nt0 * ts + (len0 - nt0) * bs) * len1
-        |              THEN 1 ELSE 0 END AS bit
-        |  FROM g),
-        |hv AS (
-        |  SELECT media_id, width, height,
-        |         sum(CAST(bit AS HUGEINT) * 255 *
-        |             (CASE y WHEN 0 THEN 1 WHEN 1 THEN 256 WHEN 2 THEN 65536
-        |                     WHEN 3 THEN 16777216 WHEN 4 THEN 4294967296
-        |                     WHEN 5 THEN 1099511627776
-        |                     WHEN 6 THEN 281474976710656
-        |                     ELSE 72057594037927936 END)) AS raw
-        |  FROM b GROUP BY media_id, width, height)
-        |SELECT media_id, width, height, CAST(0 AS BIGINT) AS dhash_h,
-        |       CAST(CASE WHEN raw >= CAST('9223372036854775808' AS HUGEINT)
-        |                 THEN raw - CAST('18446744073709551616' AS HUGEINT)
-        |                 ELSE raw END AS BIGINT) AS dhash_v
-        |FROM hv""".stripMargin,
-
-    // block boundaries are ceil(g*dim/4); the top band covers rows
-    // < height//2, so cell sums are closed-form in the band colors
-    "mm9_image_resize" ->
-      """WITH p AS (
-        |  SELECT doc_id AS media_id,
-        |         CAST(doc_id % 40 + 16 AS INT) AS width,
-        |         CAST(doc_id % 23 + 16 AS INT) AS height,
-        |         (doc_id % 256) + ((doc_id * 7) % 256) + ((doc_id * 13) % 256) AS ts,
-        |         ((doc_id * 3) % 256) + ((doc_id * 11) % 256) + ((doc_id * 17) % 256) AS bs
-        |  FROM documents),
-        |gys AS (SELECT unnest(range(0, 4)) AS gy),
-        |gxs AS (SELECT unnest(range(0, 4)) AS gx),
-        |c AS (
-        |  SELECT media_id, ts, bs, gys.gy, gxs.gx,
-        |         ((gys.gy + 1) * height + 3) // 4
-        |           - (gys.gy * height + 3) // 4 AS leny,
-        |         GREATEST(0, LEAST(((gys.gy + 1) * height + 3) // 4, height // 2)
-        |                    - (gys.gy * height + 3) // 4) AS nt,
-        |         ((gxs.gx + 1) * width + 3) // 4
-        |           - (gxs.gx * width + 3) // 4 AS lenx
-        |  FROM p CROSS JOIN gys CROSS JOIN gxs)
-        |SELECT media_id, CAST(gy AS INT) AS gy, CAST(gx AS INT) AS gx,
-        |       CAST(leny * lenx AS BIGINT) AS n_px,
-        |       round(CAST((nt * ts + (leny - nt) * bs) * lenx AS DOUBLE)
-        |             / (3.0 * CAST(leny * lenx AS DOUBLE)), 4) AS mean_luma
-        |FROM c""".stripMargin,
-
-    // fingerprints analytically: a square wave flips sign exactly at
-    // the multiples of halfPeriod, so bit w is the parity of the
-    // multiples landing in window w; amplitude never enters
-    "mm8_audio_neardup" ->
-      """WITH prm AS (
-        |  SELECT doc_id, (doc_id // 5) % 200 + 400 AS n,
-        |         (doc_id // 5) % 9 + 1 AS hp
-        |  FROM documents),
-        |fl AS (SELECT doc_id, n, hp,
-        |              unnest(range(1, (n - 1) // hp + 1)) AS j
-        |       FROM prm),
-        |b AS (SELECT doc_id, CAST((j * hp * 64) // n AS INTEGER) AS w FROM fl),
-        |p AS (SELECT doc_id, w, count(*) % 2 AS bit FROM b GROUP BY 1, 2),
-        |fp AS (SELECT doc_id,
-        |              CAST(sum(bit * (CASE WHEN w = 63
-        |                     THEN CAST(-9223372036854775807 AS BIGINT) - 1
-        |                     ELSE CAST(1 AS BIGINT) << w END))
-        |                   AS BIGINT) AS fingerprint
-        |       FROM p GROUP BY doc_id)
-        |SELECT a.doc_id AS id_a, b2.doc_id AS id_b, a.fingerprint
-        |FROM fp a JOIN fp b2
-        |  ON a.fingerprint = b2.fingerprint AND a.doc_id < b2.doc_id""".stripMargin,
-
-    // all-pairs replay over the analytic dhash_v (mm6's CTE):
-    // byte-aligned differences make chunk-blocked recall exact at
-    // hamming <= 8, so blocked pairs == the full quadratic answer
-    "mm7_image_neardup" ->
-      """WITH p AS (
-        |  SELECT doc_id AS media_id,
-        |         CAST(doc_id % 23 + 16 AS INT) AS height,
-        |         (doc_id % 256) + ((doc_id * 7) % 256) + ((doc_id * 13) % 256) AS ts,
-        |         ((doc_id * 3) % 256) + ((doc_id * 11) % 256) + ((doc_id * 17) % 256) AS bs
-        |  FROM documents),
-        |g AS (
-        |  SELECT media_id, ts, bs, yy.y AS y,
-        |         ((yy.y + 1) * height + 8) // 9 - (yy.y * height + 8) // 9 AS len0,
-        |         GREATEST(0, LEAST(((yy.y + 1) * height + 8) // 9, height // 2)
-        |                    - (yy.y * height + 8) // 9) AS nt0,
-        |         ((yy.y + 2) * height + 8) // 9 - ((yy.y + 1) * height + 8) // 9 AS len1,
-        |         GREATEST(0, LEAST(((yy.y + 2) * height + 8) // 9, height // 2)
-        |                    - ((yy.y + 1) * height + 8) // 9) AS nt1
-        |  FROM p CROSS JOIN (SELECT unnest(range(0, 8)) AS y) yy),
-        |b AS (
-        |  SELECT media_id, y,
-        |         CASE WHEN (nt1 * ts + (len1 - nt1) * bs) * len0 >
-        |                   (nt0 * ts + (len0 - nt0) * bs) * len1
-        |              THEN 1 ELSE 0 END AS bit
-        |  FROM g),
-        |hv AS (
-        |  SELECT media_id,
-        |         sum(CAST(bit AS HUGEINT) * 255 *
-        |             (CASE y WHEN 0 THEN 1 WHEN 1 THEN 256 WHEN 2 THEN 65536
-        |                     WHEN 3 THEN 16777216 WHEN 4 THEN 4294967296
-        |                     WHEN 5 THEN 1099511627776
-        |                     WHEN 6 THEN 281474976710656
-        |                     ELSE 72057594037927936 END)) AS raw
-        |  FROM b GROUP BY media_id),
-        |sig AS (
-        |  SELECT media_id,
-        |         CAST(CASE WHEN raw >= CAST('9223372036854775808' AS HUGEINT)
-        |                   THEN raw - CAST('18446744073709551616' AS HUGEINT)
-        |                   ELSE raw END AS BIGINT) AS v
-        |  FROM hv)
-        |SELECT a.media_id AS id_a, b.media_id AS id_b,
-        |       bit_count(xor(a.v, b.v)) AS hamming
-        |FROM sig a JOIN sig b ON a.media_id < b.media_id
-        |WHERE bit_count(xor(a.v, b.v)) <= 8""".stripMargin,
-
-    "mm2_media_features" ->
-      """WITH p AS (
-        |  SELECT doc_id AS media_id,
-        |         CAST(doc_id % 40 + 8 AS INT) AS width,
-        |         CAST(doc_id % 23 + 8 AS INT) AS height,
-        |         doc_id % 256 AS r1, (doc_id * 7) % 256 AS g1, (doc_id * 13) % 256 AS b1,
-        |         (doc_id * 3) % 256 AS r2, (doc_id * 11) % 256 AS g2, (doc_id * 17) % 256 AS b2
-        |  FROM documents)
-        |SELECT media_id, width, height,
-        |       round((r1 * (height // 2) + r2 * (height - height // 2)) * 1.0 / height, 4) AS mean_r,
-        |       round((g1 * (height // 2) + g2 * (height - height // 2)) * 1.0 / height, 4) AS mean_g,
-        |       round((b1 * (height // 2) + b2 * (height - height // 2)) * 1.0 / height, 4) AS mean_b
-        |FROM p""".stripMargin,
-
-    "st1_event_windows" ->
-      """SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS window_start, event_type,
-        |       count(*) AS n, round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    "ts1_hourly_resample" ->
-      """WITH e AS (
-        |  SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h, value
-        |  FROM events),
-        |agg AS (
-        |  SELECT h, count(*) AS n_events, round(sum(value), 4) AS sum_value
-        |  FROM e GROUP BY h),
-        |b AS (SELECT min(h) AS lo, max(h) AS hi FROM e),
-        |spine AS (SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS h FROM b)
-        |SELECT s.h, coalesce(a.n_events, 0) AS n_events, a.sum_value,
-        |       last_value(a.sum_value IGNORE NULLS) OVER (ORDER BY s.h
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sum_value_ffill
-        |FROM spine s LEFT JOIN agg a USING (h)""".stripMargin,
-
-    "ts2_rolling_stats" ->
-      """WITH e AS (
-        |  SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h, value
-        |  FROM events),
-        |agg AS (
-        |  SELECT h, count(*) AS n_events, round(sum(value), 4) AS sum_value
-        |  FROM e GROUP BY h),
-        |b AS (SELECT min(h) AS lo, max(h) AS hi FROM e),
-        |spine AS (SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS h FROM b),
-        |g AS (
-        |  SELECT s.h, coalesce(a.n_events, 0) AS n_events, a.sum_value
-        |  FROM spine s LEFT JOIN agg a USING (h))
-        |SELECT h, n_events, sum_value,
-        |       CAST(count(sum_value) OVER w AS BIGINT) AS mov_n,
-        |       round(avg(sum_value) OVER w, 4) AS mov_avg,
-        |       min(sum_value) OVER w AS mov_min,
-        |       max(sum_value) OVER w AS mov_max
-        |FROM g
-        |WINDOW w AS (ORDER BY h ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)""".stripMargin,
-
-    "inc1_incremental_state" ->
-      """SELECT l_returnflag,
-        |       count(*) AS n,
-        |       count(l_quantity) AS n_v,
-        |       round(sum(l_quantity), 2) AS sum_v,
-        |       min(l_quantity) AS min_v,
-        |       max(l_quantity) AS max_v,
-        |       round(sum(l_quantity) / count(l_quantity), 4) AS avg_v
-        |FROM lineitem GROUP BY 1""".stripMargin,
-
-    "inc2_join_view_delta" ->
-      """SELECT c_mktsegment, o_orderpriority,
-        |       count(*) AS n_orders,
-        |       round(sum(o_totalprice), 2) AS sum_price
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY 1, 2""".stripMargin,
-
-    "scd1_dimension_history" ->
-      """WITH f AS (
-        |  SELECT c_custkey, c_acctbal, 'I' AS op, CAST(0 AS BIGINT) AS seq
-        |  FROM customer WHERE c_custkey % 10 <= 2
-        |  UNION ALL
-        |  SELECT c_custkey, round(c_acctbal + 100, 2), 'U', 1
-        |  FROM customer WHERE c_custkey % 10 <= 2
-        |  UNION ALL
-        |  SELECT c_custkey, c_acctbal, 'D', 2
-        |  FROM customer WHERE c_custkey % 10 = 0),
-        |h AS (
-        |  SELECT c_custkey, c_acctbal, op, seq AS valid_from,
-        |         lead(seq) OVER (PARTITION BY c_custkey ORDER BY seq) AS valid_to
-        |  FROM f)
-        |SELECT c_custkey, c_acctbal, valid_from, valid_to,
-        |       valid_to IS NULL AS is_current
-        |FROM h WHERE op <> 'D'""".stripMargin,
-
-    // the doubled stream collapses back to the source rows: event_id
-    // is unique in the source, so distinct-by-key == distinct rows
-    "st8_stream_dedup" ->
-      """SELECT DISTINCT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,
-        |       event_type, value
-        |FROM events""".stripMargin,
-
-    "st3_stream_upsert" ->
-      """SELECT user_id, ts, event_id, event_type, value FROM (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id, event_type, value,
-        |         row_number() OVER (PARTITION BY user_id
-        |           ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
-        |  FROM events) WHERE rn = 1""".stripMargin,
-
-    "seq1_user_sequences" ->
-      """SELECT user_id, count(*) AS n_events,
-        |       string_agg(event_type, '>'
-        |         ORDER BY CAST(ts AS TIMESTAMP), event_id) AS seq
-        |FROM events GROUP BY user_id""".stripMargin,
-
-    "seq4_event_pattern" ->
-      """WITH h AS (
-        |  SELECT user_id, count(*) AS n_events,
-        |         string_agg(substr(event_type, 1, 1), ''
-        |           ORDER BY CAST(ts AS TIMESTAMP), event_id) AS history
-        |  FROM events GROUP BY user_id)
-        |SELECT user_id, n_events, history,
-        |       regexp_extract(history, 'v[^vp]*p') AS match_text
-        |FROM h""".stripMargin,
-
-    // truncation: seq keeps only the first 5 events per key (sliced
-    // ordered string_agg), n_events stays the TRUE count
-    "seq3_truncated_sequences" ->
-      """WITH r AS (
-        |  SELECT user_id, event_type, event_id, CAST(ts AS TIMESTAMP) AS ts,
-        |         row_number() OVER (PARTITION BY user_id
-        |           ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
-        |  FROM events)
-        |SELECT user_id, count(*) AS n_events,
-        |       string_agg(event_type, '>' ORDER BY ts, event_id)
-        |         FILTER (WHERE rn <= 5) AS seq
-        |FROM r GROUP BY user_id""".stripMargin,
-
-    "st4_attribution_join" ->
-      """WITH v AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events
-        |  WHERE event_type = 'view'),
-        |p AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events
-        |  WHERE event_type = 'purchase')
-        |SELECT v.user_id, count(*) AS n_attributed,
-        |       round(sum(p.value), 2) AS attributed_value
-        |FROM v JOIN p ON v.user_id = p.user_id
-        | AND p.ts >= v.ts AND p.ts < v.ts + INTERVAL 1 HOUR
-        |GROUP BY v.user_id""".stripMargin,
-
-    "st5_unattributed_views" ->
-      """WITH v AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events
-        |  WHERE event_type = 'view'),
-        |p AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events
-        |  WHERE event_type = 'purchase')
-        |SELECT v.user_id, count(*) AS n_rows,
-        |       count(*) FILTER (WHERE p.ts IS NULL) AS n_unattributed
-        |FROM v LEFT JOIN p ON v.user_id = p.user_id
-        | AND p.ts >= v.ts AND p.ts < v.ts + INTERVAL 1 HOUR
-        |GROUP BY v.user_id""".stripMargin,
-
-    "et1_json_props" ->
-      """SELECT event_type, count(*) AS n,
-        |       CAST(sum(k) AS BIGINT) AS sum_k,
-        |       min(k) AS min_k, max(k) AS max_k
-        |FROM (SELECT event_type,
-        |             CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-        |      FROM events)
-        |GROUP BY event_type""".stripMargin,
-
-    "st6_session_bounds" ->
-      """WITH flagged AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
-        |         CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts ASC) IS NULL
-        |                OR epoch_us(CAST(ts AS TIMESTAMP))
-        |                   - epoch_us(CAST(lag(ts) OVER (PARTITION BY user_id ORDER BY ts ASC) AS TIMESTAMP))
-        |                   > 30 * 60 * 1000000 THEN 1 ELSE 0 END AS new_session
-        |  FROM events),
-        |sess AS (
-        |  SELECT *, CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts ASC
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |  FROM flagged)
-        |SELECT user_id, session_id, min(ts) AS session_start,
-        |       max(ts) AS session_end, count(*) AS n_events
-        |FROM sess GROUP BY user_id, session_id""".stripMargin,
-
-    // note >=, not >: session_window windows are half-open [ts, ts+gap),
-    // so an event landing EXACTLY gap after its predecessor opens a new
-    // session (st2/st6's manual forms use > by their own contract)
-    "st7_session_window" ->
-      """WITH flagged AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
-        |         CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts ASC) IS NULL
-        |                OR epoch_us(CAST(ts AS TIMESTAMP))
-        |                   - epoch_us(CAST(lag(ts) OVER (PARTITION BY user_id ORDER BY ts ASC) AS TIMESTAMP))
-        |                   >= 30 * 60 * 1000000 THEN 1 ELSE 0 END AS new_session
-        |  FROM events),
-        |sess AS (
-        |  SELECT *, sum(new_session) OVER (PARTITION BY user_id ORDER BY ts ASC
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-        |  FROM flagged)
-        |SELECT user_id, min(ts) AS session_start,
-        |       max(ts) + INTERVAL 30 MINUTE AS session_end, count(*) AS n_events
-        |FROM sess GROUP BY user_id, session_id""".stripMargin,
-
-    // the same replay as hh2 on the event-id items — the streaming
-    // fold must land on identical counters
-    "st12_stream_countmin" ->
-      cmsOracleSql("SELECT event_id % 500 AS item FROM events",
-        depth = 4, width = 64),
-
-    // the validity-interval join replayed in batch: pre-cut events
-    // take version 0's segment, post-cut version 1's
-    "st13_stream_temporal_enrich" ->
-      """SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,
-        |       CASE WHEN ts < TIMESTAMP '2024-01-16' THEN user_id * 10
-        |            ELSE user_id * 10 + 1 END AS segment
-        |FROM events""".stripMargin,
-
-    // exact-integer cent sums, then the identical double expression
-    // tree as Stats.welchTTest (squares via explicit multiply — no
-    // libm pow); the replay is bit-reproducible, round(6) is a guard
-    "ab1_welch_ttest" ->
-      """WITH base AS (
-        |  SELECT event_type, user_id % 2 AS arm,
-        |         CAST(round(value * 100) AS BIGINT) AS v
-        |  FROM events),
-        |agg AS (
-        |  SELECT event_type,
-        |    CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0,
-        |    CAST(sum(CASE WHEN arm <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |    CAST(sum(CASE WHEN arm = 0 THEN v ELSE 0 END) AS BIGINT) AS s0,
-        |    CAST(sum(CASE WHEN arm <> 0 THEN v ELSE 0 END) AS BIGINT) AS s1,
-        |    CAST(sum(CASE WHEN arm = 0 THEN v * v ELSE 0 END) AS BIGINT) AS q0,
-        |    CAST(sum(CASE WHEN arm <> 0 THEN v * v ELSE 0 END) AS BIGINT) AS q1
-        |  FROM base GROUP BY 1),
-        |d AS (
-        |  SELECT event_type, n0, n1,
-        |         CAST(n0 AS DOUBLE) AS n0d, CAST(n1 AS DOUBLE) AS n1d,
-        |         CAST(s0 AS DOUBLE) AS s0d, CAST(s1 AS DOUBLE) AS s1d,
-        |         CAST(q0 AS DOUBLE) AS q0d, CAST(q1 AS DOUBLE) AS q1d
-        |  FROM agg),
-        |st AS (
-        |  SELECT event_type, n0, n1,
-        |         s0d / n0d / 100.0 AS m0, s1d / n1d / 100.0 AS m1,
-        |         (q0d - s0d * s0d / n0d) / (n0d - 1.0) / (100.0 * 100.0) / n0d AS se0,
-        |         (q1d - s1d * s1d / n1d) / (n1d - 1.0) / (100.0 * 100.0) / n1d AS se1,
-        |         n0d, n1d
-        |  FROM d)
-        |SELECT event_type, n0 AS n_a, n1 AS n_b,
-        |       round(m0, 6) AS mean_a, round(m1, 6) AS mean_b,
-        |       round((m0 - m1) / sqrt(se0 + se1), 6) AS t_stat,
-        |       round((se0 + se1) * (se0 + se1) /
-        |             (se0 * se0 / (n0d - 1.0) + se1 * se1 / (n1d - 1.0)), 6)
-        |         AS df_welch
-        |FROM st""".stripMargin,
-
-    // unit of randomization = user: collapse to per-user conversion
-    // first, then the four exact cell counts and the 2x2 chi-square
-    "ab2_conversion_chisq" ->
-      """WITH pu AS (
-        |  SELECT user_id,
-        |         CASE WHEN sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) >= 14
-        |              THEN 1 ELSE 0 END AS converted
-        |  FROM events GROUP BY 1),
-        |agg AS (
-        |  SELECT
-        |    CAST(sum(CASE WHEN user_id % 2 = 0 AND converted = 1 THEN 1 ELSE 0 END) AS BIGINT) AS a,
-        |    CAST(sum(CASE WHEN user_id % 2 = 0 AND converted = 0 THEN 1 ELSE 0 END) AS BIGINT) AS b,
-        |    CAST(sum(CASE WHEN user_id % 2 <> 0 AND converted = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c,
-        |    CAST(sum(CASE WHEN user_id % 2 <> 0 AND converted = 0 THEN 1 ELSE 0 END) AS BIGINT) AS d
-        |  FROM pu),
-        |dd AS (SELECT a, b, c, d,
-        |              CAST(a AS DOUBLE) AS ad, CAST(b AS DOUBLE) AS bd,
-        |              CAST(c AS DOUBLE) AS cd, CAST(d AS DOUBLE) AS dd_
-        |       FROM agg)
-        |SELECT a AS conv_a, b AS noconv_a, c AS conv_b, d AS noconv_b,
-        |       round((ad + bd + cd + dd_) * (ad * dd_ - bd * cd)
-        |               * (ad * dd_ - bd * cd) /
-        |             ((ad + bd) * (cd + dd_) * (ad + cd) * (bd + dd_)), 6)
-        |         AS chi2
-        |FROM dd""".stripMargin,
-
-    // the composite key replayed (idHash limb arithmetic included),
-    // rank as one global row_number over it
-    "mix4_curriculum" ->
-      """WITH b AS (
-        |  SELECT doc_id, least(n_chars // 150, 3) AS band FROM documents),
-        |h AS (
-        |  SELECT doc_id, band,
-        |         ((doc_id % 4294967296) // 65536 * 2654435761 % 4294967296
-        |          * 65536 + (doc_id % 65536) * 2654435761) % 4294967296 AS hh
-        |  FROM b),
-        |k AS (
-        |  SELECT doc_id, band,
-        |         band * 4503599627370496 + (hh % 67108864) * 67108864
-        |           + doc_id AS key
-        |  FROM h)
-        |SELECT doc_id, CAST(band AS BIGINT) AS band,
-        |       CAST(row_number() OVER (ORDER BY key) AS BIGINT) AS rank
-        |FROM k""".stripMargin,
-
-    // the dyadic running-sum unrolling replayed with << weights; the
-    // HUGEINT window sum casts to DOUBLE on the same exact integers
-    "ts4_ewma" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
-        |         CAST(round(value * 100) AS BIGINT) AS v
-        |  FROM events),
-        |rdesc AS (SELECT *, row_number() OVER (PARTITION BY user_id
-        |                      ORDER BY ts DESC, event_id DESC) AS rd FROM e),
-        |r AS (SELECT user_id, event_id, ts, v,
-        |             row_number() OVER (PARTITION BY user_id
-        |               ORDER BY ts ASC, event_id ASC) AS n
-        |      FROM rdesc WHERE rd <= 16),
-        |wx AS (SELECT *, CASE WHEN n = 1 THEN v * 4
-        |                      ELSE v * (CAST(1 AS BIGINT) << n) END AS w
-        |       FROM r),
-        |s AS (SELECT *, sum(w) OVER (PARTITION BY user_id ORDER BY n
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sw
-        |      FROM wx)
-        |SELECT user_id, event_id, ts, CAST(n AS INT) AS n,
-        |       CAST(sw AS DOUBLE)
-        |         / CAST(CAST(1 AS BIGINT) << (n + 1) AS DOUBLE)
-        |         / 100.0 AS ewma
-        |FROM s""".stripMargin,
-
-    // first-occurrence replay: min position per token, reassembled in
-    // that order — the kernel's LinkedHashSet semantics in SQL
-    "rep2_intra_doc_dedup" ->
-      """WITH d AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS l
-        |           FROM documents),
-        |pos AS (SELECT doc_id, l, unnest(range(1, len(l) + 1)) AS i FROM d),
-        |tk AS (SELECT doc_id, i, l[CAST(i AS INT)] AS w FROM pos),
-        |firsts AS (SELECT doc_id, w, min(i) AS fi FROM tk GROUP BY 1, 2),
-        |agg AS (SELECT doc_id, string_agg(w, ' ' ORDER BY fi) AS clean_text,
-        |               CAST(count(*) AS BIGINT) AS n_kept
-        |        FROM firsts GROUP BY 1)
-        |SELECT d.doc_id, coalesce(a.clean_text, '') AS clean_text,
-        |       CAST(len(d.l) AS BIGINT) AS n_tokens,
-        |       CAST(len(d.l) - coalesce(a.n_kept, 0) AS BIGINT) AS n_removed
-        |FROM d LEFT JOIN agg a USING (doc_id)""".stripMargin,
-
-    // window replay of the max_by/min_by tiebreaks: chosen = score
-    // DESC id ASC, rejected = score ASC id DESC; margin-0 groups out
-    "sft2_preference_pairs" ->
-      """WITH c AS (
-        |  SELECT doc_id, doc_id // 4 AS prompt_id,
-        |         CAST(len(list_distinct(string_split_regex(lower(trim(text)), '\s+')))
-        |              AS BIGINT) AS score
-        |  FROM documents),
-        |best AS (SELECT prompt_id, doc_id, score,
-        |                row_number() OVER (PARTITION BY prompt_id
-        |                                   ORDER BY score DESC, doc_id ASC) AS rn
-        |         FROM c),
-        |worst AS (SELECT prompt_id, doc_id, score,
-        |                 row_number() OVER (PARTITION BY prompt_id
-        |                                    ORDER BY score ASC, doc_id DESC) AS rn
-        |          FROM c)
-        |SELECT b.prompt_id, b.doc_id AS chosen_id, b.score AS chosen_score,
-        |       w.doc_id AS rejected_id, w.score AS rejected_score,
-        |       b.score - w.score AS margin
-        |FROM best b JOIN worst w USING (prompt_id)
-        |WHERE b.rn = 1 AND w.rn = 1 AND b.score > w.score""".stripMargin,
-
-    "sp5_temporal_split" ->
-      """SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,
-        |       CASE WHEN ts < TIMESTAMP '2024-01-20' THEN 'train'
-        |            ELSE 'test' END AS split
-        |FROM events
-        |WHERE ts < TIMESTAMP '2024-01-20'
-        |   OR ts >= TIMESTAMP '2024-01-22'""".stripMargin,
-
-    "sp6_leave_last_out" ->
-      """SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,
-        |       CASE WHEN rn <= 2 THEN 'test' ELSE 'train' END AS split
-        |FROM (SELECT event_id, user_id, ts,
-        |             row_number() OVER (PARTITION BY user_id
-        |               ORDER BY ts DESC, event_id DESC) AS rn
-        |      FROM events)""".stripMargin,
-
-    // the good lines round-trip to the source rows; the two corrupt
-    // constants quarantine with NULL data
-    "c3_corrupt_records" ->
-      """SELECT doc_id, lang, n_chars, false AS is_corrupt,
-        |       CAST(NULL AS VARCHAR) AS corrupt_raw
-        |FROM documents
-        |UNION ALL
-        |SELECT CAST(NULL AS BIGINT), NULL, CAST(NULL AS BIGINT), true, '{"oops'
-        |UNION ALL
-        |SELECT CAST(NULL AS BIGINT), NULL, CAST(NULL AS BIGINT), true,
-        |       'not json at all'""".stripMargin,
-
-    "ta8_readability" ->
-      """SELECT doc_id,
-        |       round(206.835
-        |             - 1.015 * CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE)
-        |               / CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS DOUBLE)
-        |             - 84.6 * CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS DOUBLE)
-        |               / CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE),
-        |             4) AS flesch
-        |FROM documents""".stripMargin,
-
-    "pct2_weighted_median" ->
-      """WITH a AS (
-        |  SELECT l_returnflag, l_extendedprice,
-        |         CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS w
-        |  FROM lineitem GROUP BY 1, 2),
-        |c AS (
-        |  SELECT l_returnflag, l_extendedprice, w,
-        |         CAST(sum(w) OVER (PARTITION BY l_returnflag
-        |           ORDER BY l_extendedprice
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |           AS cum,
-        |         CAST(sum(w) OVER (PARTITION BY l_returnflag) AS BIGINT) AS tot
-        |  FROM a)
-        |SELECT l_returnflag, min(l_extendedprice) AS weighted_median,
-        |       max(tot) AS total_weight
-        |FROM c WHERE cum * 2 >= tot GROUP BY 1""".stripMargin,
-
-    "coh2_ltv" ->
-      """WITH e AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
-        |         CAST(round(value * 100) AS BIGINT) AS v FROM events),
-        |firstw AS (
-        |  SELECT user_id, date_trunc('week', min(ts)) AS cohort_week
-        |  FROM e GROUP BY 1),
-        |weekly AS (
-        |  SELECT f.cohort_week,
-        |         CAST(datediff('day', f.cohort_week,
-        |              date_trunc('week', e.ts)) // 7 AS BIGINT) AS weeks_since,
-        |         CAST(count(DISTINCT e.user_id) AS BIGINT) AS n_active,
-        |         CAST(sum(e.v) AS BIGINT) AS week_value
-        |  FROM e JOIN firstw f USING (user_id)
-        |  GROUP BY 1, 2)
-        |SELECT cohort_week, weeks_since, n_active, week_value,
-        |       CAST(sum(week_value) OVER (PARTITION BY cohort_week
-        |         ORDER BY weeks_since
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |         AS cum_value
-        |FROM weekly""".stripMargin,
-
-    "m9_forget" ->
-      """WITH forget AS (
-        |  SELECT DISTINCT user_id FROM events WHERE user_id % 29 = 0
-        |  UNION ALL SELECT 900000001),
-        |counts AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n
-        |           FROM events GROUP BY 1),
-        |remaining AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_remaining FROM events
-        |  WHERE user_id NOT IN (SELECT user_id FROM forget))
-        |SELECT f.user_id, coalesce(c.n, 0) AS n_purged, r.n_remaining
-        |FROM forget f LEFT JOIN counts c USING (user_id)
-        |CROSS JOIN remaining r""".stripMargin,
-
-    "w6_share_of_total" ->
-      """WITH a AS (
-        |  SELECT o_orderstatus, o_orderpriority,
-        |         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |           AS revenue_cents
-        |  FROM orders GROUP BY 1, 2),
-        |t AS (SELECT o_orderstatus, CAST(sum(revenue_cents) AS BIGINT) AS tot
-        |      FROM a GROUP BY 1)
-        |SELECT a.o_orderstatus, a.o_orderpriority, a.revenue_cents,
-        |       round(CAST(a.revenue_cents AS DOUBLE) / CAST(t.tot AS DOUBLE), 6)
-        |         AS share
-        |FROM a JOIN t USING (o_orderstatus)""".stripMargin,
-
-    "pv2_unpivot" ->
-      """SELECT l_orderkey, l_linenumber, 'qty' AS measure, l_quantity AS value
-        |FROM lineitem WHERE l_orderkey < 1000
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, 'price', l_extendedprice
-        |FROM lineitem WHERE l_orderkey < 1000
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, 'disc', l_discount
-        |FROM lineitem WHERE l_orderkey < 1000
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, 'tax', l_tax
-        |FROM lineitem WHERE l_orderkey < 1000""".stripMargin,
-
-    "ts6_period_over_period" ->
-      """WITH w AS (
-        |  SELECT date_trunc('week', CAST(ts AS TIMESTAMP)) AS week,
-        |         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-        |           AS rev_cents
-        |  FROM events GROUP BY 1)
-        |SELECT week, rev_cents,
-        |       lag(rev_cents) OVER (ORDER BY week) AS prev_cents,
-        |       rev_cents - lag(rev_cents) OVER (ORDER BY week) AS delta_cents,
-        |       round(CAST(rev_cents - lag(rev_cents) OVER (ORDER BY week)
-        |                  AS DOUBLE)
-        |             / CAST(lag(rev_cents) OVER (ORDER BY week) AS DOUBLE), 6)
-        |         AS pct_change
-        |FROM w""".stripMargin,
-
-    "fin1_allocate" ->
-      """WITH j AS (
-        |  SELECT l.l_orderkey, l.l_linenumber,
-        |         CAST(round(l.l_quantity) AS BIGINT) AS w,
-        |         CAST(round(o.o_totalprice * 100) AS BIGINT) AS t
-        |  FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey),
-        |s AS (SELECT *, CAST(sum(w) OVER (PARTITION BY l_orderkey) AS BIGINT)
-        |               AS sw,
-        |             t * w AS prod FROM j),
-        |b AS (SELECT *, prod // sw AS base, prod % sw AS rem FROM s),
-        |sh AS (SELECT *,
-        |         t - CAST(sum(base) OVER (PARTITION BY l_orderkey) AS BIGINT)
-        |           AS short,
-        |         row_number() OVER (PARTITION BY l_orderkey
-        |           ORDER BY rem DESC, l_linenumber ASC) AS rk
-        |       FROM b)
-        |SELECT l_orderkey, l_linenumber, w AS weight,
-        |       CAST(base + CASE WHEN rk <= short THEN 1 ELSE 0 END AS BIGINT)
-        |         AS allocated
-        |FROM sh""".stripMargin,
-
-    "pf9_source_overlap" ->
-      """WITH v AS (
-        |  SELECT DISTINCT source AS src,
-        |         unnest(string_split_regex(lower(trim(text)), '\s+')) AS w
-        |  FROM documents),
-        |f AS (SELECT src, w FROM v WHERE length(w) > 0),
-        |sz AS (SELECT src, CAST(count(*) AS BIGINT) AS n FROM f GROUP BY 1),
-        |i AS (SELECT a.src AS src_a, b.src AS src_b,
-        |             CAST(count(*) AS BIGINT) AS n_shared
-        |      FROM f a JOIN f b ON a.w = b.w AND a.src < b.src
-        |      GROUP BY 1, 2)
-        |SELECT i.src_a, i.src_b, i.n_shared, sa.n AS n_a, sb.n AS n_b,
-        |       round(CAST(i.n_shared AS DOUBLE)
-        |             / CAST(sa.n + sb.n - i.n_shared AS DOUBLE), 6) AS jaccard
-        |FROM i JOIN sz sa ON sa.src = i.src_a
-        |       JOIN sz sb ON sb.src = i.src_b""".stripMargin,
-
-    "dd22_url_dedup" ->
-      """WITH fx AS (
-        |  SELECT doc_id,
-        |         text || ' http://d' || (doc_id % 7)::VARCHAR ||
-        |         '.example/p/' || doc_id::VARCHAR ||
-        |         ' https://CDN-d' || (doc_id % 4)::VARCHAR ||
-        |         '.Example:8443/x?q=' || doc_id::VARCHAR ||
-        |         ' http://Track-d' || (doc_id % 5)::VARCHAR ||
-        |         '.Example:80/p/' || (doc_id % 25)::VARCHAR ||
-        |         '?utm_source=feed&fbclid=abc' AS text
-        |  FROM documents),
-        |ex AS (
-        |  SELECT doc_id, regexp_replace(u, '[.,;:!?)\]''"]+$', '') AS url
-        |  FROM fx, unnest(regexp_extract_all(text, 'https?://[^\s]+')) AS t(u)),
-        |lo AS (
-        |  SELECT doc_id, url,
-        |         lower(regexp_extract(url, '^[^/]*//[^/]*', 0))
-        |           || url[len(regexp_extract(url, '^[^/]*//[^/]*', 0)) + 1:]
-        |           AS c
-        |  FROM ex),
-        |canon AS (
-        |  SELECT doc_id, url,
-        |    regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        |      regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        |        c, '#.*$', ''),
-        |        '&(utm_[A-Za-z]+|fbclid|gclid)=[^&#]*', '', 'g'),
-        |        '\?(utm_[A-Za-z]+|fbclid|gclid)=[^&#]*&', '?'),
-        |        '\?(utm_[A-Za-z]+|fbclid|gclid)=[^&#]*$', ''),
-        |        '^(http://[^/?#]*):80([/?]|$)', '\1\2'),
-        |        '^(https://[^/?#]*):443([/?]|$)', '\1\2'),
-        |        '[?&]$', ''),
-        |        '(//[^/]+/.*[^/])/$', '\1') AS canonical
-        |  FROM lo)
-        |SELECT canonical, min(doc_id) AS first_doc,
-        |       CAST(count(*) AS BIGINT) AS n_citations,
-        |       CAST(count(DISTINCT url) AS BIGINT) AS n_raw_variants
-        |FROM canon GROUP BY 1""".stripMargin,
-
-    // the same regex chain (DuckDB needs explicit 'g' where Spark is
-    // global by default)
-    "url2_canonical" ->
-      """WITH fx AS (
-        |  SELECT doc_id,
-        |         text || ' http://d' || (doc_id % 7)::VARCHAR ||
-        |         '.example/p/' || doc_id::VARCHAR ||
-        |         ' https://CDN-d' || (doc_id % 4)::VARCHAR ||
-        |         '.Example:8443/x?q=' || doc_id::VARCHAR ||
-        |         ' http://Track-d' || (doc_id % 5)::VARCHAR ||
-        |         '.Example:80/p/' || doc_id::VARCHAR ||
-        |         '?utm_source=feed&q=' || doc_id::VARCHAR ||
-        |         '&fbclid=abc#frag' AS text
-        |  FROM documents),
-        |ex AS (
-        |  SELECT doc_id, regexp_replace(u, '[.,;:!?)\]''"]+$', '') AS url,
-        |         lower(regexp_extract(regexp_replace(u, '[.,;:!?)\]''"]+$', ''),
-        |                              '^https?://([^/:?#\s]+)', 1)) AS domain
-        |  FROM fx, unnest(regexp_extract_all(text, 'https?://[^\s]+')) AS t(u)),
-        |lo AS (
-        |  SELECT doc_id, url, domain,
-        |         lower(regexp_extract(url, '^[^/]*//[^/]*', 0))
-        |           || url[len(regexp_extract(url, '^[^/]*//[^/]*', 0)) + 1:]
-        |           AS c
-        |  FROM ex),
-        |steps AS (
-        |  SELECT doc_id, url, domain,
-        |    regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        |      regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        |        c, '#.*$', ''),
-        |        '&(utm_[A-Za-z]+|fbclid|gclid)=[^&#]*', '', 'g'),
-        |        '\?(utm_[A-Za-z]+|fbclid|gclid)=[^&#]*&', '?'),
-        |        '\?(utm_[A-Za-z]+|fbclid|gclid)=[^&#]*$', ''),
-        |        '^(http://[^/?#]*):80([/?]|$)', '\1\2'),
-        |        '^(https://[^/?#]*):443([/?]|$)', '\1\2'),
-        |        '[?&]$', ''),
-        |        '(//[^/]+/.*[^/])/$', '\1') AS canonical
-        |  FROM lo)
-        |SELECT doc_id, url, domain, canonical FROM steps""".stripMargin,
-
-    // same windows, same floor-index lookup against src0's sorted
-    // values
-    "qf8_quantile_map" ->
-      """WITH r AS (
-        |  SELECT doc_id, source, n_chars,
-        |         percent_rank() OVER (PARTITION BY source
-        |           ORDER BY n_chars ASC, doc_id ASC) AS pr
-        |  FROM documents),
-        |ref AS (
-        |  SELECT n_chars AS ref_score,
-        |         CAST(row_number() OVER (ORDER BY n_chars ASC, doc_id ASC)
-        |              AS BIGINT) AS idx
-        |  FROM documents WHERE source = 'src0'),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS nn FROM ref)
-        |SELECT r.doc_id, r.source, r.n_chars AS score,
-        |       ref.ref_score AS mapped_score
-        |FROM r CROSS JOIN n
-        |JOIN ref ON ref.idx = CAST(floor(r.pr * CAST(n.nn - 1 AS DOUBLE))
-        |                           AS BIGINT) + 1""".stripMargin,
-
-    "qf7_calibrated_gate" ->
-      """WITH sc AS (
-        |  SELECT doc_id, source,
-        |         CAST(len(list_distinct(string_split_regex(lower(trim(text)),
-        |              '\s+'))) AS BIGINT) AS score
-        |  FROM documents)
-        |SELECT doc_id, source, score,
-        |       round(percent_rank() OVER (PARTITION BY source
-        |             ORDER BY score ASC, doc_id ASC), 6) AS calibrated,
-        |       round(percent_rank() OVER (PARTITION BY source
-        |             ORDER BY score ASC, doc_id ASC), 6) >= 0.2 AS keep
-        |FROM sc""".stripMargin,
-
-    "seq6_top_paths" ->
-      """WITH r AS (
-        |  SELECT user_id, event_type,
-        |         row_number() OVER (PARTITION BY user_id
-        |           ORDER BY ts, event_id) AS rn
-        |  FROM events),
-        |p AS (SELECT user_id, string_agg(event_type, '>' ORDER BY rn) AS path
-        |      FROM r WHERE rn <= 5 GROUP BY 1),
-        |c AS (SELECT path, CAST(count(*) AS BIGINT) AS n_users
-        |      FROM p GROUP BY 1)
-        |SELECT path, n_users FROM c
-        |ORDER BY n_users DESC, path ASC LIMIT 20""".stripMargin,
-
-    "ab4_wilson_interval" ->
-      """WITH pu AS (
-        |  SELECT user_id, event_type,
-        |         CASE WHEN count(*) >= 14 THEN 1 ELSE 0 END AS hit
-        |  FROM events GROUP BY 1, 2),
-        |a AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |             CAST(sum(hit) AS BIGINT) AS k
-        |      FROM pu GROUP BY 1),
-        |d AS (SELECT event_type, n, k,
-        |             CAST(n AS DOUBLE) AS nd, CAST(k AS DOUBLE) AS kd
-        |      FROM a)
-        |SELECT event_type, n, k,
-        |       round(kd / nd, 6) AS rate,
-        |       round((kd / nd + 1.96 * 1.96 / (2.0 * nd))
-        |               / (1.0 + 1.96 * 1.96 / nd)
-        |             - 1.96 * sqrt((kd / nd) * (1.0 - kd / nd) / nd
-        |                           + 1.96 * 1.96 / (4.0 * nd * nd))
-        |               / (1.0 + 1.96 * 1.96 / nd), 6) AS ci_lo,
-        |       round((kd / nd + 1.96 * 1.96 / (2.0 * nd))
-        |               / (1.0 + 1.96 * 1.96 / nd)
-        |             + 1.96 * sqrt((kd / nd) * (1.0 - kd / nd) / nd
-        |                           + 1.96 * 1.96 / (4.0 * nd * nd))
-        |               / (1.0 + 1.96 * 1.96 / nd), 6) AS ci_hi
-        |FROM d""".stripMargin,
-
-    "seq5_transitions" ->
-      """WITH p AS (
-        |  SELECT event_type AS from_type,
-        |         lead(event_type) OVER (PARTITION BY user_id
-        |           ORDER BY ts, event_id) AS to_type
-        |  FROM events),
-        |c AS (SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
-        |      FROM p WHERE to_type IS NOT NULL GROUP BY 1, 2),
-        |m AS (SELECT from_type, CAST(sum(n) AS BIGINT) AS mm FROM c GROUP BY 1)
-        |SELECT c.from_type, c.to_type, c.n,
-        |       round(CAST(c.n AS DOUBLE) / CAST(m.mm AS DOUBLE), 6) AS prob
-        |FROM c JOIN m USING (from_type)""".stripMargin,
-
-    // identical line fixture; list_distinct + two length folds —
-    // fractions are single integer divides
-    "rep3_line_repetition" -> rep3OracleSql,
-
-    // stream == batch for the stateless gate
-    "st21_stream_line_repetition" -> rep3OracleSql,
-
-    // per-FD: distinct (det, dep) pairs -> per-det majority; the g3
-    // violation count is gn - max(n), tie-break-free
-    "dq10_fd_profile" ->
-      """WITH p1 AS (SELECT CAST(o_orderkey AS VARCHAR) AS det,
-        |                   CAST(o_orderstatus AS VARCHAR) AS dep, count(*) AS n
-        |            FROM orders GROUP BY 1, 2),
-        |g1 AS (SELECT det, sum(n) AS gn, count(*) AS vals, max(n) AS mx
-        |       FROM p1 GROUP BY det),
-        |p2 AS (SELECT CAST(o_custkey AS VARCHAR) AS det,
-        |              CAST(o_orderpriority AS VARCHAR) AS dep, count(*) AS n
-        |       FROM orders GROUP BY 1, 2),
-        |g2 AS (SELECT det, sum(n) AS gn, count(*) AS vals, max(n) AS mx
-        |       FROM p2 GROUP BY det),
-        |p3 AS (SELECT CAST(o_orderpriority AS VARCHAR) AS det,
-        |              CAST(o_orderstatus AS VARCHAR) AS dep, count(*) AS n
-        |       FROM orders GROUP BY 1, 2),
-        |g3 AS (SELECT det, sum(n) AS gn, count(*) AS vals, max(n) AS mx
-        |       FROM p3 GROUP BY det)
-        |SELECT 'o_orderkey' AS determinant, 'o_orderstatus' AS dependent,
-        |       CAST(sum(gn) AS BIGINT) AS n_rows,
-        |       CAST(count(*) AS BIGINT) AS n_groups,
-        |       CAST(sum(CASE WHEN vals > 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS violating_groups,
-        |       CAST(sum(gn - mx) AS BIGINT) AS violating_rows,
-        |       round(CAST(sum(gn - mx) AS DOUBLE) / CAST(sum(gn) AS DOUBLE), 6)
-        |         AS violation_rate,
-        |       sum(gn - mx) = 0 AS holds
-        |FROM g1
-        |UNION ALL
-        |SELECT 'o_custkey', 'o_orderpriority',
-        |       CAST(sum(gn) AS BIGINT), CAST(count(*) AS BIGINT),
-        |       CAST(sum(CASE WHEN vals > 1 THEN 1 ELSE 0 END) AS BIGINT),
-        |       CAST(sum(gn - mx) AS BIGINT),
-        |       round(CAST(sum(gn - mx) AS DOUBLE) / CAST(sum(gn) AS DOUBLE), 6),
-        |       sum(gn - mx) = 0
-        |FROM g2
-        |UNION ALL
-        |SELECT 'o_orderpriority', 'o_orderstatus',
-        |       CAST(sum(gn) AS BIGINT), CAST(count(*) AS BIGINT),
-        |       CAST(sum(CASE WHEN vals > 1 THEN 1 ELSE 0 END) AS BIGINT),
-        |       CAST(sum(gn - mx) AS BIGINT),
-        |       round(CAST(sum(gn - mx) AS DOUBLE) / CAST(sum(gn) AS DOUBLE), 6),
-        |       sum(gn - mx) = 0
-        |FROM g3""".stripMargin,
-
-    // first-seen day per user, window prefix sum over DAY rows
-    "growth1_cumulative_uniques" ->
-      """WITH f AS (
-        |  SELECT user_id, min(CAST(ts AS DATE)) AS d FROM events
-        |  WHERE user_id IS NOT NULL AND ts IS NOT NULL GROUP BY user_id),
-        |dly AS (SELECT d, count(*) AS new_entities FROM f GROUP BY d)
-        |SELECT CAST(d AS TIMESTAMP) AS d,
-        |       CAST(new_entities AS BIGINT) AS new_entities,
-        |       CAST(sum(new_entities) OVER (ORDER BY d
-        |              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |            AS BIGINT) AS cum_entities
-        |FROM dly""".stripMargin,
-
-    // epoch-day weekday arithmetic, exact cent sums, the same
-    // four-divide tree
-    "ts7_seasonal_index" ->
-      """WITH b AS (
-        |  SELECT CAST((date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) + 4)
-        |              % 7 AS INTEGER) AS dow,
-        |         CAST(round(value * 100) AS BIGINT) AS v
-        |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL),
-        |g AS (SELECT dow, count(*) AS n, sum(v) AS s FROM b GROUP BY dow),
-        |t AS (SELECT sum(n) AS tn, sum(s) AS ts FROM g)
-        |SELECT dow, CAST(n AS BIGINT) AS n,
-        |       round(CAST(s AS DOUBLE) / CAST(n AS DOUBLE) / 100.0, 6)
-        |         AS mean_value,
-        |       round((CAST(s AS DOUBLE) / CAST(n AS DOUBLE) / 100.0)
-        |             / (CAST(t.ts AS DOUBLE) / CAST(t.tn AS DOUBLE) / 100.0), 6)
-        |         AS seasonal_index
-        |FROM g, t""".stripMargin,
-
-    "dq9_benford" ->
-      """WITH f AS (SELECT abs(o_totalprice) AS v FROM orders
-        |           WHERE abs(o_totalprice) >= 1),
-        |c AS (SELECT CAST(substring(CAST(CAST(floor(v) AS BIGINT) AS VARCHAR),
-        |                  1, 1) AS INT) AS digit,
-        |             CAST(count(*) AS BIGINT) AS n
-        |      FROM f GROUP BY 1),
-        |t AS (SELECT CAST(sum(n) AS BIGINT) AS tt FROM c),
-        |s AS (SELECT unnest(range(1, 10)) AS digit),
-        |j AS (SELECT CAST(s.digit AS INT) AS digit,
-        |             CAST(coalesce(c.n, 0) AS BIGINT) AS n,
-        |             log10(1.0 + 1.0 / CAST(s.digit AS DOUBLE)) AS ex
-        |      FROM s LEFT JOIN c ON s.digit = c.digit)
-        |SELECT digit, n,
-        |       round(CAST(n AS DOUBLE) / CAST(tt AS DOUBLE), 6) AS obs_share,
-        |       round(ex, 6) AS exp_share,
-        |       round((CAST(n AS DOUBLE) - ex * CAST(tt AS DOUBLE))
-        |             * (CAST(n AS DOUBLE) - ex * CAST(tt AS DOUBLE))
-        |             / (ex * CAST(tt AS DOUBLE)), 6) AS chi2_term
-        |FROM j, t""".stripMargin,
-
-    "pf8_entropy" ->
-      """WITH w AS (SELECT source,
-        |             unnest(string_split_regex(lower(trim(text)), '\s+')) AS w
-        |           FROM documents),
-        |f AS (SELECT source, w FROM w WHERE length(w) > 0),
-        |c AS (SELECT source, w, CAST(count(*) AS BIGINT) AS n
-        |      FROM f GROUP BY 1, 2),
-        |cc AS (SELECT source, n, CAST(count(*) AS BIGINT) AS m
-        |       FROM c GROUP BY 1, 2),
-        |g AS (SELECT source, CAST(sum(n * m) AS BIGINT) AS t,
-        |             CAST(sum(m) AS BIGINT) AS n_distinct,
-        |             list_aggregate(
-        |               list(CAST(n * m AS DOUBLE) * ln(CAST(n AS DOUBLE))
-        |                    ORDER BY n), 'sum') AS snln
-        |      FROM cc GROUP BY 1)
-        |SELECT source, t AS n_rows, n_distinct,
-        |       round(ln(CAST(t AS DOUBLE)) - snln / CAST(t AS DOUBLE), 6)
-        |         AS entropy_nats
-        |FROM g""".stripMargin,
-
-    // neighbor carry via IGNORE NULLS windows, micros ratio, raw
-    // doubles (identical inputs -> identical bits; see ts4)
-    "ts5_interpolate" ->
-      """WITH e AS (
-        |  SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h, value
-        |  FROM events WHERE value >= 300),
-        |agg AS (
-        |  SELECT h, count(*) AS n_events, round(sum(value), 4) AS sum_value
-        |  FROM e GROUP BY h),
-        |b AS (SELECT min(h) AS lo, max(h) AS hi FROM e),
-        |spine AS (SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS h
-        |          FROM b),
-        |g AS (SELECT s.h, coalesce(a.n_events, 0) AS n_events, a.sum_value
-        |      FROM spine s LEFT JOIN agg a USING (h)),
-        |n AS (SELECT h, n_events, sum_value,
-        |  last_value(sum_value IGNORE NULLS) OVER (ORDER BY h
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pv,
-        |  last_value(CASE WHEN sum_value IS NOT NULL THEN h END IGNORE NULLS)
-        |    OVER (ORDER BY h
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pt,
-        |  first_value(sum_value IGNORE NULLS) OVER (ORDER BY h
-        |    ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS nv,
-        |  first_value(CASE WHEN sum_value IS NOT NULL THEN h END IGNORE NULLS)
-        |    OVER (ORDER BY h
-        |    ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS nt
-        |  FROM g)
-        |SELECT h, n_events, sum_value,
-        |       CASE WHEN sum_value IS NOT NULL THEN sum_value
-        |            ELSE pv + (nv - pv)
-        |                 * (CAST(epoch_us(h) - epoch_us(pt) AS DOUBLE)
-        |                    / CAST(epoch_us(nt) - epoch_us(pt) AS DOUBLE))
-        |       END AS sum_value_interp
-        |FROM n""".stripMargin,
-
-    // the pooled moments and per-arm sums replayed on the same exact
-    // integers, same adjustment tree
-    "ab3_cuped" ->
-      """WITH pu AS (
-        |  SELECT user_id,
-        |    CAST(sum(CASE WHEN ts < TIMESTAMP '2024-01-16'
-        |             THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END) AS BIGINT) AS x,
-        |    CAST(sum(CASE WHEN ts >= TIMESTAMP '2024-01-16'
-        |             THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END) AS BIGINT) AS y
-        |  FROM events GROUP BY 1),
-        |g AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-        |         CAST(sum(x * x) AS BIGINT) AS sxx,
-        |         CAST(sum(x * y) AS BIGINT) AS sxy,
-        |         CAST(sum(y * y) AS BIGINT) AS syy
-        |  FROM pu),
-        |a AS (
-        |  SELECT user_id % 2 AS arm, CAST(count(*) AS BIGINT) AS na,
-        |         CAST(sum(x) AS BIGINT) AS sxa, CAST(sum(y) AS BIGINT) AS sya
-        |  FROM pu GROUP BY 1),
-        |d AS (
-        |  SELECT arm, na, CAST(na AS DOUBLE) AS nad,
-        |         CAST(sxa AS DOUBLE) AS sxad, CAST(sya AS DOUBLE) AS syad,
-        |         CAST(n AS DOUBLE) AS nd,
-        |         CAST(sx AS DOUBLE) AS sxd, CAST(sy AS DOUBLE) AS syd,
-        |         CAST(sxx AS DOUBLE) AS sxxd, CAST(sxy AS DOUBLE) AS sxyd,
-        |         CAST(syy AS DOUBLE) AS syyd
-        |  FROM a CROSS JOIN g),
-        |c AS (
-        |  SELECT arm, na, nad, sxad, syad, nd, sxd,
-        |         sxxd - sxd * sxd / nd AS cxx,
-        |         sxyd - sxd * syd / nd AS cxy,
-        |         syyd - syd * syd / nd AS cyy
-        |  FROM d)
-        |SELECT arm, na AS n,
-        |       round(syad / nad / 100.0, 6) AS mean_y,
-        |       round((syad / nad - (cxy / cxx)
-        |              * (sxad / nad - sxd / nd)) / 100.0, 6) AS mean_y_adj,
-        |       round(cxy / cxx, 6) AS theta,
-        |       round(cxy * cxy / (cxx * cyy), 6) AS rho2
-        |FROM c""".stripMargin,
-
-    // conversion indexing by the backwards running conversion count,
-    // U-split with // and % largest-remainder middles
-    "att1_position_credit" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
-        |         event_type IN ('view', 'click') AS is_touch,
-        |         event_type = 'purchase' AS is_conv
-        |  FROM events WHERE event_type IN ('view', 'click', 'purchase')),
-        |k AS (SELECT *, sum(CASE WHEN is_conv THEN 1 ELSE 0 END)
-        |        OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |              ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS kk
-        |      FROM e),
-        |convs AS (SELECT user_id, kk, event_id AS conv_id, ts AS conv_ts
-        |          FROM k WHERE is_conv),
-        |t AS (SELECT user_id, kk, event_id AS touch_id, ts AS touch_ts
-        |      FROM k WHERE is_touch AND kk > 0),
-        |posd AS (SELECT *,
-        |           CAST(row_number() OVER (PARTITION BY user_id, kk
-        |                ORDER BY touch_ts, touch_id) AS BIGINT) AS position,
-        |           CAST(count(*) OVER (PARTITION BY user_id, kk) AS BIGINT)
-        |             AS n_touches
-        |         FROM t)
-        |SELECT p.user_id, c.conv_id, c.conv_ts, p.touch_id, p.touch_ts,
-        |       p.n_touches, p.position,
-        |       CASE WHEN p.n_touches = 1 THEN 10000
-        |            WHEN p.n_touches = 2 THEN 5000
-        |            WHEN p.position = 1 OR p.position = p.n_touches THEN 4000
-        |            ELSE 2000 // (p.n_touches - 2)
-        |                 + CASE WHEN p.position - 1 <= 2000 % (p.n_touches - 2)
-        |                        THEN 1 ELSE 0 END
-        |       END AS credit_bp
-        |FROM posd p JOIN convs c USING (user_id, kk)""".stripMargin,
-
-    // the sketch replayed: exact per-item counts, salted limb-hash
-    // buckets, counter sums, min over depth
-    "hh2_countmin" ->
-      cmsOracleSql("SELECT l_partkey % 2000 AS item FROM lineitem",
-        depth = 4, width = 256),
-
-    // class sizes via a count window over the same quasi columns,
-    // NULL masking below k
-    "pii3_k_anonymity" ->
-      """WITH q AS (
-        |  SELECT c_custkey, c_nationkey, c_mktsegment,
-        |         CAST(floor(c_acctbal / 2000) AS BIGINT) AS bal_band
-        |  FROM customer),
-        |sz AS (
-        |  SELECT *, count(*) OVER (PARTITION BY c_nationkey, c_mktsegment,
-        |                           bal_band) AS class_size
-        |  FROM q)
-        |SELECT c_custkey,
-        |       CASE WHEN class_size >= 3 THEN c_nationkey END AS c_nationkey,
-        |       CASE WHEN class_size >= 3 THEN c_mktsegment END AS c_mktsegment,
-        |       CASE WHEN class_size >= 3 THEN bal_band END AS bal_band,
-        |       CAST(class_size AS BIGINT) AS class_size,
-        |       class_size < 3 AS suppressed
-        |FROM sz""".stripMargin,
-
-    "priv4_l_diversity" ->
-      """WITH q AS (
-        |  SELECT c_custkey, c_nationkey, c_mktsegment,
-        |         CAST(floor(c_acctbal / 2000) AS BIGINT) AS bal_band
-        |  FROM customer),
-        |d AS (
-        |  SELECT c_nationkey, c_mktsegment,
-        |         count(DISTINCT bal_band) AS ds
-        |  FROM q GROUP BY 1, 2)
-        |SELECT c_custkey,
-        |       CASE WHEN ds >= 3 THEN q.c_nationkey END AS c_nationkey,
-        |       CASE WHEN ds >= 3 THEN q.c_mktsegment END AS c_mktsegment,
-        |       bal_band,
-        |       CAST(ds AS BIGINT) AS distinct_sensitive,
-        |       ds < 3 AS suppressed
-        |FROM q JOIN d USING (c_nationkey, c_mktsegment)""".stripMargin,
-
-    // the same 11 exact counters, the same centered-moment tree, six
-    // UNION ALL pair rows
-    "reg2_corr_matrix" -> {
-      val cols = Seq("qty" -> "CAST(round(l_quantity) AS BIGINT)",
-        "price" -> "CAST(round(l_extendedprice) AS BIGINT)",
-        "disc" -> "CAST(round(l_discount * 100) AS BIGINT)",
-        "tax" -> "CAST(round(l_tax * 100) AS BIGINT)")
-      val baseSel = cols.map { case (n, e) => s"$e AS $n" }.mkString(", ")
-      val sums = cols.map { case (n, _) => s"CAST(sum($n) AS BIGINT) AS s_$n" }
-      val crosses = for {
-        i <- cols.indices; j <- i until cols.length
-      } yield s"CAST(sum(${cols(i)._1} * ${cols(j)._1}) AS BIGINT) AS p_${cols(i)._1}_${cols(j)._1}"
-      def cm(a: String, b: String) =
-        s"(CAST(p_${a}_$b AS DOUBLE) - CAST(s_$a AS DOUBLE) * CAST(s_$b AS DOUBLE) / CAST(n AS DOUBLE))"
-      val rows = for {
-        i <- cols.indices; j <- (i + 1) until cols.length
-        a = cols(i)._1; b = cols(j)._1
-      } yield s"""SELECT '$a' AS col_x, '$b' AS col_y, n,
-                 |  round(${cm(a, b)} / sqrt(${cm(a, a)} * ${cm(b, b)}), 6) AS corr
-                 |FROM agg""".stripMargin
-      s"""WITH base AS (SELECT $baseSel FROM lineitem),
-         |agg AS (SELECT CAST(count(*) AS BIGINT) AS n,
-         |  ${(sums ++ crosses).mkString(",\n  ")}
-         |  FROM base)
-         |${rows.mkString("\nUNION ALL\n")}""".stripMargin
-    },
-
-    // presence-distinct items, size-capped baskets (never hit at this
-    // basket width), exact counts, mirrored ratio algebra
-    "mb1_association_rules" ->
-      """WITH it AS (SELECT DISTINCT l_orderkey AS b, l_partkey % 50 AS i
-        |            FROM lineitem),
-        |sz AS (SELECT b FROM it GROUP BY b HAVING count(*) <= 1024),
-        |kept AS (SELECT it.b, it.i FROM it JOIN sz USING (b)),
-        |nb AS (SELECT CAST(count(DISTINCT b) AS BIGINT) AS n FROM kept),
-        |m AS (SELECT i, CAST(count(*) AS BIGINT) AS c FROM kept GROUP BY 1),
-        |p AS (SELECT l.i AS item_a, r.i AS item_b,
-        |             CAST(count(*) AS BIGINT) AS n_pair
-        |      FROM kept l JOIN kept r ON l.b = r.b AND l.i < r.i
-        |      GROUP BY 1, 2 HAVING count(*) >= 30)
-        |SELECT item_a, item_b, n_pair, ma.c AS n_a, mb_.c AS n_b,
-        |       round(CAST(n_pair AS DOUBLE) / CAST(nb.n AS DOUBLE), 6) AS support,
-        |       round(CAST(n_pair AS DOUBLE) / CAST(ma.c AS DOUBLE), 6) AS conf_a_b,
-        |       round(CAST(n_pair AS DOUBLE) / CAST(mb_.c AS DOUBLE), 6) AS conf_b_a,
-        |       round(CAST(nb.n AS DOUBLE) * CAST(n_pair AS DOUBLE)
-        |             / (CAST(ma.c AS DOUBLE) * CAST(mb_.c AS DOUBLE)), 6) AS lift
-        |FROM p JOIN m ma ON p.item_a = ma.i
-        |       JOIN m mb_ ON p.item_b = mb_.i
-        |       CROSS JOIN nb""".stripMargin,
-
-    // the semantic definition, quadratic: a part is on the frontier
-    // iff NO other part is >= on both axes with one strict
-    "sky1_pareto_front" ->
-      """SELECT p.p_partkey, p.p_size, p.p_retailprice
-        |FROM part p
-        |WHERE p.p_size IS NOT NULL AND p.p_retailprice IS NOT NULL
-        |  AND NOT EXISTS (
-        |    SELECT 1 FROM part q
-        |    WHERE q.p_size IS NOT NULL AND q.p_retailprice IS NOT NULL
-        |      AND q.p_size >= p.p_size AND q.p_retailprice <= p.p_retailprice
-        |      AND (q.p_size > p.p_size OR q.p_retailprice < p.p_retailprice))""".stripMargin,
-
-    // exact-integer moment sums (quantity integral, price rounded to
-    // whole units), centered-moment algebra on the exact scalars —
-    // the same tree as Stats.olsFit
-    "reg1_ols" ->
-      """WITH base AS (
-        |  SELECT l_returnflag,
-        |         CAST(round(l_quantity) AS BIGINT) AS x,
-        |         CAST(round(l_extendedprice) AS BIGINT) AS y
-        |  FROM lineitem),
-        |agg AS (
-        |  SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-        |         CAST(sum(x * x) AS BIGINT) AS sxx,
-        |         CAST(sum(y * y) AS BIGINT) AS syy,
-        |         CAST(sum(x * y) AS BIGINT) AS sxy
-        |  FROM base GROUP BY 1),
-        |d AS (
-        |  SELECT l_returnflag, n, CAST(n AS DOUBLE) AS nd,
-        |         CAST(sx AS DOUBLE) AS sxd, CAST(sy AS DOUBLE) AS syd,
-        |         CAST(sxx AS DOUBLE) AS sxxd, CAST(syy AS DOUBLE) AS syyd,
-        |         CAST(sxy AS DOUBLE) AS sxyd
-        |  FROM agg),
-        |c AS (
-        |  SELECT l_returnflag, n, nd, sxd, syd,
-        |         sxxd - sxd * sxd / nd AS cxx,
-        |         syyd - syd * syd / nd AS cyy,
-        |         sxyd - sxd * syd / nd AS cxy
-        |  FROM d)
-        |SELECT l_returnflag, n,
-        |       round(cxy / cxx * (1.0 / 1.0), 6) AS slope,
-        |       round(syd / nd / 1.0 - (cxy / cxx * (1.0 / 1.0)) * (sxd / nd / 1.0), 6)
-        |         AS intercept,
-        |       round(cxy * cxy / (cxx * cyy), 6) AS r2
-        |FROM c""".stripMargin,
-
-    // positional chunk enumeration mirrors the kernel: starts at
-    // multiples of stride below max(len - overlap, 1)
-    "ch1_chunk_documents" ->
-      """WITH tok AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS l
-        |             FROM documents),
-        |c AS (SELECT doc_id, len(l) AS n, l,
-        |      unnest(range(0, greatest(len(l) - 8, 1), 24)) AS start FROM tok)
-        |SELECT doc_id, CAST(start // 24 AS BIGINT) AS chunk_idx,
-        |       array_to_string(l[start + 1 : start + 32], ' ') AS chunk_text,
-        |       CAST(least(start + 32, n) - start AS BIGINT) AS n_tokens
-        |FROM c""".stripMargin,
-
-    "ch3_sentence_chunks" ->
-      """WITH raw AS (
-        |  SELECT doc_id,
-        |         regexp_extract_all(text, '[^.!?]*[.!?]+|[^.!?]+$') AS l
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id, unnest([{'si': i, 'sent': trim(l[i])}
-        |                         for i in range(1, len(l) + 1)],
-        |                        recursive := true)
-        |  FROM raw),
-        |t AS (
-        |  SELECT doc_id, si, sent,
-        |         CAST(len(string_split_regex(trim(sent), '\s+')) AS BIGINT) AS n_tok
-        |  FROM s),
-        |c AS (
-        |  SELECT doc_id, si, sent, n_tok,
-        |         CAST(sum(n_tok) OVER (PARTITION BY doc_id ORDER BY si)
-        |              AS BIGINT) AS cum
-        |  FROM t)
-        |SELECT doc_id, (cum - n_tok) // 40 AS chunk_idx,
-        |       count(*) AS n_sentences, CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-        |       string_agg(sent, ' ' ORDER BY si) AS chunk_text
-        |FROM c GROUP BY doc_id, (cum - n_tok) // 40""".stripMargin,
-
-    "mix1_temperature_weights" ->
-      """SELECT source, count(*) AS n_docs,
-        |       round(pow(count(*), 0.5) / sum(pow(count(*), 0.5)) OVER (), 6) AS weight
-        |FROM documents GROUP BY source""".stripMargin,
-
-    "mix3_token_budget" ->
-      """WITH d AS (
-        |  SELECT doc_id, source,
-        |         CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)
-        |           AS n_tokens,
-        |         (doc_id * 2654435761) % 4294967296 AS h
-        |  FROM documents
-        |  WHERE source IN ('src0', 'src1', 'src2', 'src3')),
-        |r AS (
-        |  SELECT doc_id, source, n_tokens,
-        |         CAST(COALESCE(sum(n_tokens) OVER (
-        |           PARTITION BY source ORDER BY h, doc_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |           AS BIGINT) AS before
-        |  FROM d)
-        |SELECT doc_id, source, n_tokens, before + n_tokens AS cum_tokens
-        |FROM r
-        |WHERE before < CASE source WHEN 'src0' THEN 800
-        |                           WHEN 'src1' THEN 400
-        |                           WHEN 'src2' THEN 1000000 ELSE 0 END""".stripMargin,
-
-    "pf4_column_profile" ->
-      """WITH s AS (SELECT count(*) AS n,
-        |  count(*) FILTER (o_orderkey IS NULL) AS nn1,
-        |  count(DISTINCT o_orderkey) AS nd1,
-        |  CAST(min(o_orderkey) AS DOUBLE) AS mn1, CAST(max(o_orderkey) AS DOUBLE) AS mx1,
-        |  count(*) FILTER (o_custkey IS NULL) AS nn2,
-        |  count(DISTINCT o_custkey) AS nd2,
-        |  CAST(min(o_custkey) AS DOUBLE) AS mn2, CAST(max(o_custkey) AS DOUBLE) AS mx2,
-        |  count(*) FILTER (o_orderstatus IS NULL) AS nn3,
-        |  count(DISTINCT o_orderstatus) AS nd3,
-        |  count(*) FILTER (o_totalprice IS NULL) AS nn4,
-        |  count(DISTINCT o_totalprice) AS nd4,
-        |  CAST(min(o_totalprice) AS DOUBLE) AS mn4, CAST(max(o_totalprice) AS DOUBLE) AS mx4
-        |  FROM orders)
-        |SELECT 'o_orderkey' AS col_name, n AS n_rows, nn1 AS n_nulls,
-        |       nd1 AS n_distinct, mn1 AS min_num, mx1 AS max_num FROM s
-        |UNION ALL
-        |SELECT 'o_custkey', n, nn2, nd2, mn2, mx2 FROM s
-        |UNION ALL
-        |SELECT 'o_orderstatus', n, nn3, nd3, CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE) FROM s
-        |UNION ALL
-        |SELECT 'o_totalprice', n, nn4, nd4, mn4, mx4 FROM s""".stripMargin,
-
-    "dq1_quality_report" ->
-      """SELECT 'not_null:o_custkey' AS check_name,
-        |       count(*) FILTER (o_custkey IS NULL) AS n_violations FROM orders
-        |UNION ALL
-        |SELECT 'unique:o_orderkey',
-        |       CAST(coalesce(sum(__n - 1), 0) AS BIGINT)
-        |FROM (SELECT count(*) AS __n FROM orders GROUP BY o_orderkey HAVING count(*) > 1)
-        |UNION ALL
-        |SELECT 'fk:l_orderkey->o_orderkey', count(*) FROM lineitem
-        |WHERE l_orderkey IS NOT NULL
-        |  AND l_orderkey NOT IN (SELECT o_orderkey FROM orders)
-        |UNION ALL
-        |SELECT 'accepted:o_orderstatus',
-        |       count(*) FILTER (o_orderstatus IS NOT NULL
-        |                        AND o_orderstatus NOT IN ('F', 'O')) FROM orders
-        |UNION ALL
-        |SELECT 'range:o_totalprice',
-        |       count(*) FILTER (o_totalprice IS NOT NULL
-        |                        AND (o_totalprice < 0 OR o_totalprice > 200000))
-        |FROM orders""".stripMargin,
-
-    "dq4_psi_drift" ->
-      """WITH ref AS (
-        |  SELECT CASE WHEN o_totalprice < 0 THEN -1
-        |              WHEN o_totalprice >= 500000 THEN 10
-        |              ELSE CAST(least(floor(o_totalprice / 50000), 9) AS BIGINT)
-        |              END AS bucket
-        |  FROM orders
-        |  WHERE o_totalprice IS NOT NULL AND o_orderkey % 3 < 2),
-        |cur AS (
-        |  SELECT CASE WHEN o_totalprice < 0 THEN -1
-        |              WHEN o_totalprice >= 500000 THEN 10
-        |              ELSE CAST(least(floor(o_totalprice / 50000), 9) AS BIGINT)
-        |              END AS bucket
-        |  FROM orders
-        |  WHERE o_totalprice IS NOT NULL AND o_orderkey % 3 = 2
-        |    AND o_totalprice < 300000),
-        |spine AS (SELECT unnest(range(-1, 11)) AS bucket),
-        |rc AS (SELECT s.bucket, COALESCE(r.n, 0) AS n_ref, COALESCE(c.n, 0) AS n_cur
-        |       FROM spine s
-        |       LEFT JOIN (SELECT bucket, count(*) AS n FROM ref GROUP BY 1) r
-        |         USING (bucket)
-        |       LEFT JOIN (SELECT bucket, count(*) AS n FROM cur GROUP BY 1) c
-        |         USING (bucket)),
-        |tot AS (SELECT CAST(sum(n_ref) AS BIGINT) AS tr,
-        |               CAST(sum(n_cur) AS BIGINT) AS tc FROM rc)
-        |SELECT bucket, n_ref, n_cur,
-        |       round(((n_cur + 1) * 1.0 / (tc + 12) - (n_ref + 1) * 1.0 / (tr + 12))
-        |             * ln(((n_cur + 1) * 1.0 / (tc + 12))
-        |                  / ((n_ref + 1) * 1.0 / (tr + 12))), 6) AS psi_term
-        |FROM rc, tot""".stripMargin,
-
-    // repaired sink == the source, full stop
-    "m8_checksum_repair" -> "SELECT * FROM lineitem",
-
-    // the A-ES redraw: identical md5 uniform, identical priority
-    "sp4_weighted_sample" ->
-      """WITH p AS (
-        |  SELECT doc_id, n_chars,
-        |         ln((CAST(CAST(concat('0x', substr(md5(
-        |             concat('graft', ':', CAST(doc_id AS VARCHAR))), 1, 15))
-        |             AS BIGINT) AS DOUBLE) + 0.5) / 1.152921504606847e18)
-        |           / CAST(n_chars AS DOUBLE) AS pr
-        |  FROM documents WHERE n_chars > 0)
-        |SELECT doc_id, n_chars, round(pr, 6) AS priority
-        |FROM p ORDER BY pr DESC, doc_id ASC LIMIT 100""".stripMargin,
-
-    // the digest is engine-portable by construction: MD5 of the
-    // 0x1f-joined canonical string, first 15 hex chars as a 60-bit
-    // int, XOR-aggregated — DuckDB computes the identical digests
-    "dq7_replication_checksum" ->
-      """WITH canon AS (
-        |  SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag, l_linestatus,
-        |         CAST(floor(l_orderkey / 1000) AS BIGINT) AS chunk
-        |  FROM lineitem),
-        |src AS (
-        |  SELECT chunk, count(*) AS n_src,
-        |         bit_xor(CAST(concat('0x', substr(md5(concat_ws(chr(31),
-        |           coalesce(CAST(l_orderkey AS VARCHAR), chr(1)),
-        |           coalesce(CAST(l_linenumber AS VARCHAR), chr(1)),
-        |           coalesce(CAST(l_quantity AS VARCHAR), chr(1)),
-        |           coalesce(CAST(l_returnflag AS VARCHAR), chr(1)),
-        |           coalesce(CAST(l_linestatus AS VARCHAR), chr(1)))), 1, 15))
-        |           AS BIGINT)) AS digest_src
-        |  FROM canon GROUP BY 1),
-        |pert AS (
-        |  SELECT l_orderkey, l_linenumber,
-        |         CASE WHEN l_orderkey BETWEEN 1000 AND 1999
-        |              THEN l_quantity + 1 ELSE l_quantity END AS l_quantity,
-        |         l_returnflag, l_linestatus,
-        |         CAST(floor(l_orderkey / 1000) AS BIGINT) AS chunk
-        |  FROM lineitem
-        |  WHERE NOT (l_orderkey BETWEEN 5000 AND 5999 AND l_linenumber = 1)),
-        |dst AS (
-        |  SELECT chunk, count(*) AS n_dst,
-        |         bit_xor(CAST(concat('0x', substr(md5(concat_ws(chr(31),
-        |           coalesce(CAST(l_orderkey AS VARCHAR), chr(1)),
-        |           coalesce(CAST(l_linenumber AS VARCHAR), chr(1)),
-        |           coalesce(CAST(l_quantity AS VARCHAR), chr(1)),
-        |           coalesce(CAST(l_returnflag AS VARCHAR), chr(1)),
-        |           coalesce(CAST(l_linestatus AS VARCHAR), chr(1)))), 1, 15))
-        |           AS BIGINT)) AS digest_dst
-        |  FROM pert GROUP BY 1)
-        |SELECT chunk,
-        |       coalesce(s.n_src, 0) AS n_src,
-        |       coalesce(d.n_dst, 0) AS n_dst,
-        |       (coalesce(s.n_src, 0) = coalesce(d.n_dst, 0) AND
-        |        s.digest_src IS NOT DISTINCT FROM d.digest_dst) AS chunk_ok
-        |FROM src s FULL OUTER JOIN dst d USING (chunk)""".stripMargin,
-
-    // integer counts + one IEEE division per ECDF point + a max:
-    // bit-identical across engines; the struct max ties toward the
-    // larger value in both
-    "dq6_ks_drift" ->
-      """WITH av AS (SELECT o_totalprice AS v FROM orders
-        |            WHERE o_orderkey % 3 < 2 AND o_totalprice IS NOT NULL),
-        |bv AS (SELECT o_totalprice AS v FROM orders
-        |       WHERE o_orderkey % 3 = 2 AND o_totalprice < 300000
-        |         AND o_totalprice IS NOT NULL),
-        |m AS (SELECT v, sum(ca) AS ca, sum(cb) AS cb FROM (
-        |        SELECT v, count(*) AS ca, 0 AS cb FROM av GROUP BY 1
-        |        UNION ALL
-        |        SELECT v, 0 AS ca, count(*) AS cb FROM bv GROUP BY 1)
-        |      GROUP BY 1),
-        |c AS (SELECT v,
-        |        sum(ca) OVER (ORDER BY v) AS cca,
-        |        sum(cb) OVER (ORDER BY v) AS ccb FROM m),
-        |tot AS (SELECT (SELECT count(*) FROM av) AS na,
-        |               (SELECT count(*) FROM bv) AS nb),
-        |d AS (SELECT v, abs(CAST(cca AS DOUBLE) / na - CAST(ccb AS DOUBLE) / nb) AS diff
-        |      FROM c CROSS JOIN tot),
-        |best AS (SELECT max({'d': diff, 'v': v}) AS s FROM d)
-        |SELECT round(best.s.d, 6) AS ks_stat, best.s.v AS at_value,
-        |       CAST(tot.na AS BIGINT) AS n_ref, CAST(tot.nb AS BIGINT) AS n_cur
-        |FROM best CROSS JOIN tot""".stripMargin,
-
-    // the same decomposed form as the operator (absent-term mass in
-    // closed form): per-term arithmetic is expression-identical, so
-    // the engines agree to well past round(4)
-    "dq5_token_kl" ->
-      """WITH cst AS (
-        |  SELECT source AS grp, t, count(*) AS c_st
-        |  FROM (SELECT source, unnest(string_split_regex(lower(trim(text)), '\s+')) AS t
-        |        FROM documents)
-        |  WHERE t <> '' GROUP BY 1, 2),
-        |ct AS (SELECT t, sum(c_st) AS c_t FROM cst GROUP BY 1),
-        |nv AS (SELECT count(*) AS v, sum(c_t) AS n FROM ct),
-        |cts AS (SELECT t, ln((c_t + 1.0) / (n + v)) AS ln_q FROM ct CROSS JOIN nv),
-        |lall AS (SELECT sum(ln_q) AS l_all FROM cts),
-        |ns AS (SELECT grp, sum(c_st) AS n_s, count(*) AS v_s FROM cst GROUP BY 1),
-        |direct AS (
-        |  SELECT cst.grp,
-        |         sum(((cst.c_st + 1.0) / (ns.n_s + nv.v)) *
-        |             (ln((cst.c_st + 1.0) / (ns.n_s + nv.v)) - cts.ln_q)) AS direct,
-        |         sum(cts.ln_q) AS l_s
-        |  FROM cst JOIN cts USING (t) JOIN ns USING (grp) CROSS JOIN nv
-        |  GROUP BY 1),
-        |out AS (
-        |  SELECT ns.grp AS source,
-        |         CAST(ns.n_s AS BIGINT) AS n_tokens,
-        |         CAST(ns.v_s AS BIGINT) AS vocab_seen,
-        |         round(direct.direct +
-        |               (nv.v - ns.v_s) * (1.0 / (ns.n_s + nv.v)) * ln(1.0 / (ns.n_s + nv.v)) -
-        |               (1.0 / (ns.n_s + nv.v)) * (lall.l_all - direct.l_s), 4) AS kl_vs_corpus
-        |  FROM ns JOIN direct USING (grp) CROSS JOIN nv CROSS JOIN lall)
-        |SELECT * FROM out""".stripMargin,
-
-    "dq2_outliers" ->
-      """WITH f AS (
-        |  SELECT event_type,
-        |         quantile_cont(value, 0.25) AS q1,
-        |         quantile_cont(value, 0.75) AS q3
-        |  FROM events GROUP BY 1)
-        |SELECT e.event_id, e.event_type, e.value,
-        |       round(f.q1 - (f.q3 - f.q1) * 1.5, 4) AS lo_fence,
-        |       round(f.q3 + (f.q3 - f.q1) * 1.5, 4) AS hi_fence
-        |FROM events e JOIN f USING (event_type)
-        |WHERE e.value < f.q1 - (f.q3 - f.q1) * 1.5
-        |   OR e.value > f.q3 + (f.q3 - f.q1) * 1.5""".stripMargin,
-
-    // same double trees as the Spark plan: sim5's cosine form, k-NN
-    // means as rank-ordered list_sum folds divided by list length,
-    // ratio margin mirrored multiply-then-divide
-    "mine1_bitext_margin" ->
-      """WITH s AS (SELECT vec_id AS src_id, embedding AS sv
-        |           FROM embeddings WHERE label % 2 = 0),
-        |t AS (SELECT vec_id AS tgt_id, embedding AS tv
-        |      FROM embeddings WHERE label % 2 = 1),
-        |sc AS (
-        |  SELECT s.src_id, t.tgt_id,
-        |    list_sum(list_transform(range(1, 65),
-        |      i -> CAST(sv[i] AS DOUBLE) * CAST(tv[i] AS DOUBLE)))
-        |    / (sqrt(list_sum(list_transform(range(1, 65),
-        |        i -> CAST(sv[i] AS DOUBLE) * CAST(sv[i] AS DOUBLE))))
-        |     * sqrt(list_sum(list_transform(range(1, 65),
-        |        i -> CAST(tv[i] AS DOUBLE) * CAST(tv[i] AS DOUBLE))))) AS cos
-        |  FROM s CROSS JOIN t
-        |  WHERE sqrt(list_sum(list_transform(range(1, 65),
-        |          i -> CAST(sv[i] AS DOUBLE) * CAST(sv[i] AS DOUBLE)))) > 0
-        |    AND sqrt(list_sum(list_transform(range(1, 65),
-        |          i -> CAST(tv[i] AS DOUBLE) * CAST(tv[i] AS DOUBLE)))) > 0),
-        |rk AS (SELECT src_id, tgt_id, cos,
-        |         row_number() OVER (PARTITION BY src_id
-        |           ORDER BY cos DESC, tgt_id ASC) AS rf,
-        |         row_number() OVER (PARTITION BY tgt_id
-        |           ORDER BY cos DESC, src_id ASC) AS rb
-        |       FROM sc),
-        |ks AS (SELECT src_id, list_sum(list(cos ORDER BY rf)) / count(*) AS ka
-        |       FROM rk WHERE rf <= 4 GROUP BY src_id),
-        |kt AS (SELECT tgt_id, list_sum(list(cos ORDER BY rb)) / count(*) AS kb
-        |       FROM rk WHERE rb <= 4 GROUP BY tgt_id)
-        |SELECT r.src_id, r.tgt_id, round(r.cos, 6) AS cosine,
-        |       round(r.cos * 2 / (ks.ka + kt.kb), 6) AS margin
-        |FROM rk r JOIN ks USING (src_id) JOIN kt USING (tgt_id)
-        |WHERE r.rf = 1 AND r.rb = 1
-        |  AND r.cos * 2 / (ks.ka + kt.kb) >= 1.0""".stripMargin,
-
-    // full PQ training replay (fused Lloyd's, 2 iterations) — codes
-    // are integral, the kmeans1 ulp adjudication
-    "sim9_pq_codes" -> sim9Oracle,
-
-    "sim10_pq_adc_topk" -> sim10Oracle,
-
-    // full probe == brute ADC (zero-norm-free fixture), same replay
-    "sim11_ivfpq_topk" -> sim10Oracle,
-
-    // full replay of the skew monitor: coarse routing (argmax cosine
-    // to the 16 smallest-id centroids, ties to the smaller cent_id),
-    // per-list occupancy with empty lists kept as 0, max-share + Gini
-    // for the skew-planted current store and the training baseline
-    "sim19_ivf_list_skew" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding,
-        |         sqrt(list_sum(list_transform(range(1, 65),
-        |           i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm
-        |  FROM embeddings),
-        |cents AS (
-        |  SELECT vec_id AS cent_id, embedding AS cv, nrm AS cn
-        |  FROM e ORDER BY vec_id LIMIT 16),
-        |vin AS (
-        |  SELECT 'cur' AS src, vec_id, embedding, nrm FROM e WHERE vec_id <= 250
-        |  UNION ALL
-        |  SELECT 'cur', b.vec_id, p.embedding, p.nrm
-        |  FROM e b, (SELECT embedding, nrm FROM e WHERE vec_id = 1) p
-        |  WHERE b.vec_id > 250
-        |  UNION ALL
-        |  SELECT 'base', vec_id, embedding, nrm FROM e WHERE vec_id <= 250),
-        |assigned AS (
-        |  SELECT src, vec_id, cent_id FROM (
-        |    SELECT v.src, v.vec_id, c.cent_id,
-        |           row_number() OVER (PARTITION BY v.src, v.vec_id ORDER BY
-        |             list_sum(list_transform(range(1, 65),
-        |               i -> CAST(v.embedding[i] AS DOUBLE) * CAST(c.cv[i] AS DOUBLE)))
-        |               / (v.nrm * c.cn) DESC, c.cent_id ASC) AS r
-        |    FROM vin v CROSS JOIN cents c
-        |    WHERE v.nrm > 0 AND c.cn > 0)
-        |  WHERE r = 1),
-        |occ AS (
-        |  SELECT s.src, c.cent_id, count(a.vec_id) AS n
-        |  FROM (SELECT DISTINCT src FROM assigned) s
-        |  CROSS JOIN cents c
-        |  LEFT JOIN assigned a ON a.src = s.src AND a.cent_id = c.cent_id
-        |  GROUP BY 1, 2),
-        |sad AS (
-        |  SELECT o1.src, CAST(sum(abs(o1.n - o2.n)) AS BIGINT) AS sad
-        |  FROM occ o1 JOIN occ o2 ON o1.src = o2.src GROUP BY 1),
-        |st AS (
-        |  SELECT o.src, count(*) AS l, CAST(sum(o.n) AS BIGINT) AS nv,
-        |         max(o.n) AS mx, any_value(s.sad) AS sad
-        |  FROM occ o JOIN sad s ON o.src = s.src GROUP BY 1)
-        |SELECT c.l AS n_lists, c.nv AS n_vectors,
-        |       round(CAST(c.mx AS DOUBLE) / c.nv, 6) AS max_share,
-        |       round(CAST(c.sad AS DOUBLE) / (2.0 * c.l * c.nv), 6) AS gini,
-        |       round(CAST(b.mx AS DOUBLE) / b.nv, 6) AS baseline_max_share,
-        |       round(CAST(b.sad AS DOUBLE) / (2.0 * b.l * b.nv), 6) AS baseline_gini,
-        |       round(CAST(c.mx AS DOUBLE) / c.nv, 6)
-        |         > 2.0 * round(CAST(b.mx AS DOUBLE) / b.nv, 6) AS recluster_flag
-        |FROM st c JOIN st b ON c.src = 'cur' AND b.src = 'base'""".stripMargin,
-
-    // double-identical to the Spark plan: the codegen dot product
-    // accumulates CAST-to-double products left-to-right, as does
-    // list_sum over the transformed list
-    "sim5_exact_cosine_pairs" ->
-      """WITH p AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |    list_sum(list_transform(range(1, 65),
-        |      i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
-        |    / (sqrt(list_sum(list_transform(range(1, 65),
-        |        i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE))))
-        |     * sqrt(list_sum(list_transform(range(1, 65),
-        |        i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))))) AS cos
-        |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
-        |SELECT id_a, id_b, round(cos, 6) AS cos_sim FROM p
-        |WHERE cos >= 0.35 AND isfinite(cos)""".stripMargin,
-
-    "seq2_session_sequences" ->
-      """WITH flagged AS (
-        |  SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS ts,
-        |         CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) IS NULL
-        |                OR epoch_us(CAST(ts AS TIMESTAMP))
-        |                   - epoch_us(CAST(lag(ts) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) AS TIMESTAMP))
-        |                   > 30 * 60 * 1000000 THEN 1 ELSE 0 END AS new_session
-        |  FROM events),
-        |sess AS (
-        |  SELECT *, CAST(sum(new_session) OVER (PARTITION BY user_id
-        |           ORDER BY ts ASC, event_id ASC
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |           AS session_id
-        |  FROM flagged)
-        |SELECT user_id, session_id, count(*) AS n_events,
-        |       string_agg(event_type, '>' ORDER BY ts, event_id) AS seq
-        |FROM sess GROUP BY user_id, session_id""".stripMargin,
-
-    "st2_sessionize" ->
-      """WITH flagged AS (
-        |  SELECT user_id,
-        |         CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) IS NULL
-        |                OR epoch_us(CAST(ts AS TIMESTAMP))
-        |                   - epoch_us(CAST(lag(ts) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) AS TIMESTAMP))
-        |                   > 30 * 60 * 1000000 THEN 1 ELSE 0 END AS new_session
-        |  FROM events)
-        |SELECT user_id, count(*) AS n_events, CAST(sum(new_session) AS BIGINT) AS n_sessions
-        |FROM flagged GROUP BY user_id""".stripMargin)
-
-  /** The driver's oracle map. The composed IVF mining queries (r8)
-    * reuse their exact yardsticks' SQL verbatim: at full probe
-    * (nProbe == nCentroids) the candidate set is the whole bipartite
-    * product and the downstream stages are the SAME code, so the
-    * exhaustive oracle re-verifies the composition — the sim11/sim10
-    * pattern applied to mining. */
-  def oracleSql: Map[String, String] = oracleSqlBase ++ Map(
-    "mine2_bitext_ivf" -> oracleSqlBase("mine1_bitext_margin"),
-    // real stream-stream runs of the batch interval join: with every
-    // row delivered (and, for the outer form, every outer row flushed
-    // by the sentinel watermark push) stream == batch
-    "st19_stream_stream_join" -> oracleSqlBase("st4_attribution_join"),
-    "st20_stream_outer_join" -> oracleSqlBase("st5_unattributed_views"),
-    // occupancy counts fold exactly (integer partials), so the
-    // streamed skew report equals the batch monitor's replay
-    "st23_stream_ivf_occupancy" -> oracleSqlBase("sim19_ivf_list_skew"),
-    // per-batch ingestion audit folds to exactly the batch audit
-    "st24_stream_memorization" -> oracleSqlBase("mem1_novelty_audit"),
-    // the persisted model scores a stream exactly as it scores a batch
-    "st25_stream_quality_gate" -> oracleSqlBase("qf9_trained_quality_gate"),
-    // encoding with the persisted tokenizer == the trajectory replay
-    "tok15_tokenizer_store" -> oracleSqlBase("tok5_bpe_token_ids"),
-    "sim12_hard_negatives_ivf" -> oracleSqlBase("sim7_hard_negatives"),
-    "sim13_maxsim_ivf" -> oracleSqlBase("sim8_maxsim_topk"),
-    // full probe + depth >= corpus: the re-ranked output IS brute force
-    "sim14_ivfpq_rerank" -> oracleSqlBase("sim1_bruteforce_topk"),
-    // store round-trip at full probe == the inline IVF-PQ plan
-    "sim15_ivfpq_index_store" -> oracleSqlBase("sim11_ivfpq_topk"),
-    "sim17_ivfpq_index_delete" ->
-      sim10OracleOver("NOT (vec_id > 250 AND vec_id % 2 = 1)"),
-    // split-build + append == full rebuild (same coarse centroids)
-    "sim16_ivfpq_index_append" -> oracleSqlBase("sim11_ivfpq_topk"),
-    "st17_stream_index_append" -> st17Oracle,
-    "fuse1_rrf" -> fuse1Oracle,
-    // sign-bit quantization has NO arithmetic (one float-vs-zero
-    // comparison per bit), so this oracle replays the full two-stage
-    // pipeline — packed words, Hamming prefilter WITH its candidate
-    // truncation, exact rerank — not a degenerate full-probe form
-    "sim18_binary_hamming" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_sum(list_transform(range(1, 65), i -> embedding[i] * embedding[i]))) AS nrm,
-        |    CAST(list_sum([CASE WHEN embedding[i] > 0
-        |                        THEN (CAST(1 AS BIGINT) << (i - 1)) ELSE 0 END
-        |                   for i in range(1, 33)]) AS BIGINT) AS w0,
-        |    CAST(list_sum([CASE WHEN embedding[i] > 0
-        |                        THEN (CAST(1 AS BIGINT) << (i - 33)) ELSE 0 END
-        |                   for i in range(33, 65)]) AS BIGINT) AS w1
-        |  FROM embeddings),
-        |cand AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |         bit_count(xor(q.w0, c.w0)) + bit_count(xor(q.w1, c.w1)) AS hamming
-        |  FROM e q JOIN e c ON q.vec_id < 10 AND q.vec_id <> c.vec_id),
-        |topc AS (
-        |  SELECT query_id, neighbor_id, hamming,
-        |         row_number() OVER (PARTITION BY query_id
-        |                            ORDER BY hamming ASC, neighbor_id ASC) AS h_rank
-        |  FROM cand),
-        |rr AS (
-        |  SELECT t.query_id, t.neighbor_id, t.hamming,
-        |         list_sum(list_transform(range(1, 65), i -> q.embedding[i] * c.embedding[i]))
-        |           / (q.nrm * c.nrm) AS cosine
-        |  FROM topc t
-        |  JOIN e q ON q.vec_id = t.query_id
-        |  JOIN e c ON c.vec_id = t.neighbor_id
-        |  WHERE t.h_rank <= 64 AND q.nrm > 0 AND c.nrm > 0),
-        |ranked AS (
-        |  SELECT query_id, neighbor_id, hamming,
-        |         row_number() OVER (PARTITION BY query_id
-        |                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-        |  FROM rr)
-        |SELECT query_id, neighbor_id, CAST(hamming AS INT) AS hamming, rank
-        |FROM ranked WHERE rank <= 5""".stripMargin)
-
-  /** pii1 oracle: built from Privacy.categories so both engines run
-    * THE SAME patterns (regexes restricted to constructs Java and RE2
-    * interpret identically). Counts run on the augmented original,
-    * redaction chains the replacements in category order — exactly
-    * [[graft.operators.Privacy.scrub]]. */
-  private def piiOracle: String = {
-    val aug = "text || ' contact user' || CAST(doc_id AS VARCHAR) ||" +
-      " '@example.com ip 10.0.' || CAST(doc_id % 200 AS VARCHAR) ||" +
-      " '.7 ssn 123-45-6789 call 555-867-5309'"
-    val counts = Privacy.categories.map { case (name, pattern, _) =>
-      s"len(regexp_extract_all(text, '$pattern')) AS pii_$name"
-    }.mkString(",\n       ")
-    val total = Privacy.categories
-      .map { case (name, _, _) => s"pii_$name" }.mkString(" + ")
-    val redacted = Privacy.categories.foldLeft("text") {
-      case (inner, (_, pattern, token)) =>
-        s"regexp_replace($inner, '$pattern', '$token', 'g')"
-    }
-    s"""WITH aug AS (SELECT doc_id, $aug AS text FROM documents),
-       |counted AS (
-       |  SELECT doc_id,
-       |       $counts,
-       |       $redacted AS text_redacted
-       |  FROM aug)
-       |SELECT doc_id, pii_email, pii_ip, pii_ssn, pii_card, pii_phone,
-       |       CAST($total AS BIGINT) AS pii_total, text_redacted
-       |FROM counted""".stripMargin
-  }
-
-  /** qf1 oracle: mirrors QualityFilters.signals/gate — identical
-    * token split, rounded ratios, and threshold comparisons on the
-    * ROUNDED values (matching the Spark column the gate reads). */
-  private def qualityGateOracle: String = {
-    val stop = "\\b(" + QualityFilters.stopwords.mkString("|") + ")\\b"
-    val th = QualityFilters.Thresholds()
-    raw"""WITH s AS (
-       |  SELECT doc_id,
-       |    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_words,
-       |    round(length(regexp_replace(text, '\s', '', 'g')) * 1.0 /
-       |      greatest(len(string_split_regex(trim(text), '\s+')), 1), 4) AS mean_word_len,
-       |    CAST(coalesce(list_max(list_transform(
-       |      string_split_regex(trim(text), '\s+'), w -> length(w))), 0) AS BIGINT)
-       |      AS max_word_len,
-       |    round(len(regexp_extract_all(text, '[#@{}<>\\|~^]')) * 1.0 /
-       |      greatest(length(text), 1), 4) AS symbol_ratio,
-       |    CAST(len(regexp_extract_all(lower(text), '$stop')) AS BIGINT) AS stopword_hits
-       |  FROM documents)
-       |SELECT doc_id, n_words, mean_word_len, max_word_len, symbol_ratio,
-       |       stopword_hits,
-       |       (n_words BETWEEN ${th.minWords} AND ${th.maxWords}
-       |        AND mean_word_len BETWEEN ${th.minMeanWordLen} AND ${th.maxMeanWordLen}
-       |        AND symbol_ratio <= ${th.maxSymbolRatio}
-       |        AND stopword_hits >= ${th.minStopwordHits}) AS keep
-       |FROM s""".stripMargin
-  }
-
-  /** pipe2 oracle: the whole funnel replayed stage by stage — qf1's
-    * gate signals, dedup as row_number-over-text, dd8's exact gram
-    * overlap with the >= 20 threshold — per-source counts left-joined
-    * onto the input tally. */
-  private def pipe2Oracle: String = {
-    val stop = "\\b(" + QualityFilters.stopwords.mkString("|") + ")\\b"
-    val th = QualityFilters.Thresholds()
-    raw"""WITH tr AS (
-       |  SELECT doc_id, source, text FROM documents WHERE doc_id > 250
-       |  UNION ALL
-       |  SELECT doc_id + 10000, source, text FROM documents
-       |  WHERE doc_id > 250 AND doc_id <= 300),
-       |sig AS (
-       |  SELECT doc_id, source, text,
-       |    len(string_split_regex(trim(text), '\s+')) AS n_words,
-       |    round(length(regexp_replace(text, '\s', '', 'g')) * 1.0 /
-       |      greatest(len(string_split_regex(trim(text), '\s+')), 1), 4) AS mwl,
-       |    round(len(regexp_extract_all(text, '[#@{}<>\\|~^]')) * 1.0 /
-       |      greatest(length(text), 1), 4) AS sr,
-       |    len(regexp_extract_all(lower(text), '$stop')) AS sh
-       |  FROM tr),
-       |gated AS (
-       |  SELECT doc_id, source, text FROM sig
-       |  WHERE n_words BETWEEN ${th.minWords} AND ${th.maxWords}
-       |    AND mwl BETWEEN ${th.minMeanWordLen} AND ${th.maxMeanWordLen}
-       |    AND sr <= ${th.maxSymbolRatio} AND sh >= ${th.minStopwordHits}),
-       |ded AS (
-       |  SELECT doc_id, source, text FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY text ORDER BY doc_id) AS rn
-       |    FROM gated) WHERE rn = 1),
-       |dg AS (
-       |  SELECT doc_id, unnest(list_distinct(
-       |    CASE WHEN len(l) <= 3 THEN [array_to_string(l, ' ')]
-       |         ELSE [array_to_string(l[i:i+2], ' ') for i in range(1, len(l) - 1)] END
-       |  )) AS gram
-       |  FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS l
-       |        FROM ded)),
-       |ev AS (
-       |  SELECT DISTINCT unnest(list_distinct(
-       |    CASE WHEN len(l) <= 3 THEN [array_to_string(l, ' ')]
-       |         ELSE [array_to_string(l[i:i+2], ' ') for i in range(1, len(l) - 1)] END
-       |  )) AS gram
-       |  FROM (SELECT string_split_regex(lower(trim(text)), '\s+') AS l
-       |        FROM documents WHERE doc_id <= 250)),
-       |cont AS (
-       |  SELECT dg.doc_id FROM dg JOIN ev USING (gram)
-       |  GROUP BY dg.doc_id HAVING count(*) >= 20),
-       |clean AS (
-       |  SELECT * FROM ded WHERE doc_id NOT IN (SELECT doc_id FROM cont))
-       |SELECT t.source, t.n_input,
-       |       COALESCE(g1.n, 0) AS n_gated,
-       |       COALESCE(d1.n, 0) AS n_deduped,
-       |       COALESCE(c1.n, 0) AS n_clean
-       |FROM (SELECT source, count(*) AS n_input FROM tr GROUP BY source) t
-       |LEFT JOIN (SELECT source, count(*) AS n FROM gated GROUP BY source) g1
-       |  USING (source)
-       |LEFT JOIN (SELECT source, count(*) AS n FROM ded GROUP BY source) d1
-       |  USING (source)
-       |LEFT JOIN (SELECT source, count(*) AS n FROM clean GROUP BY source) c1
-       |  USING (source)""".stripMargin
-  }
-
-  /** dsir1/dsir2 oracle: replays the importance-weight formula — the
-    * French-subset unigram model vs the corpus model, add-one
-    * smoothed over the joint vocabulary; dsir2 appends the rounded
-    * ordered cutoff (id tie-break makes it engine-stable). */
-  private def dsirOracle(suffix: String): String =
-    """WITH toks AS (
-      |  SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS term
-      |  FROM documents),
-      |tc0 AS (
-      |  SELECT doc_id, term, count(*) AS tf FROM toks
-      |  WHERE term <> '' GROUP BY doc_id, term),
-      |cm AS (SELECT term, sum(tf) AS cc FROM tc0 GROUP BY term),
-      |tt AS (
-      |  SELECT term, count(*) AS tcnt FROM (
-      |    SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS term
-      |    FROM documents WHERE lang = 'fr')
-      |  WHERE term <> '' GROUP BY term),
-      |vocab AS (
-      |  SELECT term, coalesce(cc, 0) AS cc, coalesce(tcnt, 0) AS tc
-      |  FROM cm FULL OUTER JOIN tt USING (term)),
-      |tot AS (SELECT sum(cc) AS nc, sum(tc) AS nt,
-      |               CAST(count(*) AS DOUBLE) AS v FROM vocab),
-      |w AS (
-      |  SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
-      |         round(sum(tf * (ln((tc + 1) * 1.0 / (nt + v))
-      |                       - ln((cc + 1) * 1.0 / (nc + v)))) / sum(tf), 4)
-      |           AS avg_log_ratio
-      |  FROM tc0 JOIN vocab USING (term), tot
-      |  GROUP BY doc_id)
-      |SELECT * FROM w
-      |""".stripMargin + suffix
-
-  /** pack-family oracle prefix (pack1/pack4/pack5): whitespace
-    * tokenize, global cumulative sum, first-token shard rule at
-    * budget 2000 — the single replay of `Packing.assignShards`'
-    * entry parameters. `cols` carries the columns each query needs
-    * downstream. Ends with `a` = (cols, n_tokens, cum, shard). */
-  private def packOracleCtes(cols: String): String =
-    s"""WITH t AS (
-       |  SELECT $cols,
-       |         CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_tokens
-       |  FROM documents),
-       |c AS (
-       |  SELECT $cols, n_tokens,
-       |         sum(n_tokens) OVER (ORDER BY doc_id
-       |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-       |  FROM t),
-       |a AS (
-       |  SELECT $cols, n_tokens, CAST(cum AS BIGINT) AS cum,
-       |         CAST(floor((cum - n_tokens) * 1.0 / 2000) AS BIGINT) AS shard
-       |  FROM c)""".stripMargin
-
-  /** Within-cluster cosine pair CTE over the kmeans chain's `af`
-    * (shared by dd16/dd17): replays the ordered-double dot kernel. */
-  private val semanticPairCte: String =
-    """p AS (
-      |  SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.cluster,
-      |    list_sum(list_transform(range(1, 65),
-      |      i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
-      |    / (sqrt(list_sum(list_transform(range(1, 65),
-      |        i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE))))
-      |     * sqrt(list_sum(list_transform(range(1, 65),
-      |        i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))))) AS cos
-      |  FROM af a JOIN af b ON a.cluster = b.cluster AND a.vec_id < b.vec_id)""".stripMargin
-
-  /** kmeans1/div1 oracle prefix: Lloyd's iterations unrolled as CTEs
-    * with the SAME deterministic contract as `Clustering.kmeans` —
-    * init = k smallest-id vectors, argmin ties to the lower centroid
-    * id, empty clusters keep their previous centroid. Distances
-    * enter the output only through argmin/rank, so the compared
-    * columns are integral and per-engine FP summation order in the
-    * centroid means cannot break the hash compare. Ends with `af`,
-    * the final (vec_id, embedding, cluster, dist) assignment. */
-  private def kmeansOracleCtes(k: Int, iters: Int, dim: Int): String = {
-    def assign(label: String, cents: String): String =
-      s"""$label AS (
-         |  SELECT vec_id, embedding, cid AS cluster, dist FROM (
-         |    SELECT e.vec_id, e.embedding, c.cid,
-         |           list_distance(CAST(e.embedding AS DOUBLE[]), c.cv) AS dist,
-         |           row_number() OVER (PARTITION BY e.vec_id
-         |             ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]), c.cv) ASC,
-         |                      c.cid ASC) AS rn
-         |    FROM embeddings e CROSS JOIN $cents c)
-         |  WHERE rn = 1)""".stripMargin
-    def update(step: Int, aLabel: String, prev: String): String =
-      s"""m$step AS (
-         |  SELECT cluster AS cid, list(m ORDER BY i) AS cv FROM (
-         |    SELECT a.cluster, d.i, avg(a.embedding[d.i]) AS m
-         |    FROM $aLabel a CROSS JOIN (SELECT unnest(range(1, ${dim + 1})) AS i) d
-         |    GROUP BY a.cluster, d.i)
-         |  GROUP BY cluster),
-         |c$step AS (
-         |  SELECT p.cid, coalesce(m.cv, p.cv) AS cv
-         |  FROM $prev p LEFT JOIN m$step m USING (cid))""".stripMargin
-    val parts = Seq(
-      s"""WITH c0 AS (
-         |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cid,
-         |         CAST(embedding AS DOUBLE[]) AS cv
-         |  FROM (SELECT vec_id, embedding FROM embeddings
-         |        ORDER BY vec_id LIMIT $k))""".stripMargin) ++
-      (1 to iters).flatMap(i =>
-        Seq(assign(s"a$i", s"c${i - 1}"), update(i, s"a$i", s"c${i - 1}"))) ++
-      Seq(assign("af", s"c$iters"))
-    parts.mkString(",\n")
-  }
-
-  /** ta3 oracle: replays the RollingHash kernel (h = h*31 + byte,
-    * wrapping at 2^64) as a HUGEINT fold over the normalized text's
-    * characters (the corpus is ASCII, so codepoints == UTF-8 bytes —
-    * asserted by the zero non-ASCII count the fixture data carries),
-    * then maps the unsigned residue onto Spark's signed Long. The
-    * quality score replays TextAnalysis.qualityScore term-by-term in
-    * the same association order so the doubles agree bit-for-bit. */
-  /** pipe1 oracle (r6 — moved from rows-only): the WHOLE curation
-    * funnel replayed stage by stage on the canonical-normalized text.
-    * The only non-replayable piece of the Spark plan is LSH candidate
-    * generation; on this fixture qualifying pairs (exact 3-gram
-    * Jaccard ≥ 0.8) all collide in at least one band — the same
-    * recall-1 adjudication dd14/st14 carry — so the ground-truth
-    * all-pairs sweep + min-label closure is the batch result.
-    * Stage mirrors: canonical (control→space, lower, strip
-    * punct, collapse ws, trim), the ta3 quality composite gated at
-    * 0.3 (unrounded doubles, identical expression tree), exact dedup
-    * as min-id-per-identical-text, near-dup clusters via the dd12
-    * recursive closure, survivors = cluster labels + singletons,
-    * annotations = ta3's token count and rolling-hash fingerprint. */
-  private def pipe1Oracle: String = {
-    val stop = "\\b(" + QualityFilters.stopwords.mkString("|") + ")\\b"
-    raw"""WITH RECURSIVE nn AS (
-       |  SELECT doc_id, lang, source,
-       |    trim(regexp_replace(regexp_replace(
-       |      lower(regexp_replace(text, '[\x00-\x1f\x7f]', ' ', 'g')),
-       |      '[^\p{L}\p{N}\s]', '', 'g'), '\s+', ' ', 'g')) AS text
-       |  FROM documents),
-       |q AS (
-       |  SELECT doc_id,
-       |    CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE) AS nt,
-       |    CAST(length(text) AS DOUBLE) AS nc,
-       |    CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) AS nd,
-       |    CAST(length(regexp_replace(text, '[^.,;:!?''"()\[\]{}-]', '', 'g'))
-       |      AS DOUBLE) AS np,
-       |    CAST(len(regexp_extract_all(lower(text), '$stop')) AS DOUBLE) AS sh
-       |  FROM nn),
-       |gated AS (
-       |  SELECT nn.* FROM nn JOIN q USING (doc_id)
-       |  WHERE CASE WHEN q.nt BETWEEN 5 AND 10000 THEN 1.0 ELSE 0.0 END * 0.25
-       |      + CASE WHEN q.nc / greatest(q.nt, 1.0) BETWEEN 2.0 AND 12.0
-       |             THEN 1.0 ELSE 0.0 END * 0.25
-       |      + (1.0 - least(q.nd / greatest(q.nc, 1.0) * 5.0, 1.0)) * 0.2
-       |      + (1.0 - least(q.np / greatest(q.nc, 1.0) * 5.0, 1.0)) * 0.2
-       |      + least(q.sh / greatest(q.nt, 1.0) * 5.0, 1.0) * 0.1 >= 0.3),
-       |ex AS (SELECT min(doc_id) AS doc_id FROM gated GROUP BY text),
-       |ek AS (SELECT g.* FROM gated g JOIN ex USING (doc_id)),
-       |t3 AS (
-       |  SELECT doc_id, list_distinct(
-       |    CASE WHEN len(l) <= 3 THEN [array_to_string(l, ' ')]
-       |         ELSE [array_to_string(l[i:i+2], ' ') for i in range(1, len(l) - 1)] END) AS w
-       |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS l FROM ek)),
-       |p AS (
-       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM t3 a JOIN t3 b ON a.doc_id < b.doc_id
-       |  WHERE len(list_intersect(a.w, b.w))::DOUBLE /
-       |        (len(a.w) + len(b.w) - len(list_intersect(a.w, b.w))) >= 0.8),
-       |e AS (SELECT id_a AS s, id_b AS d FROM p
-       |      UNION SELECT id_b AS s, id_a AS d FROM p),
-       |reach AS (
-       |  SELECT s AS id, s AS label FROM e
-       |  UNION
-       |  SELECT e.s AS id, r.label AS label FROM e JOIN reach r ON e.d = r.id),
-       |lab AS (SELECT id, min(label) AS cluster FROM reach GROUP BY id),
-       |drop AS (SELECT id AS doc_id FROM lab WHERE id <> cluster),
-       |surv AS (SELECT ek.* FROM ek ANTI JOIN drop USING (doc_id)),
-       |fp AS (
-       |  SELECT doc_id,
-       |    list_reduce(
-       |      list_prepend(CAST(0 AS HUGEINT),
-       |        ${byteFoldList(raw"regexp_replace(trim(text), '\s+', ' ', 'g')")}),
-       |      (h, b) -> (h * 31 + b) % CAST('18446744073709551616' AS HUGEINT)) AS m
-       |  FROM surv)
-       |SELECT s.doc_id, s.lang, s.source,
-       |  CAST(len(string_split_regex(trim(s.text), '\s+')) AS BIGINT) AS n_tokens,
-       |  CAST(CASE WHEN f.m < CAST('9223372036854775808' AS HUGEINT) THEN f.m
-       |            ELSE f.m - CAST('18446744073709551616' AS HUGEINT) END
-       |       AS BIGINT) AS fingerprint
-       |FROM surv s JOIN fp f USING (doc_id)""".stripMargin
-  }
-
-  private def ta3Oracle: String = {
-    val stop = "\\b(" + QualityFilters.stopwords.mkString("|") + ")\\b"
-    raw"""WITH fp AS (
-       |  SELECT doc_id,
-       |    list_reduce(
-       |      list_prepend(CAST(0 AS HUGEINT),
-       |        ${byteFoldList(raw"regexp_replace(trim(text), '\s+', ' ', 'g')")}),
-       |      (h, b) -> (h * 31 + b) % CAST('18446744073709551616' AS HUGEINT)) AS m
-       |  FROM documents),
-       |q AS (
-       |  SELECT doc_id,
-       |    CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE) AS nt,
-       |    CAST(length(text) AS DOUBLE) AS nc,
-       |    CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) AS nd,
-       |    CAST(length(regexp_replace(text, '[^.,;:!?''"()\[\]{}-]', '', 'g'))
-       |      AS DOUBLE) AS np,
-       |    CAST(len(regexp_extract_all(lower(text), '$stop')) AS DOUBLE) AS sh
-       |  FROM documents)
-       |SELECT f.doc_id,
-       |  CAST(CASE WHEN f.m < CAST('9223372036854775808' AS HUGEINT) THEN f.m
-       |            ELSE f.m - CAST('18446744073709551616' AS HUGEINT) END
-       |       AS BIGINT) AS fingerprint,
-       |  CASE WHEN q.nt BETWEEN 5 AND 10000 THEN 1.0 ELSE 0.0 END * 0.25
-       |      + CASE WHEN q.nc / greatest(q.nt, 1.0) BETWEEN 2.0 AND 12.0
-       |             THEN 1.0 ELSE 0.0 END * 0.25
-       |      + (1.0 - least(q.nd / greatest(q.nc, 1.0) * 5.0, 1.0)) * 0.2
-       |      + (1.0 - least(q.np / greatest(q.nc, 1.0) * 5.0, 1.0)) * 0.2
-       |      + least(q.sh / greatest(q.nt, 1.0) * 5.0, 1.0) * 0.1 AS quality
-       |FROM fp f JOIN q USING (doc_id)""".stripMargin
-  }
-
-  /** PQ oracle CTE chain: replays [[graft.operators.Similarity.pqTrain]]'s
-    * deterministic fused Lloyd's (m=8 subspaces, k=16, 2 iterations)
-    * generically over tables — subvectors via list slices, assignment
-    * cost in the EXACT double form the Spark plan computes
-    * (|c|² left-to-right, minus 2·dot accumulated left-to-right),
-    * (cost, cid) tie-break via row_number, per-dim avg update with
-    * empty clusters keeping their previous centroid. Exposes `c2`
-    * (final codebooks) and `a3` (final per-subspace assignments =
-    * the PQ codes). Centroid doubles carry engine-specific avg
-    * summation ulps — the kmeans1 adjudication: outputs built on the
-    * codes stay integral/robust. */
-  private def pqCte: String =
-    raw"""WITH v AS (
-       |  SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS e
-       |  FROM embeddings),
-       |subs AS (SELECT CAST(t.range AS INT) AS s FROM range(8) t),
-       |vs AS (SELECT vec_id, s, e[s*8+1 : s*8+8] AS sv FROM v, subs),
-       |init AS (SELECT e, row_number() OVER (ORDER BY vec_id ASC) - 1 AS cid
-       |         FROM (SELECT * FROM v ORDER BY vec_id ASC LIMIT 16)),
-       |c0 AS (SELECT s, cid, e[s*8+1 : s*8+8] AS cent FROM init, subs),
-       |a1 AS (SELECT vec_id, s, cid FROM (
-       |    SELECT vs.vec_id, vs.s, c.cid,
-       |      row_number() OVER (PARTITION BY vs.vec_id, vs.s ORDER BY
-       |        list_sum(list_transform(range(1, 9), i -> c.cent[i] * c.cent[i]))
-       |        - list_sum(list_transform(range(1, 9), i -> vs.sv[i] * c.cent[i])) * 2 ASC,
-       |        c.cid ASC) AS rn
-       |    FROM vs JOIN c0 c ON vs.s = c.s)
-       |  WHERE rn = 1),
-       |u1 AS (SELECT a.s, a.cid, dd.i AS d, avg(vs.sv[dd.i]) AS mv
-       |       FROM a1 a JOIN vs ON a.vec_id = vs.vec_id AND a.s = vs.s,
-       |            range(1, 9) dd(i)
-       |       GROUP BY 1, 2, 3),
-       |c1 AS (SELECT c.s, c.cid, coalesce(u.cent, c.cent) AS cent
-       |       FROM c0 c LEFT JOIN (
-       |         SELECT s, cid, list(mv ORDER BY d) AS cent FROM u1 GROUP BY s, cid) u
-       |       ON c.s = u.s AND c.cid = u.cid),
-       |a2 AS (SELECT vec_id, s, cid FROM (
-       |    SELECT vs.vec_id, vs.s, c.cid,
-       |      row_number() OVER (PARTITION BY vs.vec_id, vs.s ORDER BY
-       |        list_sum(list_transform(range(1, 9), i -> c.cent[i] * c.cent[i]))
-       |        - list_sum(list_transform(range(1, 9), i -> vs.sv[i] * c.cent[i])) * 2 ASC,
-       |        c.cid ASC) AS rn
-       |    FROM vs JOIN c1 c ON vs.s = c.s)
-       |  WHERE rn = 1),
-       |u2 AS (SELECT a.s, a.cid, dd.i AS d, avg(vs.sv[dd.i]) AS mv
-       |       FROM a2 a JOIN vs ON a.vec_id = vs.vec_id AND a.s = vs.s,
-       |            range(1, 9) dd(i)
-       |       GROUP BY 1, 2, 3),
-       |c2 AS (SELECT c.s, c.cid, coalesce(u.cent, c.cent) AS cent
-       |       FROM c1 c LEFT JOIN (
-       |         SELECT s, cid, list(mv ORDER BY d) AS cent FROM u2 GROUP BY s, cid) u
-       |       ON c.s = u.s AND c.cid = u.cid),
-       |a3 AS (SELECT vec_id, s, cid FROM (
-       |    SELECT vs.vec_id, vs.s, c.cid,
-       |      row_number() OVER (PARTITION BY vs.vec_id, vs.s ORDER BY
-       |        list_sum(list_transform(range(1, 9), i -> c.cent[i] * c.cent[i]))
-       |        - list_sum(list_transform(range(1, 9), i -> vs.sv[i] * c.cent[i])) * 2 ASC,
-       |        c.cid ASC) AS rn
-       |    FROM vs JOIN c2 c ON vs.s = c.s)
-       |  WHERE rn = 1)""".stripMargin
-
-  private def sim9Oracle: String =
-    s"""$pqCte
-       |SELECT vec_id, CAST(s AS INT) AS sub, CAST(cid AS INT) AS code
-       |FROM a3""".stripMargin
-
-  /** sim10: ADC distance replay — per-subspace term in the Spark
-    * plan's exact double form, terms summed in ascending-subspace
-    * order (list_sum over an ORDER BY s list = the Scala reduce's
-    * left fold), plus |q|² accumulated left-to-right. Rank-only
-    * output (r7 advisory): the adc doubles ORDER the rows on both
-    * engines, but a 6-dp rounding of them would expose centroid-avg
-    * ulps to the hash — ranks, built on the integral codes, do not. */
-  private def sim10Oracle: String = sim10OracleOver("TRUE")
-
-  /** sim10's replay restricted to the neighbor rows satisfying
-    * `candPred` — the purge oracle (sim17): a full probe of a
-    * partially-deleted index is brute ADC over exactly the
-    * surviving candidates. */
-  private def sim10OracleOver(candPred: String): String =
-    s"""$pqCte,
-       |codes AS (SELECT vec_id AS neighbor_id, s, cid FROM a3
-       |          WHERE $candPred),
-       |qv AS (SELECT vec_id AS query_id, e AS qv FROM v WHERE vec_id < 10),
-       |terms AS (
-       |  SELECT q.query_id, c.neighbor_id, c.s,
-       |    list_sum(list_transform(range(1, 9), i -> ct.cent[i] * ct.cent[i]))
-       |    - list_sum(list_transform(range(1, 9), i -> q.qv[c.s*8+i] * ct.cent[i])) * 2 AS term
-       |  FROM qv q CROSS JOIN codes c
-       |  JOIN c2 ct ON ct.s = c.s AND ct.cid = c.cid
-       |  WHERE c.neighbor_id <> q.query_id),
-       |acc AS (SELECT query_id, neighbor_id,
-       |          list_sum(list(term ORDER BY s)) AS dsum
-       |        FROM terms GROUP BY 1, 2),
-       |q2 AS (SELECT query_id,
-       |         list_sum(list_transform(range(1, 65), i -> qv[i] * qv[i])) AS qq
-       |       FROM qv),
-       |scored AS (SELECT a.query_id, a.neighbor_id, a.dsum + q2.qq AS adc,
-       |             row_number() OVER (PARTITION BY a.query_id
-       |               ORDER BY a.dsum + q2.qq ASC, a.neighbor_id ASC) AS rk
-       |           FROM acc a JOIN q2 USING (query_id))
-       |SELECT query_id, neighbor_id, CAST(rk AS INT) AS rank
-       |FROM scored WHERE rk <= 5""".stripMargin
-
-  /** st16 oracle: the PQ training replay (c2/a3), then each vector's
-    * ADC residual against its OWN codes in the Spark plan's exact
-    * double form (per-subspace terms summed ascending-s, plus |v|²),
-    * quantized `floor(r²·2^20 + 0.5)` to BIGINT so the per-batch-key
-    * sums are exact integers; mean and flag mirror
-    * [[graft.operators.Similarity.pqDriftStats]]'s double trees
-    * (divide-divide for the mean, cross-multiplied integer sums cast
-    * to double for the flag — no division in the comparison). */
-  private def st16Oracle: String =
-    s"""$pqCte,
-       |rterm AS (
-       |  SELECT a.vec_id, a.s,
-       |    list_sum(list_transform(range(1, 9), i -> ct.cent[i] * ct.cent[i]))
-       |    - list_sum(list_transform(range(1, 9), i -> vs.sv[i] * ct.cent[i])) * 2 AS term
-       |  FROM a3 a JOIN c2 ct ON ct.s = a.s AND ct.cid = a.cid
-       |  JOIN vs ON vs.vec_id = a.vec_id AND vs.s = a.s),
-       |racc AS (SELECT vec_id, list_sum(list(term ORDER BY s)) AS dsum
-       |         FROM rterm GROUP BY 1),
-       |vv AS (SELECT vec_id,
-       |         list_sum(list_transform(range(1, 65), i -> e[i] * e[i])) AS qq
-       |       FROM v),
-       |rq AS (SELECT r.vec_id,
-       |         CAST(floor((r.dsum + vv.qq) * 1048576.0 + 0.5) AS BIGINT) AS q
-       |       FROM racc r JOIN vv USING (vec_id)),
-       |base AS (SELECT CAST(sum(q) AS BIGINT) AS bsq, count(*) AS bn FROM rq)
-       |SELECT vec_id % 2 AS batch_key, count(*) AS n_vectors,
-       |       round(CAST(sum(q) AS DOUBLE) / count(*) / 1048576.0, 6) AS mean_resid_sq,
-       |       CAST(sum(q) AS DOUBLE) * base.bn
-       |         > 1.5 * CAST(base.bsq AS DOUBLE) * count(*) AS retrain_flag
-       |FROM rq CROSS JOIN base GROUP BY vec_id % 2, base.bn, base.bsq""".stripMargin
-
-  /** st17 oracle: codes from the full PQ training replay (a3, as
-    * sim9), coarse cent_id from a cosine argmax over the store's 16
-    * smallest-id centroids — all on RAW vectors (exact IEEE trees on
-    * both engines, no trained doubles in the assignment), ties to
-    * the smallest cent_id like the batch window and the online
-    * argmax struct. Only vec_id > 250 rows stream. */
-  private def st17Oracle: String =
-    s"""$pqCte,
-       |cset AS (SELECT vec_id AS cent_id, e AS ce
-       |         FROM v WHERE vec_id <= 250 ORDER BY vec_id LIMIT 16),
-       |cn AS (SELECT cent_id, ce,
-       |         sqrt(list_sum(list_transform(range(1, 65), i -> ce[i] * ce[i]))) AS cn
-       |       FROM cset),
-       |newv AS (SELECT vec_id, e,
-       |           sqrt(list_sum(list_transform(range(1, 65), i -> e[i] * e[i]))) AS vn
-       |         FROM v WHERE vec_id > 250),
-       |cass AS (SELECT vec_id, cent_id FROM (
-       |    SELECT nv.vec_id, c.cent_id,
-       |      row_number() OVER (PARTITION BY nv.vec_id ORDER BY
-       |        list_sum(list_transform(range(1, 65), i -> nv.e[i] * c.ce[i]))
-       |          / (nv.vn * c.cn) DESC,
-       |        c.cent_id ASC) AS rn
-       |    FROM newv nv CROSS JOIN cn c
-       |    WHERE nv.vn > 0 AND c.cn > 0)
-       |  WHERE rn = 1)
-       |SELECT a.vec_id, ca.cent_id, CAST(a.s AS INT) AS sub,
-       |       CAST(a.cid AS INT) AS code
-       |FROM a3 a JOIN cass ca USING (vec_id)""".stripMargin
-
-  /** Fixed-point log2 as a SQL macro — the same integer ops as
-    * `Tokenizer.qlog2` with the SAME driver-computed 128-entry
-    * fraction table inlined as a literal list (1-based indexing:
-    * the mantissa index lands in [128, 256), so subtracting 127
-    * yields the list position). */
-  private def qlogSql(x: String): String = {
-    val tab = graft.operators.Tokenizer.qlog2Frac.mkString(", ")
-    // HUGEINT widening mirrors the Scala side's shift-down overflow
-    // guard: BIGINT * 128 would overflow past 2^56
-    s"(1024 * (length(format('{:b}', $x)) - 1) + " +
-      s"([$tab])[CAST((CAST(($x) AS HUGEINT) * 128 // " +
-      s"(CAST(1 AS HUGEINT) << (length(format('{:b}', $x)) - 1))) - 127 AS INT)])"
-  }
-
-  /** Unigram-LM training replay — the shared CTE chain for tok10
-    * (vocab) and tok11 (encode): word counts, substring seeding
-    * (top-96 by (count DESC, piece ASC) plus all chars), smoothed
-    * integer log2 seed scores, E-step by BRUTE-FORCE segmentation
-    * enumeration (a recursive CTE over (word, pos) — exponential in
-    * word length, fine for the fixture's short words, and equal to
-    * the Spark Viterbi DP's (score DESC, path ASC) argmax by the
-    * exchange argument in UnigramExpressions' scaladoc), M-step
-    * counts, prune to 48 keeping all chars, final scores. Exposes
-    * `fs` (piece, c, len, q) and `wf` (word, f). */
-  private def unigramCte: String = {
-    val sep = "chr(31)"
-    s"""WITH RECURSIVE wf AS (
-       |  SELECT w, CAST(count(*) AS BIGINT) AS f FROM (
-       |    SELECT unnest(string_split_regex(lower(trim(text)), '\\s+')) AS w
-       |    FROM documents) WHERE w <> '' GROUP BY w),
-       |subpos AS (
-       |  SELECT wf.w, wf.f, substr(wf.w, CAST(t.i AS INT), CAST(u.l AS INT)) AS p
-       |  FROM wf, range(1, 257) t(i), range(1, 7) u(l)
-       |  WHERE t.i + u.l - 1 <= length(wf.w)),
-       |subcnt AS (SELECT p, CAST(sum(f) AS BIGINT) AS c FROM subpos GROUP BY p),
-       |chars AS (SELECT DISTINCT p FROM subpos WHERE length(p) = 1),
-       |topseed AS (SELECT p FROM subcnt ORDER BY c DESC, p ASC LIMIT 96),
-       |seedp AS (SELECT p FROM topseed UNION SELECT p FROM chars),
-       |seed AS (SELECT s.p, sc.c FROM seedp s JOIN subcnt sc USING (p)),
-       |stot AS (SELECT CAST(sum(c) AS BIGINT) AS t, count(*) AS m FROM seed),
-       |ss AS (SELECT p, length(p) AS len,
-       |         ${qlogSql("c + 1")} - ${qlogSql("st.t + st.m")} AS q
-       |       FROM seed CROSS JOIN stot st),
-       |walk1 AS (
-       |  SELECT w, f, CAST(0 AS BIGINT) AS done, CAST(0 AS BIGINT) AS sc,
-       |         '' AS path
-       |  FROM wf
-       |  UNION ALL
-       |  SELECT r.w, r.f, r.done + s.len, r.sc + s.q, r.path || s.p || $sep
-       |  FROM walk1 r JOIN ss s
-       |    ON r.done + s.len <= length(r.w)
-       |   AND substr(r.w, CAST(r.done + 1 AS INT), CAST(s.len AS INT)) = s.p),
-       |best1 AS (SELECT w, f, path FROM (
-       |    SELECT w, f, path, row_number() OVER (PARTITION BY w
-       |      ORDER BY sc DESC, path ASC) AS rn
-       |    FROM walk1 WHERE done = length(w)) WHERE rn = 1),
-       |p1 AS (SELECT f, unnest(string_split(rtrim(path, $sep), $sep)) AS p
-       |       FROM best1),
-       |c1 AS (SELECT p, CAST(sum(f) AS BIGINT) AS c FROM p1 GROUP BY p),
-       |nch AS (SELECT count(*) AS n FROM chars),
-       |keptm AS (SELECT p, c FROM (
-       |    SELECT p, c, row_number() OVER (ORDER BY c DESC, p ASC) AS rn
-       |    FROM c1 WHERE length(p) > 1) CROSS JOIN nch
-       |  WHERE rn <= 48 - nch.n),
-       |kept AS (SELECT ch.p, coalesce(c1.c, CAST(0 AS BIGINT)) AS c
-       |         FROM chars ch LEFT JOIN c1 ON c1.p = ch.p
-       |         UNION ALL SELECT p, c FROM keptm),
-       |ftot AS (SELECT CAST(sum(c) AS BIGINT) AS t, count(*) AS m FROM kept),
-       |fs AS (SELECT p, c, length(p) AS len,
-       |         ${qlogSql("c + 1")} - ${qlogSql("ft.t + ft.m")} AS q
-       |       FROM kept CROSS JOIN ftot ft)""".stripMargin
-  }
-
-  private def tok10Oracle: String =
-    s"""$unigramCte
-       |SELECT p AS piece, c AS piece_count, q AS qscore FROM fs""".stripMargin
-
-  /** qf10 oracle: tok11's Viterbi replay extended to the document
-    * gate — per-word best pieces (OOV words fall back to code-point
-    * pieces, mirroring the segmenter), per-piece quantized scores
-    * from `fs` with the −20000 OOV penalty, exact integer doc sums
-    * over word INSTANCES, and the division-free cross-multiplied
-    * flag. */
-  private def qf10Oracle: String =
-    s"""$unigramCte,
-       |walk2 AS (
-       |  SELECT w, CAST(0 AS BIGINT) AS done, CAST(0 AS BIGINT) AS sc,
-       |         '' AS path
-       |  FROM wf
-       |  UNION ALL
-       |  SELECT r.w, r.done + s.len, r.sc + s.q, r.path || s.p || chr(31)
-       |  FROM walk2 r JOIN fs s
-       |    ON r.done + s.len <= length(r.w)
-       |   AND substr(r.w, CAST(r.done + 1 AS INT), CAST(s.len AS INT)) = s.p),
-       |best2 AS (SELECT w, path FROM (
-       |    SELECT w, path, row_number() OVER (PARTITION BY w
-       |      ORDER BY sc DESC, path ASC) AS rn
-       |    FROM walk2 WHERE done = length(w)) WHERE rn = 1),
-       |wpieces AS (
-       |  SELECT w, unnest(string_split(rtrim(path, chr(31)), chr(31))) AS p
-       |  FROM best2
-       |  UNION ALL
-       |  SELECT wf.w, substr(wf.w, CAST(t.i AS INT), 1) AS p
-       |  FROM wf, range(1, 513) t(i)
-       |  WHERE t.i <= length(wf.w)
-       |    AND wf.w NOT IN (SELECT w FROM best2)),
-       |wsc AS (SELECT a.w, CAST(count(*) AS BIGINT) AS nw,
-       |          CAST(sum(coalesce(fs.q, -20000)) AS BIGINT) AS qw
-       |        FROM wpieces a LEFT JOIN fs ON fs.p = a.p GROUP BY a.w),
-       |dtok AS (SELECT doc_id, w FROM (
-       |    SELECT doc_id,
-       |      unnest(string_split_regex(lower(trim(text)), '\\s+')) AS w
-       |    FROM documents) WHERE w <> ''),
-       |doc AS (SELECT dd.doc_id,
-       |          CAST(coalesce(sum(ws.nw), 0) AS BIGINT) AS n_pieces,
-       |          CAST(coalesce(sum(ws.qw), 0) AS BIGINT) AS q_logprob
-       |        FROM documents dd
-       |        LEFT JOIN dtok d ON d.doc_id = dd.doc_id
-       |        LEFT JOIN wsc ws ON ws.w = d.w
-       |        GROUP BY 1)
-       |SELECT doc_id, n_pieces, q_logprob,
-       |       q_logprob < -5250 * n_pieces AS flagged
-       |FROM doc""".stripMargin
-
-  private def tok11Oracle: String =
-    s"""$unigramCte,
-       |walk2 AS (
-       |  SELECT w, CAST(0 AS BIGINT) AS done, CAST(0 AS BIGINT) AS sc,
-       |         '' AS path
-       |  FROM wf
-       |  UNION ALL
-       |  SELECT r.w, r.done + s.len, r.sc + s.q, r.path || s.p || chr(31)
-       |  FROM walk2 r JOIN fs s
-       |    ON r.done + s.len <= length(r.w)
-       |   AND substr(r.w, CAST(r.done + 1 AS INT), CAST(s.len AS INT)) = s.p),
-       |best2 AS (SELECT w, path FROM (
-       |    SELECT w, path, row_number() OVER (PARTITION BY w
-       |      ORDER BY sc DESC, path ASC) AS rn
-       |    FROM walk2 WHERE done = length(w)) WHERE rn = 1)
-       |SELECT w AS word,
-       |       replace(rtrim(path, chr(31)), chr(31), ' ') AS pieces,
-       |       CAST(len(string_split(rtrim(path, chr(31)), chr(31))) AS BIGINT)
-       |         AS n_pieces
-       |FROM best2""".stripMargin
-
-  /** Suffix-named fmix64 noise-walk CTE chain for the DP oracles:
-    * hashes `keyExpr` (a string SQL expression over CTE `src`,
-    * carrying `carry` columns through), walks the `cdf` literals,
-    * ends with CTE `n{sfx}(carry, noise{sfx})`. Two differently-
-    * suffixed walks coexist in one query (priv3's sum + count). */
-  private def noiseWalkCtes(src: String, carry: String, keyExpr: String,
-      cdf: IndexedSeq[Double], bound: Int, sfx: String): String = {
-    val lits = cdf.map(_.toString).mkString(", ")
-    val m64 = "18446744073709551616"
-    val m32 = "4294967296"
-    val c1 = 0xff51afd7ed558ccdL
-    val c2 = 0xc4ceb9fe1a85ec53L
-    def hi(x: Long): Long = (x >>> 32) & 0xffffffffL
-    def lo(x: Long): Long = x & 0xffffffffL
-    s"""h0$sfx AS (SELECT $carry,
-       |    list_reduce(list_prepend(CAST(0 AS HUGEINT), ${byteFoldList(keyExpr)}),
-       |      (h, b) -> (h * 31 + b) % $m64) AS h
-       |  FROM $src),
-       |f1$sfx AS (SELECT $carry, xor(h, h >> 33) AS h FROM h0$sfx),
-       |m1$sfx AS (SELECT $carry,
-       |    (h * ${lo(c1)} + ((h * ${hi(c1)}) % $m32) * $m32) % $m64 AS h
-       |  FROM f1$sfx),
-       |f2$sfx AS (SELECT $carry, xor(h, h >> 33) AS h FROM m1$sfx),
-       |m2$sfx AS (SELECT $carry,
-       |    (h * ${lo(c2)} + ((h * ${hi(c2)}) % $m32) * $m32) % $m64 AS h
-       |  FROM f2$sfx),
-       |hv$sfx AS (SELECT $carry, xor(h, h >> 33) AS h FROM m2$sfx),
-       |n$sfx AS (SELECT $carry,
-       |    len(list_filter([$lits],
-       |      c -> c <= CAST(h % 9007199254740992 AS DOUBLE) / 9007199254740992.0))
-       |      - $bound AS noise$sfx
-       |  FROM hv$sfx)""".stripMargin
-  }
-
-  /** Shared base CTEs for the DP sum/mean oracles: the spend frame
-    * (orders ⋈ customer ⋈ nation, exact integer cents), per-customer
-    * totals, clip to 400M cents, midpoint-round to 16 steps of 25M,
-    * per-nation step sums + unit counts, nation-domain left join.
-    * Ends with `g(n_name, steps, units)`. */
-  private def privStepCtes: String =
-    """WITH sp AS (
-      |  SELECT o.o_custkey AS cust, n.n_name,
-      |         CAST(floor(o.o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents
-      |  FROM orders o
-      |  JOIN customer c ON o.o_custkey = c.c_custkey
-      |  JOIN nation n ON c.c_nationkey = n.n_nationkey),
-      |pu AS (SELECT cust, n_name, CAST(sum(cents) AS BIGINT) AS s
-      |       FROM sp GROUP BY 1, 2),
-      |qz AS (SELECT n_name,
-      |         CAST(floor((least(greatest(s, 0), 400000000) + 12500000)
-      |                    / 25000000.0) AS BIGINT) AS q
-      |       FROM pu),
-      |gs AS (SELECT n_name, CAST(sum(q) AS BIGINT) AS steps,
-      |         count(*) AS units
-      |       FROM qz GROUP BY 1),
-      |dom AS (SELECT DISTINCT n_name FROM nation),
-      |g AS (SELECT dom.n_name, coalesce(gs.steps, 0) AS steps,
-      |             coalesce(gs.units, 0) AS units
-      |      FROM dom LEFT JOIN gs USING (n_name))""".stripMargin
-
-  private def priv2Oracle: String =
-    s"""$privStepCtes,
-       |${noiseWalkCtes("g", "n_name, steps",
-            "coalesce(n_name, chr(0)) || ':sum:42'",
-            Privacy.geometricCdf(0.5 / 16, 512), 512, "s")}
-       |SELECT n_name,
-       |       greatest(steps + noises, 0) * 25000000 AS sum_noisy_cents
-       |FROM ns""".stripMargin
-
-  private def priv3Oracle: String =
-    s"""$privStepCtes,
-       |${noiseWalkCtes("g", "n_name, steps, units",
-            "coalesce(n_name, chr(0)) || ':sum:42'",
-            Privacy.geometricCdf(0.5 / 16, 512), 512, "s")},
-       |${noiseWalkCtes("g", "n_name",
-            "coalesce(n_name, chr(0)) || ':cnt:42'",
-            Privacy.geometricCdf(0.5, 64), 64, "c")},
-       |fin AS (
-       |  SELECT s.n_name,
-       |         greatest(s.units + c.noisec, 0) AS n_noisy,
-       |         greatest(s.steps + s.noises, 0) * 25000000 AS sum_noisy_cents
-       |  FROM ns s JOIN nc c USING (n_name))
-       |SELECT n_name, n_noisy, sum_noisy_cents,
-       |       CAST(sum_noisy_cents AS DOUBLE)
-       |         / CAST(greatest(n_noisy, 1) AS DOUBLE) AS mean_noisy
-       |FROM fin""".stripMargin
-
-  /** priv1 oracle: the DP count release replayed — rolling-31 hash
-    * of "lang:seed" (HUGEINT fold, byte-exact), 53-bit uniform
-    * (2^53 divides 2^64 so the signed/unsigned residue agrees), the
-    * SAME driver-computed CDF doubles as SQL literals (shortest
-    * round-trip formatting parses back bit-exactly), count-below
-    * walk, 0-clamp. */
-  private def priv1Oracle: String = {
-    val lits = Privacy.geometricCdf(0.5, 64).map(_.toString).mkString(", ")
-    val m64 = "18446744073709551616"
-    val m32 = "4294967296"
-    val c1 = 0xff51afd7ed558ccdL
-    val c2 = 0xc4ceb9fe1a85ec53L
-    def hi(x: Long): Long = (x >>> 32) & 0xffffffffL
-    def lo(x: Long): Long = x & 0xffffffffL
-    s"""WITH dom AS (SELECT * FROM (VALUES ('de'), ('en'), ('es'), ('fr'),
-       |                                   ('ja'), ('zh')) d(lang)),
-       |gg AS (SELECT lang, count(*) AS n FROM documents GROUP BY lang),
-       |g AS (SELECT dom.lang, CAST(coalesce(gg.n, 0) AS BIGINT) AS n
-       |      FROM dom LEFT JOIN gg USING (lang)),
-       |h0 AS (SELECT lang, n,
-       |        list_reduce(list_prepend(CAST(0 AS HUGEINT), ${byteFoldList("coalesce(lang, chr(0)) || ':42'")}),
-       |          (h, b) -> (h * 31 + b) % $m64) AS h
-       |      FROM g),
-       |f1 AS (SELECT lang, n, xor(h, h >> 33) AS h FROM h0),
-       |m1 AS (SELECT lang, n,
-       |         (h * ${lo(c1)} + ((h * ${hi(c1)}) % $m32) * $m32) % $m64 AS h
-       |       FROM f1),
-       |f2 AS (SELECT lang, n, xor(h, h >> 33) AS h FROM m1),
-       |m2 AS (SELECT lang, n,
-       |         (h * ${lo(c2)} + ((h * ${hi(c2)}) % $m32) * $m32) % $m64 AS h
-       |       FROM f2),
-       |hv AS (SELECT lang, n, xor(h, h >> 33) AS h FROM m2),
-       |uu AS (SELECT lang, n,
-       |         CAST(h % 9007199254740992 AS DOUBLE) / 9007199254740992.0 AS u
-       |       FROM hv),
-       |z AS (SELECT lang, n,
-       |        len(list_filter([$lits], c -> c <= u)) - 64 AS noise
-       |      FROM uu)
-       |SELECT lang, greatest(n + noise, 0) AS n_noisy FROM z""".stripMargin
-  }
-
-  /** fuse1 oracle: both rankings replayed at k=10 — brute-force
-    * cosine (sim1's tree over the double-cast vectors) and ADC
-    * (sim10's tree over the replayed codebooks) — then the fusion
-    * itself: per-pair `1.0/(rank + 60)` terms folded in
-    * retriever-index order (list_sum over ORDER BY ridx = the Spark
-    * ordered-struct fold), final rank by (score DESC, id ASC). */
-  private def fuse1Oracle: String =
-    s"""$pqCte,
-       |codes AS (SELECT vec_id AS neighbor_id, s, cid FROM a3),
-       |qv AS (SELECT vec_id AS query_id, e AS qv FROM v WHERE vec_id < 10),
-       |terms AS (
-       |  SELECT q.query_id, c.neighbor_id, c.s,
-       |    list_sum(list_transform(range(1, 9), i -> ct.cent[i] * ct.cent[i]))
-       |    - list_sum(list_transform(range(1, 9), i -> q.qv[c.s*8+i] * ct.cent[i])) * 2 AS term
-       |  FROM qv q CROSS JOIN codes c
-       |  JOIN c2 ct ON ct.s = c.s AND ct.cid = c.cid
-       |  WHERE c.neighbor_id <> q.query_id),
-       |acc AS (SELECT query_id, neighbor_id,
-       |          list_sum(list(term ORDER BY s)) AS dsum
-       |        FROM terms GROUP BY 1, 2),
-       |qq2 AS (SELECT query_id,
-       |          list_sum(list_transform(range(1, 65), i -> qv[i] * qv[i])) AS qq
-       |        FROM qv),
-       |adc AS (SELECT query_id, neighbor_id, rk AS rank FROM (
-       |          SELECT a.query_id, a.neighbor_id,
-       |            row_number() OVER (PARTITION BY a.query_id
-       |              ORDER BY a.dsum + q.qq ASC, a.neighbor_id ASC) AS rk
-       |          FROM acc a JOIN qq2 q USING (query_id))
-       |        WHERE rk <= 10),
-       |en AS (SELECT vec_id, e,
-       |         sqrt(list_sum(list_transform(range(1, 65), i -> e[i] * e[i]))) AS nrm
-       |       FROM v),
-       |bf AS (SELECT query_id, neighbor_id, rank FROM (
-       |         SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |           row_number() OVER (PARTITION BY q.vec_id
-       |             ORDER BY list_sum(list_transform(range(1, 65), i -> q.e[i] * c.e[i]))
-       |               / (q.nrm * c.nrm) DESC, c.vec_id ASC) AS rank
-       |         FROM en q JOIN en c ON q.vec_id < 10 AND q.vec_id <> c.vec_id)
-       |       WHERE rank <= 10),
-       |u AS (SELECT query_id, neighbor_id, rank, 0 AS ridx FROM bf
-       |      UNION ALL SELECT query_id, neighbor_id, rank, 1 AS ridx FROM adc),
-       |sc AS (SELECT query_id, neighbor_id,
-       |         list_sum(list(1.0 / (rank + 60) ORDER BY ridx)) AS score
-       |       FROM u GROUP BY 1, 2),
-       |fin AS (SELECT query_id, neighbor_id, score,
-       |          row_number() OVER (PARTITION BY query_id
-       |            ORDER BY score DESC, neighbor_id ASC) AS rank
-       |        FROM sc)
-       |SELECT query_id, neighbor_id, round(score, 6) AS rrf_score,
-       |       CAST(rank AS INT) AS rank
-       |FROM fin WHERE rank <= 5""".stripMargin
-
-  /** (cust, n_name, cents) spend frame for the DP sum/mean releases
-    * (priv2/priv3): orders joined to their customer's nation, price
-    * in exact integer cents via the mirrored floor(p*100 + 0.5). The
-    * privacy UNIT is the customer; nation is an attribute of the
-    * unit, so groups are disjoint (the sensitivity precondition
-    * dpSum checks). */
-  private def privSpendFrame(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
-      .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(t(s, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
-      .select(col("o_custkey").as("cust"), col("n_name"),
-        floor(col("o_totalprice") * lit(100.0) + lit(0.5)).as("cents"))
-
-  /** Token frame for the KMV vocabulary sketches (pf10/pf11/st18):
-    * (lang, token), the same whitespace tokenization [[Profiling.vocabulary]]
-    * uses. */
-  private def kmvTokens(docs: DataFrame): DataFrame =
-    docs.select(col("lang"),
-        explode(split(lower(trim(col("text"))), "\\s+")).as("token"))
-      .filter(length(col("token")) > 0)
-
-  /** Shared CTE chain for the KMV oracles: replays [[kmvTokens]],
-    * `token_hash64` (rolling-31 + fmix64, the dd3 replay), the
-    * signed reinterpretation (KMV orders by the SIGNED hash — the
-    * unsigned uniform XOR 2^63, still uniform), distinct, and the
-    * per-lang bottom-128 rank. Ends with `sk(lang, rank, hs)`. */
-  private def kmvSketchCte: String = {
-    val m64 = "18446744073709551616"
-    val m32 = "4294967296"
-    val c1 = 0xff51afd7ed558ccdL
-    val c2 = 0xc4ceb9fe1a85ec53L
-    def hi(x: Long): Long = (x >>> 32) & 0xffffffffL
-    def lo(x: Long): Long = x & 0xffffffffL
-    raw"""WITH tok AS (
-       |  SELECT DISTINCT lang, w FROM (
-       |    SELECT lang, unnest(string_split_regex(lower(trim(text)), '\s+')) AS w
-       |    FROM documents)
-       |  WHERE length(w) > 0),
-       |rh AS (SELECT lang,
-       |         list_reduce(list_prepend(CAST(0 AS HUGEINT), ${byteFoldList("w")}),
-       |           (h, b) -> (h * 31 + b) % $m64) AS h
-       |       FROM tok),
-       |f1 AS (SELECT lang, xor(h, h >> 33) AS h FROM rh),
-       |m1 AS (SELECT lang,
-       |         (h * ${lo(c1)} + ((h * ${hi(c1)}) % $m32) * $m32) % $m64 AS h
-       |       FROM f1),
-       |f2 AS (SELECT lang, xor(h, h >> 33) AS h FROM m1),
-       |m2 AS (SELECT lang,
-       |         (h * ${lo(c2)} + ((h * ${hi(c2)}) % $m32) * $m32) % $m64 AS h
-       |       FROM f2),
-       |hv AS (SELECT lang, xor(h, h >> 33) AS h FROM m2),
-       |hd AS (SELECT DISTINCT lang,
-       |         CAST(CASE WHEN h >= 9223372036854775808 THEN h - $m64 ELSE h END
-       |              AS BIGINT) AS hs
-       |       FROM hv),
-       |sk AS (SELECT lang, CAST(rk AS INT) AS rank, hs FROM (
-       |         SELECT lang, hs,
-       |           row_number() OVER (PARTITION BY lang ORDER BY hs) AS rk
-       |         FROM hd) WHERE rk <= 128)""".stripMargin
-  }
-
-  /** KMV estimator as SQL, mirroring [[Profiling.kmvEstimate]]'s
-    * expression tree step for step (long→double cast, one add, one
-    * divide — every op IEEE on exact inputs, so the doubles hash-
-    * match unrounded). `n`/`kth` are SQL expressions. */
-  private def kmvEstSql(n: String, kth: String): String =
-    s"""CASE WHEN $n < 128 THEN CAST($n AS DOUBLE)
-       |     WHEN $kth = (-9223372036854775807 - 1) THEN NULL
-       |     ELSE 127.0 * 18446744073709551616.0
-       |          / (CAST($kth AS DOUBLE) + 9223372036854775808.0) END""".stripMargin
-
-  /** UTF-8 BYTE list of a string expression as HUGEINTs — the exact
-    * quantity the Spark rolling hashes fold ([[graft.functions.TextExpressions.RollingHash]]
-    * and `tokenHash64` iterate `getBytes`, NOT code points). Decodes
-    * `hex(encode(s))` pairs positionally, so the replay is
-    * byte-exact on any input, ASCII or not (r7 review: the earlier
-    * `unicode(c)` form silently diverged on multibyte text). */
-  private def byteFoldList(expr: String): String =
-    s"""[CAST((strpos('0123456789ABCDEF', hex(encode($expr))[2*i-1:2*i-1]) - 1) * 16
-       |        + (strpos('0123456789ABCDEF', hex(encode($expr))[2*i:2*i]) - 1) AS HUGEINT)
-       |       for i in range(1, octet_length(encode($expr)) + 1)]""".stripMargin
-
-  /** qf9 oracle: replays the FULL classifier training trajectory —
-    * [[qf9Iters]] unrolled (gradient, weight-update) CTE pairs over
-    * the augmented fixture. Every double mirrors the Spark trainer's
-    * tree: left-folded dot product, rational squash
-    * `0.5 + (z/(1+abs(z)))*0.5`, per-row error upweighted 4x on the
-    * junk class, gradient terms quantized to exact BIGINTs via
-    * `floor(term*2^20 + 0.5)` (so the sums are order-free), update
-    * `w - lr*g/(2^20*n)`. Weights are therefore bit-identical, and
-    * so are the scores. The trajectory CTEs are shared between the
-    * score oracle ([[qf9Oracle]]) and the weight-vector oracle
-    * ([[qf9TrainOracle]]). */
-  private val qf9Dims = 0 until 5
-  private def qf9TrajectoryCtes: String = {
-    val punct = raw"""[^.,;:!?''"()\[\]{}-]"""
-    val dims = qf9Dims
-    val sb = new StringBuilder
-    sb ++= raw"""WITH aug AS (
-      |  SELECT doc_id,
-      |    CASE WHEN doc_id % 5 = 0 THEN text || '$qf9Junk' ELSE text END AS text,
-      |    CASE WHEN doc_id % 5 = 0 THEN 1.0 ELSE 0.0 END AS y
-      |  FROM documents),
-      |x AS MATERIALIZED (
-      |  SELECT doc_id, y,
-      |    1.0 AS x0,
-      |    len(string_split_regex(trim(text), '\s+')) / 64.0 AS x1,
-      |    length(regexp_replace(text, '[^0-9]', '', 'g')) / 256.0 AS x2,
-      |    length(regexp_replace(text, '$punct', '', 'g')) / 256.0 AS x3,
-      |    length(text) / 1024.0 AS x4
-      |  FROM aug),
-      |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM x),
-      |w0 AS (SELECT ${dims.map(d => s"0.0 AS w$d").mkString(", ")})""".stripMargin
-    val zExpr = dims.map(d => s"x.x$d * w.w$d").mkString(" + ")
-    val wgt = "CASE WHEN y = 1.0 THEN 4.0 ELSE 1.0 END"
-    for (k <- 1 to qf9Iters) {
-      val p = k - 1
-      val gs = dims.map(d =>
-        s"CAST(sum(CAST(floor((p - y) * ($wgt) * x$d * 1048576.0 + 0.5) AS BIGINT)) AS BIGINT) AS g$d")
-        .mkString(",\n        |    ").stripMargin
-      val ws = dims.map(d =>
-        s"w.w$d - $qf9Lr * g.g$d / (1048576.0 * nn.n) AS w$d").mkString(", ")
-      sb ++= s""",
-        |g$k AS MATERIALIZED (
-        |  SELECT $gs
-        |  FROM (SELECT x.*, 0.5 + (z / (1 + abs(z))) * 0.5 AS p
-        |        FROM (SELECT x.*, $zExpr AS z
-        |              FROM x CROSS JOIN w$p w) x)),
-        |w$k AS MATERIALIZED (SELECT $ws FROM w$p w CROSS JOIN g$k g CROSS JOIN nn)""".stripMargin
-    }
-    sb.toString
-  }
-
-  private def qf9Oracle: String = {
-    val zExpr = qf9Dims.map(d => s"x.x$d * w.w$d").mkString(" + ")
-    qf9TrajectoryCtes + s"""
-      |SELECT x.doc_id,
-      |       round(0.5 + (($zExpr) / (1 + abs($zExpr))) * 0.5, 6) AS score,
-      |       (0.5 + (($zExpr) / (1 + abs($zExpr))) * 0.5) >= 0.5 AS flagged,
-      |       x.doc_id % 5 = 0 AS is_junk
-      |FROM x CROSS JOIN w$qf9Iters w""".stripMargin
-  }
-
-  /** The final weight vector, unpivoted to (dim, weight) — qf9_train's
-    * oracle. RAW doubles, deliberately unrounded (ta3 precedent): the
-    * trainer's trajectory is bit-reproducible by construction, and
-    * this oracle is the proof. */
-  private def qf9TrainOracle: String = {
-    val cases = qf9Dims.map(d => s"WHEN $d THEN w.w$d").mkString(" ")
-    qf9TrajectoryCtes + s"""
-      |SELECT CAST(d.dim AS INT) AS dim,
-      |       CASE d.dim $cases END AS weight
-      |FROM w$qf9Iters w
-      |CROSS JOIN (SELECT unnest(range(0, ${qf9Dims.length})) AS dim) d""".stripMargin
-  }
-
-  /** dd3 oracle: exact replay of [[graft.functions.TextExpressions.tokenHash64]]
-    * (rolling-31 fold, then Murmur3 fmix64 as xor/shift plus split
-    * 32-bit multiplies — all mod-2^64 HUGEINT arithmetic), the
-    * per-bit simhash majority vote over token INSTANCES, and a
-    * brute-force hamming join at <= 3. Equivalent to
-    * `Dedup.simhashPairs` whenever no signature bucket exceeds
-    * `maxBucketSize` (pigeonhole recall is exact at hamming <= 3),
-    * which holds on the sf fixtures by orders of magnitude. */
-  private def dd3Oracle: String = {
-    val c1 = 0xff51afd7ed558ccdL
-    val c2 = 0xc4ceb9fe1a85ec53L
-    def hi(x: Long): Long = (x >>> 32) & 0xffffffffL
-    def lo(x: Long): Long = x & 0xffffffffL
-    val m64 = "18446744073709551616"
-    val m32 = "4294967296"
-    raw"""WITH tok AS (
-       |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS w
-       |  FROM documents),
-       |rh AS (
-       |  SELECT doc_id,
-       |    list_reduce(list_prepend(CAST(0 AS HUGEINT), ${byteFoldList("w")}),
-       |      (h, b) -> (h * 31 + b) % $m64) AS h0
-       |  FROM tok),
-       |f1 AS (SELECT doc_id, xor(h0, h0 >> 33) AS h FROM rh),
-       |m1 AS (SELECT doc_id,
-       |         (h * ${lo(c1)} + ((h * ${hi(c1)}) % $m32) * $m32) % $m64 AS h
-       |       FROM f1),
-       |f2 AS (SELECT doc_id, xor(h, h >> 33) AS h FROM m1),
-       |m2 AS (SELECT doc_id,
-       |         (h * ${lo(c2)} + ((h * ${hi(c2)}) % $m32) * $m32) % $m64 AS h
-       |       FROM f2),
-       |hv AS (SELECT doc_id, xor(h, h >> 33) AS h FROM m2),
-       |votes AS (
-       |  SELECT doc_id, t.r AS bit,
-       |         sum(CASE WHEN (h >> t.r) & 1 = 1 THEN 1 ELSE -1 END) AS v
-       |  FROM hv CROSS JOIN range(64) t(r)
-       |  GROUP BY 1, 2),
-       |sig AS (
-       |  SELECT doc_id,
-       |         sum(CASE WHEN v > 0 THEN CAST(1 AS HUGEINT) << bit
-       |                  ELSE CAST(0 AS HUGEINT) END) AS sig
-       |  FROM votes GROUP BY 1)
-       |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       |       CAST(bit_count(xor(a.sig, b.sig)) AS INT) AS hamming
-       |FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.sig, b.sig)) <= 3""".stripMargin
-  }
-
-  /** ta2 oracle: must mirror TextAnalysis.langId exactly — per-lang
-    * marker-hit counts, winner = first lang (sorted code order)
-    * reaching the max; zh markers match without word boundaries. */
-  /** ta7's oracle: replays the paragraph fixture, the per-paragraph
-    * marker scoring (same pattern builder as [[langIdOracle]]), the
-    * majority election, and the minority flags. */
-  private def ta7OracleSql: String = {
-    val langs = graft.operators.TextAnalysis.langMarkers.toSeq.sortBy(_._1)
-    val hitExprs = langs.map { case (lang, words) =>
-      val pattern =
-        if (lang == "zh") "(" + words.mkString("|") + ")"
-        else "\\b(" + words.mkString("|") + ")\\b"
-      s"len(regexp_extract_all(lower(para), '$pattern')) AS ${lang}_hits"
-    }.mkString(",\n         ")
-    val greatest = "greatest(" + langs.map(_._1 + "_hits").mkString(", ") + ")"
-    val cases = langs.map { case (lang, _) =>
-      s"WHEN ${lang}_hits = mx THEN '$lang'"
-    }.mkString(" ")
-    s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-       |fx AS (
-       |  SELECT doc_id,
-       |         array_to_string(w[1:6], ' ') || E'\\n\\n' ||
-       |         array_to_string(w[7:12], ' ') || E'\\n\\n' ||
-       |         (CASE WHEN doc_id % 3 = 1 THEN 'der und ist nicht das ein zu'
-       |               WHEN doc_id % 3 = 2 THEN 'le la est dans les et un une'
-       |               ELSE 'the and of to is in' END) || E'\\n\\n' ||
-       |         'zzz qqq xxx' AS text
-       |  FROM w),
-       |p0 AS (
-       |  SELECT doc_id,
-       |         unnest(string_split(text, E'\\n\\n')) AS para,
-       |         generate_subscripts(string_split(text, E'\\n\\n'), 1) AS pos1
-       |  FROM fx),
-       |p AS (SELECT doc_id, CAST(pos1 - 1 AS INT) AS pos, para
-       |      FROM p0 WHERE length(trim(para)) > 0),
-       |h AS (
-       |  SELECT doc_id, pos,
-       |         $hitExprs
-       |  FROM p),
-       |g AS (SELECT *, $greatest AS mx FROM h),
-       |pl AS (
-       |  SELECT doc_id, pos,
-       |         CASE WHEN mx = 0 THEN 'und' $cases END AS para_lang
-       |  FROM g),
-       |c AS (SELECT doc_id, para_lang, count(*) AS cnt FROM pl GROUP BY 1, 2),
-       |dl AS (
-       |  SELECT doc_id, para_lang AS doc_lang FROM (
-       |    SELECT doc_id, para_lang,
-       |           row_number() OVER (PARTITION BY doc_id
-       |                              ORDER BY cnt DESC, para_lang ASC) AS rn
-       |    FROM c)
-       |  WHERE rn = 1)
-       |SELECT pl.doc_id, pl.pos, pl.para_lang, dl.doc_lang,
-       |       pl.para_lang <> dl.doc_lang AS is_minority
-       |FROM pl JOIN dl USING (doc_id)""".stripMargin
-  }
-
-  private def langIdOracle: String = {
-    val langs = TextAnalysis.langMarkers.toSeq.sortBy(_._1)
-    val hitExprs = langs.map { case (lang, words) =>
-      val pattern =
-        if (lang == "zh") "(" + words.mkString("|") + ")"
-        else "\\b(" + words.mkString("|") + ")\\b"
-      s"len(regexp_extract_all(lower(text), '$pattern')) AS ${lang}_hits"
-    }.mkString(",\n         ")
-    val greatest = "greatest(" + langs.map(_._1 + "_hits").mkString(", ") + ")"
-    val cases = langs.map { case (lang, _) =>
-      s"WHEN ${lang}_hits = mx THEN '$lang'"
-    }.mkString(" ")
-    s"""WITH h AS (
-       |  SELECT doc_id, lang,
-       |         $hitExprs
-       |  FROM documents),
-       |m AS (SELECT *, $greatest AS mx FROM h)
-       |SELECT doc_id, lang,
-       |       CASE WHEN mx = 0 THEN 'und' $cases END AS lang_guess
-       |FROM m""".stripMargin
-  }
-
-  /** The MMR greedy chain replayed in SQL — shared by mmr1 (brute
-    * candidates) and mmr2 (full-probe IVF candidates, bit-identical
-    * pool): same lambda-0.5 marginal score, the k=5 selection rounds
-    * unrolled as CTE levels, ties score-desc / id-asc like the
-    * engine's windows. */
-  private def mmrGreedyOracle: String = {
-      val step = (i: Int) =>
-        s"""pick$i AS (
-           |  SELECT query_id, neighbor_id AS nid FROM (
-           |    SELECT c.query_id, c.neighbor_id,
-           |           row_number() OVER (PARTITION BY c.query_id
-           |             ORDER BY (0.5 * c.rel - (1.0 - 0.5) * m.ms) DESC,
-           |                      c.neighbor_id ASC) AS rn
-           |    FROM cand c
-           |    JOIN (SELECT p.query_id, p.i, max(p.s) AS ms
-           |          FROM pair p JOIN acc${i - 1} s
-           |            ON p.query_id = s.query_id AND p.j = s.nid
-           |          GROUP BY p.query_id, p.i) m
-           |      ON m.query_id = c.query_id AND m.i = c.neighbor_id
-           |    WHERE NOT EXISTS (SELECT 1 FROM acc${i - 1} s2
-           |                      WHERE s2.query_id = c.query_id
-           |                        AND s2.nid = c.neighbor_id))
-           |  WHERE rn = 1),
-           |acc$i AS (SELECT * FROM acc${i - 1}
-           |          UNION ALL SELECT query_id, nid, $i FROM pick$i),""".stripMargin
-      s"""WITH e AS (
-         |  SELECT vec_id, embedding,
-         |         sqrt(list_sum(list_transform(range(1, 65),
-         |           i -> embedding[i] * embedding[i]))) AS nrm
-         |  FROM embeddings),
-         |scored AS (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |         list_sum(list_transform(range(1, 65),
-         |           i -> q.embedding[i] * c.embedding[i])) / (q.nrm * c.nrm) AS rel
-         |  FROM e q JOIN e c ON q.vec_id < 10 AND q.vec_id <> c.vec_id
-         |  WHERE q.nrm > 0 AND c.nrm > 0),
-         |cand AS (
-         |  SELECT query_id, neighbor_id, rel FROM (
-         |    SELECT query_id, neighbor_id, rel,
-         |           row_number() OVER (PARTITION BY query_id
-         |                              ORDER BY rel DESC, neighbor_id ASC) AS rnk
-         |    FROM scored)
-         |  WHERE rnk <= 25),
-         |pair AS (
-         |  SELECT a.query_id, a.neighbor_id AS i, b.neighbor_id AS j,
-         |         list_sum(list_transform(range(1, 65),
-         |           x -> va.embedding[x] * vb.embedding[x])) / (va.nrm * vb.nrm) AS s
-         |  FROM cand a
-         |  JOIN cand b ON a.query_id = b.query_id
-         |             AND a.neighbor_id <> b.neighbor_id
-         |  JOIN e va ON va.vec_id = a.neighbor_id
-         |  JOIN e vb ON vb.vec_id = b.neighbor_id),
-         |sel1 AS (
-         |  SELECT query_id, neighbor_id AS nid FROM (
-         |    SELECT query_id, neighbor_id,
-         |           row_number() OVER (PARTITION BY query_id
-         |             ORDER BY rel DESC, neighbor_id ASC) AS rn
-         |    FROM cand)
-         |  WHERE rn = 1),
-         |acc1 AS (SELECT query_id, nid, 1 AS mmr_rank FROM sel1),
-         |${(2 to 5).map(step).mkString("\n")}
-         |fin AS (SELECT 1)
-         |SELECT query_id, nid AS neighbor_id, mmr_rank FROM acc5""".stripMargin
-      }
-
-
-  /** man1/st27 shared oracle: manifest digests replayed with the dq7
-    * md5-xor convention — st27's streamed fold must reproduce the
-    * one-shot manifest exactly. */
-  private def manifestOracle: String =
-    """WITH rows AS (
-        |  SELECT doc_id % 16 AS shard_id, doc_id,
-        |         length(text) AS nc,
-        |         len(list_filter(string_split_regex(trim(text), '\s+'),
-        |             t -> len(t) > 0)) AS nt,
-        |         CAST(concat('0x', substr(md5(concat_ws(chr(31),
-        |           coalesce(CAST(doc_id AS VARCHAR), chr(1)),
-        |           coalesce(text, chr(1)))), 1, 15)) AS BIGINT) AS h
-        |  FROM documents)
-        |SELECT shard_id, count(*) AS n_docs,
-        |       CAST(sum(nc) AS BIGINT) AS n_chars,
-        |       CAST(sum(nt) AS BIGINT) AS n_tokens,
-        |       min(doc_id) AS min_id, max(doc_id) AS max_id,
-        |       bit_xor(h) AS digest
-        |FROM rows GROUP BY shard_id""".stripMargin
-
 }

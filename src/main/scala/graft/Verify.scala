@@ -42,20 +42,17 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // iteration aid (mirrors Bench): SPARK_GRAFT_VERIFY_ONLY=q1,q2
+    // limits the dump (an unknown name fails); the driver sets nothing
+    // and gets every query
+    val selected = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
+      .fold(SparkEntry.queries)(SparkEntry.named)
     val spark = GraftSession.builder("graft-verify")
       // timestamps as INT64 micros so DuckDB reads identical values
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // iteration aid (mirrors Bench): SPARK_GRAFT_VERIFY_ONLY=q1,q2
-    // limits the dump; the driver sets nothing and gets every query
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(q => names(q._1))
-      case None => SparkEntry.queries
-    }
     // oracle_sql.json FIRST: it is a static map with zero dependence
     // on execution, and it is the one file the driver's comparator
     // cannot work without — writing it last meant a wall-clock kill

@@ -152,7 +152,7 @@ object SqlFuzzer {
         "l_returnflag", "l_linestatus", "l_shipdate")),
     // LLM-pipeline fixtures too (all-ASCII text, so upper/lower/
     // length semantics agree; events.ts converted to micros on the
-    // Spark side exactly like SparkEntry.events)
+    // Spark side exactly like queries.Fixtures.events)
     Tab("documents", Seq(Col("doc_id", TInt), Col("text", TString),
       Col("lang", TString), Col("source", TString),
       Col("n_chars", TInt)), Seq("doc_id")),

@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: a model artifact is O(feature dims) rows — driver-
   * bounded by construction; the one corpus-sized step (the data
-  * fingerprint, see [[SparkEntry]]'s qf9 wiring) is a single
+  * fingerprint, see [[graft.queries.Fixtures]]'s qf9 wiring) is a single
   * map-combined aggregate.
   */
 object ModelStore {

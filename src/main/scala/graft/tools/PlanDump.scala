@@ -17,27 +17,22 @@ object PlanDump {
       "usage: PlanDump <outDir> <suffix> <q1,q2,...|all>")
     val Array(outDir, suffix, list) = args
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val selected =
+      if (list == "all") SparkEntry.queries else SparkEntry.named(list)
     val spark = GraftSession.getOrCreate("graft-plandump")
     spark.sparkContext.setLogLevel("ERROR")
-    val names: Seq[String] =
-      if (list == "all") SparkEntry.queries.map(_._1).toSeq
-      else list.split(",").map(_.trim).filter(_.nonEmpty).toSeq
     Files.createDirectories(Paths.get(outDir))
-    names.foreach { name =>
-      SparkEntry.queries.find(_._1 == name) match {
-        case None => System.err.println(s"[plandump] unknown query: $name")
-        case Some((_, fn)) =>
-          try {
-            val df = fn(spark, sfDir)
-            val plan = df.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode)
-            Files.write(Paths.get(outDir, s"${name}_$suffix.txt"),
-              plan.getBytes("UTF-8"))
-            println(s"[plandump] wrote $name")
-          } catch {
-            case e: Throwable =>
-              System.err.println(s"[plandump] $name FAILED: $e")
-          }
+    selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      try {
+        val df = fn(spark, sfDir)
+        val plan = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        Files.write(Paths.get(outDir, s"${name}_$suffix.txt"),
+          plan.getBytes("UTF-8"))
+        println(s"[plandump] wrote $name")
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[plandump] $name FAILED: $e")
       }
     }
     spark.stop()

@@ -30,6 +30,24 @@ class ContractSpec extends SparkTestBase {
     assert(rowsOnly.isEmpty, s"unexpected rows-only set: $rowsOnly")
   }
 
+  test("query names are unique across family files") {
+    // the derived maps keep one entry per name: a second declaration
+    // of a name would silently drop a query from the bench and the
+    // oracle gate
+    val names = SparkEntry.declared.map(_.name)
+    val dups = names.diff(names.distinct).distinct
+    assert(dups.isEmpty, s"declared more than once: ${dups.mkString(", ")}")
+    assert(SparkEntry.queries.size == names.size)
+  }
+
+  test("the name selector fails on a misspelt name and names it") {
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.named("s1_scan_project, s1_scan_projekt"))
+    assert(e.getMessage.contains("s1_scan_projekt"), e.getMessage)
+    assert(SparkEntry.named("s1_scan_project, ,f1_filter_where").keySet ==
+      Set("s1_scan_project", "f1_filter_where"))
+  }
+
   test("flagship entry returns rows at sf0.001") {
     val df = SparkEntry.entry(spark)
     assert(df.count() > 0)
